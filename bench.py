@@ -28,16 +28,13 @@ _SF = float(SF_DIR.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in SF_DIR \
     else 0.1
 N_DOCS = max(int(200_000 * _SF), 500)
 
-# ann_ivf_topk / dedup_simhash_pairs now run their arrow scale modes
-# by default (registry change, r4 verdict #3); their *_sql twins keep
-# the interpreted-fold gap measured round-over-round.
 HEADLINE = ["tpch_q1", "tpch_q3", "tpch_q4", "tpch_q5",
             "tpch_q2", "tpch_q9", "tpch_q18", "tpch_q21",
             "a1_group_collect", "w4_rank_window", "so4_symmetric_diff",
             "dedup_exact", "dedup_minhash_lsh",
             "text_quality", "text_fingerprint", "text_term_stats",
             "events_session_window", "ann_cosine_topk", "ann_ivf_topk",
-            "ann_ivf_topk_sql", "dedup_simhash_pairs",
+            "dedup_simhash_pairs",
             "kg_mention_extract_join", "kg_roundtrip_reimport",
             "diff_transactions"]
 

@@ -12,12 +12,8 @@ usual dozens this is strictly faster.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def _prefix_rows(prefix_df: DataFrame) -> list[tuple[str, str]]:
-    return [(r["prefix"], r["base"]) for r in prefix_df.collect()]
 
 
 def curify_col(col: Column, prefixes: list[tuple[str, str]]) -> Column:
@@ -42,19 +38,3 @@ def curie_to_iri_col(col: Column,
                                F.substring(col, len(prefix) + 2, 1 << 20))
                       ).otherwise(expr)
     return expr
-
-
-def curify_statements(statements: DataFrame,
-                      prefix_df: DataFrame) -> DataFrame:
-    """Apply CURIE-ification to the IRI-bearing columns of a statement
-    table (subject/predicate always; object only when datatype=_IRI)."""
-    prefixes = _prefix_rows(prefix_df)
-    is_iri = F.col("datatype") == "_IRI"
-    return (statements
-            .withColumn("subject", curify_col(F.col("subject"), prefixes))
-            .withColumn("predicate",
-                        curify_col(F.col("predicate"), prefixes))
-            .withColumn("object",
-                        F.when(is_iri, curify_col(F.col("object"),
-                                                  prefixes))
-                        .otherwise(F.col("object"))))

@@ -136,69 +136,34 @@ def near_dup_clusters(pairs: DataFrame) -> DataFrame:
 N_MINHASH = 8
 BAND_SIZE = 2
 
-
-def doc_shingles(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Distinct (doc_id, shingle) word-bigram shingles — all JVM-side
-    array ops (split → zip_with of adjacent slices), no Python.
-
-    The input is widened to core count first: the explode + per-shingle
-    md5 aggregations downstream are per-row-expensive, and a single-
-    row-group scan would otherwise run them on one task
-    (operators/parallel.py)."""
-    from .parallel import widen_partitions
-    docs = widen_partitions(docs.select("doc_id", text_col),
-                            min_bytes=0)
-    words = F.split(F.trim(F.col(text_col)), r"\s+")
-    bigrams = F.zip_with(
-        F.slice(words, 1, F.size(words) - 1),
-        F.slice(words, 2, F.size(words) - 1),
-        lambda a, b: F.concat(a, F.lit(" "), b))
-    return (docs.select("doc_id", F.explode(bigrams).alias("shingle"))
-            .filter(F.col("shingle").isNotNull())
-            .distinct())
+# Shingle tokenization shared by the MinHash and SimHash signatures,
+# matching the oracle's string_split_regex(trim(text), '\\s+'): strip
+# U+0020 only, split on ASCII whitespace runs, and KEEP empty tokens
+# (a leading tab yields a "" word, so the shingle " foo" exists).
+# Unicode-aware splitting or an `if w` filter would emit different
+# signatures for docs with tabs/newlines/NBSP (pinned by the
+# whitespace-edge corpus in tests/test_batching.py). \x0b counts as
+# whitespace here but not in DuckDB's RE2 \s; no corpus contains it.
+_WS = re.compile("[ \t\n\x0b\f\r]+")
 
 
 def minhash_signatures(docs: DataFrame, text_col: str = "text",
-                       n_hashes: int = N_MINHASH,
-                       mode: str = "sql") -> DataFrame:
-    """Per-doc MinHash signature over bigram shingles:
-    sig_i = min(md5(i || ':' || shingle)).
+                       n_hashes: int = N_MINHASH) -> DataFrame:
+    """Per-doc MinHash signature over word-bigram shingles:
+    sig_i = min(md5(i || ':' || shingle)) as lowercase hex.
 
     A string-min MinHash — identical semantics to integer MinHash (any
     total order on a good hash works) and exactly reproducible in ANSI
-    SQL for the oracle. ``mode="sql"`` is that Catalyst form — the
-    right SHAPE, but min(string) buffers are not hash-aggregable, so
-    the signature aggregation runs as a SortAggregate over the full
-    shingle relation. ``mode="arrow"`` computes the identical
-    signatures in one hashlib pass per doc (bit parity pinned by
-    test_minhash_arrow_matches_sql) — the throughput path, same
-    pattern as the SimHash/SRP/IVF arrow twins.
+    SQL, so the DuckDB oracle (queries._SIG over queries._SHINGLES)
+    pins it. Computed in one hashlib pass per doc inside mapInPandas:
+    the min over DIGEST BYTES equals the min over hex strings (both are
+    the md5 value's lexicographic byte order). Tokenization as in
+    ``_WS``; docs with no bigram emit no row.
     """
-    if mode == "arrow":
-        return _minhash_arrow(docs, text_col, n_hashes)
-    if mode != "sql":
-        raise ValueError(f"unknown minhash mode {mode!r} "
-                         "(use 'sql' or 'arrow')")
-    shingles = doc_shingles(docs, text_col)
-    aggs = [F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("shingle"))))
-            .alias(f"sig{i}") for i in range(n_hashes)]
-    return shingles.groupBy("doc_id").agg(*aggs)
-
-
-def _minhash_arrow(docs: DataFrame, text_col: str,
-                   n_hashes: int) -> DataFrame:
-    """hashlib MinHash — BIT-IDENTICAL to the Catalyst form: same
-    bigram shingle set (tokenization parity rules as _simhash_arrow:
-    strip U+0020 only, ASCII-\\s split keeping empty tokens), same
-    md5('i:' || shingle) families, and the min over DIGEST BYTES
-    equals the min over lowercase-hex strings (both are the md5
-    value's lexicographic byte order). Docs with no bigram emit no
-    row, exactly like the empty groupBy group."""
     import hashlib
 
     import pandas as pd
 
-    _ws = re.compile("[ \t\n\x0b\f\r]+")
     prefixes = [f"{i}:".encode() for i in range(n_hashes)]
     sig_cols = [f"sig{i}" for i in range(n_hashes)]
 
@@ -208,7 +173,7 @@ def _minhash_arrow(docs: DataFrame, text_col: str,
             for doc_id, text in zip(pdf["doc_id"], pdf[text_col]):
                 if text is None:
                     continue
-                words = _ws.split(text.strip(" "))
+                words = _WS.split(text.strip(" "))
                 if len(words) < 2:
                     continue
                 shingles = {f"{a} {b}".encode("utf-8")
@@ -239,72 +204,29 @@ _HEX = "0123456789abcdef"
 SIMHASH_NIBBLES = 16  # 64-bit signature as 16 hex nibbles
 
 
-def simhash_signatures(docs: DataFrame, text_col: str = "text",
-                       mode: str = "sql") -> DataFrame:
-    """64-bit SimHash over bigram shingles as a 16-hex-char string.
+def simhash_signatures(docs: DataFrame,
+                       text_col: str = "text") -> DataFrame:
+    """64-bit SimHash over word-bigram shingles as a 16-hex-char string.
 
-    ``mode="sql"`` (oracle path): pure integer/string arithmetic (md5
-    nibbles → bit sums → majority vote → hex), identical in Spark and
-    ANSI SQL — no engine hash functions leak into results. All
-    JVM-side; the per-doc aggregation is one map-side-combinable
-    groupBy — the right SHAPE, but its 65 aggregate expressions are
-    interpreted per shingle row. ``mode="arrow"`` computes the same
-    bits in one numpy pass per doc (bit-identical, pinned by test) —
-    the throughput path.
+    Bit j of nibble p is the majority vote, over the doc's distinct
+    shingles, of that bit of md5(shingle)'s p-th hex nibble — pure
+    integer arithmetic, so the DuckDB oracle (queries._SIMHASH) pins
+    it exactly and no engine hash function leaks into results.
+    Computed in one md5 + numpy bit-count pass per doc inside
+    mapInPandas; tokenization as in ``_WS``.
     """
-    if mode == "arrow":
-        return _simhash_arrow(docs, text_col)
-    if mode != "sql":
-        raise ValueError(f"unknown simhash mode {mode!r} "
-                         "(use 'sql' or 'arrow')")
-    sh = doc_shingles(docs, text_col).withColumn(
-        "h", F.md5(F.col("shingle")))
-    # bit sums: nibble p (1..16), bit j (0..3)
-    aggs = [F.count("*").alias("cnt")]
-    for p in range(1, SIMHASH_NIBBLES + 1):
-        v = F.instr(F.lit(_HEX), F.substring("h", p, 1)) - 1
-        for j in range(4):
-            aggs.append(F.sum((v.cast("long") / (2 ** j)).cast("long") % 2)
-                        .alias(f"s{p}_{j}"))
-    agg = sh.groupBy("doc_id").agg(*aggs)
-    chars = []
-    for p in range(1, SIMHASH_NIBBLES + 1):
-        nib = None
-        for j in range(4):
-            bit = F.when(2 * F.col(f"s{p}_{j}") >= F.col("cnt"), 1) \
-                .otherwise(0) * (2 ** j)
-            nib = bit if nib is None else nib + bit
-        chars.append(F.substr(F.lit(_HEX), nib + 1, F.lit(1)))
-    return agg.select("doc_id", F.concat(*chars).alias("simhash"))
-
-
-def _simhash_arrow(docs: DataFrame, text_col: str) -> DataFrame:
-    """numpy/hashlib SimHash — the throughput twin of the Catalyst
-    form (65 aggregate expressions evaluate interpreted per shingle
-    row; one md5 + bit-count pass per doc in a mapInPandas batch is
-    the fast path). BIT-IDENTICAL output to ``mode="sql"`` (pinned by
-    test): same bigram shingle set, same md5-nibble bit sums, same
-    majority rule."""
     import hashlib
 
     import numpy as np
     import pandas as pd
-
-    # EXACT tokenization parity with the Catalyst path: F.trim strips
-    # U+0020 only, Java regex \s is ASCII-only, F.split keeps empty
-    # tokens, and doc_shingles does NOT drop empty-word shingles —
-    # unicode-\s Python splitting or an `if w` filter would emit
-    # different signatures for docs with tabs/newlines/NBSP (pinned by
-    # test_simhash_arrow_matches_sql's whitespace-edge corpus)
-    _ws = re.compile("[ \t\n\x0b\f\r]+")
 
     def sig(batches):
         for pdf in batches:
             out_ids, out_sigs = [], []
             for doc_id, text in zip(pdf["doc_id"], pdf[text_col]):
                 if text is None:
-                    continue   # sql path: null split → no shingles
-                words = _ws.split(text.strip(" "))
+                    continue   # null text → no shingles
+                words = _WS.split(text.strip(" "))
                 shingles = {f"{a} {b}"
                             for a, b in zip(words, words[1:])}
                 if not shingles:
@@ -334,10 +256,9 @@ def _simhash_arrow(docs: DataFrame, text_col: str) -> DataFrame:
 def _band_pairs(bands_df: DataFrame) -> DataFrame:
     """(doc_id, band, bucket) → distinct candidate pairs (doc_a < doc_b)
     via a bucket-key self-join. SHUFFLE_HASH-hinted: the planner's
-    broadcast choice computed the ENTIRE signature subplan (shingle
-    explode + aggregation / MapInPandas) a second time for the build
-    side and then collected it through a serial BroadcastExchange
-    build — measured as the duplicated stanza in the r06 before-plans
+    broadcast choice computed the ENTIRE signature subplan (the
+    MapInPandas pass) a second time for the build side and then
+    collected it through a serial BroadcastExchange build — measured as the duplicated stanza in the r06 before-plans
     and a 8.6→5.0 s drop for simhash when hinted. With both sides
     shuffled on (band, bucket), the sides run as parallel shuffle
     stages (and being identical subplans, exchange reuse can dedupe
@@ -361,12 +282,12 @@ def _band_pairs(bands_df: DataFrame) -> DataFrame:
 
 
 def simhash_pairs(docs: DataFrame, text_col: str = "text",
-                  bands: int = 4, mode: str = "sql") -> DataFrame:
+                  bands: int = 4) -> DataFrame:
     """Near-dup candidates: docs whose SimHash matches on any of
     ``bands`` contiguous nibble quarters (≈ small hamming distance).
     Same banded-LSH shuffle shape as minhash_lsh_pairs: one signature
-    aggregation, one explode — not one aggregation per band."""
-    sigs = simhash_signatures(docs, text_col, mode=mode)
+    pass, one explode — not one pass per band."""
+    sigs = simhash_signatures(docs, text_col)
     width = SIMHASH_NIBBLES // bands
     band_arr = F.array(*[
         F.struct(F.lit(b).alias("band"),
@@ -380,16 +301,14 @@ def simhash_pairs(docs: DataFrame, text_col: str = "text",
 
 def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text",
                       n_hashes: int = N_MINHASH,
-                      band_size: int = BAND_SIZE,
-                      mode: str = "sql") -> DataFrame:
+                      band_size: int = BAND_SIZE) -> DataFrame:
     """Candidate near-dup pairs: docs sharing any LSH band
     (band = concat of ``band_size`` adjacent signature slots).
     Shuffles on band keys only — never all-pairs. The per-band bucket
-    ids are built as one array-of-structs on the aggregated signature
-    row and exploded in a single Generate (one aggregation pass, was
-    one per band via union). ``mode`` selects the signature path
-    (see minhash_signatures); banding and pairing stay identical."""
-    sigs = minhash_signatures(docs, text_col, n_hashes, mode=mode)
+    ids are built as one array-of-structs on the signature row and
+    exploded in a single Generate (one signature pass, not one per
+    band)."""
+    sigs = minhash_signatures(docs, text_col, n_hashes)
     n_bands = n_hashes // band_size
     band_arr = F.array(*[
         F.struct(F.lit(bi).alias("band"),

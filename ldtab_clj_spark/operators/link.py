@@ -6,14 +6,15 @@ object columns against a candidate dictionary:
 
 * candidate *scoring*: argmax score per surface (``max_by``, one
   map-side-combinable aggregation);
-* **head** surfaces (hot, Zipf-favored) resolve via a broadcast hash
-  join — zero shuffle for the skewed mass;
-* **tail** surfaces resolve via a broadcast join while the dictionary
-  fits (`BROADCAST_TAIL_MAX_ROWS`), else a salted shuffle join: the
-  mention side carries a deterministic salt, the dictionary side is
-  exploded ×SALT, so residual hot keys split across SALT reducers
-  (plus AQE skew-join as backstop), and non-mention rows carry a
-  wide-range salt so null keys never pile on one reducer.
+* while the tail dictionary fits (`BROADCAST_TAIL_MAX_ROWS`), head ∪
+  tail resolve in ONE broadcast probe per column — zero shuffle;
+* above that cap, **head** surfaces (hot, Zipf-favored) resolve via a
+  broadcast hash join — zero shuffle for the skewed mass — and
+  **tail** surfaces via a salted shuffle join: the mention side
+  carries a deterministic salt, the dictionary side is exploded
+  ×SALT, so residual hot keys split across SALT reducers (plus AQE
+  skew-join as backstop), and non-mention rows carry a wide-range
+  salt so null keys never pile on one reducer.
 
 Single-pass plan shape: every resolution is a LEFT join on the whole
 DataFrame (null join keys for non-mentions simply don't match), never a
@@ -64,9 +65,10 @@ def score_candidates(entity_dict: DataFrame) -> DataFrame:
 def _resolve_column(df: DataFrame, col: str, head: DataFrame,
                     tail: DataFrame, guard,
                     broadcast_tail: bool = False) -> DataFrame:
-    """Resolve surface placeholders in one column via two left joins
-    (broadcast head, then broadcast-or-salted tail); non-mention rows
-    ride along with null keys."""
+    """Resolve surface placeholders in one column: one broadcast left
+    join over head ∪ tail when ``broadcast_tail``, else a broadcast
+    head join then a salted shuffle tail join; non-mention rows ride
+    along with null keys."""
     is_mention = guard & F.col(col).startswith("surface:")
     df = df.withColumn(
         "_surf", F.when(is_mention, F.substring(F.col(col), 9, 100000)))

@@ -320,10 +320,6 @@ def write_statements_iceberg(statements: DataFrame, table: str,
             "snapshot_id": snap[0]["snapshot_id"] if snap else None}
 
 
-def read_statements(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 class LineageStatus:
     """Bool-compatible verify_lineage result: truthiness is the
     row-count match (back-compat with every ``if verify_lineage(...)``

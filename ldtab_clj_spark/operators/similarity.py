@@ -117,10 +117,10 @@ def _srp_bands_with_vecs_arrow(embeddings: DataFrame, plane_tables,
     """(vec_id, tbl, bucket, _raw float32, _norm) in one numpy pass:
     one numpy matmul per Arrow batch assigns the bucket bits, and
     the RAW vector and its norm ride along so the per-bucket confirm
-    needs no vector join at all. The
-    norm accumulates dimension-by-dimension in index order — the exact
-    IEEE sequence of the JVM ``with_norm`` fold it replaces (pinned by
-    the arrow-vs-sql parity test). Vector transport is L copies per
+    needs no vector join at all. The norm accumulates
+    dimension-by-dimension in index order — the exact IEEE sequence of
+    the JVM ``with_norm`` fold (pair set pinned against the
+    ``ann_srp_near_dup`` DuckDB oracle). Vector transport is L copies per
     vector on ONE (tbl, bucket) shuffle — linear in the corpus, vs the
     former per-candidate-pair attach which was quadratic (measured
     120 GB of confirm traffic at a 4× bench scale)."""
@@ -225,10 +225,10 @@ def _confirm_bucket_stream(threshold: float,
 
 def _pair_dot_seq_udf():
     """Vectorized pair dot accumulating dimension-by-dimension in
-    index order — BIT-identical to the Catalyst fold (einsum's blocked
-    summation is only value-equal to the last ulp). Used where the
-    arrow twin must preserve exact rank order, e.g. IVF probe scoring;
-    still vectorized ACROSS rows, so ~dim numpy ops per batch."""
+    index order — BIT-identical to the ``_dot`` fold (einsum's blocked
+    summation is only value-equal to the last ulp). Used where exact
+    rank order matters, e.g. IVF probe scoring; still vectorized
+    ACROSS rows, so ~dim numpy ops per batch."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -249,91 +249,36 @@ def srp_banded_near_dup(embeddings: DataFrame,
                         plane_tables: list[list[list[float]]],
                         threshold: float = 0.95,
                         vec_col: str = "embedding",
-                        mode: str = "sql") -> DataFrame:
+                        mode: str = "arrow") -> DataFrame:
     """Embedding near-dup pairs via multi-table SRP-LSH — the 100 TB
-    path: candidates come only from same-(table, bucket) self-joins
+    path: candidates come only from same-(table, bucket) groups
     (shuffle on short keys, never all-pairs), then the exact cosine
-    confirms. Single-pass: one array-of-structs explode per row, no
-    per-table recompute. Recall < 1 by design (1-(1-p^k)^L); the
-    brute-force ``cosine_near_dup_pairs`` is the test-scale verifier.
+    confirms. Recall < 1 by design (1-(1-p^k)^L); the brute-force
+    ``cosine_near_dup_pairs`` is the test-scale verifier and the
+    ``ann_srp_near_dup`` DuckDB oracle pins the pair set.
 
-    ``mode``: "sql" = pure Catalyst expressions, bit-identical to the
-    DuckDB oracle (the audited path); "arrow" = numpy-matmul bucketing
-    + vectorized pair confirm (the throughput path — same pairs on the
-    corpus, pinned by tests)."""
-    if mode == "arrow":
-        # throughput path (restructured in r06 after a 4×-scale probe):
-        # the former shape generated candidate PAIRS in a JVM bucket
-        # self-join and re-attached both vectors per pair — transport
-        # quadratic in bucket occupancy (7M pairs / 3.6 GB at sf1.0;
-        # 115M pairs / ~120 GB at 4×, a 21× slowdown). Now the raw
-        # float32 vector + JVM-fold-order norm ride the ONE
-        # (tbl, bucket) shuffle (L copies per vector — linear), and
-        # each bucket confirms ALL its pairs inside one vectorized
-        # run of the grouped mapInPandas stream: same einsum/divide
-        # bit sequence, only
-        # surviving id pairs ever materialize as rows. The terminal
-        # distinct collapses multi-table hits (and duplicate input
-        # ids) exactly as before.
-        bands_v = _srp_bands_with_vecs_arrow(embeddings, plane_tables,
-                                             vec_col)
-        sc = embeddings.sparkSession.sparkContext
-        part = (bands_v
-                .withColumn("_grp", F.concat_ws(":", "tbl", "bucket"))
-                .repartition(sc.defaultParallelism, "tbl", "bucket")
-                .sortWithinPartitions("_grp")
-                .select("_grp", "vec_id", "_raw", "_norm"))
-        return (part.mapInPandas(_confirm_bucket_stream(threshold),
-                                 "vec_a long, vec_b long")
-                .distinct())
-    if mode != "sql":
-        raise ValueError(f"unknown srp mode {mode!r} "
-                         "(use 'sql' or 'arrow')")
-    from .parallel import widen_partitions
-    n = with_norm(widen_partitions(
-        embeddings.select("vec_id", vec_col), min_bytes=0), vec_col)
-    structs = []
-    for t, planes in enumerate(plane_tables):
-        bits = []
-        for p in planes:
-            arr = F.array(*[F.lit(float(x)) for x in p])
-            bits.append(F.when(_dot(F.col("_v"), arr) >= 0,
-                               F.lit("1")).otherwise(F.lit("0")))
-        structs.append(F.struct(F.lit(t).alias("tbl"),
-                                F.concat(*bits).alias("bucket")))
-    bands = (n.select("vec_id",
-                      F.explode(F.array(*structs)).alias("bb"))
-             .select("vec_id", "bb.tbl", "bb.bucket"))
-    # oracle path: candidate pairs from the NARROW band relation via a
-    # SHUFFLE_HASH self-join (the broadcast alternative recomputed the
-    # banding subplan for the build side and serialized it through a
-    # driver-side broadcast build — see _band_pairs in dedup.py),
-    # deduped BEFORE the exact confirm (the interpreted fold is
-    # expensive per pair), vectors joined back per unique pair as
-    # double arrays, sim in pure Catalyst expressions
-    a, b = bands.alias("a"), bands.hint("shuffle_hash").alias("b")
-    cand = (a.join(b, ["tbl", "bucket"])
-            .filter(F.col("a.vec_id") < F.col("b.vec_id"))
-            .select(F.col("a.vec_id").alias("vec_a"),
-                    F.col("b.vec_id").alias("vec_b"))
-            .distinct())
-    vecs = with_norm(widen_partitions(
-        embeddings.select("vec_id", vec_col), min_bytes=0), vec_col) \
-        .select("vec_id", "_v", "_norm")
-    va = vecs.select(F.col("vec_id").alias("vec_a"),
-                     F.col("_v").alias("_va"),
-                     F.col("_norm").alias("_na"))
-    vb = vecs.select(F.col("vec_id").alias("vec_b"),
-                     F.col("_v").alias("_vb"),
-                     F.col("_norm").alias("_nb"))
-    pairs = cand.join(va, "vec_a").join(vb, "vec_b")
-    sim = _dot(F.col("_va"), F.col("_vb")) \
-        / (F.col("_na") * F.col("_nb"))
-    # terminal distinct: duplicate vec_ids in the INPUT (un-deduped
-    # appends) would otherwise multiply pairs through the vector joins
-    return (pairs.withColumn("sim", sim)
-            .filter(F.col("sim") >= threshold)
-            .select("vec_a", "vec_b")
+    Bucketing is one numpy matmul per Arrow batch. The raw float32
+    vector and its fold-order norm ride the ONE (tbl, bucket) shuffle
+    (L copies per vector — linear transport; re-attaching both vectors
+    per candidate pair was quadratic in bucket occupancy, 7M pairs /
+    3.6 GB at sf1.0 and ~120 GB at 4×), and each bucket confirms all
+    its pairs inside one vectorized run of the grouped mapInPandas
+    stream, so only surviving id pairs materialize as rows. The
+    terminal distinct collapses multi-table hits and duplicate input
+    ids. ``mode`` accepts only "arrow" (kept so existing callers that
+    name it keep working)."""
+    if mode != "arrow":
+        raise ValueError(f"unknown srp mode {mode!r} (use 'arrow')")
+    bands_v = _srp_bands_with_vecs_arrow(embeddings, plane_tables,
+                                         vec_col)
+    sc = embeddings.sparkSession.sparkContext
+    part = (bands_v
+            .withColumn("_grp", F.concat_ws(":", "tbl", "bucket"))
+            .repartition(sc.defaultParallelism, "tbl", "bucket")
+            .sortWithinPartitions("_grp")
+            .select("_grp", "vec_id", "_raw", "_norm"))
+    return (part.mapInPandas(_confirm_bucket_stream(threshold),
+                             "vec_a long, vec_b long")
             .distinct())
 
 
@@ -350,24 +295,25 @@ def _minid_centroids(embeddings: DataFrame, n_centroids: int,
                     F.col("_norm").alias("_cnorm")))
 
 
-def _assign_arrow(corpus: DataFrame, cent_rows) -> DataFrame:
-    """Arrow-batched twin of the literal-fold assignment: one
-    vectorized pass per batch instead of ~n_centroids × dim interpreted
-    boxed multiply-adds per row (the round-3 hot-path finding).
+def _assign_to_centroids(corpus: DataFrame,
+                         cent: DataFrame) -> DataFrame:
+    """(vec_id, _v, _norm) → nearest-centroid assignment as a PURE MAP:
+    the centroid table is broadcast-sized by definition, so it is
+    collected (like a prefix table) and every Arrow batch is scored
+    against it in one vectorized pass — no join, no n_centroids-way
+    row expansion, no aggregate, no shuffle, no sort.
 
-    BIT-IDENTICAL to the sql mode, not merely equivalent: the dot
-    products accumulate dimension-by-dimension in index order
-    (``sims += V[:, d] ⊗ C[:, d]``), reproducing the Catalyst fold's
-    left-to-right IEEE addition sequence exactly — a plain matmul's
-    blocked summation could flip an argmax between two near-tied
-    centroids. Ties and NaNs also match: centroids are ordered by
-    cent_id and np.argmax takes the FIRST max (= lowest cent_id, the
-    struct-order rule), and a NaN row argmaxes to its first NaN just
-    as Spark's NaN-is-largest ordering does. Parity is pinned by
-    tests/test_similarity.py on real corpora per the repo's
-    Catalyst-parity rule for arrow twins."""
+    The dot products accumulate dimension-by-dimension in index order
+    (``sims += V[:, d] ⊗ C[:, d]``), the left-to-right IEEE sequence of
+    the ``_dot`` fold — a plain matmul's blocked summation could flip an argmax between two
+    near-tied centroids. Ties take the lowest cent_id (centroids are
+    ordered by cent_id and np.argmax takes the FIRST max), and a NaN
+    row argmaxes to its first NaN."""
     import numpy as np
     import pandas as pd
+    cent_rows = sorted(cent.collect(), key=lambda r: r["cent_id"])
+    if not cent_rows:
+        raise ValueError("empty centroid table")
     C = np.array([r["_c"] for r in cent_rows], dtype=np.float64)
     cnorm = np.array([float(r["_cnorm"]) for r in cent_rows])
     cent_ids = np.array([int(r["cent_id"]) for r in cent_rows],
@@ -389,53 +335,6 @@ def _assign_arrow(corpus: DataFrame, cent_rows) -> DataFrame:
     return corpus.select("vec_id", "_v", "_norm").mapInPandas(
         assign, "vec_id long, _v array<double>, _norm double, "
                 "cent_id int")
-
-
-def _assign_to_centroids(corpus: DataFrame, cent: DataFrame,
-                         mode: str = "sql") -> DataFrame:
-    """(vec_id, _v, _norm) → nearest-centroid assignment as a PURE MAP:
-    the centroid table is broadcast-sized by definition, so it is
-    collected (like a prefix table) and folded into a literal argmax
-    expression — highest csim, lowest cent_id on ties, exactly the row
-    the old row_number window picked. No join, no n_centroids-way row
-    expansion, no aggregate, no shuffle, no sort: assignment fuses into
-    the corpus scan's project (WholeStageCodegen), which is the plan
-    you'd want at 10^12 rows. (A max_by aggregate was measured first:
-    carrying the vector payload forces SortAggregate — a local sort of
-    n_centroids × N rows — because array buffers aren't
-    hash-aggregable.)"""
-    cent_rows = sorted(cent.collect(), key=lambda r: r["cent_id"])
-    if not cent_rows:
-        raise ValueError("empty centroid table")
-    if mode == "arrow":
-        return _assign_arrow(corpus, cent_rows)
-    if mode != "sql":
-        raise ValueError(f"unknown assign mode {mode!r} "
-                         "(use 'sql' or 'arrow')")
-    # one candidate struct per centroid, argmax via array_max's
-    # lexicographic struct order: highest csim, then highest -cent_id
-    # (= lowest cent_id). Linear expression tree — a chained
-    # when(best, cand) would duplicate `best` per level (exponential
-    # blowup, measured as a driver OOM at 16 centroids × 64 dims).
-    # The whole expression is rendered as ONE SQL string and parsed
-    # JVM-side: building it from n_centroids × dim F.lit() Column
-    # objects cost ~1 s of py4j round trips per query construction
-    # (r06 measurement) for the identical Catalyst tree; repr() of a
-    # Python float round-trips the exact double, so every literal is
-    # bit-identical to the former F.lit(float(x)).
-    def dot_sql(vec, coeffs):
-        arr = ",".join(f"{float(x)!r}D" for x in coeffs)
-        return (f"aggregate(zip_with({vec}, array({arr}), "
-                "(x, y) -> x * y), 0.0D, (acc, x) -> acc + x)")
-
-    cands_sql = "array(" + ",".join(
-        f"named_struct('csim', {dot_sql('_v', r['_c'])} / "
-        f"(_norm * {float(r['_cnorm'])!r}D), "
-        f"'neg', {-int(r['cent_id'])})"
-        for r in cent_rows) + ")"
-    return (corpus.withColumn(
-        "cent_id", -F.expr(f"array_max({cands_sql})")["neg"])
-        .select("vec_id", "_v", "_norm", "cent_id"))
 
 
 def train_ivf_centroids(embeddings: DataFrame, n_centroids: int = 16,
@@ -483,8 +382,7 @@ def ivf_cosine_topk(embeddings: DataFrame, queries: DataFrame,
                     n_centroids: int = 16, n_probe: int = 2, k: int = 5,
                     vec_col: str = "embedding",
                     centroids: str = "minid",
-                    n_iter: int = 2,
-                    assign_mode: str = "sql") -> DataFrame:
+                    n_iter: int = 2) -> DataFrame:
     """IVF-style ANN: assign every corpus vector to its nearest
     centroid (the inverted-file bucket), search only the query's
     ``n_probe`` nearest buckets — the other classic bucketed ANN shape
@@ -506,7 +404,7 @@ def ivf_cosine_topk(embeddings: DataFrame, queries: DataFrame,
     corpus = with_norm(widen_partitions(
         embeddings.select("vec_id", vec_col), min_bytes=0), vec_col) \
         .select("vec_id", "_v", "_norm")
-    assigned = _assign_to_centroids(corpus, cent, mode=assign_mode)
+    assigned = _assign_to_centroids(corpus, cent)
     probes = (with_norm(queries, vec_col)
               .select(F.col("vec_id").alias("query_id"),
                       F.col("_v").alias("_q"),
@@ -519,16 +417,13 @@ def ivf_cosine_topk(embeddings: DataFrame, queries: DataFrame,
                       F.desc("csim"), F.asc("cent_id"))))
               .filter(F.col("crnk") <= n_probe)
               .select("query_id", "_q", "_qnorm", "cent_id"))
-    # probe scoring: arrow mode swaps the interpreted fold for the
-    # fold-order-exact vectorized pair dot (same bit pattern, so the
-    # rank order — pinned by the parity test — cannot drift)
-    if assign_mode == "arrow":
-        probe_dot = _pair_dot_seq_udf()(F.col("_v"), F.col("_q"))
-    else:
-        probe_dot = _dot(F.col("_v"), F.col("_q"))
+    # probe scoring: the fold-order-exact vectorized pair dot (same
+    # bit pattern as the ``_dot`` fold, so near-tied ranks cannot
+    # drift)
     scored = (assigned.join(F.broadcast(probes), "cent_id")
               .filter(F.col("vec_id") != F.col("query_id"))
-              .withColumn("sim", probe_dot
+              .withColumn("sim",
+                          _pair_dot_seq_udf()(F.col("_v"), F.col("_q"))
                           / (F.col("_norm") * F.col("_qnorm"))))
     w = Window.partitionBy("query_id").orderBy(
         F.desc("sim"), F.asc("vec_id"))

@@ -353,18 +353,9 @@ def dedup_word_jaccard(spark, sf):
 
 
 def dedup_minhash_lsh(spark, sf):
-    """Driver entry runs the hashlib Arrow signature mode — the same
-    arrow-scale-path convention as dedup_simhash_pairs/ann_srp/ann_ivf
-    (r4 verdict #3); bit parity with mode="sql" is pinned by
-    test_minhash_arrow_matches_sql, and the Catalyst form stays
-    oracle-checked as dedup_minhash_lsh_sql (EXTRA)."""
-    return minhash_lsh_pairs(load(spark, sf, "documents"), mode="arrow")
-
-
-def dedup_minhash_lsh_sql(spark, sf):
-    """Differential twin: the Catalyst built-ins form the DuckDB
-    oracle mirrors expression-for-expression."""
-    return minhash_lsh_pairs(load(spark, sf, "documents"), mode="sql")
+    """MinHash-LSH candidate pairs (hashlib signatures in one Arrow
+    pass per doc, banded on md5 bucket keys)."""
+    return minhash_lsh_pairs(load(spark, sf, "documents"))
 
 
 def dedup_simhash(spark, sf):
@@ -373,19 +364,10 @@ def dedup_simhash(spark, sf):
 
 
 def dedup_simhash_pairs(spark, sf):
-    """Driver entry runs the numpy Arrow throughput mode — the path
-    you'd run at scale; bit parity with mode="sql" is pinned by
-    test_dedup (Catalyst-tokenization-parity rule), and the sql form
-    stays oracle-checked as dedup_simhash_pairs_sql (EXTRA)."""
+    """SimHash near-dup candidate pairs (numpy signatures in one Arrow
+    pass per doc, banded on nibble quarters)."""
     from .operators.dedup import simhash_pairs
-    return simhash_pairs(load(spark, sf, "documents"), mode="arrow")
-
-
-def dedup_simhash_pairs_sql(spark, sf):
-    """Differential twin: the Catalyst built-ins form the DuckDB
-    oracle mirrors expression-for-expression."""
-    from .operators.dedup import simhash_pairs
-    return simhash_pairs(load(spark, sf, "documents"), mode="sql")
+    return simhash_pairs(load(spark, sf, "documents"))
 
 
 def text_token_count(spark, sf):
@@ -949,19 +931,8 @@ def ann_srp_near_dup(spark, sf):
     """Embedding near-dup via multi-table SRP-LSH candidates + exact
     cosine confirm — the scale path (bucket-key shuffle, never
     all-pairs). Deterministic integer planes so DuckDB reproduces the
-    bucketing bit-for-bit. Driver entry runs mode="arrow" (the scale
-    path; bit parity with "sql" pinned by test_similarity); the sql
-    form stays oracle-checked as ann_srp_near_dup_sql (EXTRA). No
-    reference analog (north-star op, SURVEY.md §2.10)."""
-    from .operators.similarity import srp_banded_near_dup, srp_plane_tables
-    return srp_banded_near_dup(load(spark, sf, "embeddings"),
-                               srp_plane_tables(), threshold=0.4,
-                               mode="arrow")
-
-
-def ann_srp_near_dup_sql(spark, sf):
-    """Differential twin of ann_srp_near_dup (Catalyst built-ins =
-    the DuckDB oracle's expression form)."""
+    bucketing bit-for-bit. No reference analog (north-star op,
+    SURVEY.md §2.10)."""
     from .operators.similarity import srp_banded_near_dup, srp_plane_tables
     return srp_banded_near_dup(load(spark, sf, "embeddings"),
                                srp_plane_tables(), threshold=0.4)
@@ -970,21 +941,9 @@ def ann_srp_near_dup_sql(spark, sf):
 def ann_ivf_topk(spark, sf):
     """IVF-bucketed ANN top-k (inverted file over deterministic
     centroids, n_probe=2) — the other classic bucketed scale path next
-    to SRP-LSH. Driver entry runs assign_mode="arrow" (the numpy twin
-    whose IEEE summation order reproduces the Catalyst fold
-    bit-for-bit — parity pinned by test_ivf_assign_arrow_bit_parity);
-    the interpreted-fold sql form stays oracle-checked as
-    ann_ivf_topk_sql (EXTRA). No reference analog (north-star op,
-    SURVEY.md §2.10)."""
-    from .operators.similarity import ivf_cosine_topk
-    emb = load(spark, sf, "embeddings")
-    return ivf_cosine_topk(emb, emb.filter(F.col("vec_id") < 10),
-                           n_centroids=16, n_probe=2, k=5,
-                           assign_mode="arrow")
-
-
-def ann_ivf_topk_sql(spark, sf):
-    """Differential twin of ann_ivf_topk (Catalyst fold assignment)."""
+    to SRP-LSH. Assignment and probe scoring sum in index order, so
+    near-tied ranks match the oracle. No reference analog (north-star
+    op, SURVEY.md §2.10)."""
     from .operators.similarity import ivf_cosine_topk
     emb = load(spark, sf, "embeddings")
     return ivf_cosine_topk(emb, emb.filter(F.col("vec_id") < 10),
@@ -1150,8 +1109,7 @@ QUERIES = {
 
 # Oracle-checked but NOT driver-submitted: the quadratic guarded
 # verifiers (ann_near_dup, dedup_word_jaccard, kg_mention_extract,
-# ann_cosine_topk), the sql-mode differential twins of the arrow-mode
-# driver entries, and twins whose operator is already driver-covered
+# ann_cosine_topk) and twins whose operator is already driver-covered
 # by a sibling (dedup_simhash ⊂ dedup_simhash_pairs, events_sessionize
 # ~ events_session_window, j5 window form ~ c2_curify CASE form + w4
 # windows, a4/a5 trivial aggregates, plus the round-5 rotation's
@@ -1165,10 +1123,6 @@ EXTRA_QUERIES = {
     "text_token_count": text_token_count,
     "ann_near_dup": ann_near_dup,
     "ann_cosine_topk": ann_cosine_topk,
-    "ann_srp_near_dup_sql": ann_srp_near_dup_sql,
-    "ann_ivf_topk_sql": ann_ivf_topk_sql,
-    "dedup_simhash_pairs_sql": dedup_simhash_pairs_sql,
-    "dedup_minhash_lsh_sql": dedup_minhash_lsh_sql,
     "dedup_word_jaccard": dedup_word_jaccard,
     "dedup_simhash": dedup_simhash,
     "kg_mention_extract": kg_mention_extract,
@@ -1204,8 +1158,8 @@ _SIG = ", ".join(
 
 
 def _simhash_sql() -> str:
-    """Generate the portable SimHash SQL mirroring
-    operators/dedup.py:simhash_signatures nibble arithmetic."""
+    """Generate the portable SimHash SQL: the nibble arithmetic that
+    operators/dedup.py:simhash_signatures computes in numpy."""
     sums = ["count(*) AS cnt"]
     for p in range(1, 17):
         v = f"(strpos('0123456789abcdef', substr(h, {p}, 1)) - 1)"
@@ -1813,11 +1767,3 @@ def _mm_oracles() -> dict[str, str]:
 
 
 ORACLE_SQL.update(_mm_oracles())
-
-# the arrow/sql differential twins share one oracle: parity between
-# the two modes is pinned bit-for-bit by pytest, so the DuckDB SQL
-# written against the Catalyst expression form checks both
-ORACLE_SQL["ann_srp_near_dup_sql"] = ORACLE_SQL["ann_srp_near_dup"]
-ORACLE_SQL["ann_ivf_topk_sql"] = ORACLE_SQL["ann_ivf_topk"]
-ORACLE_SQL["dedup_simhash_pairs_sql"] = ORACLE_SQL["dedup_simhash_pairs"]
-ORACLE_SQL["dedup_minhash_lsh_sql"] = ORACLE_SQL["dedup_minhash_lsh"]

@@ -41,6 +41,27 @@ def _package_zip() -> str:
     return str(out)
 
 
+_TRUE = {"1", "true", "yes", "on"}
+_FALSE = {"0", "false", "no", "off"}
+
+
+def env_bool(name: str, default: bool) -> str:
+    """Boolean env var as the "true"/"false" a Spark boolean conf
+    accepts: 1/true/yes/on and 0/false/no/off in any case (surrounding
+    blanks ignored); unset or empty gives ``default``. Anything else
+    raises here, naming the variable, instead of failing session start
+    with a JVM conf error."""
+    raw = os.environ.get(name, "").strip().lower()
+    if not raw:
+        return "true" if default else "false"
+    if raw in _TRUE:
+        return "true"
+    if raw in _FALSE:
+        return "false"
+    raise ValueError(f"{name}={os.environ[name]!r} is not a boolean "
+                     "(use 1/true/yes/on or 0/false/no/off)")
+
+
 def get_spark(app_name: str = "ldtab_clj_spark",
               master: str | None = None,
               shuffle_partitions: int | None = None,
@@ -91,7 +112,7 @@ def get_spark(app_name: str = "ldtab_clj_spark",
         # 2.71->2.51, term_stats 1.18->1.13, diff 0.90->0.85; rest
         # within noise), no regressions at either scale.
         .config("spark.sql.join.preferSortMergeJoin",
-                os.environ.get("SPARK_PREFER_SMJ", "false"))
+                env_bool("SPARK_PREFER_SMJ", False))
         # 16 MB auto-broadcast cap (was 64 MB): a parquet-size estimate
         # near 64 MB is a multi-million-row relation whose broadcast
         # build is serial driver+executor work and whose hash relation

@@ -94,38 +94,53 @@ def test_expand_invariant_to_arrow_batch_size(spark, tiny_arrow_batches):
         stmts.unpersist()
 
 
-def test_simhash_arrow_matches_sql(spark):
-    """mode="arrow" (numpy md5 bit-count) must be bit-identical to the
-    Catalyst oracle form — same shingle set, same majority rule."""
+# whitespace-edge corpus: tabs / newlines / NBSP / NULL / empty /
+# single word. No \x0b: Java's \s and the signatures count it as
+# whitespace, DuckDB's RE2 \s does not.
+EDGE_DOCS = [(1, "\tfoo bar"), (2, "foo\n"), (3, "a\u00a0b"), (4, None),
+             (5, "x \t y\r\nz"), (6, "  padded  "), (7, ""), (8, "one")]
+
+
+def _oracle(sql, docs):
+    """Rows of DuckDB ``sql`` over a ``documents`` table holding the
+    doc_id and text columns of ``docs`` (a Spark DataFrame or a list of
+    (doc_id, text) rows)."""
+    import duckdb
+    frame = (pd.DataFrame(docs, columns=["doc_id", "text"])
+             if isinstance(docs, list)
+             else docs.select("doc_id", "text").toPandas())
+    con = duckdb.connect()
+    con.register("frame", frame)
+    con.execute("CREATE TABLE documents AS SELECT "
+                "CAST(doc_id AS BIGINT) AS doc_id, text FROM frame")
+    return {tuple(r) for r in con.execute(sql).fetchall()}
+
+
+def _edge_df(spark):
+    return spark.createDataFrame(EDGE_DOCS, "doc_id long, text string")
+
+
+def test_simhash_matches_duckdb_oracle(spark):
+    """The numpy md5 bit-count SimHash equals the DuckDB oracle's
+    nibble arithmetic (queries._SIMHASH over queries._SHINGLES) on the
+    sf0.001 corpus and on the whitespace-edge corpus — same shingle
+    set, same majority rule, same tokenization."""
     from ldtab_clj_spark.operators.dedup import simhash_signatures
+    from ldtab_clj_spark.queries import _SHINGLES, _SIMHASH
+    sql = _SIMHASH.format(shingles=_SHINGLES)
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    sql = {(r.doc_id, r.simhash)
-           for r in simhash_signatures(docs, mode="sql").collect()}
-    arrow = {(r.doc_id, r.simhash)
-             for r in simhash_signatures(docs, mode="arrow").collect()}
-    assert sql == arrow and sql
-    # edge cases: empty and single-word docs produce no signature
+    got = {tuple(r) for r in
+           simhash_signatures(docs).select("doc_id", "simhash").collect()}
+    assert got == _oracle(sql, docs) and got
+    # empty and single-word docs produce no signature
     tiny = spark.createDataFrame(
         [(1, ""), (2, "one"), (3, "two words")], "doc_id long, text string")
-    assert {r.doc_id for r in
-            simhash_signatures(tiny, mode="arrow").collect()} == {3}
-    # whitespace-edge corpus: tabs / newlines / NBSP / NULL text must
-    # produce IDENTICAL signatures in both modes (Java ASCII \s +
-    # space-only trim + kept empty tokens — the exact Catalyst
-    # tokenization), and an unknown mode must raise
-    edge = spark.createDataFrame(
-        [(1, "\tfoo bar"), (2, "foo\n"), (3, "a\u00a0b"),
-         (4, None), (5, "x \t y\r\nz"), (6, "  padded  ")],
-        "doc_id long, text string")
-    sql_e = {(r.doc_id, r.simhash)
-             for r in simhash_signatures(edge, mode="sql").collect()}
-    arrow_e = {(r.doc_id, r.simhash)
-               for r in simhash_signatures(edge, mode="arrow").collect()}
-    assert sql_e == arrow_e, (sorted(sql_e - arrow_e),
-                              sorted(arrow_e - sql_e))
-    import pytest
-    with pytest.raises(ValueError, match="unknown simhash mode"):
-        simhash_signatures(edge, mode="numpy")
+    assert {r.doc_id for r in simhash_signatures(tiny).collect()} == {3}
+    got_e = {tuple(r) for r in simhash_signatures(_edge_df(spark))
+             .select("doc_id", "simhash").collect()}
+    want_e = _oracle(sql, EDGE_DOCS)
+    assert got_e == want_e, (sorted(got_e - want_e),
+                             sorted(want_e - got_e))
 
 
 def test_near_dup_clusters_known_graph(spark):
@@ -139,38 +154,25 @@ def test_near_dup_clusters_known_graph(spark):
     assert got == {(1, 1), (2, 1), (3, 1), (5, 5), (6, 5)}
 
 
-def test_minhash_arrow_matches_sql(spark):
-    """mode="arrow" (hashlib min-digest) must be bit-identical to the
-    Catalyst md5-min oracle form — same bigram shingle set, same
-    md5('i:' || shingle) families, min over digest bytes == min over
-    hex strings."""
+def test_minhash_matches_duckdb_oracle(spark):
+    """The hashlib min-digest MinHash equals the DuckDB oracle's
+    min(md5('i:' || shingle)) (queries._SIG grouped over
+    queries._SHINGLES) on the sf0.001 corpus and the whitespace-edge
+    corpus — min over digest bytes == min over hex strings — and the
+    banded pairs equal ORACLE_SQL["dedup_minhash_lsh"]."""
     from ldtab_clj_spark.operators.dedup import (minhash_lsh_pairs,
                                                  minhash_signatures)
+    from ldtab_clj_spark.queries import _SHINGLES, _SIG, ORACLE_SQL
+    sql = (f"WITH shingles AS ({_SHINGLES}) "
+           f"SELECT doc_id, {_SIG} FROM shingles GROUP BY doc_id")
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    sql = {tuple(r) for r in
-           minhash_signatures(docs, mode="sql").collect()}
-    arrow = {tuple(r) for r in
-             minhash_signatures(docs, mode="arrow").collect()}
-    assert sql == arrow and sql
-    # downstream pairs identical too (banding is shared JVM code)
-    p_sql = {tuple(r) for r in
-             minhash_lsh_pairs(docs, mode="sql").collect()}
-    p_arrow = {tuple(r) for r in
-               minhash_lsh_pairs(docs, mode="arrow").collect()}
-    assert p_sql == p_arrow
-    # whitespace-edge corpus (the _simhash_arrow tokenization-parity
-    # rules): tabs / newlines / NBSP / NULL / empty / single word
-    edge = spark.createDataFrame(
-        [(1, "\tfoo bar"), (2, "foo\n"), (3, "a b"),
-         (4, None), (5, "x \t y\r\nz"), (6, "  padded  "),
-         (7, ""), (8, "one")],
-        "doc_id long, text string")
-    sql_e = {tuple(r) for r in
-             minhash_signatures(edge, mode="sql").collect()}
-    arrow_e = {tuple(r) for r in
-               minhash_signatures(edge, mode="arrow").collect()}
-    assert sql_e == arrow_e, (sorted(sql_e - arrow_e),
-                              sorted(arrow_e - sql_e))
-    import pytest
-    with pytest.raises(ValueError, match="unknown minhash mode"):
-        minhash_signatures(edge, mode="numpy")
+    got = {tuple(r) for r in minhash_signatures(docs).collect()}
+    assert got == _oracle(sql, docs) and got
+    pairs = {tuple(r) for r in minhash_lsh_pairs(docs)
+             .select("doc_a", "doc_b").collect()}
+    assert pairs == _oracle(ORACLE_SQL["dedup_minhash_lsh"], docs) and pairs
+    got_e = {tuple(r) for r in minhash_signatures(_edge_df(spark))
+             .collect()}
+    want_e = _oracle(sql, EDGE_DOCS)
+    assert got_e == want_e, (sorted(got_e - want_e),
+                             sorted(want_e - got_e))

@@ -60,3 +60,21 @@ def test_state_at_every_transaction(spark, tid):
     if tid == 5:
         hist = order_history(spark, SF)
         assert len(got) == hist.filter("retraction = 0").count()
+
+
+@pytest.mark.parametrize("name", ["dedup_minhash_clusters",
+                                  "dedup_simhash"])
+def test_dedup_entry_matches_oracle(spark, name):
+    """dedup_minhash_clusters (driver) and dedup_simhash (EXTRA) call
+    the signature operators without naming a path; their rows equal
+    the DuckDB oracle at sf0.001."""
+    from ldtab_clj_spark.queries import ALL_QUERIES
+    got = ALL_QUERIES[name](spark, SF).toPandas()
+    con = duckdb.connect()
+    con.execute("CREATE VIEW documents AS SELECT * FROM "
+                f"'{SF}/documents.parquet'")
+    want = con.execute(ORACLE_SQL[name]).df()
+    cols = sorted(got.columns)
+    assert cols == sorted(want.columns)
+    rows = sorted(map(tuple, got[cols].values.tolist()))
+    assert rows and rows == sorted(map(tuple, want[cols].values.tolist()))

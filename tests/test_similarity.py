@@ -58,51 +58,51 @@ def test_srp_banded_near_dup_recall(spark, emb):
     assert len(approx) / len(exact) >= 0.8, (len(approx), len(exact))
 
 
-def test_srp_arrow_confirm_matches_sql(spark, emb):
-    """The vectorized-numpy confirm (throughput path) and the Catalyst
-    fold (oracle path) must produce identical pair sets."""
-    planes = srp_plane_tables()
-    sql = {(r.vec_a, r.vec_b)
-           for r in srp_banded_near_dup(emb, planes, 0.4,
-                                        mode="sql").collect()}
-    arrow = {(r.vec_a, r.vec_b)
-             for r in srp_banded_near_dup(emb, planes, 0.4,
-                                          mode="arrow").collect()}
-    assert sql == arrow and sql
+def _oracle(sql):
+    """Rows of DuckDB ``sql`` over the sf0.001 embeddings table."""
+    import duckdb
+    con = duckdb.connect()
+    con.execute("CREATE VIEW embeddings AS SELECT * FROM "
+                f"'{SF}/embeddings.parquet'")
+    return {tuple(r) for r in con.execute(sql).fetchall()}
 
 
-def test_ivf_assign_arrow_bit_parity(spark, emb):
-    """The numpy assignment twin must be BIT-identical to the literal
-    Catalyst fold — same (vec_id → cent_id) map AND same downstream
-    top-k — because the arrow path reproduces the fold's left-to-right
-    summation order per dimension (Catalyst-parity rule for arrow
-    twins; a plain matmul's blocked sums could flip near-tied argmax)."""
+def test_srp_near_dup_matches_duckdb_oracle(spark, emb):
+    """The in-stream numpy bucket confirm emits exactly the pair set of
+    ORACLE_SQL["ann_srp_near_dup"] (same planes, same threshold)."""
+    from ldtab_clj_spark.queries import ORACLE_SQL
+    got = {(r.vec_a, r.vec_b)
+           for r in srp_banded_near_dup(emb, srp_plane_tables(),
+                                        0.4).collect()}
+    assert got == _oracle(ORACLE_SQL["ann_srp_near_dup"]) and got
+
+
+def test_srp_bad_mode_raises(spark, emb):
+    with pytest.raises(ValueError, match="unknown srp mode"):
+        srp_banded_near_dup(emb, srp_plane_tables(), 0.4, mode="numpy")
+
+
+def test_ivf_matches_duckdb_oracle(spark, emb):
+    """The numpy centroid assignment equals the ``assigned`` CTE of
+    ORACLE_SQL["ann_ivf_topk"] (vec_id → cent_id, argmax cosine, lowest
+    cent_id on ties), and the top-k equals the whole oracle: the
+    fold-order sums keep near-tied argmax and ranks from flipping."""
     from ldtab_clj_spark.operators.similarity import (
         _assign_to_centroids, _minid_centroids, ivf_cosine_topk,
         with_norm)
+    from ldtab_clj_spark.queries import ORACLE_SQL
+    oracle = ORACLE_SQL["ann_ivf_topk"]
     cent = _minid_centroids(emb, 16, "embedding")
     corpus = with_norm(emb, "embedding").select("vec_id", "_v", "_norm")
-    sql_assign = {r.vec_id: r.cent_id for r in
-                  _assign_to_centroids(corpus, cent, "sql").collect()}
-    arrow_assign = {r.vec_id: r.cent_id for r in
-                    _assign_to_centroids(corpus, cent, "arrow").collect()}
-    assert sql_assign == arrow_assign and sql_assign
-    assert len(set(sql_assign.values())) > 1, "degenerate assignment"
-    queries = emb.filter(F.col("vec_id") < 5)
-    sql_topk = sorted(map(tuple, ivf_cosine_topk(
-        emb, queries, 16, 2, 5, assign_mode="sql").collect()))
-    arrow_topk = sorted(map(tuple, ivf_cosine_topk(
-        emb, queries, 16, 2, 5, assign_mode="arrow").collect()))
-    assert sql_topk == arrow_topk and sql_topk
-
-
-def test_ivf_assign_bad_mode_raises(spark, emb):
-    from ldtab_clj_spark.operators.similarity import (
-        _assign_to_centroids, _minid_centroids, with_norm)
-    cent = _minid_centroids(emb, 4, "embedding")
-    corpus = with_norm(emb, "embedding").select("vec_id", "_v", "_norm")
-    with pytest.raises(ValueError, match="assign mode"):
-        _assign_to_centroids(corpus, cent, "numpy")
+    got = {(r.vec_id, r.cent_id)
+           for r in _assign_to_centroids(corpus, cent).collect()}
+    want = _oracle(oracle[:oracle.index(", q AS (")]
+                   + " SELECT vec_id, cent_id FROM assigned")
+    assert got == want and got
+    assert len({c for _, c in got}) > 1, "degenerate assignment"
+    topk = {tuple(r) for r in ivf_cosine_topk(
+        emb, emb.filter(F.col("vec_id") < 10), 16, 2, 5).collect()}
+    assert topk == _oracle(oracle) and topk
 
 
 def test_ivf_topk_recall_vs_exact(spark, emb):

@@ -72,11 +72,11 @@ def main() -> None:
             out.append(f"- `{rs}...`\n")
         out.append("\n")
 
-    # IVF assignment stage in isolation: the judge's round-2 finding
-    # was a 16×-expanded Window+Sort here; the fix folds the
-    # broadcast-sized centroid table into a literal argmax projection —
-    # assignment is a pure map fused into the corpus scan (no Window,
-    # no aggregate, no Exchange at all). Audited separately because the
+    # IVF assignment stage in isolation: a round-2 finding was a
+    # 16×-expanded Window+Sort here. The broadcast-sized centroid table
+    # is collected and scored per Arrow batch in one MapInPandas pass,
+    # so assignment is a pure map over the corpus scan (no Window, no
+    # aggregate, no Exchange at all). Audited separately because the
     # full ann_ivf_topk plan legitimately keeps Windows for probe/top-k
     # ranking.
     from ldtab_clj_spark.operators.similarity import (_assign_to_centroids,
@@ -95,9 +95,9 @@ def main() -> None:
     for m in ("Window", "SortAggregate", "HashAggregate", "Exchange"):
         assert m not in counts, \
             f"IVF assignment regressed: {m} in the assignment stage"
-    out.append("- pure map: literal-centroid argmax fused into the "
-               "scan projection; no join/aggregate/shuffle/sort in "
-               "the assignment stage\n\n")
+    out.append("- pure map: collected centroids scored per Arrow "
+               "batch in one MapInPandas over the scan; no "
+               "join/aggregate/shuffle/sort in the assignment stage\n\n")
     Path("PLANS.md").write_text("".join(out))
     print("wrote PLANS.md")
 
