@@ -21,8 +21,10 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
+from ldtab_clj_spark.session import env_int, get_spark  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+CPUS = env_int("SPARK_GRAFT_CPUS", os.cpu_count() or 4)
 # docs scale tied to sf: sf0.1 → 20k docs (~500k thin triples)
 _SF = float(SF_DIR.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in SF_DIR \
     else 0.1
@@ -163,17 +165,10 @@ def main() -> None:
     every attempt trips the control, the LAST flagged draw is emitted
     (the flag is then the honest signal). Exactly ONE JSON line goes
     to stdout either way; attempt chatter goes to stderr."""
-    from ldtab_clj_spark.session import get_spark
-
-    # per-run conf overrides for controlled A/Bs (e.g. the r5
-    # lz4-vs-zstd suite duel) — same contract as the scaling
-    # harness's SPARK_SCALING_EXTRA_CONF
-    extra = {"spark.ui.showConsoleProgress": "false"}
-    extra.update(json.loads(os.environ.get("SPARK_GRAFT_EXTRA_CONF",
-                                           "{}")))
     spark = get_spark("ldtab-bench", master=f"local[{CPUS}]",
                       shuffle_partitions=max(CPUS, 16),
-                      extra_conf=extra)
+                      extra_conf={"spark.ui.showConsoleProgress":
+                                  "false"})
     result = None
     for attempt in range(1, MAX_ATTEMPTS + 1):
         result = run_suite(spark)

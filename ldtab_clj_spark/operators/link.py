@@ -40,7 +40,7 @@ SALT = 16
 # proved nondeterministic at the threshold boundary: at 2M docs the
 # 1-core leg converted to broadcast while the 4-core leg kept the
 # shuffle, a ~94 s/leg plan asymmetry that polluted the scaling ratio
-# (BENCH/stage_decompose.jsonl, round 5).
+# (round-5 stage decomposition, BENCH/BASELINE.md).
 BROADCAST_TAIL_MAX_ROWS = 2_000_000
 
 

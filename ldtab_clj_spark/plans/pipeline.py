@@ -38,7 +38,8 @@ def build_statements(docs: DataFrame, entity_dict: DataFrame,
     shrinks the dominant Python stage to a handful of tasks as volume
     grows — at 2M docs the 270MB shuffle coalesces to 5 tasks, and 5
     tasks on 4 cores is a two-round makespan (measured: the whole
-    0.73-vs-0.82 volume-scaling erosion, BENCH/stage_decompose.jsonl).
+    0.73-vs-0.82 volume-scaling erosion; round-5 stage decomposition
+    in BENCH/BASELINE.md).
     Callers that know their parallelism should always pass it."""
     thin = extract_thin_triples(docs)
     linked = link_entities(thin, entity_dict)

@@ -62,11 +62,25 @@ def env_bool(name: str, default: bool) -> str:
                      "(use 1/true/yes/on or 0/false/no/off)")
 
 
+def env_int(name: str, default: int) -> int:
+    """Positive-integer env var (surrounding blanks ignored); unset or
+    empty gives ``default``. Anything else — ``0``, ``-1``, ``four`` —
+    raises here, naming the variable, instead of reaching Spark as a
+    ``local[0]`` master or failing with a bare ``int()`` message."""
+    raw = os.environ.get(name, "").strip()
+    if not raw:
+        return default
+    if not (raw.isascii() and raw.isdigit()) or int(raw) < 1:
+        raise ValueError(f"{name}={os.environ[name]!r} is not a "
+                         "positive integer")
+    return int(raw)
+
+
 def get_spark(app_name: str = "ldtab_clj_spark",
               master: str | None = None,
               shuffle_partitions: int | None = None,
               extra_conf: dict | None = None) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    cpus = env_int("SPARK_GRAFT_CPUS", os.cpu_count() or 4)
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
@@ -136,12 +150,13 @@ def get_spark(app_name: str = "ldtab_clj_spark",
                 os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         # -Xms=driver memory + AlwaysPreTouch: fault the whole heap in
         # at JVM start instead of lazily during the first queries that
-        # grow it. On a healthy box this costs ~1 s once; in the
-        # first-touch-collapsed host phase (BENCH/README: fault_gbps
-        # ~0.1 vs ~10 clean) lazy heap growth otherwise lands INSIDE
-        # timed queries as multi-second page-fault storms — the same
-        # mitigation bench_scaling.py has used since round 5, now on
-        # every session so bench.py draws stabilize too
+        # grow it. On a healthy box this costs ~1 s once; on a host
+        # whose fresh-page supply collapses (round 5 measured
+        # first-touch ~1000x slower while steady-state copy stayed at
+        # full speed, BENCH/BASELINE.md) lazy heap growth otherwise
+        # lands INSIDE timed queries as multi-second page-fault storms
+        # — the same mitigation bench_scaling.py has used since round
+        # 5, now on every session so bench.py draws stabilize too
         .config("spark.driver.extraJavaOptions",
                 os.environ.get("SPARK_DRIVER_JAVA_OPTS",
                                "-Xms" + os.environ.get(

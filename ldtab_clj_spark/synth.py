@@ -37,21 +37,13 @@ def _surface(rng: random.Random, idx: int) -> str:
     return f"Widget {idx}" if rng.random() < 0.5 else f"W-{idx}"
 
 
-def make_doc_spans(seed: int, doc_id: int, hot_frac: float = 0.0,
-                   hot_idx: int = 500) -> list[dict]:
+def make_doc_spans(seed: int, doc_id: int) -> list[dict]:
     """Pure function (seed, doc_id) → ordered span list. Mersenne
     ``random.Random`` (platform-stable, cheap init — numpy Generator
-    init dominated synthesis cost at bench scale).
-
-    ``hot_frac`` > 0 redirects that fraction of entity mentions to a
-    single entity (default one OUTSIDE the broadcast head set) — the
-    adversarial skew case for the salted tail join (tools/bench_skew.py).
-    """
+    init dominated synthesis cost at bench scale)."""
     rng = random.Random((seed << 40) ^ (int(doc_id) * 2654435761))
 
     def _zipf_idx(r, n=N_ENTITIES):
-        if hot_frac and r.random() < hot_frac:
-            return hot_idx
         return int((n + 1) ** r.random()) - 1
 
     n_spans = rng.randrange(2, 9)
@@ -93,23 +85,19 @@ def make_doc_spans(seed: int, doc_id: int, hot_frac: float = 0.0,
 
 
 def synth_docs(spark: SparkSession, n_docs: int,
-               seed: int = 42, partitions: int | None = None,
-               hot_frac: float = 0.0) -> DataFrame:
+               seed: int = 42, partitions: int | None = None) -> DataFrame:
     """Distributed deterministic docs table: spark.range → mapInPandas.
 
     Output is invariant to ``partitions`` (per-doc seeding), so the
     same corpus can be generated at any parallelism level — the basis
     of the N-vs-4N scaling benchmark.
     """
-    rng_seed, hf = seed, hot_frac
-
     def gen(batches):
         for pdf in batches:
             ids = pdf["id"].to_numpy()
             yield pd.DataFrame({
                 "doc_id": [f"doc-{i:010d}" for i in ids],
-                "spans": [make_doc_spans(rng_seed, int(i), hot_frac=hf)
-                          for i in ids],
+                "spans": [make_doc_spans(seed, int(i)) for i in ids],
             })
 
     rng = spark.range(0, n_docs,

@@ -1,199 +1,104 @@
 """Scaling-efficiency evidence (BASELINE.json north_rule).
 
 Runs the SAME KG pipeline on the SAME input at two parallelism levels
-(default local[1] vs local[4] — the sandbox stand-in for N vs 4N
-executors; synth is partition-count-invariant so inputs are identical)
-in separate JVMs, and reports throughput at both plus scaling
-efficiency = (tput@4N / tput@N) / 4. Appends results to
-BENCH/BASELINE.md.
+(local[1] vs local[4] — the sandbox stand-in for N vs 4N executors;
+synth is partition-count-invariant so inputs are identical), each leg
+in its own JVM, and reports throughput at both plus scaling
+efficiency = (tput@4N / tput@N) / 4. Appends one row per run to
+BENCH/scaling_runs.jsonl.
 
 Usage: python tools/bench_scaling.py [n_docs]
+       python tools/bench_scaling.py --leg CORES N_DOCS   (one leg; one
+       JSON line on stdout — what the full run spawns per trial)
 """
 
 from __future__ import annotations
 
 import json
+import os
+import statistics
 import subprocess
 import sys
 import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
-
-RUNNER = r"""
-import json, sys, time
-sys.path.insert(0, "{repo}")
-from ldtab_clj_spark.session import get_spark
-from ldtab_clj_spark.plans.pipeline import run_pipeline
-# 16g heap: measured faster for the 1-2M-doc volume runs at 1-4
-# cores (GC pressure grows with shuffle volume); the session default
-# stays 8g because big heaps HURT the many-small-queries local[32]
-# bench — see session.py
-import os as _os
-# -Xms=Xmx + AlwaysPreTouch: fault the WHOLE heap in at JVM start
-# (before the warmup query, outside the timed region). Long-lived
-# cluster executors run with resident heaps; a fresh per-leg JVM
-# that grows its heap lazily instead measures the hypervisor's
-# fresh-page supply — which on this box collapses ~1000x in
-# degraded phases while steady-state bandwidth stays full (r5
-# probe decomposition, tools/box_probe.py docstring)
-_extra = {{"spark.ui.showConsoleProgress": "false",
-           "spark.driver.memory": "16g",
-           "spark.driver.extraJavaOptions":
-               "-Xms16g -XX:+AlwaysPreTouch"}}
-# per-run conf overrides (e.g. the r5 python.worker.reuse finding)
-_extra.update(json.loads(
-    _os.environ.get("SPARK_SCALING_EXTRA_CONF", "{{}}")))
-spark = get_spark("scaling", master="local[{cores}]",
-                  shuffle_partitions={parts},
-                  extra_conf=_extra)
-# warm the JVM/Python workers so we time compute, not startup
-run_pipeline(spark, n_docs=200, seed=1).count()
-t0 = time.perf_counter()
-rows = run_pipeline(spark, n_docs={n_docs}, seed=42,
-                    partitions={parts}).count()
-dt = time.perf_counter() - t0
-print(json.dumps({{"cores": {cores}, "rows": int(rows), "sec": dt,
-                   "rows_per_sec": rows / dt}}))
-"""
+sys.path.insert(0, str(REPO))
 
 # identical plan/partitioning for both runs — only the executor-thread
 # count varies, the honest analog of N vs 4N executors on a fixed input
 PARTS = 64
+LO, HI = 1, 4
+# best-of per core count, and the median of as many pair efficiencies
+TRIALS = 3
+
+# 16g heap: measured faster for the 1-2M-doc volume runs at 1-4 cores
+# (GC pressure grows with shuffle volume); the session default stays
+# 8g because big heaps HURT the many-small-queries bench — see
+# session.py. -Xms=Xmx + AlwaysPreTouch faults the WHOLE heap in at
+# JVM start, outside the timed region: a fresh per-leg JVM that grows
+# its heap lazily measures the host's fresh-page supply instead of the
+# pipeline. A committed heap the RAM cannot back stops the JVM from
+# starting, so hosts under 32 GB get half their RAM instead.
+_RAM_GB = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 30
+HEAP = f"{min(16, max(1, _RAM_GB // 2))}g"
+LEG_CONF = {"spark.ui.showConsoleProgress": "false",
+            "spark.driver.memory": HEAP,
+            "spark.driver.extraJavaOptions":
+                f"-Xms{HEAP} -XX:+AlwaysPreTouch"}
 
 
-# best-of per core count (de-noise shared-box variance); override via
-# env when a short clean-phase window only fits fewer pairs (per-pair
-# probes in the result row label exactly what each pair ran under).
-# Clamped to >= 1 (ADVICE r5): 0/negative would skip the loop and
-# crash on r_lo/r_hi = None after burning the gate budget.
-TRIALS = max(1, int(__import__("os").environ.get(
-    "SPARK_SCALING_TRIALS", "3")))
+def leg(cores: int, n_docs: int) -> dict:
+    """One timed pipeline run at local[cores] in THIS process."""
+    from ldtab_clj_spark.plans.pipeline import run_pipeline
+    from ldtab_clj_spark.session import get_spark
+
+    spark = get_spark("scaling", master=f"local[{cores}]",
+                      shuffle_partitions=PARTS, extra_conf=LEG_CONF)
+    # warm the JVM/Python workers so we time compute, not startup
+    run_pipeline(spark, n_docs=200, seed=1).count()
+    t0 = time.perf_counter()
+    rows = run_pipeline(spark, n_docs=n_docs, seed=42,
+                        partitions=PARTS).count()
+    dt = time.perf_counter() - t0
+    return {"cores": cores, "rows": int(rows), "sec": dt,
+            "rows_per_sec": rows / dt}
 
 
-def run_once(cores: int, n_docs: int) -> dict:
-    code = RUNNER.format(repo=REPO, cores=cores, n_docs=n_docs,
-                         parts=PARTS)
-    out = subprocess.run([sys.executable, "-c", code], check=True,
-                         capture_output=True, text=True)
+def run_leg(cores: int, n_docs: int) -> dict:
+    """One leg in a fresh JVM: this script re-invoked with --leg."""
+    out = subprocess.run(
+        [sys.executable, __file__, "--leg", str(cores), str(n_docs)],
+        check=True, capture_output=True, text=True)
     return json.loads(out.stdout.strip().splitlines()[-1])
-
-
-# Box-phase gate (r5): the shared host's degraded phases got WORSE
-# over the build — an official 2M run drew both legs 2-3x slower than
-# any prior draw while the 3-second probe itself ran 4+ minutes. A
-# flagged-but-recorded draw still costs a round of comparable numbers,
-# so each PAIR now (a) waits for a clean-phase probe (bounded budget),
-# and (b) records the probe it started under, making cross-phase pairs
-# identifiable in the log instead of silently polluting the median.
-# Calibrated for box_probe's CURRENT 256 MB copy buffer (ADVICE r5:
-# the 9-11 GiB/s clean band was measured with the older 1 GiB buffer;
-# 256 MB readings on this VM span ~6.3-9 GiB/s across mixed phases, so
-# 6.0 keeps margin below the observed range). copy_gbps is the WEAK
-# discriminator anyway — r5's decomposition showed steady-state copy
-# holding 9.6 while first-touch collapsed 1000x; fault_gbps below is
-# the decisive gate.
-MIN_COPY_GBPS = float(__import__("os").environ.get(
-    "SPARK_SCALING_MIN_GBPS", "6.0"))
-# clean-phase first-touch ≈ 2-5 GiB/s; collapsed ≈ 0.009 (r5 probe
-# decomposition). 0.5 splits the modes with an order of magnitude of
-# margin each way. AlwaysPreTouch moves the fault cost out of the
-# timed region, but a collapsed phase would still stall each leg's
-# STARTUP for ~30 min — not worth burning trials on.
-MIN_FAULT_GBPS = float(__import__("os").environ.get(
-    "SPARK_SCALING_MIN_FAULT_GBPS", "0.5"))
-GATE_BUDGET_SECS = int(__import__("os").environ.get(
-    "SPARK_SCALING_GATE_BUDGET", "1800"))
-
-
-def _probe() -> dict:
-    # probe in a subprocess: in a collapsed phase even the 256 MB
-    # first-touch can take ~30 s; a 120 s timeout turns a stall into
-    # the strongest possible "degraded" reading. Probe FAILURE (crash,
-    # missing numpy, bad JSON) is logged and flagged distinctly from a
-    # degraded reading (ADVICE r5) so a broken probe can't silently
-    # burn the whole gate budget as "degraded box".
-    try:
-        out = subprocess.run(
-            [sys.executable, str(REPO / "tools" / "box_probe.py"),
-             "--json"], capture_output=True, text=True, timeout=120)
-        return json.loads(out.stdout.strip())
-    except Exception as ex:
-        err = getattr(ex, "stderr", None) or str(ex)
-        print(f"box_probe FAILED ({type(ex).__name__}): "
-              f"{str(err)[:300]}", file=sys.stderr)
-        return {"copy_gbps": 0.0, "fault_gbps": 0.0,
-                "probe_error": type(ex).__name__}
-
-
-def wait_for_clean_phase() -> dict:
-    """Poll until the box probe reads clean or the budget expires.
-    The returned dict carries ``gate_passed`` (ADVICE r5): on budget
-    expiry the pair still runs, but the row records the gate verdict
-    explicitly instead of leaving degraded draws identifiable only by
-    their raw probe numbers."""
-    deadline = time.time() + GATE_BUDGET_SECS
-
-    def clean(p):
-        return (p["copy_gbps"] >= MIN_COPY_GBPS
-                and p["fault_gbps"] >= MIN_FAULT_GBPS)
-
-    p = _probe()
-    while not clean(p) and time.time() < deadline:
-        print(f"box degraded (copy {p['copy_gbps']:.2f} / fault "
-              f"{p['fault_gbps']:.3f} GiB/s); sleeping 60s",
-              file=sys.stderr)
-        time.sleep(60)
-        p = _probe()
-    p["gate_passed"] = clean(p)
-    if not p["gate_passed"]:
-        print("WARNING: gate budget expired in a degraded phase — "
-              "running anyway, row flagged gate_passed=false",
-              file=sys.stderr)
-    return p
 
 
 def main() -> None:
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 400_000
-    lo, hi = 1, 4
-    # INTERLEAVED trials (1c, 4c, 1c, 4c, ...): the two legs used to
-    # run as separate ~10-minute phases, so any box-load drift between
-    # phases landed entirely in the efficiency ratio — pairing the
-    # trials exposes both legs to the same box state
+    # INTERLEAVED trials (1c, 4c, 1c, 4c, ...): pairing the trials
+    # exposes both legs to the same box state, so load drift between
+    # separate per-leg phases cannot land in the efficiency ratio
     r_lo = r_hi = None
     pair_effs = []
-    pair_probes = []
     for _ in range(TRIALS):
-        p = wait_for_clean_phase()
-        pair_probes.append({"copy": p["copy_gbps"],
-                            "fault": p.get("fault_gbps"),
-                            "gate_passed": p.get("gate_passed"),
-                            **({"probe_error": p["probe_error"]}
-                               if "probe_error" in p else {})})
-        a = run_once(lo, n_docs)
+        a = run_leg(LO, n_docs)
         if r_lo is None or a["sec"] < r_lo["sec"]:
             r_lo = a
-        b = run_once(hi, n_docs)
+        b = run_leg(HI, n_docs)
         if r_hi is None or b["sec"] < r_hi["sec"]:
             r_hi = b
         # per-PAIR efficiency: each adjacent (1c, 4c) pair shares box
-        # state, so under the box's slow/fast phase oscillation (r5:
-        # identical code drew 132-324s at 2M within hours) the median
-        # pair efficiency is the honest statistic — best-of legs drawn
-        # from DIFFERENT phases can fabricate or destroy the ratio
+        # state, so the median pair efficiency is the honest statistic
+        # — best-of legs drawn from different load phases can
+        # fabricate or destroy the ratio
         pair_effs.append(round(
-            (b["rows_per_sec"] / a["rows_per_sec"]) / (hi / lo), 3))
-    import statistics
-    eff = (r_hi["rows_per_sec"] / r_lo["rows_per_sec"]) / (hi / lo)
-    import os
+            (b["rows_per_sec"] / a["rows_per_sec"]) / (HI / LO), 3))
+    eff = (r_hi["rows_per_sec"] / r_lo["rows_per_sec"]) / (HI / LO)
     result = {"n_docs": n_docs, "low": r_lo, "high": r_hi,
               "scaling_efficiency": round(eff, 3),
               "pair_efficiencies": pair_effs,
               "median_pair_efficiency":
                   round(statistics.median(pair_effs), 3),
-              "pair_start_gbps": pair_probes,
-              "extra_conf": json.loads(
-                  os.environ.get("SPARK_SCALING_EXTRA_CONF", "{}")),
               "ts": int(time.time())}
     print(json.dumps(result))
     # append raw runs to a jsonl log; BENCH/BASELINE.md is curated by
@@ -206,4 +111,7 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    if sys.argv[1:2] == ["--leg"]:
+        print(json.dumps(leg(int(sys.argv[2]), int(sys.argv[3]))))
+    else:
+        main()
