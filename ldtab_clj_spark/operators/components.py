@@ -6,29 +6,81 @@ The doc-derived pipeline avoids this entirely (components are
 document-local by construction); for *external* RDF sources (N-Triples
 files), blank labels are file-global and the closure must run for real.
 
-Spark realization: min-label propagation to fixpoint — an iterative
-self-join loop with ``localCheckpoint()`` per round to cut lineage
-(the standard connected-components-on-DataFrames pattern; OWL bnode
-graphs are shallow, so rounds ≈ tree depth, typically < 8).
+Spark realization: two-phase connected components (local contraction,
+then a global merge; Kiveris et al., SoCC 2014).
+
+1. **Local contraction.** One ``mapInPandas`` pass runs a union-find
+   (union towards the smaller label, path halving) over each
+   partition's edges and emits ``(node, local_root)``, the local root
+   being the smallest label in the node's component *within that
+   partition*. Memory bound: the union-find holds one entry per
+   distinct endpoint in its partition.
+2. **Global merge.** A node seen in more than one partition links its
+   local roots into a root graph; min-label propagation with pointer
+   doubling (``localCheckpoint()`` per round to cut lineage) runs over
+   that root graph only, and not at all when it is empty.
+
+The root graph is empty whenever every component's edges fall inside
+one partition. An exported ``.nt`` file writes each stanza's lines
+contiguously, so its components only cross partitions where a stanza
+straddles a text split boundary — the normal import does one Python
+pass and one aggregate, with no iterative rounds.
+
+Labels are each component's minimum label: Python's ``<`` on ``str``
+compares code points, which agrees with Spark's binary ``min`` because
+UTF-8 preserves code-point order.
 """
 
 from __future__ import annotations
 
+from typing import Iterator
+
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 MAX_ROUNDS = 32
 
 
-def min_label_components(edges: DataFrame,
-                         nodes: DataFrame) -> DataFrame:
-    """Generic connected components by iterative min-label propagation
-    with pointer doubling. ``edges``: (a, b) with BOTH directions
-    present; ``nodes``: (a). Returns (a, component) where component is
-    the minimum node label in a's component. O(log diameter) rounds,
-    one self-join + one aggregate per round, lineage cut per round."""
-    labels = nodes.withColumn("component", F.col("a")).localCheckpoint()
-    converged = False
+def _local_roots(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """Union-find over one partition's (a, b) edges → (a, component),
+    one row per distinct endpoint, component = the minimum label of its
+    component within the partition."""
+    parent = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]    # path halving
+            x = parent[x]
+        return x
+
+    for pdf in batches:
+        for a, b in zip(pdf["a"].tolist(), pdf["b"].tolist()):
+            parent.setdefault(a, a)
+            parent.setdefault(b, b)
+            ra, rb = find(a), find(b)
+            # union towards the smaller label: a root is always its
+            # component's minimum
+            if ra < rb:
+                parent[rb] = ra
+            elif rb < ra:
+                parent[ra] = rb
+    if parent:
+        nodes = list(parent)
+        yield pd.DataFrame({"a": nodes,
+                            "component": [find(x) for x in nodes]})
+
+
+def _propagate(edges: DataFrame) -> DataFrame:
+    """Min-label propagation with pointer doubling over an undirected
+    (a, b) edge set → (a, component). O(log diameter) rounds, one
+    self-join + one aggregate per round, lineage cut per round."""
+    edges = edges.union(edges.select(F.col("b").alias("a"),
+                                     F.col("a").alias("b")))
+    edges = edges.distinct().localCheckpoint()
+    labels = (edges.select("a").distinct()
+              .withColumn("component", F.col("a")).localCheckpoint())
     for _ in range(MAX_ROUNDS):
         # propagate the min label across one hop ...
         prop = (edges.join(labels, on="a")
@@ -53,31 +105,50 @@ def min_label_components(edges: DataFrame,
                    .limit(1).count())
         labels = new_labels
         if changed == 0:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"component closure did not converge in "
-            f"{MAX_ROUNDS} rounds — pathological graph")
-    return labels
+            return labels
+    raise RuntimeError(
+        f"component closure did not converge in "
+        f"{MAX_ROUNDS} rounds — pathological graph")
+
+
+def min_label_components(edges: DataFrame) -> DataFrame:
+    """Generic connected components over ``edges`` (a, b), given in
+    either or both directions; a self-loop (a, a) makes an isolated
+    node a singleton. Returns (a, component) for every endpoint, where
+    component is the minimum node label in a's component."""
+    a_type = edges.schema["a"].dataType
+    local = edges.select("a", "b").mapInPandas(
+        _local_roots, StructType([StructField("a", a_type),
+                                  StructField("component", a_type)]))
+    # a node seen in k partitions has k local roots: keep the smallest
+    # and link the others to it (the root graph)
+    per_node = (local.groupBy("a")
+                .agg(F.min("component").alias("component"),
+                     F.collect_set("component").alias("_roots"))
+                .localCheckpoint())
+    root_edges = (per_node.filter(F.size("_roots") > 1)
+                  .select(F.explode("_roots").alias("a"),
+                          F.col("component").alias("b")))
+    per_node = per_node.drop("_roots")
+    if root_edges.isEmpty():
+        return per_node
+    merged = _propagate(root_edges).select(
+        F.col("a").alias("component"), F.col("component").alias("_merged"))
+    return (per_node.join(merged, on="component", how="left")
+            .select("a", F.coalesce("_merged", "component")
+                    .alias("component")))
 
 
 def blank_components(thin: DataFrame) -> DataFrame:
     """Label every blank node with a component id (the min blank label
     reachable through shared triples). Returns (blank, component)."""
-    s = thin.filter("is_blank_s").select(F.col("subject").alias("a"))
-    o = thin.filter("is_blank_o").select(F.col("object").alias("a"))
-    nodes = s.union(o).distinct()
-
-    # undirected edges between blank nodes that co-occur in one triple
-    both = thin.filter("is_blank_s AND is_blank_o")
-    edges = (both.select(F.col("subject").alias("a"),
-                         F.col("object").alias("b"))
-             .union(both.select(F.col("object").alias("a"),
-                                F.col("subject").alias("b")))
-             .distinct().localCheckpoint())
-
-    return (min_label_components(edges, nodes)
+    # one edge per blank-touching triple: both ends blank → (s, o);
+    # one end blank → a self-loop, so that blank is a singleton at least
+    s, o = F.col("subject"), F.col("object")
+    edges = thin.filter("is_blank_s OR is_blank_o").select(
+        F.when(F.col("is_blank_s"), s).otherwise(o).alias("a"),
+        F.when(F.col("is_blank_o"), o).otherwise(s).alias("b"))
+    return (min_label_components(edges)
             .select(F.col("a").alias("blank"), "component"))
 
 
@@ -90,6 +161,10 @@ def assign_components(thin: DataFrame) -> DataFrame:
     Output: thin schema with doc_id replaced by the group key — ready
     for operators/stanza.thin_to_thick_df.
     """
+    # the closure and the final joins both read thin: materialize it
+    # once so its source (a Python parse UDF for NT, Turtle, RDF/XML)
+    # runs once
+    thin = thin.localCheckpoint()
     comp = blank_components(thin)
     bs = comp.select(F.col("blank").alias("_sk"),
                      F.col("component").alias("_cs"))

@@ -138,8 +138,11 @@ def parse_nt_lines(lines: DataFrame,
     every non-blank, non-comment line that fails to parse (grammar
     mismatch OR invalid escape — the r4 strictness change made escape-
     invalid literals vanish silently; the counter makes dropped lines
-    visible, matching the fail-loudly principle). Accumulator value is
-    exact only after an action has consumed the full scan."""
+    visible, matching the fail-loudly principle). The accumulator counts
+    per evaluation of the parse: it is exact once ONE full scan has
+    run, and over-counts if the returned DataFrame is recomputed (every
+    action or extra consumer re-parses unless it is materialized, as
+    assign_components does; a retried task also adds again)."""
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []

@@ -158,3 +158,101 @@ def test_nt_skipped_line_counter(spark, tmp_path, prefix_df):
     parsed = read_ntriples(spark, str(nt), prefix_df, skipped_acc=acc)
     assert parsed.count() == 1      # the action makes the count exact
     assert acc.value == 3           # bad ECHAR + garbage + surrogate
+
+
+def test_import_ntriples_skipped_counter_exact(spark, tmp_path, prefix_df):
+    """The full import parses its input once, so the malformed-line
+    accumulator counts each bad line once, not once per re-read."""
+    nt = tmp_path / "mixed.nt"
+    nt.write_text(
+        '_:b1 <http://example.com/p> "ok" .\n'
+        '_:b1 <http://example.com/q> _:b2 .\n'
+        '<http://example.com/a> <http://example.com/p> "ok" .\n'
+        '<http://example.com/a> <http://example.com/p> "bad\\z" .\n'
+        "not a triple at all\n"
+        '<http://example.com/b> <http://example.com/p> "\\uD800" .\n')
+    acc = spark.sparkContext.accumulator(0)
+    rows = import_ntriples(spark, str(nt), prefix_df,
+                           skipped_acc=acc).collect()
+    assert rows
+    assert acc.value == 3           # bad ECHAR + garbage + surrogate
+
+
+def _reference_components(edges):
+    """Plain-Python reference: breadth-first search over the undirected
+    edge list → {node: minimum label of its component}."""
+    adj = {}
+    for a, b in edges:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    out = {}
+    for start in adj:
+        if start in out:
+            continue
+        seen, frontier = {start}, [start]
+        while frontier:
+            frontier = [n for x in frontier for n in adj[x]
+                        if n not in seen and not seen.add(n)]
+        label = min(seen)
+        out.update(dict.fromkeys(seen, label))
+    return out
+
+
+def _kernel_components(spark, edges, n_parts):
+    from ldtab_clj_spark.operators.components import min_label_components
+    df = spark.createDataFrame(edges, "a string, b string") \
+        .repartition(n_parts)
+    return {r.a: r.component
+            for r in min_label_components(df).collect()}
+
+
+def test_min_label_components_random_unicode(spark):
+    """Seeded random graph over string labels (ASCII, Latin-1, BMP
+    above the surrogates and astral — UTF-16 order would disagree
+    with code-point order for the last two) spread round-robin over 4
+    partitions: equals the reference, labels are code-point minima."""
+    import random
+    rng = random.Random(7)
+    alphabet = ["a", "Z", "é", "ß", "Ａ", "中", "\U0001F600",
+                "\U00010348"]
+    nodes = sorted({"".join(rng.choice(alphabet)
+                            for _ in range(rng.randint(1, 3)))
+                    for _ in range(300)})
+    edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(200)]
+    edges += [(n, n) for n in nodes[::7]]         # some singletons
+    got = _kernel_components(spark, edges, 4)
+    assert got == _reference_components(edges)
+
+
+def test_min_label_components_chain_across_partitions(spark, monkeypatch):
+    """A 3,000-node chain whose edges are shuffled over 8 partitions:
+    no partition holds a whole component, so the root-graph merge
+    runs, and the whole chain still gets its minimum label."""
+    import random
+
+    from ldtab_clj_spark.operators import components
+    calls = []
+    real = components._propagate
+    monkeypatch.setattr(components, "_propagate",
+                        lambda e: calls.append(1) or real(e))
+    nodes = [f"n{i:04d}" for i in range(3000)]
+    edges = list(zip(nodes, nodes[1:]))
+    random.Random(3).shuffle(edges)
+    got = _kernel_components(spark, edges, 8)
+    assert calls == [1]
+    assert got == dict.fromkeys(nodes, "n0000")
+
+
+def test_min_label_components_cycle_self_loop_and_direction(spark):
+    """A cycle, a self-loop and a 2-node pair; one-direction and
+    both-direction edge input give the same labels."""
+    one = [("c3", "c1"), ("c1", "c2"), ("c2", "c3"),   # cycle
+           ("s", "s"),                                  # self-loop
+           ("y", "x")]
+    both = one + [(b, a) for a, b in one]
+    want = {"c1": "c1", "c2": "c1", "c3": "c1", "s": "s",
+            "x": "x", "y": "x"}
+    assert _reference_components(one) == want
+    for edges in (one, both):
+        for n_parts in (1, 3):
+            assert _kernel_components(spark, edges, n_parts) == want
