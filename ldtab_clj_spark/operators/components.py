@@ -17,14 +17,21 @@ then a global merge; Kiveris et al., SoCC 2014).
    distinct endpoint in its partition.
 2. **Global merge.** A node seen in more than one partition links its
    local roots into a root graph; min-label propagation with pointer
-   doubling (``localCheckpoint()`` per round to cut lineage) runs over
-   that root graph only, and not at all when it is empty.
+   doubling (``propagate_min_labels``, ``localCheckpoint()`` per round
+   to cut lineage) runs over that root graph only, and not at all when
+   it is empty.
 
 The root graph is empty whenever every component's edges fall inside
 one partition. An exported ``.nt`` file writes each stanza's lines
 contiguously, so its components only cross partitions where a stanza
 straddles a text split boundary — the normal import does one Python
 pass and one aggregate, with no iterative rounds.
+
+The contraction pays only on inputs with that locality. An edge set
+hash-partitioned by edge (near-dup pairs, operators/dedup) spreads each
+component over every partition; a sparse component then falls apart
+into per-partition fragments and nearly all of it still goes through
+the loop. Such callers use ``propagate_min_labels`` directly.
 
 Labels are each component's minimum label: Python's ``<`` on ``str``
 compares code points, which agrees with Spark's binary ``min`` because
@@ -72,10 +79,12 @@ def _local_roots(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                             "component": [find(x) for x in nodes]})
 
 
-def _propagate(edges: DataFrame) -> DataFrame:
-    """Min-label propagation with pointer doubling over an undirected
-    (a, b) edge set → (a, component). O(log diameter) rounds, one
-    self-join + one aggregate per round, lineage cut per round."""
+def propagate_min_labels(edges: DataFrame) -> DataFrame:
+    """Connected components by min-label propagation with pointer
+    doubling over ``edges`` (a, b), given in either or both directions
+    → (a, component), component = the minimum label of a's component.
+    O(log diameter) rounds, one self-join + one aggregate per round,
+    lineage cut per round; no assumption about partitioning."""
     edges = edges.union(edges.select(F.col("b").alias("a"),
                                      F.col("a").alias("b")))
     edges = edges.distinct().localCheckpoint()
@@ -112,9 +121,11 @@ def _propagate(edges: DataFrame) -> DataFrame:
 
 
 def min_label_components(edges: DataFrame) -> DataFrame:
-    """Generic connected components over ``edges`` (a, b), given in
-    either or both directions; a self-loop (a, a) makes an isolated
-    node a singleton. Returns (a, component) for every endpoint, where
+    """Connected components over ``edges`` (a, b), given in either or
+    both directions, for inputs whose components mostly sit inside one
+    partition: local contraction, then ``propagate_min_labels`` over
+    the root graph. A self-loop (a, a) makes an isolated node a
+    singleton. Returns (a, component) for every endpoint, where
     component is the minimum node label in a's component."""
     a_type = edges.schema["a"].dataType
     local = edges.select("a", "b").mapInPandas(
@@ -128,11 +139,12 @@ def min_label_components(edges: DataFrame) -> DataFrame:
                 .localCheckpoint())
     root_edges = (per_node.filter(F.size("_roots") > 1)
                   .select(F.explode("_roots").alias("a"),
-                          F.col("component").alias("b")))
+                          F.col("component").alias("b"))
+                  .filter(F.col("a") != F.col("b")))
     per_node = per_node.drop("_roots")
     if root_edges.isEmpty():
         return per_node
-    merged = _propagate(root_edges).select(
+    merged = propagate_min_labels(root_edges).select(
         F.col("a").alias("component"), F.col("component").alias("_merged"))
     return (per_node.join(merged, on="component", how="left")
             .select("a", F.coalesce("_merged", "component")
@@ -160,10 +172,18 @@ def assign_components(thin: DataFrame) -> DataFrame:
 
     Output: thin schema with doc_id replaced by the group key — ready
     for operators/stanza.thin_to_thick_df.
+
+    The closure and the final joins both read ``thin``, whose source is
+    a Python parse UDF for NT, Turtle and RDF/XML, so ``thin`` is
+    materialized once (``localCheckpoint``) and parsed once; a skipped-
+    line accumulator on the parse then counts each bad line once. The
+    price, unlike the diff command's rule of never pinning a statement
+    table (cli.cmd_diff): the whole parsed table sits in executor block
+    storage, spilling to local disk, for as long as the result is in
+    use; and a local checkpoint has no lineage to recompute from, so
+    losing an executor during the import fails the import, which must
+    then be re-run from the file.
     """
-    # the closure and the final joins both read thin: materialize it
-    # once so its source (a Python parse UDF for NT, Turtle, RDF/XML)
-    # runs once
     thin = thin.localCheckpoint()
     comp = blank_components(thin)
     bs = comp.select(F.col("blank").alias("_sk"),

@@ -112,21 +112,24 @@ def repeated_segment_stats(docs: DataFrame, text_col: str = "text",
 
 def near_dup_clusters(pairs: DataFrame) -> DataFrame:
     """Near-dup pairs → duplicate clusters: connected components over
-    the (doc_a, doc_b) edge set via the kernel the blank-node closure
-    uses (operators/components.min_label_components).
+    the (doc_a, doc_b) edge set via the min-label propagation loop of
+    the blank-node closure (operators/components.propagate_min_labels).
     Returns (doc_id, cluster) where cluster = the component's minimum
     doc_id — i.e. the representative a dedup pass keeps; every other
     row in the cluster is a drop candidate. Only docs that appear in a
     pair are returned (singletons are trivially their own cluster).
 
     Scale shape: the candidate-pair relation is tiny next to the
-    corpus (it's already banded); each partition contracts its pairs
-    locally, and only clusters spanning partitions go through the
-    iterative merge, whose rounds = O(log root-graph diameter)."""
-    from .components import min_label_components
+    corpus (it's already banded), so each round's self-join shuffles
+    narrow (id, label) rows; rounds = O(log component diameter). No
+    per-partition contraction first: _band_pairs hash-partitions the
+    pairs by pair, so a cluster's pairs are spread over every
+    partition, and on chain-shaped clusters contraction measured
+    slower than the loop alone."""
+    from .components import propagate_min_labels
     edges = pairs.select(F.col("doc_a").alias("a"),
                          F.col("doc_b").alias("b"))
-    return (min_label_components(edges)
+    return (propagate_min_labels(edges)
             .select(F.col("a").alias("doc_id"),
                     F.col("component").alias("cluster")))
 

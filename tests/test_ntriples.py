@@ -232,8 +232,8 @@ def test_min_label_components_chain_across_partitions(spark, monkeypatch):
 
     from ldtab_clj_spark.operators import components
     calls = []
-    real = components._propagate
-    monkeypatch.setattr(components, "_propagate",
+    real = components.propagate_min_labels
+    monkeypatch.setattr(components, "propagate_min_labels",
                         lambda e: calls.append(1) or real(e))
     nodes = [f"n{i:04d}" for i in range(3000)]
     edges = list(zip(nodes, nodes[1:]))
