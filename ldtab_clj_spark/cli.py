@@ -89,11 +89,9 @@ def _stream_tmp_paths(db: str) -> list[str]:
     checkpoint or clobber each other's tmp table."""
     import uuid
 
-    from .streaming.pipeline import ann_keys_path
     run_tag = f"stream_{uuid.uuid4().hex[:12]}"
-    tmp_table = str(Path(db) / "tmp" / run_tag)
-    return [tmp_table, str(Path(db) / "tmp" / (run_tag + "_ckpt")),
-            ann_keys_path(tmp_table)]
+    return [str(Path(db) / "tmp" / run_tag),
+            str(Path(db) / "tmp" / (run_tag + "_ckpt"))]
 
 
 def cmd_import(args) -> int:
@@ -142,8 +140,7 @@ def _do_import(spark, args, prefix_df, tmp_paths: list) -> int:
             q = run_streaming_import_nt(
                 spark, args.input, tmp_paths[0], tmp_paths[1], prefix_df)
             q.awaitTermination()
-            statements = read_stream_result(spark, tmp_paths[0],
-                                            compact=False)
+            statements = read_stream_result(spark, tmp_paths[0])
         else:
             from .sources.ntriples import import_ntriples
             nt_skipped = spark.sparkContext.accumulator(0)
@@ -172,8 +169,7 @@ def _do_import(spark, args, prefix_df, tmp_paths: list) -> int:
                 spark, args.input, tmp_paths[0], tmp_paths[1],
                 entity_dict)
             q.awaitTermination()
-            statements = read_stream_result(spark, tmp_paths[0],
-                                            compact=False)
+            statements = read_stream_result(spark, tmp_paths[0])
         else:
             from .plans.pipeline import build_statements
             statements = build_statements(

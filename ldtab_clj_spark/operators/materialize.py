@@ -266,60 +266,6 @@ def rebuild_sidecar(spark: SparkSession, path: str,
     return rows
 
 
-def _iceberg_catalogs(spark: SparkSession) -> list[str]:
-    """Names of configured Iceberg catalogs (spark.sql.catalog.<name>
-    pointing at an Iceberg SparkCatalog implementation). Reads the
-    SESSION confs via ``SET`` — runtime-registered catalogs
-    (spark.conf.set after startup) are honored, which the
-    context-creation snapshot (sparkContext.getConf) would miss."""
-    out = []
-    for row in spark.sql("SET").collect():
-        k, v = row["key"], str(row["value"])
-        if k.startswith("spark.sql.catalog.") and k.count(".") == 3 \
-                and "iceberg" in v.lower():
-            out.append(k.rsplit(".", 1)[-1])
-    return out
-
-
-_RUN_PROP = "ldtab.run_id"  # snapshot summary key tagging our commits
-
-
-def write_statements_iceberg(statements: DataFrame, table: str,
-                             run_id: str = "run-1") -> dict:
-    """The north-rule Iceberg sink: subject-partitioned append via the
-    DataFrameWriterV2 API, snapshot metadata as the lineage record.
-
-    This container ships no Iceberg runtime jars (and no network to
-    fetch them), so the seam raises a clear error unless the session
-    has an Iceberg catalog configured; ``write_statements`` (parquet +
-    JSON-lines sidecar, same idempotent-append contract) is the
-    sandbox stand-in used everywhere else. On a real cluster:
-    spark-submit --packages org.apache.iceberg:iceberg-spark-runtime
-    plus a catalog conf makes this path live with no code change."""
-    spark = statements.sparkSession
-    if not _iceberg_catalogs(spark):
-        raise RuntimeError(
-            "no Iceberg catalog configured on this session "
-            "(spark.sql.catalog.<name> = o.a.iceberg.spark.SparkCatalog)"
-            " — use write_statements (parquet + lineage sidecar) or "
-            "configure Iceberg (operators/materialize.py)")
-    obs = Observation()
-    df = (statements.repartition("subject")
-          .observe(obs, F.count(F.lit(1)).alias("rows")))
-    # stamp the commit with this run's id (Iceberg snapshot summary
-    # property) so the lineage query finds OUR snapshot even when other
-    # writers append concurrently — latest-snapshot would misattribute
-    df.writeTo(table).option(f"snapshot-property.{_RUN_PROP}",
-                             run_id).append()
-    snap = (spark.sql(
-        f"SELECT snapshot_id FROM {table}.snapshots "
-        f"WHERE summary['{_RUN_PROP}'] = '{run_id}' "
-        "ORDER BY committed_at DESC LIMIT 1").collect())
-    return {"run_id": run_id,
-            "batch_rows": int(obs.get["rows"] or 0),
-            "snapshot_id": snap[0]["snapshot_id"] if snap else None}
-
-
 class LineageStatus:
     """Bool-compatible verify_lineage result: truthiness is the
     row-count match (back-compat with every ``if verify_lineage(...)``

@@ -41,27 +41,6 @@ def _package_zip() -> str:
     return str(out)
 
 
-_TRUE = {"1", "true", "yes", "on"}
-_FALSE = {"0", "false", "no", "off"}
-
-
-def env_bool(name: str, default: bool) -> str:
-    """Boolean env var as the "true"/"false" a Spark boolean conf
-    accepts: 1/true/yes/on and 0/false/no/off in any case (surrounding
-    blanks ignored); unset or empty gives ``default``. Anything else
-    raises here, naming the variable, instead of failing session start
-    with a JVM conf error."""
-    raw = os.environ.get(name, "").strip().lower()
-    if not raw:
-        return "true" if default else "false"
-    if raw in _TRUE:
-        return "true"
-    if raw in _FALSE:
-        return "false"
-    raise ValueError(f"{name}={os.environ[name]!r} is not a boolean "
-                     "(use 1/true/yes/on or 0/false/no/off)")
-
-
 def env_int(name: str, default: int) -> int:
     """Positive-integer env var (surrounding blanks ignored); unset or
     empty gives ``default``. Anything else — ``0``, ``-1``, ``four`` —
@@ -125,8 +104,7 @@ def get_spark(app_name: str = "ldtab_clj_spark",
         # shuffle-join query (q18 1.60->1.54 / 0.59->0.53, minhash
         # 2.71->2.51, term_stats 1.18->1.13, diff 0.90->0.85; rest
         # within noise), no regressions at either scale.
-        .config("spark.sql.join.preferSortMergeJoin",
-                env_bool("SPARK_PREFER_SMJ", False))
+        .config("spark.sql.join.preferSortMergeJoin", "false")
         # 16 MB auto-broadcast cap (was 64 MB): a parquet-size estimate
         # near 64 MB is a multi-million-row relation whose broadcast
         # build is serial driver+executor work and whose hash relation
@@ -137,8 +115,7 @@ def get_spark(app_name: str = "ldtab_clj_spark",
         # supplier, prefix/centroid tables) stay far under 16 MB at any
         # SF, and explicit F.broadcast hints are unaffected.
         .config("spark.sql.autoBroadcastJoinThreshold",
-                os.environ.get("SPARK_BROADCAST_THRESHOLD",
-                               str(16 * 1024 * 1024)))
+                str(16 * 1024 * 1024))
         # heap is WORKLOAD-dependent, measured both ways: 8g wins the
         # local[32] query suite (16g doubled bench.py 32s -> 63s —
         # same shape as r3's rejected 24g trial: long G1 pauses across

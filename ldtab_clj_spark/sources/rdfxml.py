@@ -16,22 +16,20 @@ emit (and all constructs in the reference's ontology.owl):
 * container-membership shorthand: ``rdf:li`` renumbering to
   ``rdf:_1..rdf:_n`` (RDF/XML 1.1 §7.4, matching Jena).
 
-Files are the unit of parallelism (``wholetext=True`` + mapInPandas),
-same as sources/turtle.py. Output: thin triples CURIE-fied against the
-prefix table; run operators/components.assign_components before stanza
-assembly.
+Files are the unit of parallelism: the Turtle source's whole-file
+reader (``turtle._read_whole_files``) runs this module's parser.
+Output: thin triples CURIE-fied against the prefix table; run
+operators/components.assign_components before stanza assembly.
 """
 
 from __future__ import annotations
 
 import xml.etree.ElementTree as ET
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from ..schemas import THIN
-from .turtle import _RDF, _XSD, _to_thin, has_scheme, resolve_against
+from .turtle import (_RDF, _XSD, _read_whole_files, has_scheme,
+                     resolve_against)
 
 _XML_NS = "http://www.w3.org/XML/1998/namespace"
 
@@ -218,32 +216,12 @@ def parse_rdfxml(text: str) -> list[tuple]:
     return p.triples
 
 
-def read_rdfxml(spark: SparkSession, path: str,
-                prefix_df: DataFrame) -> DataFrame:
-    """Distributed RDF/XML scan (one task per file) → thin triples."""
-    prefixes = [(r["prefix"], r["base"]) for r in prefix_df.collect()]
-    files = spark.read.text(path, wholetext=True)
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..core.canonical import content_hash
-        for pdf in batches:
-            rows = []
-            for text in pdf["value"]:
-                # file-scope blank labels (see turtle._to_thin)
-                salt = content_hash(text)[:8]
-                rows.extend((*t, "", 0)
-                            for t in _to_thin(parse_rdfxml(text),
-                                              prefixes, blank_salt=salt))
-            yield pd.DataFrame(rows, columns=[f.name for f in THIN.fields])
-
-    return files.mapInPandas(parse, THIN)
-
-
 def import_rdfxml(spark: SparkSession, path: str,
                   prefix_df: DataFrame) -> DataFrame:
     """Full `ldtab import file.owl` equivalent."""
     from ..operators.components import assign_components
     from ..operators.materialize import dedup_statements
     from ..operators.stanza import thin_to_thick_df
-    thin = assign_components(read_rdfxml(spark, path, prefix_df))
+    thin = assign_components(
+        _read_whole_files(spark, path, prefix_df, parse_rdfxml))
     return dedup_statements(thin_to_thick_df(thin))

@@ -445,10 +445,12 @@ def _to_thin(raw: list[tuple],
     return out
 
 
-def read_turtle(spark: SparkSession, path: str,
-                prefix_df: DataFrame) -> DataFrame:
-    """Distributed Turtle scan (one task per file) → thin triples
-    (doc_id empty; run assign_components before stanza assembly)."""
+def _read_whole_files(spark: SparkSession, path: str,
+                      prefix_df: DataFrame, parse_text) -> DataFrame:
+    """Distributed whole-file RDF scan (one task per file):
+    ``parse_text`` (file text → raw full-IRI triples) per file → thin
+    triples (doc_id empty; run assign_components before stanza
+    assembly). Shared by the Turtle and RDF/XML sources."""
     prefixes = [(r["prefix"], r["base"]) for r in prefix_df.collect()]
     files = spark.read.text(path, wholetext=True)
 
@@ -457,9 +459,10 @@ def read_turtle(spark: SparkSession, path: str,
         for pdf in batches:
             rows = []
             for text in pdf["value"]:
+                # file-scope blank labels (see _to_thin)
                 salt = content_hash(text)[:8]
                 rows.extend((*t, "", 0)
-                            for t in _to_thin(parse_turtle(text),
+                            for t in _to_thin(parse_text(text),
                                               prefixes, blank_salt=salt))
             yield pd.DataFrame(rows, columns=[f.name for f in THIN.fields])
 
@@ -473,5 +476,6 @@ def import_turtle(spark: SparkSession, path: str,
     from ..operators.components import assign_components
     from ..operators.materialize import dedup_statements
     from ..operators.stanza import thin_to_thick_df
-    thin = assign_components(read_turtle(spark, path, prefix_df))
+    thin = assign_components(
+        _read_whole_files(spark, path, prefix_df, parse_turtle))
     return dedup_statements(thin_to_thick_df(thin))

@@ -10,12 +10,12 @@ Structured Streaming micro-batches + ``foreachBatch``.
 Semantics preserved:
 * each micro-batch of docs runs the full extract→link→thin→thick chain
   (the reference's parse-window, parsing.clj:220-243);
-* the superfluous-annotation rule (import.clj:199-201) is applied
-  across batches via the backlog algebra: a bare triple is dropped if
-  an annotated twin exists in this batch or any earlier one (SO1/SO2,
-  import.clj:118-131); a bare triple that arrived *before* its
-  annotated twin is removed by dedup-on-read (the reference leaves the
-  same cleanup to its unstated-annotation tail flush);
+* the superfluous-annotation rule (import.clj:199-201) is applied once,
+  when the table is read: ``dedup_statements`` drops a bare row whose
+  annotated twin exists anywhere in the table, in either arrival
+  order. The reference needs its 3-window backlog (import.clj:103-140)
+  because its SQLite inserts are final; this table is append-only, so
+  the micro-batch keeps no annotation state;
 * writes are idempotent appends + dedup-on-read, so replaying a batch
   after failure cannot corrupt the table (checkpointed, resumable —
   north rule).
@@ -24,201 +24,50 @@ Semantics preserved:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..operators.materialize import dedup_statements
 from ..plans.pipeline import build_statements
 from ..schemas import DOCS
 
-KEYS = ["graph", "subject", "predicate", "object", "datatype"]
 
-
-def stream_docs_from_dir(spark: SparkSession, in_dir: str,
-                         files_per_trigger: int = 1) -> DataFrame:
+def stream_docs_from_dir(spark: SparkSession, in_dir: str) -> DataFrame:
     """Micro-batched docs source (one file ≈ one reference window)."""
     return (spark.readStream.schema(DOCS)
-            .option("maxFilesPerTrigger", files_per_trigger)
+            .option("maxFilesPerTrigger", 1)
             .parquet(in_dir))
 
 
-def ann_keys_path(table_path: str) -> str:
-    """Compact annotation-key side table next to the statement table.
-
-    The backlog rule needs only the KEYS of previously-annotated rows,
-    so those keys are persisted on their own: each micro-batch reads
-    O(batch + key-table) bytes instead of re-scanning the whole
-    statement table (which at 100 TB would dominate a long stream).
-    The reference keeps the same bounded backlog in memory across its
-    3-window horizon (import.clj:118-131)."""
-    return table_path + "_annkeys"
-
-
-COMPACT_EVERY = 16
-
-
-def _import_query_name(table_path: str) -> str:
-    """Streaming-query name encoding the target table, so end-of-stream
-    compaction can be scoped to streams that actually write it."""
-    return f"ldtab-import:{table_path}"
-
-
-def compact_ann_keys(spark: SparkSession, table_path: str,
-                     _post_read_hook=None) -> None:
-    """Rewrite the ann-keys side table deduped on KEYS.
-
-    The per-batch append accretes one file and up to one duplicate key
-    set per micro-batch, so an uncompacted side table degrades the
-    per-batch read linearly in batch COUNT (round-3 finding). Runs
-    every COMPACT_EVERY batches and at availableNow completion.
-
-    CROSS-PROCESS SAFE (r4 ADVICE): the side table may transiently
-    hold duplicate key rows but never loses a committed key. The old
-    read→rmtree→rename swap deleted unread files — a concurrent import
-    in another process appending a key file between the read and the
-    rmtree lost those keys, silently un-suppressing superfluous bare
-    rows. Now compaction (1) snapshots the part-file list, (2) reads
-    exactly those files, (3) moves the deduped copy INTO the live dir
-    under fresh names, then (4) unlinks only the snapshotted files. A
-    file appended at any point survives untouched; duplicate keys are
-    harmless (the backlog anti-join tests membership only) and the
-    next compaction removes them. A crash at any step leaves a
-    SUPERSET of the committed keys — never an absent or key-missing
-    table — so there is no window where a reader can miss a key.
-    A best-effort non-blocking flock skips compaction when another
-    process is already compacting (pure wasted-work avoidance: even
-    two unlocked compactors are safe — both add their deduped copy and
-    the double unlink is missing_ok-tolerant).
-
-    ``_post_read_hook`` is a test seam invoked between the snapshot
-    read and the merge, where a concurrent append would race."""
-    import fcntl
-    import os
-    import shutil
-    from pathlib import Path
-
-    keys_path = ann_keys_path(table_path)
-    kp = Path(keys_path)
-    if not kp.exists():
-        return
-    lock_fd = os.open(keys_path + ".compact_lock",
-                      os.O_CREAT | os.O_RDWR, 0o644)
-    try:
-        try:
-            fcntl.flock(lock_fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-        except OSError:
-            return  # another process is compacting this table now
-        snapshot = sorted(str(f) for f in kp.glob("*.parquet"))
-        if not snapshot:
-            return
-        tmp = keys_path + "_compact_tmp"
-        # no coalesce(1): dedup's shuffle already bounds the file
-        # count at spark.sql.shuffle.partitions, and a single reducer
-        # would choke on a 100 TB-history key table
-        (spark.read.parquet(*snapshot).dropDuplicates(KEYS)
-         .write.mode("overwrite").parquet(tmp))
-        if _post_read_hook is not None:
-            _post_read_hook()
-        # add-then-remove: new names can't collide (part names carry
-        # the writing job's UUID) and a reader that lists mid-merge
-        # sees duplicates, never a gap
-        for part in Path(tmp).glob("*.parquet"):
-            os.replace(part, kp / f"compact-{part.name}")
-        for f in snapshot:
-            p = Path(f)
-            p.unlink(missing_ok=True)
-            # the local ChecksumFileSystem's sidecar would otherwise
-            # accrete one stale hidden file per compacted part
-            (p.parent / f".{p.name}.crc").unlink(missing_ok=True)
-        shutil.rmtree(tmp, ignore_errors=True)
-    finally:
-        os.close(lock_fd)
-
-
-def _start_streaming(spark: SparkSession, stream: DataFrame,
-                     statements_fn, table_path: str, checkpoint: str,
-                     available_now: bool = True,
-                     compact_every: int = COMPACT_EVERY):
+def _start_streaming(stream: DataFrame, statements_fn, table_path: str,
+                     checkpoint: str):
     """Shared incremental-import driver: per micro-batch, build the
-    statement rows (``statements_fn``), apply the cross-batch
-    superfluous-annotation backlog rule, append idempotently."""
-    keys_path = ann_keys_path(table_path)
-
-    def prior_keys(spark: SparkSession) -> DataFrame | None:
-        """Annotated keys from earlier batches: the compact side
-        table. If it doesn't exist yet but the statement table DOES
-        (streaming into a table populated before this run), bootstrap
-        the side table from it once — a single table scan at stream
-        start, instead of one per micro-batch."""
-        try:
-            return spark.read.parquet(keys_path)
-        except Exception:
-            pass
-        try:
-            prior = (spark.read.parquet(table_path)
-                     .filter(F.col("annotation").isNotNull())
-                     .select(*KEYS).dropDuplicates(KEYS))
-        except Exception:
-            return None  # fresh table: nothing prior
-        prior.write.mode("append").parquet(keys_path)
-        return spark.read.parquet(keys_path)
+    statement rows (``statements_fn``) and append them."""
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
-        st = statements_fn(batch_df).localCheckpoint()
-        annotated = st.filter(F.col("annotation").isNotNull())
-        bare = st.filter(F.col("annotation").isNull())
-        # backlog rule: bare rows annotated in this batch or earlier
-        # batches are superfluous. Prior batches' keys come from the
-        # compact side table — never a per-batch statement-table scan.
-        ann_keys = annotated.select(*KEYS).dropDuplicates(KEYS)
-        all_keys = ann_keys
-        prev = prior_keys(spark)
-        if prev is not None:
-            all_keys = all_keys.unionByName(prev)
-        bare_kept = bare.join(all_keys.dropDuplicates(KEYS),
-                              on=KEYS, how="left_anti")
-        (annotated.unionByName(bare_kept)
-         .write.mode("append").parquet(table_path))
-        # side-table append AFTER the data append: a crash in between
-        # replays the batch (checkpointed source), and duplicate keys
-        # are harmless (the anti-join only tests membership)
-        ann_keys.write.mode("append").parquet(keys_path)
-        if compact_every and batch_id % compact_every == compact_every - 1:
-            compact_ann_keys(spark, table_path)
+        statements_fn(batch_df).write.mode("append").parquet(table_path)
 
-    writer = (stream.writeStream
-              .foreachBatch(handle_batch)
-              # the query carries its target table in its name so
-              # read_stream_result can tell whether a still-active
-              # stream is writing THIS table (session-global
-              # streams.active would let an unrelated long-lived
-              # stream suppress compaction forever)
-              .queryName(_import_query_name(table_path))
-              .option("checkpointLocation", checkpoint))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return (stream.writeStream
+            .foreachBatch(handle_batch)
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start())
 
 
 def run_streaming_import(spark: SparkSession, in_dir: str,
                          table_path: str, checkpoint: str,
-                         entity_dict: DataFrame,
-                         available_now: bool = True,
-                         compact_every: int = COMPACT_EVERY):
+                         entity_dict: DataFrame):
     """Incremental import: docs stream → statement table appends.
 
     Returns the StreamingQuery (call ``awaitTermination()``)."""
     dict_cached = entity_dict.localCheckpoint()
     return _start_streaming(
-        spark, stream_docs_from_dir(spark, in_dir),
+        stream_docs_from_dir(spark, in_dir),
         lambda docs: build_statements(docs, dict_cached),
-        table_path, checkpoint, available_now, compact_every)
+        table_path, checkpoint)
 
 
 def run_streaming_import_nt(spark: SparkSession, in_path: str,
                             table_path: str, checkpoint: str,
-                            prefix_df: DataFrame,
-                            available_now: bool = True,
-                            compact_every: int = COMPACT_EVERY):
+                            prefix_df: DataFrame):
     """Incremental N-Triples import — the reference's actual
     ``import --streaming`` surface (import.clj:142-184 streams its RDF
     input in windows with a backlog).
@@ -253,33 +102,19 @@ def run_streaming_import_nt(spark: SparkSession, in_path: str,
     if p.is_file():
         reader = reader.option("pathGlobFilter", p.name)
         in_path = str(p.parent)
-    stream = reader.text(in_path)
-    return _start_streaming(spark, stream, statements_fn,
-                            table_path, checkpoint, available_now,
-                            compact_every)
+    return _start_streaming(reader.text(in_path), statements_fn,
+                            table_path, checkpoint)
 
 
-def read_stream_result(spark: SparkSession, table_path: str,
-                       compact: bool = True) -> DataFrame:
+def read_stream_result(spark: SparkSession, table_path: str) -> DataFrame:
     """Final statement set: dedup-on-read resolves cross-batch
-    duplicates and bare-before-annotated arrivals (the reference's
-    tail flush, import.clj:80-101). An input with zero files never
-    creates the tmp table — that's an empty import, not an error.
-
-    ``compact=True`` runs the end-of-stream side-table compaction (the
-    availableNow completion hook) — skipped automatically while a
-    streaming query writing THIS table (matched by query name) is
-    still active (the add-then-remove merge is safe against concurrent
-    appends, but compacting mid-stream is wasted churn); unrelated
-    streams don't suppress it. Pass ``compact=False`` when the table
-    is a throwaway about to be deleted (the CLI's per-run tmp
-    table)."""
+    duplicates and drops every bare row with an annotated twin (the
+    reference's backlog and tail flush, import.clj:80-140). An input
+    with zero files never creates the table — that's an empty import,
+    not an error."""
     from pathlib import Path
 
     from ..schemas import STATEMENT
     if not Path(table_path).exists():
         return spark.createDataFrame([], STATEMENT)
-    mine = _import_query_name(table_path)
-    if compact and not any(q.name == mine for q in spark.streams.active):
-        compact_ann_keys(spark, table_path)
     return dedup_statements(spark.read.parquet(table_path))

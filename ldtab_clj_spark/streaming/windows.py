@@ -19,11 +19,12 @@ def hourly_event_counts(events_stream: DataFrame,
     the watermark passes (late events beyond ``watermark`` drop).
 
     Works on batch DataFrames too (watermark is a no-op there), so the
-    same code path is testable batch-vs-stream.
+    same code path is testable batch-vs-stream — and the batch form is
+    the ``events_hourly_window`` driver query.
     """
-    # watermarks require TIMESTAMP (with timezone); parquet often
-    # stores TIMESTAMP_NTZ — cast on both batch and stream paths so
-    # results stay comparable
+    # watermarks require TIMESTAMP (with timezone); the events table
+    # stores TIMESTAMP_NTZ — window on TIMESTAMP, then return ``hour``
+    # as TIMESTAMP_NTZ so it equals the oracle's date_trunc('hour', ts)
     df = events_stream.withColumn("ts", F.col("ts").cast("timestamp"))
     if df.isStreaming:
         df = df.withWatermark("ts", watermark)
@@ -32,8 +33,8 @@ def hourly_event_counts(events_stream: DataFrame,
             .agg(F.count("*").alias("n"),
                  (F.sum(F.round(F.col("value") * 10000, 0).cast("long"))
                   / 10000.0).alias("sum_value"))
-            .select(F.col("w.start").alias("hour"), "event_type",
-                    "n", "sum_value"))
+            .select(F.col("w.start").cast("timestamp_ntz").alias("hour"),
+                    "event_type", "n", "sum_value"))
 
 
 def session_event_counts(events_stream: DataFrame,

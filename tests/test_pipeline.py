@@ -211,18 +211,6 @@ def test_sidecar_append_survives_interleaved_runs(spark, tmp_path):
         == {("part-a.parquet", 5, "r1"), ("part-b.parquet", 7, "r2")}
 
 
-def test_iceberg_sink_seam(spark, statements):
-    """No Iceberg runtime in this container: the sink must fail fast
-    with an actionable message, not an opaque analysis error."""
-    import pytest
-
-    from ldtab_clj_spark.operators.materialize import (
-        _iceberg_catalogs, write_statements_iceberg)
-    assert _iceberg_catalogs(spark) == []
-    with pytest.raises(RuntimeError, match="Iceberg catalog"):
-        write_statements_iceberg(statements, "cat.db.statement")
-
-
 def test_pipeline_invariant_to_partition_count(spark):
     """The statement set must be a pure function of the corpus — not of
     parallelism (the resumability/determinism premise of the north

@@ -1,10 +1,7 @@
 """Streaming import (§2.9): micro-batched docs → statement table, with
-cross-batch annotation backlog semantics, compared against the batch
-pipeline on the same corpus."""
+cross-batch superfluous-annotation semantics applied on read, compared
+against the batch pipeline on the same corpus."""
 
-import time
-
-import pytest
 from pyspark.sql import Window, functions as F
 
 from ldtab_clj_spark.plans.pipeline import build_statements
@@ -59,15 +56,13 @@ def test_streaming_import_is_idempotent_on_replay(spark, tmp_path):
     assert key_set(result) == key_set(want)
 
 
-def test_streaming_backlog_uses_compact_key_table(spark, tmp_path):
-    """The cross-batch superfluous-annotation rule reads prior keys
-    from the compact ``_annkeys`` side table — O(batch + key-table) per
-    micro-batch — never by re-scanning the statement table. Pinned by
+def test_streaming_superfluous_bare_rows_dropped_on_read(spark, tmp_path):
+    """The cross-batch superfluous-annotation rule (import.clj:199-201)
+    is applied by dedup-on-read, in either arrival order. Pinned by
     driving ``_start_streaming`` directly with an identity
     statements_fn over three ordered statement files."""
     from ldtab_clj_spark.schemas import STATEMENT
-    from ldtab_clj_spark.streaming.pipeline import (_start_streaming,
-                                                    ann_keys_path)
+    from ldtab_clj_spark.streaming.pipeline import _start_streaming
 
     ann = '{"ex:cur":[{"datatype":"_IRI","meta":"owl:Axiom","object":"a"}]}'
     k1 = (1, 0, "graph", "ex:a", "ex:p", "ex:b", "_IRI")
@@ -75,7 +70,7 @@ def test_streaming_backlog_uses_compact_key_table(spark, tmp_path):
     batches = [
         [k1 + (None,), k2 + (None,)],   # bare K1, bare K2
         [k1 + (ann,)],                  # annotated twin of K1 arrives
-        [k1 + (None,)],                 # bare K1 again → backlog drops
+        [k1 + (None,)],                 # bare K1 again → dropped on read
     ]
     in_dir = str(tmp_path / "bk_in")
     for rows in batches:
@@ -84,148 +79,40 @@ def test_streaming_backlog_uses_compact_key_table(spark, tmp_path):
     table = str(tmp_path / "bk_table")
     stream = (spark.readStream.schema(STATEMENT)
               .option("maxFilesPerTrigger", 1).parquet(in_dir))
-    q = _start_streaming(spark, stream, lambda df: df, table,
+    q = _start_streaming(stream, lambda df: df, table,
                          str(tmp_path / "bk_ckpt"))
     q.awaitTermination(300)
 
     # dedup-on-read: K1 survives only annotated, K2 only bare
     got = key_set(read_stream_result(spark, table))
     assert got == {k1[2:] + (ann,), k2[2:] + (None,)}
-    # the raw appends show the backlog acted: batch 3's bare K1 was
-    # dropped at write time (2 + 1 + 0 rows), not just masked on read
-    assert spark.read.parquet(table).count() == 3
-    # side table holds exactly the distinct annotated keys — the only
-    # prior-batch state a micro-batch ever reads
-    side = spark.read.parquet(ann_keys_path(table))
-    assert {tuple(r) for r in side.collect()} == {k1[2:7]}
 
 
-def test_ann_keys_side_table_stays_bounded(spark, tmp_path):
-    """Round-3 finding: the side table accreted one file + one
-    duplicate key set per micro-batch forever. With periodic
-    compaction (every N batches) plus the end-of-stream compaction in
-    read_stream_result, rows collapse to the DISTINCT annotated keys
-    and the file count stays bounded by shuffle partitions — across
-    3N batches that all re-announce the same annotation."""
-    from pathlib import Path
-
+def test_streaming_import_keeps_no_annotation_state(spark, tmp_path):
+    """The stream appends each micro-batch's statements and nothing
+    else: after bare K1, annotated K1, bare K1 there is no annotation
+    side table next to the statement table, and the read still returns
+    K1 only as annotated."""
     from ldtab_clj_spark.schemas import STATEMENT
-    from ldtab_clj_spark.streaming.pipeline import (_start_streaming,
-                                                    ann_keys_path)
+    from ldtab_clj_spark.streaming.pipeline import _start_streaming
 
-    ann = '{"ex:src":[{"datatype":"xsd:string","object":"dup"}]}'
-    k_ann = (1, 0, "graph", "ex:s", "ex:p", "ex:o", "_IRI")
-    n_batches, compact_every = 6, 2
-    in_dir = str(tmp_path / "cp_in")
-    for i in range(n_batches):
-        rows = [k_ann + (ann,),  # same annotated key EVERY batch
-                (1, 0, "graph", f"ex:b{i}", "ex:p", "x", "_IRI", None)]
-        spark.createDataFrame(rows, STATEMENT).coalesce(1) \
+    ann = '{"ex:cur":[{"datatype":"_IRI","meta":"owl:Axiom","object":"a"}]}'
+    k1 = (1, 0, "graph", "ex:a", "ex:p", "ex:b", "_IRI")
+    in_dir = str(tmp_path / "ns_in")
+    for a in (None, ann, None):
+        spark.createDataFrame([k1 + (a,)], STATEMENT).coalesce(1) \
             .write.mode("append").parquet(in_dir)
-    table = str(tmp_path / "cp_table")
+    table = tmp_path / "ns_table"
     stream = (spark.readStream.schema(STATEMENT)
               .option("maxFilesPerTrigger", 1).parquet(in_dir))
-    # pin shuffle partitions for the file-count bound: an earlier test
-    # going through get_spark().getOrCreate() re-applies its own value
-    # (e.g. 32) onto the shared session, which would defeat the
-    # "fewer files than batches" comparison below
-    old_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = _start_streaming(spark, stream, lambda df: df, table,
-                             str(tmp_path / "cp_ckpt"),
-                             compact_every=compact_every)
-        q.awaitTermination(300)
-        result = read_stream_result(spark, table)  # completion compaction
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_shuffle)
+    q = _start_streaming(stream, lambda df: df, str(table),
+                         str(tmp_path / "ns_ckpt"))
+    q.awaitTermination(300)
 
-    side_files = list(Path(ann_keys_path(table)).glob("*.parquet"))
-    side = spark.read.parquet(ann_keys_path(table))
-    assert side.count() == 1  # distinct annotated keys, not 6
-    assert 1 <= len(side_files) <= 4 < n_batches * 2
-    # streamed content still equals the batch-equivalent set
-    want = {k_ann[2:] + (ann,)} | {
-        ("graph", f"ex:b{i}", "ex:p", "x", "_IRI", None)
-        for i in range(n_batches)}
-    assert key_set(result) == want
-
-
-def test_compaction_survives_concurrent_append(spark, tmp_path):
-    """r4 ADVICE (medium): the old read→rmtree→rename swap deleted a
-    key file appended by a concurrent import between the snapshot read
-    and the rmtree — losing committed keys, so bare rows that should
-    be suppressed as superfluous survived later batches. The add-then-
-    remove merge must preserve a file landing in exactly that window
-    (injected via the _post_read_hook test seam)."""
-    from ldtab_clj_spark.streaming.pipeline import (KEYS, ann_keys_path,
-                                                    compact_ann_keys)
-
-    table = str(tmp_path / "race_table")
-    keys_path = ann_keys_path(table)
-    k_old = ("graph", "ex:s", "ex:p", "ex:o", "_IRI")
-    k_new = ("graph", "ex:s2", "ex:p", "ex:o2", "_IRI")
-    # two appends of the same key = the duplication compaction removes
-    for _ in range(2):
-        spark.createDataFrame([k_old], KEYS).coalesce(1) \
-            .write.mode("append").parquet(keys_path)
-
-    def concurrent_append():  # "another process", mid-compaction
-        spark.createDataFrame([k_new], KEYS).coalesce(1) \
-            .write.mode("append").parquet(keys_path)
-
-    compact_ann_keys(spark, table, _post_read_hook=concurrent_append)
-    got = {tuple(r) for r in spark.read.parquet(keys_path).collect()}
-    assert got == {k_old, k_new}  # deduped AND nothing lost
-    # second compaction (no race) collapses to exactly the distinct set
-    compact_ann_keys(spark, table)
-    assert spark.read.parquet(keys_path).count() == 2
-
-
-def test_stateful_annotation_association(spark, tmp_path):
-    """R9 keyed-state variant: bare rows held, annotated twins win,
-    timeout flushes the tail."""
-    from ldtab_clj_spark.schemas import STATEMENT
-    from ldtab_clj_spark.streaming.annotate import \
-        with_annotation_association
-
-    in_dir = str(tmp_path / "stmt_in")
-    ann = '{"ex:curator":[{"datatype":"_IRI","meta":"owl:Axiom","object":"alice"}]}'
-    rows_b1 = [(1, 0, "graph", "ex:a", "ex:p", "ex:b", "_IRI", None),
-               (1, 0, "graph", "ex:x", "ex:q", "lit", "xsd:string", None)]
-    rows_b2 = [(1, 0, "graph", "ex:a", "ex:p", "ex:b", "_IRI", ann)]
-    spark.createDataFrame(rows_b1, STATEMENT).coalesce(1) \
-        .write.mode("append").parquet(in_dir)
-    spark.createDataFrame(rows_b2, STATEMENT).coalesce(1) \
-        .write.mode("append").parquet(in_dir)
-
-    stream = (spark.readStream.schema(STATEMENT)
-              .option("maxFilesPerTrigger", 1).parquet(in_dir))
-    out_dir = str(tmp_path / "assoc_out")
-    q = (with_annotation_association(stream).writeStream
-         .format("parquet").option("path", out_dir)
-         .option("checkpointLocation", str(tmp_path / "assoc_ckpt"))
-         .trigger(processingTime="1 second").start())
-    # let batches + the bare-row timeout fire, then stop
-    deadline = time.time() + 120
-    while time.time() < deadline:
-        time.sleep(2)
-        try:
-            rows = spark.read.parquet(out_dir).collect()
-        except Exception:
-            continue
-        keys = {(r.subject, r.annotation is not None) for r in rows}
-        if ("ex:a", True) in keys and ("ex:x", False) in keys:
-            break
-    q.stop()
-    rows = spark.read.parquet(out_dir).collect()
-    by_subj = {}
-    for r in rows:
-        by_subj.setdefault(r.subject, []).append(r.annotation)
-    # annotated twin won for ex:a (no bare duplicate emitted)
-    assert by_subj["ex:a"] == [ann]
-    # lone bare row flushed by timeout
-    assert by_subj["ex:x"] == [None]
+    assert sorted(p.name for p in tmp_path.iterdir()) == \
+        ["ns_ckpt", "ns_in", "ns_table"]
+    assert key_set(read_stream_result(spark, str(table))) == \
+        {k1[2:] + (ann,)}
 
 
 def test_watermarked_window_agg_stream_equals_batch(spark, tmp_path):
@@ -297,13 +184,11 @@ def test_streaming_nt_import_equals_batch(spark, tmp_path):
 
 
 def test_streaming_backlog_bootstraps_from_existing_table(spark, tmp_path):
-    """Streaming into a table populated BEFORE this run (no _annkeys
-    side table yet): the first batch bootstraps the side table from
-    the statement table once, so previously-annotated keys still
-    suppress late bare twins."""
+    """Streaming into a table populated BEFORE this run: a late bare
+    twin of an already-annotated key is dropped when the table is
+    read, exactly as for twins that arrive within the stream."""
     from ldtab_clj_spark.schemas import STATEMENT
-    from ldtab_clj_spark.streaming.pipeline import (_start_streaming,
-                                                    ann_keys_path)
+    from ldtab_clj_spark.streaming.pipeline import _start_streaming
 
     ann = '{"ex:cur":[{"datatype":"_IRI","meta":"owl:Axiom","object":"a"}]}'
     k1 = (1, 0, "graph", "ex:a", "ex:p", "ex:b", "_IRI")
@@ -317,15 +202,12 @@ def test_streaming_backlog_bootstraps_from_existing_table(spark, tmp_path):
         .write.parquet(in_dir)  # late bare twin arrives via the stream
     stream = (spark.readStream.schema(STATEMENT)
               .option("maxFilesPerTrigger", 1).parquet(in_dir))
-    q = _start_streaming(spark, stream, lambda df: df, table,
+    q = _start_streaming(stream, lambda df: df, table,
                          str(tmp_path / "pre_ckpt"))
     q.awaitTermination(300)
 
     got = key_set(read_stream_result(spark, table))
     assert got == {k1[2:] + (ann,)}          # bare twin suppressed
-    assert spark.read.parquet(table).count() == 1   # not even appended
-    side = spark.read.parquet(ann_keys_path(table))
-    assert {tuple(r) for r in side.collect()} == {k1[2:7]}
 
 
 def test_session_window_stream_equals_batch(spark, tmp_path):

@@ -1,27 +1,24 @@
-"""Streaming soak at volume (r4 verdict #8).
+"""Streaming soak at volume.
 
-The pytest compaction test bounds side-table growth over 6 batches;
-this harness runs the NT incremental import over MANY micro-batches
-(default 60 files x ~1,700 triples ~ 100k) with the production
-compaction cadence and records:
+Runs the docs incremental import over MANY micro-batches (default 60
+files x 800 docs) and records:
 
-* per-batch wall time for every micro-batch (via a StreamingQuery
-  progress listener) — the soak claim is that batch time stays
-  BOUNDED (no linear growth in batch index, which is exactly what the
-  uncompacted side table produced in round 3);
+* per-batch wall time for every micro-batch (via the StreamingQuery's
+  recent progress) — the soak claim is that batch time stays BOUNDED
+  (no growth in batch index: each micro-batch appends its own
+  statements and reads no earlier batch's state);
 * streamed == batch equality on the full statement key set at the end
-  (the correctness half of the soak);
-* final side-table file/row counts (bounded by shuffle partitions /
-  distinct annotated keys).
+  (the correctness half of the soak: dedup-on-read applies the
+  superfluous-annotation rule across batches).
 
 Emits one JSON line; append-logged to BENCH/soak_runs.jsonl.
 
 Usage: python tools/soak_streaming.py [n_files] [docs_per_file]
 (docs here = synthetic interleaved docs whose statements include
-annotated rows, so the backlog/side-table path is actually exercised;
-the NT variant is covered by the equality check in test_streaming —
-this soak uses the docs stream because it drives ~30x more triples
-through the same _start_streaming driver.)
+annotated rows, so the cross-batch annotation rule is actually
+exercised; the NT variant is covered by the equality check in
+test_streaming — this soak uses the docs stream because it drives ~30x
+more triples through the same _start_streaming driver.)
 """
 
 from __future__ import annotations
@@ -41,8 +38,8 @@ def main() -> None:
 
     from ldtab_clj_spark.plans.pipeline import build_statements
     from ldtab_clj_spark.session import get_spark
-    from ldtab_clj_spark.streaming.pipeline import (
-        ann_keys_path, read_stream_result, run_streaming_import)
+    from ldtab_clj_spark.streaming.pipeline import (read_stream_result,
+                                                    run_streaming_import)
     from ldtab_clj_spark.synth import entity_dictionary, synth_docs
 
     n_files = int(sys.argv[1]) if len(sys.argv) > 1 else 60
@@ -85,11 +82,6 @@ def main() -> None:
     b_keys = {tuple(r) for r in
               dedup_statements(batch).select(*key).collect()}
 
-    side = Path(ann_keys_path(table))
-    side_files = len(list(side.glob("*.parquet"))) if side.exists() else 0
-    side_rows = (spark.read.parquet(str(side)).count()
-                 if side.exists() else 0)
-
     half = len(batch_secs) // 2
     first_half = statistics.median(batch_secs[:half]) if half else 0.0
     second_half = statistics.median(batch_secs[half:]) if half else 0.0
@@ -104,11 +96,8 @@ def main() -> None:
         "median_first_half": round(first_half, 3),
         "median_second_half": round(second_half, 3),
         # boundedness: late batches must not be systematically slower
-        # (r3's uncompacted side table made this ratio grow linearly)
         "late_over_early": round(second_half / first_half, 3)
         if first_half else None,
-        "side_table_files": side_files,
-        "side_table_rows": side_rows,
         "ts": int(time.time()),
     }
     print(json.dumps(result), flush=True)
