@@ -9,3 +9,10 @@ pure Python for use inside Arrow-batched pandas UDFs.
 """
 
 __version__ = "0.1.0"
+
+from ldtab_clj_spark import zipcache as _zipcache
+
+# Every package UDF unpickles by importing this package, so a reused
+# Python worker has the gate from its second task on (zipcache.py).
+if _zipcache.in_pyspark_worker():
+    _zipcache.install()

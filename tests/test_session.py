@@ -37,3 +37,10 @@ def test_bad_cpus_raises_before_session_start(monkeypatch, raw):
     # bench.py reads it at import, before main() starts a session
     with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
         runpy.run_path(str(BENCH))
+
+
+def test_get_spark_keeps_stock_daemon_module(spark):
+    # a renamed daemon would hide the workers from samplers that find
+    # them by `pyspark.daemon` in their command line
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.python.daemon.module") is None
