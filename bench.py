@@ -113,11 +113,8 @@ def run_suite(spark) -> dict:
 
     def kg():
         nonlocal n_rows
-        # explicit partitions pins the stanza-stage shuffle width:
-        # without it AQE coalesces the ~3MB doc_id shuffle to ~4
-        # tasks, idling 28 of the 32 cores through the Python stage
-        n_rows = run_pipeline(spark, n_docs=N_DOCS, seed=42,
-                              partitions=max(CPUS, 16)).count()
+        # the pipeline sizes its Python stages itself (operators/parallel)
+        n_rows = run_pipeline(spark, n_docs=N_DOCS, seed=42).count()
 
     kg_sec = best_of(kg)
     timings["kg_pipeline"] = round(kg_sec, 3)

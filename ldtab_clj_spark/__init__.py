@@ -10,9 +10,17 @@ pure Python for use inside Arrow-batched pandas UDFs.
 
 __version__ = "0.1.0"
 
+import gc as _gc
+
 from ldtab_clj_spark import zipcache as _zipcache
 
 # Every package UDF unpickles by importing this package, so a reused
 # Python worker has the gate from its second task on (zipcache.py).
+# The daemon also runs a full gc.collect() after every task of a reused
+# worker (pyspark/daemon.py), ~30 ms over the imported pyspark, pandas
+# and pyarrow heap; freezing that heap once leaves each collection only
+# the objects created since.
 if _zipcache.in_pyspark_worker():
     _zipcache.install()
+    _gc.collect()
+    _gc.freeze()

@@ -218,23 +218,23 @@ def cmd_export(args) -> int:
     spark = _spark()
     statements = _read_db(spark, args.db, args.table)
     from .operators.export import write_ntriples, write_tsv, write_turtle
-    if args.out.endswith(".tsv"):
-        write_tsv(statements, args.out, sort=args.sort)
-    elif args.out.endswith(".nt"):
-        prefix_df = spark.read.parquet(str(Path(args.db) / "prefix"))
-        write_ntriples(statements, prefix_df, args.out,
-                       typed_owl=args.typed_owl)
-    elif args.out.endswith(".ttl"):
-        # cli.clj:213 accepts ttl/tsv; Turtle gets the @prefix header +
-        # CURIE compaction (export.clj:59-70)
-        prefix_df = spark.read.parquet(str(Path(args.db) / "prefix"))
-        write_turtle(statements, prefix_df, args.out,
-                     typed_owl=args.typed_owl)
-    else:
+    ext = Path(args.out).suffix
+    if ext not in (".tsv", ".nt", ".ttl"):
         print("error: unknown export extension (use .tsv, .nt or .ttl)",
               file=sys.stderr)
         return 1
-    print(f"exported {statements.count()} statements to {args.out}")
+    # each writer counts the rows its write consumes: a .count()
+    # afterwards would re-scan and re-dedup the whole table
+    if ext == ".tsv":
+        n = write_tsv(statements, args.out, sort=args.sort)
+    else:
+        # cli.clj:213 accepts ttl/tsv; Turtle gets the @prefix header +
+        # CURIE compaction (export.clj:59-70)
+        write = write_ntriples if ext == ".nt" else write_turtle
+        n = write(statements,
+                  spark.read.parquet(str(Path(args.db) / "prefix")),
+                  args.out, typed_owl=args.typed_owl)
+    print(f"exported {n} statements to {args.out}")
     return 0
 
 

@@ -21,6 +21,8 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .parallel import python_partitions
+
 
 def exact_dedup_groups(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Exact duplicate groups by content hash: (h, keep_id, dupes)."""
@@ -89,9 +91,7 @@ def repeated_segment_stats(docs: DataFrame, text_col: str = "text",
     back — shuffle keys are hashes, never text; at 100 TB the
     boilerplate relation is small (only segments passing the
     threshold) and broadcasts."""
-    from .parallel import widen_partitions
-    docs = widen_partitions(docs.select("doc_id", text_col),
-                            min_bytes=0)
+    docs = python_partitions(docs.select("doc_id", text_col))
     words = F.split(F.trim(F.col(text_col)), r"\s+")
     nseg = F.ceil(F.size(words) / seg_words).cast("int")
     seg = F.transform(
@@ -192,12 +192,10 @@ def minhash_signatures(docs: DataFrame, text_col: str = "text",
                  **{c: [s[i] for s in out_sigs]
                     for i, c in enumerate(sig_cols)}})
 
-    from .parallel import widen_partitions
     doc_type = dict(docs.dtypes)["doc_id"]
     schema = f"doc_id {doc_type}, " + ", ".join(
         f"{c} string" for c in sig_cols)
-    return widen_partitions(docs.select("doc_id", text_col),
-                            min_bytes=0).mapInPandas(
+    return python_partitions(docs.select("doc_id", text_col)).mapInPandas(
         sig, schema)
 
 
@@ -247,10 +245,8 @@ def simhash_signatures(docs: DataFrame,
                 out_sigs.append("".join(_HEX[v] for v in vals))
             yield pd.DataFrame({"doc_id": out_ids, "simhash": out_sigs})
 
-    from .parallel import widen_partitions
     doc_type = dict(docs.dtypes)["doc_id"]
-    return widen_partitions(docs.select("doc_id", text_col),
-                            min_bytes=0).mapInPandas(
+    return python_partitions(docs.select("doc_id", text_col)).mapInPandas(
         sig, f"doc_id {doc_type}, simhash string")
 
 

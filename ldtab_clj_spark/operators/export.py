@@ -9,22 +9,26 @@ thick_rdf.clj:195-228 (row → RDF model). We emit:
   — distributed ``df.write.csv``;
 * thin-triple expansion (``expand_df``) as a ``mapInPandas`` UDTF —
   the round-trip path (export → re-import) used by the P/R oracle;
-* N-Triples text lines (the Turtle-equivalent sink; Jena's prefix
-  compaction is presentation-only) written distributedly as text.
+* N-Triples and Turtle text lines written distributedly as text; each
+  writer expands and formats in ONE ``mapInPandas`` pass, so a task
+  holds one Python worker.
 """
 
 from __future__ import annotations
 
 import re
+from itertools import chain, islice
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..core.canonical import content_hash, curie_to_iri, curify_with
 from ..core.expand import expand_statement_row, merge_existential_rows
 from ..schemas import STATEMENT, THIN
+from .batching import grouped_batches
+from .parallel import python_partitions
 
 STATEMENT_COLS = [f.name for f in STATEMENT.fields]
 
@@ -52,9 +56,16 @@ def unescape_tsv(col):
     return F.replace(out, F.lit(s), F.lit("\\"))
 
 
-def write_tsv(statements: DataFrame, path: str, sort: bool = False) -> None:
+def _counted(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with a row count that rides its write: no second scan."""
+    rows = Observation()
+    return df.observe(rows, F.count(F.lit(1)).alias("rows")), rows
+
+
+def write_tsv(statements: DataFrame, path: str, sort: bool = False) -> int:
     """K2: TSV export sink. ``sort`` = reference --sort flag
-    (lexicographic; a global range-partitioned sort in Spark)."""
+    (lexicographic; a global range-partitioned sort in Spark). Returns
+    the number of statements written."""
     df = statements.select(
         *[escape_tsv(F.col(c).cast("string")).alias(c)
           if c in ("subject", "predicate", "object", "annotation")
@@ -62,12 +73,16 @@ def write_tsv(statements: DataFrame, path: str, sort: bool = False) -> None:
           for c in STATEMENT_COLS])
     if sort:
         df = df.orderBy(*STATEMENT_COLS)
+    # counted above the sort: the range partitioner's sampling job
+    # would count every row below it twice
+    df, rows = _counted(df)
     # quoting disabled: the reference format is raw TSV (tabs/newlines
     # already escaped above); CSV quoting would wrap every JSON field
     (df.write.mode("overwrite")
        .option("sep", "\t").option("header", True)
        .option("quote", "").option("escape", "")
        .option("emptyValue", "").csv(path))
+    return rows.get["rows"]
 
 
 def read_tsv(spark, path: str) -> DataFrame:
@@ -92,41 +107,71 @@ def read_prefix_tsv(spark, path: str) -> DataFrame:
             .csv(path).select("prefix", "base"))
 
 
+def _by_subject(statements: DataFrame) -> DataFrame:
+    """Statements hash-partitioned at the Python-stage width and sorted
+    by subject: each wiring-subject group is one contiguous run, so
+    ``_expanded`` streams with memory O(Arrow batch + largest group),
+    never O(partition) (wiring groups are 2-5 rows; the sort is
+    JVM-side)."""
+    return python_partitions(statements, "subject") \
+        .sortWithinPartitions("subject")
+
+
+def _expanded(batches: Iterator[pd.DataFrame], typed_owl: bool):
+    """R10/R11 over a ``_by_subject`` partition: (statement row, its
+    thin triples), wiring-subject groups merged first."""
+    for pdf in grouped_batches(batches, "subject"):
+        for r in merge_existential_rows(pdf.to_dict("records")):
+            yield r, expand_statement_row(r, typed_owl=typed_owl)
+
+
+def _frames(rows, columns: list[str]) -> Iterator[pd.DataFrame]:
+    """``rows`` as frames of up to 20,000 rows (one Arrow batch each)."""
+    it = iter(rows)
+    while chunk := list(islice(it, 20_000)):
+        yield pd.DataFrame(chunk, columns=columns)
+
+
 def expand_df(statements: DataFrame, typed_owl: bool = False) -> DataFrame:
     """R10/R11 as a distributed operator: statement rows → thin
-    triples (one-to-many, Arrow-batched). Wiring-subject groups are
-    merged first, so the input is repartitioned AND sorted by subject —
-    each skolem group arrives as a contiguous run and batches stream
-    through with memory O(Arrow batch + largest group), never
-    O(partition) (wiring groups are 2-5 rows; the sort is JVM-side)."""
-    from .batching import grouped_batches
-    thin_cols = [f.name for f in THIN.fields]
-    emit_every = 20_000
+    triples (one-to-many, Arrow-batched), for the re-import path."""
+    def thin_rows(batches: Iterator[pd.DataFrame]):
+        for r, triples in _expanded(batches, typed_owl):
+            # blank labels are row-content-hash-local (core.expand), so
+            # each expanded row is a closed stanza component: its hash
+            # becomes the re-import grouping key (doc_id slot)
+            comp = content_hash("\x1f".join(
+                str(r.get(k)) for k in ("subject", "predicate", "object",
+                                        "datatype", "annotation")))
+            for t in triples:
+                yield (t["subject"], t["predicate"], t["object"],
+                       t["datatype"], t["is_blank_s"], t["is_blank_o"],
+                       comp, 0)
 
-    def expand(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out = []
-        for pdf in grouped_batches(batches, "subject"):
-            for r in merge_existential_rows(pdf.to_dict("records")):
-                # blank labels are row-content-hash-local (core.expand),
-                # so each expanded row is a closed stanza component: its
-                # hash becomes the re-import grouping key (doc_id slot)
-                comp = content_hash("\x1f".join(
-                    str(r.get(k)) for k in ("subject", "predicate",
-                                            "object", "datatype",
-                                            "annotation")))
-                for t in expand_statement_row(r, typed_owl=typed_owl):
-                    out.append((t["subject"], t["predicate"], t["object"],
-                                t["datatype"], t["is_blank_s"],
-                                t["is_blank_o"], comp, 0))
-            if len(out) >= emit_every:
-                yield pd.DataFrame(out, columns=thin_cols)
-                out = []
-        if out:
-            yield pd.DataFrame(out, columns=thin_cols)
+    return _by_subject(statements).mapInPandas(
+        lambda b: _frames(thin_rows(b), THIN.fieldNames()), THIN)
 
-    return (statements.repartition(F.col("subject"))
-            .sortWithinPartitions("subject")
-            .mapInPandas(expand, THIN))
+
+def _text_lines(statements: DataFrame, typed_owl: bool, line,
+                header: tuple[str, ...] = ()) -> DataFrame:
+    """Statement rows → text lines, expanded and formatted
+    (``line(thin_triple)``) in ONE Python pass per task. ``header``
+    opens every non-empty partition."""
+    def fmt(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        lines = (line(t) for _, triples in _expanded(batches, typed_owl)
+                 for t in triples)
+        first = next(lines, None)
+        if first is not None:
+            yield from _frames(chain(header, [first], lines), ["value"])
+
+    return _by_subject(statements).mapInPandas(fmt, "value string")
+
+
+def escape_literal(v: str) -> str:
+    """A literal's lexical form with N-Triples/Turtle string escapes."""
+    return (v.replace("\\", "\\\\").replace('"', '\\"')
+            .replace("\n", "\\n").replace("\r", "\\r")
+            .replace("\t", "\\t"))
 
 
 def nt_node(v: str, blank: bool, prefixes: dict) -> str:
@@ -142,9 +187,7 @@ def nt_object(v: str, dt: str, blank: bool, prefixes: dict) -> str:
         return v.replace("_:", "_:b")
     if dt == "_IRI":
         return f"<{curie_to_iri(v, prefixes)}>"
-    lex = (v.replace("\\", "\\\\").replace('"', '\\"')
-           .replace("\n", "\\n").replace("\r", "\\r")
-           .replace("\t", "\\t"))
+    lex = escape_literal(v)
     if dt.startswith("@"):
         return f'"{lex}"{dt}'
     return f'"{lex}"^^<{curie_to_iri(dt, prefixes)}>'
@@ -152,37 +195,27 @@ def nt_object(v: str, dt: str, blank: bool, prefixes: dict) -> str:
 
 def to_ntriples_lines(statements: DataFrame, prefix_df: DataFrame,
                       typed_owl: bool = False) -> DataFrame:
-    """K3/K4: flat-triple rows → N-Triples text lines (IRIs expanded
-    via the broadcast prefix map, curie-2-uri semantics
-    thick_rdf.clj:32-43). Compound rows are expanded by expand_df
-    first; literals are quoted with datatype/lang tags."""
+    """K3/K4: statement rows → N-Triples text lines (IRIs expanded via
+    the collected prefix map, curie-2-uri semantics
+    thick_rdf.clj:32-43; literals quoted with datatype/lang tags)."""
     prefixes = {r["prefix"]: r["base"] for r in prefix_df.collect()}
-    thin = expand_df(statements, typed_owl=typed_owl)
 
-    def fmt(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def node(v: str, blank: bool) -> str:
-            return nt_node(v, blank, prefixes)
+    def line(t: dict) -> str:
+        s = nt_node(t["subject"], t["is_blank_s"], prefixes)
+        o = nt_object(t["object"], t["datatype"], t["is_blank_o"],
+                      prefixes)
+        return f"{s} <{curie_to_iri(t['predicate'], prefixes)}> {o} ."
 
-        def obj(v: str, dt: str, blank: bool) -> str:
-            return nt_object(v, dt, blank, prefixes)
-
-        for pdf in batches:
-            lines = [
-                f"{node(s, bs)} <{curie_to_iri(p, prefixes)}> "
-                f"{obj(o, dt, bo)} ."
-                for s, p, o, dt, bs, bo in zip(
-                    pdf["subject"], pdf["predicate"], pdf["object"],
-                    pdf["datatype"], pdf["is_blank_s"], pdf["is_blank_o"])
-            ]
-            yield pd.DataFrame({"value": lines})
-
-    return thin.mapInPandas(fmt, "value string")
+    return _text_lines(statements, typed_owl, line)
 
 
 def write_ntriples(statements: DataFrame, prefix_df: DataFrame,
-                   path: str, typed_owl: bool = False) -> None:
-    to_ntriples_lines(statements, prefix_df, typed_owl=typed_owl) \
+                   path: str, typed_owl: bool = False) -> int:
+    """N-Triples files at ``path``; returns the statements written."""
+    statements, rows = _counted(statements)
+    to_ntriples_lines(statements, prefix_df, typed_owl) \
         .write.mode("overwrite").text(path)
+    return rows.get["rows"]
 
 
 # neither PN_PREFIX nor PN_LOCAL may END with '.' (a trailing dot is
@@ -209,9 +242,7 @@ def turtle_term(v: str, blank: bool, prefixes: dict,
 def turtle_literal(v: str, dt: str, prefixes: dict,
                    prefix_list: list) -> str:
     """Quoted Turtle literal with escapes + lang/datatype tag."""
-    lex = (v.replace("\\", "\\\\").replace('"', '\\"')
-           .replace("\n", "\\n").replace("\r", "\\r")
-           .replace("\t", "\\t"))
+    lex = escape_literal(v)
     if dt.startswith("@"):
         return f'"{lex}"{dt}'
     if dt in ("xsd:string",
@@ -223,45 +254,37 @@ def turtle_literal(v: str, dt: str, prefixes: dict,
 def to_turtle_lines(statements: DataFrame, prefix_df: DataFrame,
                     typed_owl: bool = False) -> DataFrame:
     """K3/K4 Turtle form (export.clj:59-70, thick_rdf.clj:217-228):
-    thin-triple rows → Turtle lines with CURIE compaction against the
-    broadcast prefix map. Distributed analog of Jena's TURTLE_BLOCKS
+    statement rows → Turtle lines with CURIE compaction against the
+    collected prefix map. Distributed analog of Jena's TURTLE_BLOCKS
     stream writer: every PARTITION is a standalone valid Turtle
     document (its own ``@prefix`` header), so a directory of part files
     is a valid Turtle dataset and each part parses independently."""
     prefix_list = [(r["prefix"], r["base"]) for r in prefix_df.collect()]
     prefixes = dict(prefix_list)
-    thin = expand_df(statements, typed_owl=typed_owl)
-    header = [f"@prefix {p}: <{b}> ." for p, b in
-              sorted(prefix_list)] + [""]
+    header = (*[f"@prefix {p}: <{b}> ." for p, b in sorted(prefix_list)],
+              "")
 
     def term(v: str, blank: bool) -> str:
         return turtle_term(v, blank, prefixes, prefix_list)
 
-    def literal(v: str, dt: str) -> str:
-        return turtle_literal(v, dt, prefixes, prefix_list)
+    def line(t: dict) -> str:
+        o, dt = t["object"], t["datatype"]
+        if t["is_blank_o"] or dt == "_JSONMAP":
+            obj = o.replace("_:", "_:b")
+        elif dt == "_IRI":
+            obj = term(o, False)
+        else:
+            obj = turtle_literal(o, dt, prefixes, prefix_list)
+        return (f"{term(t['subject'], t['is_blank_s'])} "
+                f"{term(t['predicate'], False)} {obj} .")
 
-    def fmt(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        first = True
-        for pdf in batches:
-            lines = [] if not first else list(header)
-            first = False
-            for s, p, o, dt, bs, bo in zip(
-                    pdf["subject"], pdf["predicate"], pdf["object"],
-                    pdf["datatype"], pdf["is_blank_s"], pdf["is_blank_o"]):
-                if bo or dt == "_JSONMAP":
-                    obj = o.replace("_:", "_:b")
-                elif dt == "_IRI":
-                    obj = term(o, False)
-                else:
-                    obj = literal(o, dt)
-                lines.append(f"{term(s, bs)} {term(p, False)} {obj} .")
-            if lines:
-                yield pd.DataFrame({"value": lines})
-
-    return thin.mapInPandas(fmt, "value string")
+    return _text_lines(statements, typed_owl, line, header)
 
 
 def write_turtle(statements: DataFrame, prefix_df: DataFrame,
-                 path: str, typed_owl: bool = False) -> None:
-    to_turtle_lines(statements, prefix_df, typed_owl=typed_owl) \
+                 path: str, typed_owl: bool = False) -> int:
+    """Turtle files at ``path``; returns the statements written."""
+    statements, rows = _counted(statements)
+    to_turtle_lines(statements, prefix_df, typed_owl) \
         .write.mode("overwrite").text(path)
+    return rows.get["rows"]

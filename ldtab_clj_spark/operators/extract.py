@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..schemas import THIN
+from .parallel import python_partitions
 
 _SUR = r"(?:Widget \d+|W-\d+)"
 RE_FACT = re.compile(rf"^({_SUR}) (contains|powers|resembles) ({_SUR})\.$")
@@ -160,7 +161,8 @@ def extract_thin_triples(docs: DataFrame) -> DataFrame:
 
     posexplode keeps span order as ``pos`` (the per-row span-sequence
     invariant of BASELINE.json input_hint); column pruning pushes the
-    span struct fields into the scan.
+    span struct fields into the scan. A scan narrower than the
+    Python-stage width is widened round-robin.
     """
     exploded = docs.select(
         "doc_id",
@@ -171,4 +173,4 @@ def extract_thin_triples(docs: DataFrame) -> DataFrame:
         F.col("span.text").alias("text"),
         F.col("span.media_ref").alias("media_ref"),
     )
-    return exploded.mapInPandas(parse_spans_batch, THIN)
+    return python_partitions(exploded).mapInPandas(parse_spans_batch, THIN)

@@ -1,70 +1,91 @@
-"""Scan-width adaptation for per-row-expensive stages.
+"""Task counts for Python stages, and scan widening for JVM queries.
 
-A parquet scan parallelizes at ROW-GROUP granularity: a table written
-as one file with one row group yields ONE scan task no matter how many
-cores the session has, and everything between the scan and the first
-exchange (shingle explodes + md5 signatures, mapInPandas banding,
-interpreted folds) runs serially. Measured on the r06 bench inputs:
-documents/embeddings/events at sf1.0 are single-row-group files, so
-the md5/Python stanzas of the dedup/ANN/text operators ran on 1 of 32
-cores.
+``python_partitions`` lays out the input of the Python
+(``mapInPandas``) stages — extract, stanza, the export pass, the
+near-dup/ANN signature passes — and of the md5 passes with the same
+per-row cost: one task per core (``defaultParallelism``), or a whole
+multiple of that when the files read exceed ``TASK_INPUT_BYTES`` per
+core. A keyed stage gets that width as its hash shuffle
+(REPARTITION_BY_NUM, which AQE never coalesces); an unkeyed one is
+widened round-robin only when narrower. AQE had coalesced
+kg_roundtrip's stanza and export shuffles to one task each on
+local[4]; pinned to 4, the job's median wall time fell from 6.11 to
+4.87 s over 10 interleaved pairs (ROADMAP item 1). The N-Triples parse
+keeps its scan's splits: the component contraction after it needs
+each stanza's lines in one partition.
 
-``widen_partitions`` repartitions a relation up to the session's
-default parallelism ONLY when the upstream plan under-parallelizes it
-(fewer partitions than cores). The round-robin exchange moves just the
-projected columns (a few MB here), and REPARTITION_BY_NUM is exempt
-from AQE coalescing, so the width sticks (the round-5 rule: pin width
-where cost is per-row, keep AQE where cost is per-byte). At scale a
-100 TB scan already has orders of magnitude more splits than cores, so
-the guard makes this a no-op there — the knob adapts to input size
-instead of hard-coding either deployment.
-
-The widen/no-widen crossovers below (``MIN_WIDEN_BYTES`` and the
-``min_bytes=0`` rationale) were measured while every Python task still
-paid ~0.25 s of fixed cost re-reading ``pyspark.zip``'s directory, which
-``zipcache`` now removes in reused workers. Extra tasks are cheaper than
-those numbers assumed; the values are kept until they are re-measured.
+``widen_partitions`` serves JVM queries: a single-row-group parquet
+file is ONE scan task, and everything up to the first exchange runs
+serially on it, so a scan narrower than the cores is widened when its
+size estimate reaches ``MIN_WIDEN_BYTES``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+# Input bytes per core a Python stage takes on before it runs another
+# round of tasks: AQE's default advisory partition size.
+TASK_INPUT_BYTES = 64 * 1024 * 1024
 
-# Default size gate for MODERATE per-row cost (plain JVM expressions:
-# tokenize/window/agg): below ~1 MiB estimated, the serial
-# scan-to-exchange segment is cheaper than the extra stage barrier
-# (measured at sf0.1: widening term_stats REGRESSED 0.40→0.87 s)
-# while above it the serialized per-row work dominates (sf1.0: the
-# same widen won 1.72→1.03 s; the projected estimates straddle 1 MiB
-# exactly between those scales). Call sites whose downstream is
-# md5/Python-heavy pass min_bytes=0 — for them the per-row cost is
-# ~100× the bytes and widening wins even on sub-MB inputs (minhash at
-# sf0.1: 0.79 s widened vs 1.76 s not).
+# Size gate for JVM queries (tokenize/window/agg): below ~1 MiB
+# estimated, the serial scan-to-exchange segment is cheaper than the
+# extra stage barrier (measured at sf0.1: widening term_stats
+# REGRESSED 0.40→0.87 s), while above it the serialized per-row work
+# dominates (sf1.0: the same widen won 1.72→1.03 s; the projected
+# estimates straddle 1 MiB exactly between those scales).
 MIN_WIDEN_BYTES = 1024 * 1024
 
+_FILE_SCANS = ("LogicalRelation", "DataSourceV2ScanRelation")
 
-def widen_partitions(df: DataFrame, *keys: str,
-                     min_bytes: int = MIN_WIDEN_BYTES) -> DataFrame:
-    """Repartition ``df`` to the session's default parallelism when
-    (and only when) the current plan has fewer partitions AND its size
-    estimate is at least ``min_bytes`` — a no-op on inputs that are
-    already wide, and (for the default gate) on inputs too small for
-    the serial segment to outweigh one stage barrier. With ``keys``,
-    the exchange is hash-partitioned on them instead of round-robin: a
+
+def input_bytes(df: DataFrame) -> int | None:
+    """Spark's size estimate of the files ``df`` reads (the file-scan
+    leaves of its optimized plan), or None when it reads none. Only
+    file scans: the root estimate multiplies the sizes of a join's
+    sides (linking's dictionary joins estimate ~4e14 bytes over a
+    0.4 MB docs table), and checkpointed or cached leaves carry the
+    estimate of the plan they were cut from."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    sizes = [int(str(leaf.stats().sizeInBytes()))
+             for leaf in (leaves.apply(i) for i in range(leaves.size()))
+             if leaf.getClass().getSimpleName() in _FILE_SCANS]
+    return sum(sizes) if sizes else None
+
+
+def python_width(df: DataFrame) -> int:
+    """Task count for a Python stage over ``df``: the session's cores,
+    times the rounds of ``TASK_INPUT_BYTES`` per core its input
+    estimate needs (one round when small or unknown)."""
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    est = input_bytes(df) or 0
+    return cores * max(1, -(-est // (cores * TASK_INPUT_BYTES)))
+
+
+def python_partitions(df: DataFrame, *keys: str) -> DataFrame:
+    """``df`` laid out for a Python stage of ``python_width`` tasks:
+    hash-partitioned on ``keys``, or, with no keys, round-robin when
+    the plan has fewer partitions (a wide scan is left as it is)."""
+    n = python_width(df)
+    if not keys and df.rdd.getNumPartitions() >= n:
+        return df
+    return df.repartition(n, *keys)
+
+
+def widen_partitions(df: DataFrame, *keys: str) -> DataFrame:
+    """Repartition ``df`` to the cores when its plan has fewer
+    partitions AND its size estimate is at least ``MIN_WIDEN_BYTES``.
+    With ``keys``, the exchange is hash-partitioned on them: a
     downstream aggregation/window keyed the same way is then already
-    satisfied, so the widen MOVES that exchange below the
-    per-row-expensive segment rather than adding one."""
+    satisfied, so the widen MOVES that exchange below the per-row
+    work rather than adding one."""
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df
-    if min_bytes:
-        try:
-            est = df._jdf.queryExecution().optimizedPlan().stats() \
-                .sizeInBytes()
-            if int(str(est)) < min_bytes:
-                return df
-        except Exception:
-            pass  # no estimate → assume big (the safe side at scale)
-    return df.repartition(target, *keys) if keys \
-        else df.repartition(target)
+    try:
+        est = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        if int(str(est)) < MIN_WIDEN_BYTES:
+            return df
+    except Exception:
+        pass  # no estimate → assume big (the safe side at scale)
+    return df.repartition(target, *keys)

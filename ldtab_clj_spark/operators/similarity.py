@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .parallel import python_partitions
+
 
 def _as_double(col):
     return F.transform(col, lambda x: x.cast("double"))
@@ -40,9 +42,8 @@ def cosine_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
     the similarity itself stays internal (floats don't hash stably
     across engines at the boundary, ranks do).
     """
-    from .parallel import widen_partitions
-    corpus = with_norm(widen_partitions(
-        embeddings.select("vec_id", vec_col), min_bytes=0), vec_col).select(
+    corpus = with_norm(python_partitions(
+        embeddings.select("vec_id", vec_col)), vec_col).select(
         F.col("vec_id").alias("neighbor_id"), "_v", "_norm")
     qs = with_norm(queries, vec_col).select(
         F.col("vec_id").alias("query_id"),
@@ -151,9 +152,7 @@ def _srp_bands_with_vecs_arrow(embeddings: DataFrame, plane_tables,
                 "_norm": np.repeat(nrm, n_tables),
             })
 
-    from .parallel import widen_partitions
-    src = widen_partitions(embeddings.select("vec_id", vec_col),
-                           min_bytes=0)
+    src = python_partitions(embeddings.select("vec_id", vec_col))
     return src.mapInPandas(
         bands, "vec_id long, tbl int, bucket long, "
                "_raw array<float>, _norm double")
@@ -271,10 +270,9 @@ def srp_banded_near_dup(embeddings: DataFrame,
         raise ValueError(f"unknown srp mode {mode!r} (use 'arrow')")
     bands_v = _srp_bands_with_vecs_arrow(embeddings, plane_tables,
                                          vec_col)
-    sc = embeddings.sparkSession.sparkContext
-    part = (bands_v
-            .withColumn("_grp", F.concat_ws(":", "tbl", "bucket"))
-            .repartition(sc.defaultParallelism, "tbl", "bucket")
+    grouped = bands_v.withColumn("_grp",
+                                 F.concat_ws(":", "tbl", "bucket"))
+    part = (python_partitions(grouped, "tbl", "bucket")
             .sortWithinPartitions("_grp")
             .select("_grp", "vec_id", "_raw", "_norm"))
     return (part.mapInPandas(_confirm_bucket_stream(threshold),
@@ -400,9 +398,8 @@ def ivf_cosine_topk(embeddings: DataFrame, queries: DataFrame,
                                    vec_col)
     else:
         cent = _minid_centroids(embeddings, n_centroids, vec_col)
-    from .parallel import widen_partitions
-    corpus = with_norm(widen_partitions(
-        embeddings.select("vec_id", vec_col), min_bytes=0), vec_col) \
+    corpus = with_norm(python_partitions(
+        embeddings.select("vec_id", vec_col)), vec_col) \
         .select("vec_id", "_v", "_norm")
     assigned = _assign_to_centroids(corpus, cent)
     probes = (with_norm(queries, vec_col)
@@ -451,9 +448,8 @@ def lsh_cosine_topk(embeddings: DataFrame, queries: DataFrame,
     """Bucketed ANN: rank only candidates sharing the query's SRP
     bucket. Recall < 1 by design; at scale, multiple plane-sets (OR)
     trade shuffle for recall."""
-    from .parallel import widen_partitions
-    corpus = srp_bucket(with_norm(widen_partitions(
-        embeddings.select("vec_id", vec_col), min_bytes=0), vec_col), planes, vec_col) \
+    corpus = srp_bucket(with_norm(python_partitions(
+        embeddings.select("vec_id", vec_col)), vec_col), planes, vec_col) \
         .select(F.col("vec_id").alias("neighbor_id"), "_v", "_norm",
                 "bucket")
     qs = srp_bucket(with_norm(queries, vec_col), planes, vec_col).select(

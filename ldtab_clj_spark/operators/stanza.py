@@ -3,8 +3,10 @@
 The grouped realization of thin-2-thick (SURVEY.md R1-R8,
 thin2thick.clj:302-333). Blank-node components are document-local by
 construction (extract.py), so one hash shuffle on doc_id co-locates
-every stanza; a JVM-side ``sortWithinPartitions`` makes each doc a
-contiguous run, and the rewrite chain streams Arrow batches through
+every stanza; it has the Python-stage width
+(``parallel.python_partitions``), which AQE cannot coalesce to one
+task. A JVM-side ``sortWithinPartitions`` makes each doc a contiguous
+run, and the rewrite chain streams Arrow batches through
 ``mapInPandas`` with run-length grouping — per-group dispatch in C,
 not one Python/Arrow round trip per document (20k tiny groups made
 applyInPandas the pipeline bottleneck), and worker memory bounded at
@@ -17,11 +19,11 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..core.thick import thin_to_thick, to_statement_row
 from ..schemas import STATEMENT
 from .batching import grouped_batches
+from .parallel import python_partitions
 
 _THIN_COLS = ["subject", "predicate", "object", "datatype",
               "is_blank_s", "is_blank_o"]
@@ -87,12 +89,10 @@ def _partition_stanzas(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame
         yield pd.DataFrame(out, columns=_OUT_COLS)
 
 
-def thin_to_thick_df(thin: DataFrame,
-                     partitions: int | None = None) -> DataFrame:
+def thin_to_thick_df(thin: DataFrame) -> DataFrame:
     """Thin triples (linked) → statement rows. One shuffle on doc_id;
     the within-partition sort is JVM-side (Tungsten) and pins a
     deterministic per-doc processing order."""
-    df = thin.repartition(partitions, "doc_id") if partitions \
-        else thin.repartition(F.col("doc_id"))
-    return df.sortWithinPartitions(*_SORT_COLS) \
+    return python_partitions(thin, "doc_id") \
+        .sortWithinPartitions(*_SORT_COLS) \
         .mapInPandas(_partition_stanzas, STATEMENT)

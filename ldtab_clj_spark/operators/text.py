@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .parallel import python_partitions, widen_partitions
+
 STOPWORDS = ("the", "a", "of", "and", "to", "in")
 
 # marker words per language for the n-gram-ish heuristic; the synthetic
@@ -98,9 +100,7 @@ def winnow_fingerprints(docs: DataFrame,
     standard near-dup fingerprint at corpus scale."""
     from pyspark.sql import Window
 
-    from .parallel import widen_partitions
-    docs = widen_partitions(docs.select("doc_id", text_col),
-                            min_bytes=0)
+    docs = python_partitions(docs.select("doc_id", text_col))
     words = F.split(F.trim(F.col(text_col)), r"\s+")
     bigrams = F.zip_with(
         F.slice(words, 1, F.size(words) - 1),
@@ -133,7 +133,6 @@ def term_stats(docs: DataFrame, text_col: str = "text",
     idf weighting all derive from it). Counts stay integers so the
     cross-engine oracle is exact; ln(N/df) weighting is one float
     expression away for consumers."""
-    from .parallel import widen_partitions
     words = widen_partitions(docs.select("doc_id", text_col)).select(
         "doc_id",
         F.explode(F.split(F.lower(F.trim(F.col(text_col))),

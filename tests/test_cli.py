@@ -63,6 +63,33 @@ def test_cli_workflow(spark, tmp_path, capsys):
     assert tp / len(again) >= 0.95 and tp / len(orig) >= 0.95
 
 
+def test_cli_export_prints_the_deduped_count(spark, tmp_path, capsys):
+    """The printed count comes from the write itself: it is the row
+    count after dedup-on-read, for every export format."""
+    import re
+
+    from ldtab_clj_spark.operators.materialize import dedup_statements
+    db = str(tmp_path / "db")
+    docs_dir = str(tmp_path / "docs")
+    synth_docs(spark, 20, seed=4).write.parquet(docs_dir)
+    (tmp_path / "p.tsv").write_text(PREFIX_TSV)
+    assert main(["init", db]) == 0
+    assert main(["prefix", db, str(tmp_path / "p.tsv")]) == 0
+    # importing twice stores every statement twice
+    assert main(["import", db, docs_dir]) == 0
+    assert main(["import", db, docs_dir]) == 0
+    stored = spark.read.parquet(f"{db}/statement")
+    want = dedup_statements(stored).count()
+    assert stored.count() == 2 * want
+    for out, flags in [("d.nt", []), ("d.ttl", []), ("d.tsv", []),
+                       ("s.tsv", ["--sort"])]:
+        capsys.readouterr()
+        assert main(["export", db, str(tmp_path / out), *flags]) == 0
+        printed = capsys.readouterr().out
+        assert re.search(rf"exported {want} statements to ", printed), \
+            (out, flags, printed, want)
+
+
 def test_cli_prefix_list(spark, tmp_path, capsys):
     db = str(tmp_path / "db")
     (tmp_path / "p.tsv").write_text(PREFIX_TSV)

@@ -1,14 +1,21 @@
 """Export sinks + distributed round trip (SURVEY.md K2-K5, R10/R11)."""
 
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
 from ldtab_clj_spark.operators.export import (read_tsv, to_ntriples_lines,
-                                              write_tsv)
+                                              to_turtle_lines, write_tsv)
 from ldtab_clj_spark.plans.pipeline import build_statements, reimport
 from ldtab_clj_spark.synth import entity_dictionary, synth_docs
 
 N_DOCS = 80
+PREFIXES = [("ex", "http://example.com/"),
+            ("rdf", "http://www.w3.org/1999/02/22-rdf-syntax-ns#"),
+            ("rdfs", "http://www.w3.org/2000/01/rdf-schema#"),
+            ("owl", "http://www.w3.org/2002/07/owl#"),
+            ("xsd", "http://www.w3.org/2001/XMLSchema#")]
 
 
 @pytest.fixture(scope="module")
@@ -51,13 +58,7 @@ def test_distributed_roundtrip_pr(statements):
 
 
 def test_ntriples_lines(spark, statements):
-    prefix = spark.createDataFrame(
-        [("ex", "http://example.com/"),
-         ("rdf", "http://www.w3.org/1999/02/22-rdf-syntax-ns#"),
-         ("rdfs", "http://www.w3.org/2000/01/rdf-schema#"),
-         ("owl", "http://www.w3.org/2002/07/owl#"),
-         ("xsd", "http://www.w3.org/2001/XMLSchema#")],
-        "prefix string, base string")
+    prefix = spark.createDataFrame(PREFIXES, "prefix string, base string")
     lines = [r.value for r in
              to_ntriples_lines(statements, prefix).collect()]
     assert lines and all(line.endswith(" .") for line in lines)
@@ -86,3 +87,78 @@ def test_curify_expand_inverse(spark):
     assert rows["http://other.org/x"][0] == "<http://other.org/x>"
     for iri, (_, back) in rows.items():
         assert back == iri
+
+
+@pytest.mark.parametrize("writer", [to_ntriples_lines, to_turtle_lines])
+def test_export_is_one_python_pass(spark, statements, writer):
+    """Expand and format share ONE mapInPandas: one Python runner, so
+    one worker per task."""
+    prefix = spark.createDataFrame(PREFIXES, "prefix string, base string")
+    plan = writer(statements, prefix)._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert plan.count("MapInPandas") == 1, plan
+
+
+def _export_corpus(spark):
+    """The kg oracle fixture (annotations, GCI JSON subjects,
+    ``_JSONLIST`` objects, multi-row wiring-subject groups) plus
+    literals that need escaping, language tags, typed literals and
+    ``<unlinked:…>`` IRIs."""
+    import pyarrow.parquet as pq
+
+    from ldtab_clj_spark.schemas import STATEMENT
+    rows = pq.read_table(Path(__file__).parent / "fixtures"
+                         / "kg_oracle_statements.parquet").to_pylist()
+    extra = [("ex:lit", "rdfs:comment", 'a\\b "q"\nn\rr\tt', "xsd:string"),
+             ("ex:lit", "rdfs:label", 'ça "va"\n', "@fr"),
+             ("ex:lit", "ex:size", "42", "xsd:integer"),
+             ("<unlinked:Widget 9>", "ex:powers", "<unlinked:W-77>", "_IRI"),
+             ("ex:E1", "ex:contains", "<unlinked:Widget 8>", "_IRI")]
+    rows += [{"assertion": 1, "retraction": 0, "graph": "graph",
+              "subject": s, "predicate": p, "object": o, "datatype": dt,
+              "annotation": None} for s, p, o, dt in extra]
+    cols = [f.name for f in STATEMENT.fields]
+    return rows, spark.createDataFrame([tuple(r[c] for c in cols)
+                                        for r in rows], STATEMENT)
+
+
+def test_fused_export_matches_driver_rendering(spark):
+    """Arrow batches of 3 rows: wiring-subject groups straddle batch
+    boundaries, and the fused pass must still merge each group whole."""
+    from collections import Counter
+
+    from ldtab_clj_spark.core.canonical import curie_to_iri
+    from ldtab_clj_spark.core.expand import (expand_statement_row,
+                                             is_wiring_blanknode,
+                                             merge_existential_rows)
+    from ldtab_clj_spark.operators.export import nt_node, nt_object
+
+    rows, df = _export_corpus(spark)
+    groups = Counter(r["subject"] for r in rows
+                     if is_wiring_blanknode(r["subject"]))
+    assert max(groups.values()) > 1
+    prefixes = dict(PREFIXES)
+    by_subject = {}
+    for r in rows:
+        by_subject.setdefault(r["subject"], []).append(r)
+
+    def line(t):
+        o = nt_object(t["object"], t["datatype"], t["is_blank_o"], prefixes)
+        return (f"{nt_node(t['subject'], t['is_blank_s'], prefixes)} "
+                f"<{curie_to_iri(t['predicate'], prefixes)}> {o} .")
+
+    want = Counter(line(t) for group in by_subject.values()
+                   for r in merge_existential_rows(group)
+                   for t in expand_statement_row(r))
+    prefix = spark.createDataFrame(PREFIXES, "prefix string, base string")
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        got = Counter(r.value for r in
+                      to_ntriples_lines(df, prefix).collect())
+    finally:
+        spark.conf.set(key, old)
+    assert got == want
+    assert any("<unlinked:" in line for line in got)
+    assert any('\\"q\\"\\nn\\rr\\tt' in line for line in got)

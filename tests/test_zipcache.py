@@ -77,3 +77,24 @@ def test_gate_installed_in_every_worker_not_in_driver(spark):
     driver = zipimport.zipimporter.invalidate_caches
     assert (driver.__module__, driver.__qualname__) == \
         ("zipimport", "zipimporter.invalidate_caches")
+
+
+def test_worker_heap_frozen_once_driver_heap_not(spark):
+    """The daemon's gc.collect() after every task of a reused worker
+    skips the heap frozen at the package's first import there."""
+    import gc
+
+    def report(batches):
+        import gc
+        import os
+
+        import ldtab_clj_spark  # noqa: F401
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"pid": [os.getpid()],
+                            "frozen": [gc.get_freeze_count()]})
+
+    rows = (spark.range(0, 800, numPartitions=8)
+            .mapInPandas(report, "pid long, frozen long").collect())
+    assert len(rows) == 8 and all(r.frozen > 10_000 for r in rows), rows
+    assert gc.get_freeze_count() == 0

@@ -38,6 +38,48 @@ MARKS = ["PhotonScan", "BroadcastHashJoin", "SortMergeJoin",
          "MapInPandas", "FlatMapGroupsInPandas", "Window", "Generate"]
 
 
+def op_counts(plan: str) -> dict[str, int]:
+    """Operator counts in a plan string (of an executed adaptive plan:
+    its final plan only). Word-boundary counting: "Exchange" must not
+    also count every "BroadcastExchange", nor "HashAggregate" every
+    "ObjectHashAggregate"."""
+    plan = plan.split("== Initial Plan ==")[0]
+    counts = {m: len(re.findall(rf"(?<![A-Za-z]){m}", plan))
+              for m in MARKS}
+    return {m: c for m, c in counts.items() if c}
+
+
+def kg_python_stages(spark) -> list[str]:
+    """kg stanza and export stages in isolation, executed on 200 docs:
+    each is ONE MapInPandas (the export expands and formats in one
+    pass: one Python worker per task), and no AQEShuffleRead coalesces
+    its pinned shuffle in the final plan."""
+    from ldtab_clj_spark.operators import export, extract, link, stanza
+    from ldtab_clj_spark.plans.pipeline import build_statements
+    from ldtab_clj_spark.synth import entity_dictionary, synth_docs
+    docs, ents = synth_docs(spark, 200, seed=5), entity_dictionary(spark)
+    linked = link.link_entities(extract.extract_thin_triples(docs), ents)
+    stmts = build_statements(docs, ents).localCheckpoint()
+    prefix = spark.createDataFrame([("ex", "http://example.com/")],
+                                   "prefix string, base string")
+    out = []
+    for name, df in [
+            ("stanza", stanza.thin_to_thick_df(linked.localCheckpoint())),
+            ("export_ntriples", export.to_ntriples_lines(stmts, prefix)),
+            ("export_turtle", export.to_turtle_lines(stmts, prefix))]:
+        df.collect()  # AQE's final plan exists once the plan has run
+        counts = op_counts(df._jdf.queryExecution().executedPlan()
+                           .toString())
+        assert counts.get("MapInPandas") == 1, (name, counts)
+        assert "AQEShuffleRead" not in counts, (name, counts)
+        out.append(f"## kg_{name}_stage (isolated, executed)\n"
+                   "operators: " + ", ".join(
+                       f"{k}×{v}" for k, v in sorted(counts.items()))
+                   + f"\n- one MapInPandas; {df.rdd.getNumPartitions()}"
+                   " tasks on the pinned shuffle (no AQEShuffleRead)\n\n")
+    return out
+
+
 def main() -> None:
     spark = get_spark("explain-audit", master="local[4]",
                       shuffle_partitions=16,
@@ -50,14 +92,7 @@ def main() -> None:
     for name in AUDIT:
         df = q.ALL_QUERIES[name](spark, sf)
         plan = df._jdf.queryExecution().executedPlan().toString()
-        # word-boundary counting: "Exchange" must not also count every
-        # "BroadcastExchange", nor "HashAggregate" every
-        # "ObjectHashAggregate"
-        counts = {}
-        for m in MARKS:
-            c = len(re.findall(rf"(?<![A-Za-z]){m}", plan))
-            if c:
-                counts[m] = c
+        counts = op_counts(plan)
         # single-line match: Spark truncates long filter lists mid-line
         # (no closing bracket), and [^\]]+ would swallow following plan
         # lines into the PLANS.md entry
@@ -86,9 +121,8 @@ def main() -> None:
     corpus = with_norm(emb).select("vec_id", "_v", "_norm")
     assigned = _assign_to_centroids(corpus, _minid_centroids(emb, 16,
                                                              "embedding"))
-    plan = assigned._jdf.queryExecution().executedPlan().toString()
-    counts = {m: len(re.findall(rf"(?<![A-Za-z]){m}", plan))
-              for m in MARKS if re.search(rf"(?<![A-Za-z]){m}", plan)}
+    counts = op_counts(assigned._jdf.queryExecution().executedPlan()
+                       .toString())
     out.append("## ivf_assignment_stage (isolated)\n")
     out.append("operators: " + ", ".join(
         f"{k}×{v}" for k, v in sorted(counts.items())) + "\n")
@@ -98,6 +132,7 @@ def main() -> None:
     out.append("- pure map: collected centroids scored per Arrow "
                "batch in one MapInPandas over the scan; no "
                "join/aggregate/shuffle/sort in the assignment stage\n\n")
+    out += kg_python_stages(spark)
     Path("PLANS.md").write_text("".join(out))
     print("wrote PLANS.md")
 
