@@ -3,16 +3,21 @@
 ``python_partitions`` lays out the input of the Python
 (``mapInPandas``) stages — extract, stanza, the export pass, the
 near-dup/ANN signature passes — and of the md5 passes with the same
-per-row cost: one task per core (``defaultParallelism``), or a whole
-multiple of that when the files read exceed ``TASK_INPUT_BYTES`` per
-core. A keyed stage gets that width as its hash shuffle
-(REPARTITION_BY_NUM, which AQE never coalesces); an unkeyed one is
-widened round-robin only when narrower. AQE had coalesced
-kg_roundtrip's stanza and export shuffles to one task each on
-local[4]; pinned to 4, the job's median wall time fell from 6.11 to
-4.87 s over 10 interleaved pairs (ROADMAP item 1). The N-Triples parse
-keeps its scan's splits: the component contraction after it needs
-each stanza's lines in one partition.
+per-row cost: one task per core (``defaultParallelism``). A keyed
+stage gets that width as its hash shuffle (REPARTITION_BY_NUM, which
+AQE never coalesces); an unkeyed one keeps a plan of at least that
+many partitions as it is and widens a narrower one round-robin. AQE
+had coalesced kg_roundtrip's stanza and export shuffles to one task
+each on local[4]; pinned to 4, the job's median wall time fell from
+6.11 to 4.87 s over 10 interleaved pairs (ROADMAP item 1). A whole
+multiple of the cores for large inputs (one round of tasks per
+64 MiB of input per core) did not pay on local[4] (4 vCPU, 15 GB):
+a 1.9 GB N-Triples import ran 234 and 258 s with 32 stanza tasks
+against 214 and 235 s with 4, and a 282 MB docs import 242 and 298 s
+with 8 against 243 and 292 s with 4 (two pairs each, order
+alternated). The N-Triples parse keeps its scan's splits: the
+component contraction after it needs each stanza's lines in one
+partition.
 
 ``widen_partitions`` serves JVM queries: a single-row-group parquet
 file is ONE scan task, and everything up to the first exchange runs
@@ -24,10 +29,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-# Input bytes per core a Python stage takes on before it runs another
-# round of tasks: AQE's default advisory partition size.
-TASK_INPUT_BYTES = 64 * 1024 * 1024
-
 # Size gate for JVM queries (tokenize/window/agg): below ~1 MiB
 # estimated, the serial scan-to-exchange segment is cheaper than the
 # extra stage barrier (measured at sf0.1: widening term_stats
@@ -36,40 +37,26 @@ TASK_INPUT_BYTES = 64 * 1024 * 1024
 # estimates straddle 1 MiB exactly between those scales).
 MIN_WIDEN_BYTES = 1024 * 1024
 
-_FILE_SCANS = ("LogicalRelation", "DataSourceV2ScanRelation")
 
-
-def input_bytes(df: DataFrame) -> int | None:
-    """Spark's size estimate of the files ``df`` reads (the file-scan
-    leaves of its optimized plan), or None when it reads none. Only
-    file scans: the root estimate multiplies the sizes of a join's
-    sides (linking's dictionary joins estimate ~4e14 bytes over a
-    0.4 MB docs table), and checkpointed or cached leaves carry the
-    estimate of the plan they were cut from."""
-    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
-    sizes = [int(str(leaf.stats().sizeInBytes()))
-             for leaf in (leaves.apply(i) for i in range(leaves.size()))
-             if leaf.getClass().getSimpleName() in _FILE_SCANS]
-    return sum(sizes) if sizes else None
-
-
-def python_width(df: DataFrame) -> int:
-    """Task count for a Python stage over ``df``: the session's cores,
-    times the rounds of ``TASK_INPUT_BYTES`` per core its input
-    estimate needs (one round when small or unknown)."""
-    cores = df.sparkSession.sparkContext.defaultParallelism
-    est = input_bytes(df) or 0
-    return cores * max(1, -(-est // (cores * TASK_INPUT_BYTES)))
+def plan_partitions(df: DataFrame) -> int:
+    """Partitions of ``df``'s plan, counted without running it; 0 for
+    a plan with an exchange, whose count under AQE is known only once
+    the stages below it have run."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        return 0
+    return df.rdd.getNumPartitions()
 
 
 def python_partitions(df: DataFrame, *keys: str) -> DataFrame:
-    """``df`` laid out for a Python stage of ``python_width`` tasks:
-    hash-partitioned on ``keys``, or, with no keys, round-robin when
-    the plan has fewer partitions (a wide scan is left as it is)."""
-    n = python_width(df)
-    if not keys and df.rdd.getNumPartitions() >= n:
+    """``df`` laid out for a Python stage of one task per core:
+    hash-partitioned on ``keys``; with no keys, left as it is when its
+    plan has at least that many partitions (a wide scan adds no
+    exchange), else widened round-robin."""
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    if not keys and plan_partitions(df) >= cores:
         return df
-    return df.repartition(n, *keys)
+    return df.repartition(cores, *keys)
 
 
 def widen_partitions(df: DataFrame, *keys: str) -> DataFrame:

@@ -1,6 +1,6 @@
 """The Python-stage width rule (operators/parallel.py): every Python
-stage runs on the session's cores, or a whole multiple of them for a
-large input, and AQE cannot coalesce a pinned stage back to one task."""
+stage runs one task per core, and AQE cannot coalesce a pinned stage
+back to one task."""
 
 import pytest
 
@@ -12,45 +12,6 @@ from ldtab_clj_spark.operators.link import link_entities
 from ldtab_clj_spark.operators.stanza import thin_to_thick_df
 from ldtab_clj_spark.plans.pipeline import build_statements
 from ldtab_clj_spark.synth import entity_dictionary, synth_docs
-
-ROUND = parallel.TASK_INPUT_BYTES
-
-
-@pytest.mark.parametrize("est", [None, 0, 1, 10_000, 4 * ROUND])
-def test_width_is_the_cores_for_small_or_unknown_input(spark, monkeypatch,
-                                                       est):
-    monkeypatch.setattr(parallel, "input_bytes", lambda df: est)
-    cores = spark.sparkContext.defaultParallelism
-    assert parallel.python_width(spark.range(1)) == cores
-
-
-@pytest.mark.parametrize("rounds,est", [
-    (2, 4 * ROUND + 1), (2, 8 * ROUND), (3, 8 * ROUND + 1),
-    (25, 100 * ROUND)])
-def test_width_is_a_multiple_of_the_cores_for_large_input(spark,
-                                                          monkeypatch,
-                                                          rounds, est):
-    # ROUND bytes per core per round on the 4-core test session
-    assert spark.sparkContext.defaultParallelism == 4
-    monkeypatch.setattr(parallel, "input_bytes", lambda df: est)
-    assert parallel.python_width(spark.range(1)) == 4 * rounds
-
-
-def test_input_bytes_sums_file_scans_not_join_products(spark, tmp_path):
-    spark.range(1000).write.parquet(str(tmp_path / "t"))
-    a = spark.read.parquet(str(tmp_path / "t"))
-    joined = a.crossJoin(a.select((a.id + 1).alias("j")))
-    root = int(str(joined._jdf.queryExecution().optimizedPlan()
-                   .stats().sizeInBytes()))
-    assert parallel.input_bytes(joined) == 2 * parallel.input_bytes(a)
-    assert root > 100 * parallel.input_bytes(joined)
-    # checkpoints and caches carry the estimate of the plan they were
-    # cut from; generated rows have no files
-    assert parallel.input_bytes(joined.localCheckpoint()) is None
-    cached = joined.persist()
-    assert parallel.input_bytes(cached.select("j")) is None
-    cached.unpersist()
-    assert parallel.input_bytes(spark.range(10)) is None
 
 
 @pytest.fixture(scope="module")
@@ -88,3 +49,15 @@ def test_unkeyed_width_leaves_a_wide_scan_alone(spark):
     assert parallel.python_partitions(narrow).rdd.getNumPartitions() \
         == cores
     assert parallel.python_partitions(wide) is wide
+
+
+def test_unkeyed_width_runs_nothing_over_a_shuffle(spark):
+    # counting a shuffled plan's partitions under AQE would run the
+    # stages below it: such a plan is widened without counting
+    shuffled = spark.range(0, 100, numPartitions=1).repartition(9, "id")
+    tracker = spark.sparkContext.statusTracker()
+    jobs = len(tracker.getJobIdsForGroup())
+    out = parallel.python_partitions(shuffled)
+    assert len(tracker.getJobIdsForGroup()) == jobs
+    assert out.rdd.getNumPartitions() == spark.sparkContext \
+        .defaultParallelism

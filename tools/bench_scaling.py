@@ -25,8 +25,8 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-# shuffle partitions of both legs; the Python stages take their width
-# from the cores (operators/parallel), as N vs 4N executors would
+# shuffle partitions of both legs; the Python stages run one task per
+# core (operators/parallel), as on N vs 4N executors
 PARTS = 64
 LO, HI = 1, 4
 # best-of per core count, and the median of as many pair efficiencies
@@ -49,14 +49,9 @@ LEG_CONF = {"spark.ui.showConsoleProgress": "false",
 
 
 def leg(cores: int, n_docs: int) -> dict:
-    """One timed pipeline run at local[cores] in THIS process, plus
-    the task count of its stanza stage (untimed)."""
-    from ldtab_clj_spark.operators.extract import extract_thin_triples
-    from ldtab_clj_spark.operators.link import link_entities
-    from ldtab_clj_spark.operators.stanza import thin_to_thick_df
+    """One timed pipeline run at local[cores] in THIS process."""
     from ldtab_clj_spark.plans.pipeline import run_pipeline
     from ldtab_clj_spark.session import get_spark
-    from ldtab_clj_spark.synth import entity_dictionary, synth_docs
 
     spark = get_spark("scaling", master=f"local[{cores}]",
                       shuffle_partitions=PARTS, extra_conf=LEG_CONF)
@@ -65,13 +60,8 @@ def leg(cores: int, n_docs: int) -> dict:
     t0 = time.perf_counter()
     rows = run_pipeline(spark, n_docs=n_docs, seed=42).count()
     dt = time.perf_counter() - t0
-    # the stanza stage's partitions after AQE = its task count (this
-    # runs the stages below it, not the stanza itself)
-    stanza = thin_to_thick_df(link_entities(extract_thin_triples(
-        synth_docs(spark, n_docs, seed=42)), entity_dictionary(spark)))
     return {"cores": cores, "rows": int(rows), "sec": dt,
-            "rows_per_sec": rows / dt,
-            "stanza_tasks": stanza.rdd.getNumPartitions()}
+            "rows_per_sec": rows / dt}
 
 
 def run_leg(cores: int, n_docs: int) -> dict:

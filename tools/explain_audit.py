@@ -51,9 +51,8 @@ def op_counts(plan: str) -> dict[str, int]:
 
 def kg_python_stages(spark) -> list[str]:
     """kg stanza and export stages in isolation, executed on 200 docs:
-    each is ONE MapInPandas (the export expands and formats in one
-    pass: one Python worker per task), and no AQEShuffleRead coalesces
-    its pinned shuffle in the final plan."""
+    each is ONE MapInPandas (one Python worker per task), and no
+    AQEShuffleRead coalesces its pinned shuffle in the final plan."""
     from ldtab_clj_spark.operators import export, extract, link, stanza
     from ldtab_clj_spark.plans.pipeline import build_statements
     from ldtab_clj_spark.synth import entity_dictionary, synth_docs
@@ -70,13 +69,11 @@ def kg_python_stages(spark) -> list[str]:
         df.collect()  # AQE's final plan exists once the plan has run
         counts = op_counts(df._jdf.queryExecution().executedPlan()
                            .toString())
-        assert counts.get("MapInPandas") == 1, (name, counts)
-        assert "AQEShuffleRead" not in counts, (name, counts)
-        out.append(f"## kg_{name}_stage (isolated, executed)\n"
-                   "operators: " + ", ".join(
-                       f"{k}×{v}" for k, v in sorted(counts.items()))
-                   + f"\n- one MapInPandas; {df.rdd.getNumPartitions()}"
-                   " tasks on the pinned shuffle (no AQEShuffleRead)\n\n")
+        assert counts.get("MapInPandas") == 1 \
+            and "AQEShuffleRead" not in counts, (name, counts)
+        out.append(f"## kg_{name}_stage (isolated, executed)\noperators: "
+                   + ", ".join(f"{k}×{v}" for k, v in sorted(counts.items()))
+                   + f"\n- {df.rdd.getNumPartitions()} tasks\n\n")
     return out
 
 
