@@ -28,7 +28,7 @@ import sys
 import time
 from pathlib import Path
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
 from . import __version__
@@ -255,10 +255,11 @@ def cmd_diff(args) -> int:
     # (localCheckpoint would pin the whole table in executor memory)
     dst = Path(_statement_path(args.db, args.table))
     tmp, bak = Path(f"{dst}_tx{tid}"), Path(f"{dst}_old")
-    updated.write.mode("overwrite").parquet(str(tmp))
-    written = spark.read.parquet(str(tmp))
-    added = written.filter(F.col("assertion") == tid).count()
-    retracted = written.filter(F.col("retraction") == tid).count()
+    # the +added -retracted counts ride the write: no second scan
+    obs = Observation()
+    updated.observe(obs, *[F.count_if(F.col(c) == tid).alias(c)
+                           for c in ("assertion", "retraction")]) \
+        .write.mode("overwrite").parquet(str(tmp))
     shutil.rmtree(bak, ignore_errors=True)
     dst.rename(bak)
     try:
@@ -273,9 +274,10 @@ def cmd_diff(args) -> int:
     # files); rebuild it from the files actually on disk so
     # verify_lineage stays true and later appends don't inherit ghosts
     from .operators.materialize import rebuild_sidecar
-    rebuild_sidecar(spark, str(dst), run_id=f"diff-{tid}")
+    rebuild_sidecar(str(dst), run_id=f"diff-{tid}")
     shutil.rmtree(bak)
-    print(f"transaction {tid}: +{added} -{retracted}")
+    print(f"transaction {tid}: +{obs.get['assertion']} "
+          f"-{obs.get['retraction']}")
     return 0
 
 

@@ -273,19 +273,18 @@ def drop_superfluous_annotations(rows: list[dict]) -> list[dict]:
                 r.get("datatype")) not in annotated]
 
 
-def to_statement_row(t: dict, graph: str = "graph",
-                     assertion: int = 1) -> dict:
+def to_statement_row(t: dict) -> dict:
     """Final row projection (import.clj:19-31): JSON-stringify compound
-    subject/object/annotation, assertion defaults to 1 and retraction
-    to 0 (import.clj:24,202)."""
+    subject/object/annotation; assertion is 1, retraction 0 and the
+    graph "graph" (import.clj:24,202)."""
     def enc(v: Any) -> Any:
         return canonical_dumps(v) if isinstance(v, (dict, list)) else v
 
     ann = t.get("annotation")
     return {
-        "assertion": assertion,
+        "assertion": 1,
         "retraction": 0,
-        "graph": graph,
+        "graph": "graph",
         "subject": enc(t.get("subject")),
         "predicate": t.get("predicate"),
         "object": enc(t.get("object")),

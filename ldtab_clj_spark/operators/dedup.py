@@ -22,27 +22,27 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .parallel import python_partitions
+from .text import TEXT_COL
 
 
-def exact_dedup_groups(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def exact_dedup_groups(docs: DataFrame) -> DataFrame:
     """Exact duplicate groups by content hash: (h, keep_id, dupes)."""
-    return (docs.groupBy(F.md5(F.col(text_col)).alias("h"))
+    return (docs.groupBy(F.md5(F.col(TEXT_COL)).alias("h"))
             .agg(F.min("doc_id").alias("keep_id"),
                  F.count("*").alias("dupes")))
 
 
-def doc_words(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def doc_words(docs: DataFrame) -> DataFrame:
     """Distinct (doc_id, word) — the shingle relation used by the
     similarity family."""
     return (docs.select("doc_id",
-                        F.explode(F.split(F.trim(F.col(text_col)),
+                        F.explode(F.split(F.trim(F.col(TEXT_COL)),
                                           r"\s+")).alias("word"))
             .filter(F.col("word") != "")
             .distinct())
 
 
 def word_jaccard_pairs(docs: DataFrame, threshold: float = 0.8,
-                       text_col: str = "text",
                        max_rows: int | None = None) -> DataFrame:
     """Exact word-set Jaccard near-dup pairs (doc_a < doc_b, jaccard).
 
@@ -57,7 +57,7 @@ def word_jaccard_pairs(docs: DataFrame, threshold: float = 0.8,
     # no cache(): both consumers (sizes, the self-join) reuse the same
     # shuffle output, and a pinned copy would leak storage memory in
     # long-lived sessions
-    words = doc_words(docs, text_col)
+    words = doc_words(docs)
     sizes = words.groupBy("doc_id").agg(F.count("*").alias("n"))
     a = words.alias("a")
     b = words.alias("b")
@@ -78,11 +78,13 @@ def word_jaccard_pairs(docs: DataFrame, threshold: float = 0.8,
             .select("doc_a", "doc_b", "jaccard"))
 
 
-def repeated_segment_stats(docs: DataFrame, text_col: str = "text",
-                           seg_words: int = 10,
-                           min_docs: int = 3) -> DataFrame:
-    """C4-style boilerplate detection: fixed ``seg_words``-word
-    segments that recur across ≥ ``min_docs`` DISTINCT documents are
+SEG_WORDS = 10
+MIN_DOCS = 3
+
+
+def repeated_segment_stats(docs: DataFrame) -> DataFrame:
+    """C4-style boilerplate detection: fixed ``SEG_WORDS``-word
+    segments that recur across ≥ ``MIN_DOCS`` DISTINCT documents are
     boilerplate; returns (doc_id, n_segments, n_boilerplate) so a
     cleaner can drop or down-weight them.
 
@@ -91,18 +93,18 @@ def repeated_segment_stats(docs: DataFrame, text_col: str = "text",
     back — shuffle keys are hashes, never text; at 100 TB the
     boilerplate relation is small (only segments passing the
     threshold) and broadcasts."""
-    docs = python_partitions(docs.select("doc_id", text_col))
-    words = F.split(F.trim(F.col(text_col)), r"\s+")
-    nseg = F.ceil(F.size(words) / seg_words).cast("int")
+    docs = python_partitions(docs.select("doc_id", TEXT_COL))
+    words = F.split(F.trim(F.col(TEXT_COL)), r"\s+")
+    nseg = F.ceil(F.size(words) / SEG_WORDS).cast("int")
     seg = F.transform(
         F.sequence(F.lit(0), nseg - 1),
         lambda i: F.array_join(
-            F.slice(words, i * seg_words + 1, seg_words), " "))
+            F.slice(words, i * SEG_WORDS + 1, SEG_WORDS), " "))
     segs = (docs.select("doc_id", F.explode(seg).alias("segment"))
             .withColumn("h", F.md5("segment")).drop("segment"))
     boiler = (segs.groupBy("h")
               .agg(F.count_distinct("doc_id").alias("nd"))
-              .filter(F.col("nd") >= min_docs)
+              .filter(F.col("nd") >= MIN_DOCS)
               .select("h", F.lit(1).alias("is_b")))
     return (segs.join(boiler, "h", "left")
             .groupBy("doc_id")
@@ -148,8 +150,7 @@ BAND_SIZE = 2
 _WS = re.compile("[ \t\n\x0b\f\r]+")
 
 
-def minhash_signatures(docs: DataFrame, text_col: str = "text",
-                       n_hashes: int = N_MINHASH) -> DataFrame:
+def minhash_signatures(docs: DataFrame) -> DataFrame:
     """Per-doc MinHash signature over word-bigram shingles:
     sig_i = min(md5(i || ':' || shingle)) as lowercase hex.
 
@@ -165,13 +166,13 @@ def minhash_signatures(docs: DataFrame, text_col: str = "text",
 
     import pandas as pd
 
-    prefixes = [f"{i}:".encode() for i in range(n_hashes)]
-    sig_cols = [f"sig{i}" for i in range(n_hashes)]
+    prefixes = [f"{i}:".encode() for i in range(N_MINHASH)]
+    sig_cols = [f"sig{i}" for i in range(N_MINHASH)]
 
     def sig(batches):
         for pdf in batches:
             out_ids, out_sigs = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf[text_col]):
+            for doc_id, text in zip(pdf["doc_id"], pdf[TEXT_COL]):
                 if text is None:
                     continue
                 words = _WS.split(text.strip(" "))
@@ -179,7 +180,7 @@ def minhash_signatures(docs: DataFrame, text_col: str = "text",
                     continue
                 shingles = {f"{a} {b}".encode("utf-8")
                             for a, b in zip(words, words[1:])}
-                mins = [None] * n_hashes
+                mins = [None] * N_MINHASH
                 for s in shingles:
                     for i, p in enumerate(prefixes):
                         d = hashlib.md5(p + s).digest()
@@ -195,7 +196,7 @@ def minhash_signatures(docs: DataFrame, text_col: str = "text",
     doc_type = dict(docs.dtypes)["doc_id"]
     schema = f"doc_id {doc_type}, " + ", ".join(
         f"{c} string" for c in sig_cols)
-    return python_partitions(docs.select("doc_id", text_col)).mapInPandas(
+    return python_partitions(docs.select("doc_id", TEXT_COL)).mapInPandas(
         sig, schema)
 
 
@@ -203,8 +204,7 @@ _HEX = "0123456789abcdef"
 SIMHASH_NIBBLES = 16  # 64-bit signature as 16 hex nibbles
 
 
-def simhash_signatures(docs: DataFrame,
-                       text_col: str = "text") -> DataFrame:
+def simhash_signatures(docs: DataFrame) -> DataFrame:
     """64-bit SimHash over word-bigram shingles as a 16-hex-char string.
 
     Bit j of nibble p is the majority vote, over the doc's distinct
@@ -222,7 +222,7 @@ def simhash_signatures(docs: DataFrame,
     def sig(batches):
         for pdf in batches:
             out_ids, out_sigs = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf[text_col]):
+            for doc_id, text in zip(pdf["doc_id"], pdf[TEXT_COL]):
                 if text is None:
                     continue   # null text → no shingles
                 words = _WS.split(text.strip(" "))
@@ -246,7 +246,7 @@ def simhash_signatures(docs: DataFrame,
             yield pd.DataFrame({"doc_id": out_ids, "simhash": out_sigs})
 
     doc_type = dict(docs.dtypes)["doc_id"]
-    return python_partitions(docs.select("doc_id", text_col)).mapInPandas(
+    return python_partitions(docs.select("doc_id", TEXT_COL)).mapInPandas(
         sig, f"doc_id {doc_type}, simhash string")
 
 
@@ -273,46 +273,44 @@ def _band_pairs(bands_df: DataFrame) -> DataFrame:
     # satisfies the aggregate's distribution, so the dedup collapses
     # to one even HashAggregate. Width pinned for the same reason as
     # the SRP confirm (per-row cost; AQE would coalesce ~16-byte rows)
-    sc = bands_df.sparkSession.sparkContext
-    return (pairs.repartition(sc.defaultParallelism, "doc_a", "doc_b")
-            .dropDuplicates())
+    return python_partitions(pairs, "doc_a", "doc_b").dropDuplicates()
 
 
-def simhash_pairs(docs: DataFrame, text_col: str = "text",
-                  bands: int = 4) -> DataFrame:
+SIMHASH_BANDS = 4
+
+
+def simhash_pairs(docs: DataFrame) -> DataFrame:
     """Near-dup candidates: docs whose SimHash matches on any of
-    ``bands`` contiguous nibble quarters (≈ small hamming distance).
+    ``SIMHASH_BANDS`` contiguous nibble quarters (≈ small hamming
+    distance).
     Same banded-LSH shuffle shape as minhash_lsh_pairs: one signature
     pass, one explode — not one pass per band."""
-    sigs = simhash_signatures(docs, text_col)
-    width = SIMHASH_NIBBLES // bands
+    sigs = simhash_signatures(docs)
+    width = SIMHASH_NIBBLES // SIMHASH_BANDS
     band_arr = F.array(*[
         F.struct(F.lit(b).alias("band"),
                  F.substring("simhash", b * width + 1, width)
                  .alias("bucket"))
-        for b in range(bands)])
+        for b in range(SIMHASH_BANDS)])
     all_bands = (sigs.select("doc_id", F.explode(band_arr).alias("bb"))
                  .select("doc_id", "bb.band", "bb.bucket"))
     return _band_pairs(all_bands)
 
 
-def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text",
-                      n_hashes: int = N_MINHASH,
-                      band_size: int = BAND_SIZE) -> DataFrame:
+def minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
     """Candidate near-dup pairs: docs sharing any LSH band
-    (band = concat of ``band_size`` adjacent signature slots).
+    (band = concat of ``BAND_SIZE`` adjacent signature slots).
     Shuffles on band keys only — never all-pairs. The per-band bucket
     ids are built as one array-of-structs on the signature row and
     exploded in a single Generate (one signature pass, not one per
     band)."""
-    sigs = minhash_signatures(docs, text_col, n_hashes)
-    n_bands = n_hashes // band_size
+    sigs = minhash_signatures(docs)
     band_arr = F.array(*[
         F.struct(F.lit(bi).alias("band"),
                  F.md5(F.concat_ws("|", *[
-                     F.col(f"sig{bi * band_size + j}")
-                     for j in range(band_size)])).alias("bucket"))
-        for bi in range(n_bands)])
+                     F.col(f"sig{bi * BAND_SIZE + j}")
+                     for j in range(BAND_SIZE)])).alias("bucket"))
+        for bi in range(N_MINHASH // BAND_SIZE)])
     all_bands = (sigs.select("doc_id", F.explode(band_arr).alias("bb"))
                  .select("doc_id", "bb.band", "bb.bucket"))
     return _band_pairs(all_bands)

@@ -132,11 +132,11 @@ def _frames(rows, columns: list[str]) -> Iterator[pd.DataFrame]:
         yield pd.DataFrame(chunk, columns=columns)
 
 
-def expand_df(statements: DataFrame, typed_owl: bool = False) -> DataFrame:
+def expand_df(statements: DataFrame) -> DataFrame:
     """R10/R11 as a distributed operator: statement rows → thin
     triples (one-to-many, Arrow-batched), for the re-import path."""
     def thin_rows(batches: Iterator[pd.DataFrame]):
-        for r, triples in _expanded(batches, typed_owl):
+        for r, triples in _expanded(batches, False):
             # blank labels are row-content-hash-local (core.expand), so
             # each expanded row is a closed stanza component: its hash
             # becomes the re-import grouping key (doc_id slot)
@@ -174,11 +174,24 @@ def escape_literal(v: str) -> str:
             .replace("\t", "\\t"))
 
 
+# characters IRIREF excludes (N-Triples and Turtle grammars); the
+# writers emit each as a UCHAR, which both readers decode
+_IRI_ESCAPE = re.compile(r'[\x00-\x20<>"{}|^`\\]')
+
+
+def iri_ref(iri: str) -> str:
+    """``<iri>`` as an IRIREF: every excluded character (a space in an
+    ``<unlinked:Widget 9>`` miss, say) written as ``\\uXXXX``."""
+    if _IRI_ESCAPE.search(iri):
+        iri = _IRI_ESCAPE.sub(lambda m: f"\\u{ord(m.group()):04X}", iri)
+    return f"<{iri}>"
+
+
 def nt_node(v: str, blank: bool, prefixes: dict) -> str:
     """One N-Triples subject/predicate term."""
     if blank:
         return v.replace("_:", "_:b")
-    return f"<{curie_to_iri(v, prefixes)}>"
+    return iri_ref(curie_to_iri(v, prefixes))
 
 
 def nt_object(v: str, dt: str, blank: bool, prefixes: dict) -> str:
@@ -186,11 +199,11 @@ def nt_object(v: str, dt: str, blank: bool, prefixes: dict) -> str:
     if blank or dt == "_JSONMAP":
         return v.replace("_:", "_:b")
     if dt == "_IRI":
-        return f"<{curie_to_iri(v, prefixes)}>"
+        return iri_ref(curie_to_iri(v, prefixes))
     lex = escape_literal(v)
     if dt.startswith("@"):
         return f'"{lex}"{dt}'
-    return f'"{lex}"^^<{curie_to_iri(dt, prefixes)}>'
+    return f'"{lex}"^^{iri_ref(curie_to_iri(dt, prefixes))}'
 
 
 def to_ntriples_lines(statements: DataFrame, prefix_df: DataFrame,
@@ -204,7 +217,8 @@ def to_ntriples_lines(statements: DataFrame, prefix_df: DataFrame,
         s = nt_node(t["subject"], t["is_blank_s"], prefixes)
         o = nt_object(t["object"], t["datatype"], t["is_blank_o"],
                       prefixes)
-        return f"{s} <{curie_to_iri(t['predicate'], prefixes)}> {o} ."
+        p = iri_ref(curie_to_iri(t["predicate"], prefixes))
+        return f"{s} {p} {o} ."
 
     return _text_lines(statements, typed_owl, line)
 
@@ -235,7 +249,7 @@ def turtle_term(v: str, blank: bool, prefixes: dict,
     iri = curie_to_iri(v, prefixes)
     c = curify_with(iri, prefix_list)
     if c.startswith("<") or not _PN_OK.match(c):
-        return f"<{iri}>"
+        return iri_ref(iri)
     return c
 
 
@@ -261,8 +275,8 @@ def to_turtle_lines(statements: DataFrame, prefix_df: DataFrame,
     is a valid Turtle dataset and each part parses independently."""
     prefix_list = [(r["prefix"], r["base"]) for r in prefix_df.collect()]
     prefixes = dict(prefix_list)
-    header = (*[f"@prefix {p}: <{b}> ." for p, b in sorted(prefix_list)],
-              "")
+    header = (*[f"@prefix {p}: {iri_ref(b)} ."
+                for p, b in sorted(prefix_list)], "")
 
     def term(v: str, blank: bool) -> str:
         return turtle_term(v, blank, prefixes, prefix_list)

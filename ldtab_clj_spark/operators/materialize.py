@@ -2,18 +2,21 @@
 per-partition lineage/metrics.
 
 * global dedup = the Jena-Model set semantics of batch import
-  (rdf_model.clj:42-51 — a Model is a triple *set*);
-* superfluous-annotation dedup (import.clj:199-201) as a left-anti join
-  (SURVEY.md J4);
+  (rdf_model.clj:42-51 — a Model is a triple *set*) and the
+  superfluous-annotation rule (import.clj:199-201), both in
+  ``dedup_statements``' one ``collect_set`` group-by;
 * writes are hash-partitioned on subject (``repartition(subject)``) so
   per-entity reads prune, with the salt handled upstream by linking;
 * lineage: one metrics row per output partition checkpointed next to
   the data — any stage can verify/resume idempotently (north rule).
+  Lineage is local-disk only (plain paths and ``file:`` URIs): any
+  other scheme raises ``ValueError`` before a job runs.
 """
 
 from __future__ import annotations
 
 import json
+import re
 import time
 from pathlib import Path
 
@@ -47,27 +50,26 @@ def dedup_statements(statements: DataFrame) -> DataFrame:
             .select(*STATEMENT_COLS)
 
 
-def _is_local(path: str) -> bool:
-    return "://" not in path or path.startswith("file:")
+_SCHEME = re.compile(r"[A-Za-z][A-Za-z0-9+.-]*:")
 
 
-def _per_file_rows(spark: SparkSession, path: str) -> dict[str, int]:
-    """name → row count per output file.
+def _local(path: str) -> str:
+    """The table directory of a plain path or a ``file:`` URI. Any
+    other scheme (``s3://``, ``hdfs:``) raises: pathlib would silently
+    put that table's sidecar on local disk."""
+    if path.startswith("file:"):
+        return path[len("file:"):]
+    if _SCHEME.match(path):
+        raise ValueError(f"lineage needs a local table path, not {path!r}")
+    return path
 
-    Local paths: parquet footers via pyarrow — metadata only, no data
-    scan. Remote URIs (s3://, hdfs://): pathlib can't list them, so
-    fall back to one Spark job grouping on input_file_name() — a
-    footer-count-optimized scan of just-written data (on Iceberg this
-    is snapshot metadata and free)."""
-    if _is_local(path):
-        import pyarrow.parquet as pq
-        local = path[len("file:"):] if path.startswith("file:") else path
-        return {f.name: pq.ParquetFile(f).metadata.num_rows
-                for f in sorted(Path(local).glob("*.parquet"))}
-    rows = (spark.read.parquet(path)
-            .groupBy(F.input_file_name().alias("f"))
-            .count().collect())
-    return {r["f"].rsplit("/", 1)[-1]: r["count"] for r in rows}
+
+def _per_file_rows(path: str) -> dict[str, int]:
+    """name → row count per output file, from the parquet footers via
+    pyarrow — metadata only, no data scan."""
+    import pyarrow.parquet as pq
+    return {f.name: pq.ParquetFile(f).metadata.num_rows
+            for f in sorted(Path(_local(path)).glob("*.parquet"))}
 
 
 def write_statements(statements: DataFrame, path: str,
@@ -86,8 +88,9 @@ def write_statements(statements: DataFrame, path: str,
 
     Returns the lineage summary. On Iceberg this would be
     ``writeTo(...).append()`` with table/snapshot-level metrics; parquet
-    + a JSON-lines sidecar keeps the same contract in the sandbox.
+    + a JSON-lines sidecar keeps the same contract locally.
     """
+    _local(path)   # a remote path fails here, before the write
     df = statements.repartition(partitions, "subject") if partitions \
         else statements.repartition("subject")
     obs = Observation()
@@ -101,10 +104,9 @@ def write_statements(statements: DataFrame, path: str,
     pre = _list_files(path) if mode == "append" else set()
     df.write.mode(mode).parquet(path)
     metrics = obs.get
-    spark = statements.sparkSession
 
-    per_file = _per_file_rows(spark, path)
-    prior = _read_sidecar(spark, path) if mode == "append" else []
+    per_file = _per_file_rows(path)
+    prior = _read_sidecar(path) if mode == "append" else []
     in_sidecar = {r["file"] for r in prior}
     known = in_sidecar | pre
     ts = int(time.time())
@@ -147,9 +149,9 @@ def write_statements(statements: DataFrame, path: str,
         # new part files): concurrent imports never rewrite each
         # other's entries. A file that lands during the race window is
         # attributed once (first sidecar entry wins on read).
-        _append_sidecar(spark, path, new)
+        _append_sidecar(path, new)
     else:
-        _write_sidecar(spark, path, new)
+        _write_sidecar(path, new)
 
     return {"run_id": run_id, "partitions": len(new),
             "rows": int(sum(r["rows"] for r in prior + new)),
@@ -168,11 +170,9 @@ def _file_age_secs(path: str, name: str) -> float | None:
     arbitrarily long (the parquet committer RENAMES task files out of
     _temporary, which preserves mtime), so a slow concurrent append's
     freshly-committed files could look stale; rename updates st_ctime,
-    which therefore tracks the commit. Local paths only; remote paths
-    never reach adoption — _list_files returns empty."""
-    local = path[len("file:"):] if path.startswith("file:") else path
+    which therefore tracks the commit."""
     try:
-        st = (Path(local) / name).stat()
+        st = (Path(_local(path)) / name).stat()
         return time.time() - max(st.st_mtime, st.st_ctime)
     except OSError:
         return None  # vanished mid-look: callers drop the name from
@@ -180,36 +180,24 @@ def _file_age_secs(path: str, name: str) -> float | None:
 
 
 def _list_files(path: str) -> set[str]:
-    """Parquet part-file names currently in the table dir (local only;
-    remote appends fall back to sidecar membership)."""
-    if not _is_local(path):
-        return set()
-    local = path[len("file:"):] if path.startswith("file:") else path
-    p = Path(local)
+    """Parquet part-file names currently in the table dir."""
+    p = Path(_local(path))
     return {f.name for f in p.glob("*.parquet")} if p.exists() else set()
 
 
 def _sidecar_file(path: str) -> Path:
-    local = path[len("file:"):] if path.startswith("file:") else path
-    return Path(local + "_lineage") / "lineage.json"
+    return Path(_local(path) + "_lineage") / "lineage.json"
 
 
-def _read_sidecar(spark: SparkSession, path: str) -> list[dict]:
+def _read_sidecar(path: str) -> list[dict]:
     """Sidecar rows, deduped by file name (first entry wins): a file
     that lands during two concurrent runs' race window can be entered
     twice; one entry per physical file keeps verify_lineage exact."""
-    if _is_local(path):
-        f = _sidecar_file(path)
-        if not f.exists():
-            return []
-        rows = [json.loads(line) for line in
-                f.read_text().splitlines() if line.strip()]
-    else:
-        try:
-            rows = [r.asDict() for r in
-                    spark.read.json(path + "_lineage").collect()]
-        except Exception:
-            return []
+    f = _sidecar_file(path)
+    if not f.exists():
+        return []
+    rows = [json.loads(line) for line in
+            f.read_text().splitlines() if line.strip()]
     seen, out = set(), []
     for r in rows:
         if r["file"] not in seen:
@@ -218,42 +206,25 @@ def _read_sidecar(spark: SparkSession, path: str) -> list[dict]:
     return out
 
 
-def _sidecar_df(spark: SparkSession, rows: list[dict]):
-    return spark.createDataFrame(
-        [(r["file"], int(r["rows"]), r["run_id"], int(r["ts"]))
-         for r in rows],
-        "file string, rows long, run_id string, ts long").coalesce(1)
+def _write_sidecar(path: str, rows: list[dict]) -> None:
+    f = _sidecar_file(path)
+    f.parent.mkdir(parents=True, exist_ok=True)
+    f.write_text("".join(json.dumps(r) + "\n" for r in rows))
 
 
-def _write_sidecar(spark: SparkSession, path: str,
-                   rows: list[dict]) -> None:
-    if _is_local(path):
-        f = _sidecar_file(path)
-        f.parent.mkdir(parents=True, exist_ok=True)
-        f.write_text("".join(json.dumps(r) + "\n" for r in rows))
-        return
-    _sidecar_df(spark, rows).write.mode("overwrite").json(
-        path + "_lineage")
-
-
-def _append_sidecar(spark: SparkSession, path: str,
-                    rows: list[dict]) -> None:
-    """Append-only sidecar update: local = one O_APPEND write of this
-    run's JSON lines (atomic for these sizes), remote = new JSON part
-    files. Never rewrites other runs' entries."""
+def _append_sidecar(path: str, rows: list[dict]) -> None:
+    """Append-only sidecar update: one O_APPEND write of this run's
+    JSON lines (atomic for these sizes). Never rewrites other runs'
+    entries."""
     if not rows:
         return
-    if _is_local(path):
-        f = _sidecar_file(path)
-        f.parent.mkdir(parents=True, exist_ok=True)
-        with open(f, "a") as fh:
-            fh.write("".join(json.dumps(r) + "\n" for r in rows))
-        return
-    _sidecar_df(spark, rows).write.mode("append").json(path + "_lineage")
+    f = _sidecar_file(path)
+    f.parent.mkdir(parents=True, exist_ok=True)
+    with open(f, "a") as fh:
+        fh.write("".join(json.dumps(r) + "\n" for r in rows))
 
 
-def rebuild_sidecar(spark: SparkSession, path: str,
-                    run_id: str) -> list[dict]:
+def rebuild_sidecar(path: str, run_id: str) -> list[dict]:
     """Regenerate the lineage sidecar from the files actually on disk
     (parquet footers — no data scan). Used after operations that
     replace the table wholesale (e.g. a diff transaction's
@@ -261,8 +232,8 @@ def rebuild_sidecar(spark: SparkSession, path: str,
     longer exist and would fail verify_lineage on a healthy table."""
     ts = int(time.time())
     rows = [{"file": name, "rows": n, "run_id": run_id, "ts": ts}
-            for name, n in sorted(_per_file_rows(spark, path).items())]
-    _write_sidecar(spark, path, rows)
+            for name, n in sorted(_per_file_rows(path).items())]
+    _write_sidecar(path, rows)
     return rows
 
 
@@ -283,11 +254,6 @@ class LineageStatus:
     def __bool__(self) -> bool:
         return self.ok
 
-    def __eq__(self, other):          # `verify_lineage(...) == True`
-        if isinstance(other, bool):
-            return self.ok == other
-        return NotImplemented
-
     def __repr__(self) -> str:
         return (f"LineageStatus(ok={self.ok}, expected={self.expected},"
                 f" actual={self.actual},"
@@ -305,7 +271,7 @@ def verify_lineage(spark: SparkSession, path: str) -> LineageStatus:
     counts sidecar-less part files still on disk (crash orphans inside
     the adoption grace window, or a live concurrent run's in-flight
     files) so resume tooling sees the convergence gap directly."""
-    sidecar = _read_sidecar(spark, path)
+    sidecar = _read_sidecar(path)
     expected = sum(int(r["rows"]) for r in sidecar)
     actual = spark.read.parquet(path).count()
     in_sidecar = {r["file"] for r in sidecar}

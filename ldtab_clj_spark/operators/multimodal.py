@@ -1,11 +1,10 @@
 """Multimodal columns: image/audio/video as opaque ``binary`` columns
 with typed metadata (the training-data-pipeline side of the engine).
 
-The decode step is STUBBED (no image/audio libs in this container):
-``decode_media(..., real_decode=True)`` raises NotImplementedError at
-the exact seam where PIL/ffmpeg would plug in; with the default
-deterministic fake decoder, all the Spark-side plumbing — schema,
-partitioning, Arrow batch shapes, UDF signatures — is real and tested.
+The decode step is a deterministic stand-in (``_fake_decode``, a
+hash of the payload), so oracles and fixtures do not depend on image or
+audio libraries; all the Spark-side plumbing — schema, partitioning,
+Arrow batch shapes, UDF signatures — is real and tested.
 
 Scale notes: media payloads ride in their own table keyed by
 media_ref (never inside the docs table — a 100 TB scan of spans must
@@ -79,7 +78,7 @@ def synth_media(spark: SparkSession, docs: DataFrame) -> DataFrame:
     return refs.mapInPandas(gen, MEDIA)
 
 
-def _fake_decode(content: bytes, fmt: str) -> np.ndarray:
+def _fake_decode(content: bytes) -> np.ndarray:
     """Deterministic stand-in for a real decoder: 16-dim float feature
     from the payload bytes."""
     h = hashlib.sha256(content).digest()
@@ -87,40 +86,12 @@ def _fake_decode(content: bytes, fmt: str) -> np.ndarray:
             / 255.0)
 
 
-def _real_decode(content: bytes, fmt: str) -> np.ndarray:
-    """Real image decode, soft-enabled: PIL is try-imported at the
-    WORKER (it ships in many cluster images but not this container).
-    Images decode to a 4x4 grayscale thumbnail = the same 16-dim
-    float32 feature shape as the stub; audio/video formats still need
-    ffmpeg and keep the documented seam error."""
-    try:
-        from PIL import Image
-    except ImportError:
-        raise NotImplementedError(
-            "real media decoding requires PIL/ffmpeg — not "
-            "available in this container; wire the decoder in "
-            "here (operators/multimodal.py:decode_media)")
-    if fmt not in ("png", "jpeg"):
-        raise NotImplementedError(
-            f"real decode for format {fmt!r} requires ffmpeg — only "
-            "png/jpeg decode via PIL")
-    import io
-    img = Image.open(io.BytesIO(content)).convert("L").resize((4, 4))
-    return (np.asarray(img, dtype=np.float32) / 255.0).reshape(16)
-
-
-def decode_media(media: DataFrame, real_decode: bool = False) -> DataFrame:
+def decode_media(media: DataFrame) -> DataFrame:
     """Decode + feature-extract (resize/spectrogram/etc. live here in a
-    real deployment). Arrow-batched; one output row per media row.
-    ``real_decode=True`` uses PIL if importable on the worker
-    (_real_decode); the deterministic stub stays the default so
-    oracles and fixtures are environment-independent."""
+    real deployment). Arrow-batched; one output row per media row."""
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        decoder = _real_decode if real_decode else _fake_decode
         for pdf in batches:
-            feats = [
-                decoder(bytes(c), m["format"] if m else "")
-                for c, m in zip(pdf["content"], pdf["meta"])]
+            feats = [_fake_decode(bytes(c)) for c in pdf["content"]]
             yield pd.DataFrame({
                 "media_ref": pdf["media_ref"],
                 "format": [m["format"] if m else None for m in pdf["meta"]],

@@ -18,6 +18,8 @@ from pyspark.sql import functions as F
 
 from .parallel import python_partitions
 
+VEC_COL = "embedding"
+
 
 def _as_double(col):
     return F.transform(col, lambda x: x.cast("double"))
@@ -28,14 +30,14 @@ def _dot(a, b):
                        F.lit(0.0), lambda acc, x: acc + x)
 
 
-def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    v = _as_double(F.col(vec_col))
+def with_norm(df: DataFrame) -> DataFrame:
+    v = _as_double(F.col(VEC_COL))
     return df.withColumn("_v", v).withColumn(
         "_norm", F.sqrt(_dot(F.col("_v"), F.col("_v"))))
 
 
-def cosine_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
-                vec_col: str = "embedding") -> DataFrame:
+def cosine_topk(embeddings: DataFrame, queries: DataFrame,
+                k: int = 5) -> DataFrame:
     """For each query vector: top-k nearest corpus vectors by cosine.
 
     Returns (query_id, neighbor_id, rnk). Ties broken by neighbor id;
@@ -43,9 +45,9 @@ def cosine_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
     across engines at the boundary, ranks do).
     """
     corpus = with_norm(python_partitions(
-        embeddings.select("vec_id", vec_col)), vec_col).select(
+        embeddings.select("vec_id", VEC_COL))).select(
         F.col("vec_id").alias("neighbor_id"), "_v", "_norm")
-    qs = with_norm(queries, vec_col).select(
+    qs = with_norm(queries).select(
         F.col("vec_id").alias("query_id"),
         F.col("_v").alias("_q"), F.col("_norm").alias("_qnorm"))
     scored = (corpus.join(F.broadcast(qs),
@@ -60,7 +62,6 @@ def cosine_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
 
 
 def cosine_near_dup_pairs(embeddings: DataFrame, threshold: float = 0.95,
-                          vec_col: str = "embedding",
                           max_rows: int | None = None) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (vec_a < vec_b).
 
@@ -70,7 +71,7 @@ def cosine_near_dup_pairs(embeddings: DataFrame, threshold: float = 0.95,
     from .guards import guard_brute_force
     guard_brute_force(embeddings, "cosine_near_dup_pairs",
                       "srp_banded_near_dup", max_rows)
-    n = with_norm(embeddings, vec_col).select("vec_id", "_v", "_norm")
+    n = with_norm(embeddings).select("vec_id", "_v", "_norm")
     a = n.select(F.col("vec_id").alias("vec_a"),
                  F.col("_v").alias("_va"), F.col("_norm").alias("_na"))
     b = n.select(F.col("vec_id").alias("vec_b"),
@@ -113,8 +114,8 @@ def srp_plane_tables(n_tables: int = 8, k_planes: int = 3,
             for t in range(n_tables)]
 
 
-def _srp_bands_with_vecs_arrow(embeddings: DataFrame, plane_tables,
-                               vec_col: str) -> DataFrame:
+def _srp_bands_with_vecs_arrow(embeddings: DataFrame,
+                               plane_tables) -> DataFrame:
     """(vec_id, tbl, bucket, _raw float32, _norm) in one numpy pass:
     one numpy matmul per Arrow batch assigns the bucket bits, and
     the RAW vector and its norm ride along so the per-bucket confirm
@@ -136,7 +137,7 @@ def _srp_bands_with_vecs_arrow(embeddings: DataFrame, plane_tables,
         for pdf in batches:
             if not len(pdf):
                 continue
-            raw = pdf[vec_col].to_numpy()
+            raw = pdf[VEC_COL].to_numpy()
             v = np.stack(raw).astype(np.float64)           # n × dim
             bits = (v @ planes.T) >= 0                     # n × (L*k)
             buckets = bits.reshape(len(pdf), n_tables, k) @ weights
@@ -152,7 +153,7 @@ def _srp_bands_with_vecs_arrow(embeddings: DataFrame, plane_tables,
                 "_norm": np.repeat(nrm, n_tables),
             })
 
-    src = python_partitions(embeddings.select("vec_id", vec_col))
+    src = python_partitions(embeddings.select("vec_id", VEC_COL))
     return src.mapInPandas(
         bands, "vec_id long, tbl int, bucket long, "
                "_raw array<float>, _norm double")
@@ -247,7 +248,6 @@ def _pair_dot_seq_udf():
 def srp_banded_near_dup(embeddings: DataFrame,
                         plane_tables: list[list[list[float]]],
                         threshold: float = 0.95,
-                        vec_col: str = "embedding",
                         mode: str = "arrow") -> DataFrame:
     """Embedding near-dup pairs via multi-table SRP-LSH — the 100 TB
     path: candidates come only from same-(table, bucket) groups
@@ -268,8 +268,7 @@ def srp_banded_near_dup(embeddings: DataFrame,
     name it keep working)."""
     if mode != "arrow":
         raise ValueError(f"unknown srp mode {mode!r} (use 'arrow')")
-    bands_v = _srp_bands_with_vecs_arrow(embeddings, plane_tables,
-                                         vec_col)
+    bands_v = _srp_bands_with_vecs_arrow(embeddings, plane_tables)
     grouped = bands_v.withColumn("_grp",
                                  F.concat_ws(":", "tbl", "bucket"))
     part = (python_partitions(grouped, "tbl", "bucket")
@@ -280,14 +279,13 @@ def srp_banded_near_dup(embeddings: DataFrame,
             .distinct())
 
 
-def _minid_centroids(embeddings: DataFrame, n_centroids: int,
-                     vec_col: str) -> DataFrame:
+def _minid_centroids(embeddings: DataFrame,
+                     n_centroids: int) -> DataFrame:
     """The ``n_centroids`` corpus vectors with the lowest vec_ids
     (orderBy + limit — id-dense or sparse alike): a deterministic
     stand-in for a k-means pass that any cross-engine oracle can
     reproduce exactly."""
-    return (with_norm(embeddings.orderBy("vec_id").limit(n_centroids),
-                      vec_col)
+    return (with_norm(embeddings.orderBy("vec_id").limit(n_centroids))
             .select(F.col("vec_id").alias("cent_id"),
                     F.col("_v").alias("_c"),
                     F.col("_norm").alias("_cnorm")))
@@ -335,74 +333,24 @@ def _assign_to_centroids(corpus: DataFrame,
                 "cent_id int")
 
 
-def train_ivf_centroids(embeddings: DataFrame, n_centroids: int = 16,
-                        n_iter: int = 2,
-                        vec_col: str = "embedding") -> DataFrame:
-    """Seeded, fixed-iteration Lloyd's refinement of the minid
-    centroids (spherical k-means): assign → per-dimension mean →
-    re-norm, ``n_iter`` times. Fully distributed — the mean is a
-    posexplode + (cent_id, pos) hash aggregate, never a collect; the
-    centroid table itself stays n_centroids rows (broadcast-sized).
-
-    Deterministic across partitionings: per-dimension means are
-    rounded to 6 decimals each iteration, so float summation order
-    cannot flip a downstream assignment. Empty or degenerate (zero
-    mean) clusters keep their previous centroid. The minid stand-in
-    remains the oracle mode; this is the opt-in quality path
-    (``centroids="trained"``)."""
-    corpus = with_norm(embeddings, vec_col) \
-        .select("vec_id", "_v", "_norm").localCheckpoint()
-    cent = _minid_centroids(embeddings, n_centroids, vec_col)
-    for _ in range(n_iter):
-        assigned = _assign_to_centroids(corpus, cent)
-        means = (assigned.select("cent_id",
-                                 F.posexplode("_v").alias("pos", "x"))
-                 .groupBy("cent_id", "pos")
-                 .agg(F.round(F.avg("x"), 6).alias("m"))
-                 .groupBy("cent_id")
-                 .agg(F.transform(
-                     F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                     lambda s: s["m"]).alias("_cnew")))
-        norm = F.sqrt(_dot(F.col("_cnew"), F.col("_cnew")))
-        cent = (cent.join(means, "cent_id", "left")
-                .withColumn("_cnorm_new", norm)
-                .select("cent_id",
-                        F.when(F.col("_cnorm_new") > 0, F.col("_cnew"))
-                        .otherwise(F.col("_c")).alias("_c"),
-                        F.when(F.col("_cnorm_new") > 0,
-                               F.col("_cnorm_new"))
-                        .otherwise(F.col("_cnorm")).alias("_cnorm"))
-                .localCheckpoint())  # cut lineage per Lloyd's round
-    return cent
-
-
 def ivf_cosine_topk(embeddings: DataFrame, queries: DataFrame,
-                    n_centroids: int = 16, n_probe: int = 2, k: int = 5,
-                    vec_col: str = "embedding",
-                    centroids: str = "minid",
-                    n_iter: int = 2) -> DataFrame:
+                    n_centroids: int = 16, n_probe: int = 2,
+                    k: int = 5) -> DataFrame:
     """IVF-style ANN: assign every corpus vector to its nearest
     centroid (the inverted-file bucket), search only the query's
     ``n_probe`` nearest buckets — the other classic bucketed ANN shape
     next to SRP-LSH (shuffle on centroid ids, never all-pairs).
 
-    ``centroids="minid"`` (default) uses the deterministic lowest-id
-    stand-in — the cross-engine oracle mode; ``centroids="trained"``
-    runs a seeded fixed-iteration Lloyd's refinement first
-    (``train_ivf_centroids``) — the opt-in quality mode. At scale,
-    any externally-trained centroid table plugs in the same way (a
-    small broadcast relation). Returns (query_id, neighbor_id, rnk);
-    recall < 1 by design, ``cosine_topk`` is the exact verifier."""
-    if centroids == "trained":
-        cent = train_ivf_centroids(embeddings, n_centroids, n_iter,
-                                   vec_col)
-    else:
-        cent = _minid_centroids(embeddings, n_centroids, vec_col)
+    The centroids are the deterministic lowest-id stand-in
+    (``_minid_centroids``), which the cross-engine oracle reproduces.
+    Returns (query_id, neighbor_id, rnk); recall < 1 by design,
+    ``cosine_topk`` is the exact verifier."""
+    cent = _minid_centroids(embeddings, n_centroids)
     corpus = with_norm(python_partitions(
-        embeddings.select("vec_id", vec_col)), vec_col) \
+        embeddings.select("vec_id", VEC_COL))) \
         .select("vec_id", "_v", "_norm")
     assigned = _assign_to_centroids(corpus, cent)
-    probes = (with_norm(queries, vec_col)
+    probes = (with_norm(queries)
               .select(F.col("vec_id").alias("query_id"),
                       F.col("_v").alias("_q"),
                       F.col("_norm").alias("_qnorm"))
@@ -430,10 +378,9 @@ def ivf_cosine_topk(embeddings: DataFrame, queries: DataFrame,
                     "rnk"))
 
 
-def srp_bucket(df: DataFrame, planes: list[list[float]],
-               vec_col: str = "embedding") -> DataFrame:
+def srp_bucket(df: DataFrame, planes: list[list[float]]) -> DataFrame:
     """Sign-random-projection bucket id: one bit per hyperplane."""
-    v = _as_double(F.col(vec_col))
+    v = _as_double(F.col(VEC_COL))
     bits = []
     for p in planes:
         arr = F.array(*[F.lit(float(x)) for x in p])
@@ -443,16 +390,15 @@ def srp_bucket(df: DataFrame, planes: list[list[float]],
 
 
 def lsh_cosine_topk(embeddings: DataFrame, queries: DataFrame,
-                    planes: list[list[float]], k: int = 5,
-                    vec_col: str = "embedding") -> DataFrame:
+                    planes: list[list[float]], k: int = 5) -> DataFrame:
     """Bucketed ANN: rank only candidates sharing the query's SRP
     bucket. Recall < 1 by design; at scale, multiple plane-sets (OR)
     trade shuffle for recall."""
     corpus = srp_bucket(with_norm(python_partitions(
-        embeddings.select("vec_id", vec_col)), vec_col), planes, vec_col) \
+        embeddings.select("vec_id", VEC_COL))), planes) \
         .select(F.col("vec_id").alias("neighbor_id"), "_v", "_norm",
                 "bucket")
-    qs = srp_bucket(with_norm(queries, vec_col), planes, vec_col).select(
+    qs = srp_bucket(with_norm(queries), planes).select(
         F.col("vec_id").alias("query_id"),
         F.col("_v").alias("_q"), F.col("_norm").alias("_qnorm"), "bucket")
     scored = (corpus.join(F.broadcast(qs), "bucket")

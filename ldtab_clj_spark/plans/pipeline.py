@@ -3,9 +3,9 @@
 docs → extract (mapInPandas) → link (broadcast + salted join) →
 thin→thick (mapInPandas over doc runs) → dedup → materialize.
 
-Each stage is DataFrame→DataFrame; `run_pipeline` optionally
-checkpoints stage boundaries to parquet with lineage sidecars so any
-stage resumes idempotently (BASELINE.json north_rule).
+Each stage is DataFrame→DataFrame and `build_statements` is one lazy
+plan; writing the result with its lineage sidecar is the caller's step
+(`operators.materialize.write_statements`, as the CLI's import does).
 """
 
 from __future__ import annotations
@@ -14,22 +14,21 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.extract import extract_thin_triples
 from ..operators.link import link_entities
-from ..operators.materialize import dedup_statements, write_statements
+from ..operators.materialize import dedup_statements
 from ..operators.stanza import thin_to_thick_df
 from ..synth import entity_dictionary, synth_docs
 
 
 def build_statements(docs: DataFrame, entity_dict: DataFrame,
-                     include_media: bool = False,
-                     media: DataFrame | None = None) -> DataFrame:
+                     include_media: bool = False) -> DataFrame:
     """The lazy end-to-end plan (no action triggered).
 
     ``include_media=True`` adds the multimodal stage: decode/feature
-    the media table (``media``, or the deterministic synth stand-in
-    derived from the docs' media spans) and union the resulting
-    ex:featureHash statements into the graph before dedup — media
-    nodes become first-class KG subjects. The media table shuffles on
-    media_ref only (blobs never ride through the statement joins)."""
+    the deterministic synth media table derived from the docs' media
+    spans and union the resulting ex:featureHash statements into the
+    graph before dedup — media nodes become first-class KG subjects.
+    The media table shuffles on media_ref only (blobs never ride
+    through the statement joins)."""
     thin = extract_thin_triples(docs)
     linked = link_entities(thin, entity_dict)
     thick = thin_to_thick_df(linked)
@@ -37,8 +36,7 @@ def build_statements(docs: DataFrame, entity_dict: DataFrame,
         from ..operators.multimodal import (decode_media,
                                             media_feature_statements,
                                             synth_media)
-        if media is None:
-            media = synth_media(docs.sparkSession, docs)
+        media = synth_media(docs.sparkSession, docs)
         thick = thick.unionByName(
             media_feature_statements(decode_media(media)))
     return dedup_statements(thick)
@@ -55,16 +53,8 @@ def reimport(statements: DataFrame) -> DataFrame:
 
 
 def run_pipeline(spark: SparkSession, n_docs: int = 1000, seed: int = 42,
-                 out_path: str | None = None,
-                 partitions: int | None = None,
                  include_media: bool = False) -> DataFrame:
-    """Synthesize docs, run the full pipeline; write+lineage if
-    ``out_path`` given. ``partitions`` sets the synthetic corpus's
-    partitions and the written table's files, not the stage widths."""
-    docs = synth_docs(spark, n_docs, seed=seed, partitions=partitions)
-    statements = build_statements(docs, entity_dictionary(spark),
-                                  include_media=include_media)
-    if out_path:
-        write_statements(statements, out_path, partitions=partitions)
-        return spark.read.parquet(out_path)
-    return statements
+    """Synthesize docs and return the lazy statement plan over them."""
+    docs = synth_docs(spark, n_docs, seed=seed)
+    return build_statements(docs, entity_dictionary(spark),
+                            include_media=include_media)

@@ -23,9 +23,11 @@ from pyspark.sql import DataFrame, SparkSession
 from ..core.canonical import curify_with
 from ..schemas import THIN
 
-_IRI = r"<([^>]*)>"
+# IRIREF body: no control, space or <>"{}|^` character; a backslash
+# may only start a UCHAR (_iri_unescape rejects any other)
+_IRI = r'<([^\x00-\x20<>"{}|^`]*)>'
 _BLANK = r"(_:[^\s]+)"
-_LIT = r'"((?:[^"\\]|\\.)*)"(?:@([A-Za-z0-9-]+)|\^\^<([^>]*)>)?'
+_LIT = rf'"((?:[^"\\]|\\.)*)"(?:@([A-Za-z0-9-]+)|\^\^{_IRI})?'
 NT_LINE = re.compile(
     rf"^\s*(?:{_IRI}|{_BLANK})\s+{_IRI}\s+"
     rf"(?:{_IRI}|{_BLANK}|{_LIT})\s*\.\s*(?:#.*)?$")
@@ -33,6 +35,16 @@ NT_LINE = re.compile(
 _UNESCAPE = {"\\n": "\n", "\\r": "\r", "\\t": "\t",
              "\\b": "\b", "\\f": "\f", "\\'": "'",
              '\\"': '"', "\\\\": "\\"}
+
+
+def _uchar(tok: str) -> str:
+    """``\\uXXXX`` / ``\\UXXXXXXXX`` → its character. A codepoint
+    outside Unicode or in the surrogate block is not encodable as
+    UTF-8 and raises ValueError (parse_nt_line skips the line)."""
+    cp = int(tok[2:], 16)
+    if cp > 0x10FFFF or 0xD800 <= cp <= 0xDFFF:
+        raise ValueError(f"invalid UCHAR codepoint U+{cp:X}")
+    return chr(cp)
 
 
 def _unescape(s: str) -> str:
@@ -52,38 +64,30 @@ def _unescape(s: str) -> str:
             return _UNESCAPE[tok]
         if tok == "\\":
             raise ValueError(f"invalid string escape in {s[:80]!r}")
-        cp = int(tok[2:], 16)
-        if cp > 0x10FFFF or 0xD800 <= cp <= 0xDFFF:
-            # lone surrogates / out-of-range: not encodable as UTF-8 —
-            # reject the line (ValueError → parse_nt_line skips it)
-            raise ValueError(f"invalid UCHAR codepoint U+{cp:X}")
-        return chr(cp)
+        return _uchar(tok)
     return re.sub(r'\\u[0-9A-Fa-f]{4}|\\U[0-9A-Fa-f]{8}|\\[nrtbf\'"\\]'
                   r'|\\', sub, s)
 
 
-_NT_UCHAR = re.compile(r"\\u[0-9A-Fa-f]{4}|\\U[0-9A-Fa-f]{8}")
+_IRI_ESCAPE = re.compile(r"\\u[0-9A-Fa-f]{4}|\\U[0-9A-Fa-f]{8}|\\")
 
 
 def _iri_unescape(iri: str) -> str:
     """UCHAR (\\uXXXX / \\UXXXXXXXX) unescaping inside IRIREF — the
-    only escapes the N-Triples grammar allows in IRIs (canonical NT
-    tooling escapes all non-ASCII IRI characters this way).
-
-    Raises ValueError for codepoints outside Unicode or in the
-    surrogate block (a lone surrogate would fail UTF-8 encoding much
-    later, at the Arrow/parquet boundary); parse_nt_line turns that
-    into the standard skip-the-line behavior."""
+    only escapes the N-Triples and Turtle grammars allow in IRIs, so
+    both readers use this one copy. Any other backslash (``\\n``,
+    ``\\"``) raises ValueError, as does a codepoint ``_uchar``
+    rejects: parse_nt_line skips the line, the Turtle reader raises
+    TurtleError."""
     if "\\" not in iri:        # fast path: virtually all lines
         return iri
 
     def sub(m):
-        cp = int(m.group(0)[2:], 16)
-        if cp > 0x10FFFF or 0xD800 <= cp <= 0xDFFF:
-            raise ValueError(f"invalid UCHAR codepoint U+{cp:X}")
-        return chr(cp)
+        if m.group(0) == "\\":
+            raise ValueError(f"invalid escape in IRI <{iri}>")
+        return _uchar(m.group(0))
 
-    return _NT_UCHAR.sub(sub, iri)
+    return _IRI_ESCAPE.sub(sub, iri)
 
 
 def parse_nt_line(line: str, prefixes: list[tuple[str, str]]):

@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..core.canonical import curify_with
 from ..schemas import THIN
-from .ntriples import _unescape
+from .ntriples import _iri_unescape, _unescape
 
 # PN_CHARS_BASE / PN_CHARS_U / PN_CHARS character classes from the
 # Turtle 1.1 grammar (§6.5) — prefixed names and blank labels accept
@@ -115,28 +115,6 @@ def resolve_against(base: str, iri: str) -> str:
     return out
 
 
-def _iri_unescape(iri: str) -> str:
-    """UCHAR (``\\uXXXX`` / ``\\UXXXXXXXX``) unescaping inside IRIREF —
-    the only escapes Turtle allows in IRIs; anything else errors.
-
-    Mirrors the N-Triples twin's codepoint validation: a lone
-    surrogate (``\\uD800``) or out-of-range ``\\U`` would otherwise
-    surface much later as an opaque UnicodeEncodeError inside an
-    executor task at the Arrow/parquet boundary — both readers fail
-    fast with their own error type instead."""
-    def sub(m):
-        cp = int(m.group(0)[2:], 16)
-        if cp > 0x10FFFF or 0xD800 <= cp <= 0xDFFF:
-            raise TurtleError(
-                f"invalid UCHAR codepoint U+{cp:X} in IRI <{iri}>")
-        return chr(cp)
-
-    out = re.sub(r"\\u[0-9A-Fa-f]{4}|\\U[0-9A-Fa-f]{8}", sub, iri)
-    if "\\" in out:
-        raise TurtleError(f"invalid escape in IRI <{iri}>")
-    return out
-
-
 def _tokens(text: str):
     pos, n = 0, len(text)
     while pos < n:
@@ -199,7 +177,10 @@ class _Parser:
         document URI to fall back to in a distributed scan; silently
         minting relative subjects would corrupt the statement table) —
         same contract as the RDF/XML reader."""
-        iri = _iri_unescape(iri)
+        try:
+            iri = _iri_unescape(iri)
+        except ValueError as ex:
+            raise TurtleError(str(ex)) from None
         if not self.base and not has_scheme(iri):
             raise TurtleError(
                 f"relative IRI <{iri}> with no @base in scope")

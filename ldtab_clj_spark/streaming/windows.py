@@ -12,11 +12,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+WATERMARK = "2 hours"   # late events beyond this drop from a stream
+SESSION_GAP = "30 minutes"
 
-def hourly_event_counts(events_stream: DataFrame,
-                        watermark: str = "2 hours") -> DataFrame:
+
+def hourly_event_counts(events_stream: DataFrame) -> DataFrame:
     """Tumbling 1-hour windows per event_type; windows finalize once
-    the watermark passes (late events beyond ``watermark`` drop).
+    the watermark passes (late events beyond ``WATERMARK`` drop).
 
     Works on batch DataFrames too (watermark is a no-op there), so the
     same code path is testable batch-vs-stream — and the batch form is
@@ -27,7 +29,7 @@ def hourly_event_counts(events_stream: DataFrame,
     # as TIMESTAMP_NTZ so it equals the oracle's date_trunc('hour', ts)
     df = events_stream.withColumn("ts", F.col("ts").cast("timestamp"))
     if df.isStreaming:
-        df = df.withWatermark("ts", watermark)
+        df = df.withWatermark("ts", WATERMARK)
     return (df
             .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
             .agg(F.count("*").alias("n"),
@@ -37,23 +39,22 @@ def hourly_event_counts(events_stream: DataFrame,
                     "event_type", "n", "sum_value"))
 
 
-def session_event_counts(events_stream: DataFrame,
-                         gap: str = "30 minutes",
-                         watermark: str = "2 hours") -> DataFrame:
+def session_event_counts(events_stream: DataFrame) -> DataFrame:
     """NATIVE session windows per user (F.session_window): a session
-    closes after ``gap`` of silence; with a stream input the state
+    closes after ``SESSION_GAP`` of silence; with a stream input the state
     finalizes once the watermark passes the session end. Batch
     DataFrames take the same path (watermark no-op), so streamed ==
     batch is directly testable — and the batch form is the
     ``events_session_window`` driver query's shape."""
     df = events_stream.withColumn("ts", F.col("ts").cast("timestamp"))
     if df.isStreaming:
-        df = df.withWatermark("ts", watermark)
+        df = df.withWatermark("ts", WATERMARK)
     # session math runs on TIMESTAMP (watermark requirement); outputs
     # return to TIMESTAMP_NTZ — the events table's storage type — so
     # batch, stream, driver query and the DuckDB oracle all agree on
     # naive wall-clock values
-    return (df.groupBy("user_id", F.session_window("ts", gap).alias("w"))
+    w = F.session_window("ts", SESSION_GAP).alias("w")
+    return (df.groupBy("user_id", w)
             .agg(F.count("*").alias("n_events"))
             .select("user_id",
                     F.col("w.start").cast("timestamp_ntz")

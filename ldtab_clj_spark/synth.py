@@ -43,8 +43,8 @@ def make_doc_spans(seed: int, doc_id: int) -> list[dict]:
     init dominated synthesis cost at bench scale)."""
     rng = random.Random((seed << 40) ^ (int(doc_id) * 2654435761))
 
-    def _zipf_idx(r, n=N_ENTITIES):
-        return int((n + 1) ** r.random()) - 1
+    def _zipf_idx(r):
+        return int((N_ENTITIES + 1) ** r.random()) - 1
 
     n_spans = rng.randrange(2, 9)
     spans, offset = [], 0

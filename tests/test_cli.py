@@ -40,7 +40,10 @@ def test_cli_workflow(spark, tmp_path, capsys):
     from ldtab_clj_spark.operators.export import read_tsv, write_tsv
     dump = read_tsv(spark, out_tsv)
     write_tsv(dump.limit(n - 5), str(tmp_path / "new.tsv"))
+    capsys.readouterr()
     assert main(["diff", db, str(tmp_path / "new.tsv")]) == 0
+    # the printed counts come from the write itself
+    assert capsys.readouterr().out.strip().endswith("+0 -5")
     after = spark.read.parquet(f"{db}/statement")
     assert after.filter("retraction > 0").count() == 5
     # the swap rebuilt the lineage sidecar from the new files: a
@@ -50,7 +53,7 @@ def test_cli_workflow(spark, tmp_path, capsys):
                                                        verify_lineage)
     assert verify_lineage(spark, f"{db}/statement")
     assert all(r["run_id"].startswith("diff-")
-               for r in _read_sidecar(spark, f"{db}/statement"))
+               for r in _read_sidecar(f"{db}/statement"))
     assert main(["import", db, docs_dir]) == 0
     assert verify_lineage(spark, f"{db}/statement")
     # re-import of the NT dump reproduces the statement set (P/R oracle)

@@ -162,3 +162,40 @@ def test_fused_export_matches_driver_rendering(spark):
     assert got == want
     assert any("<unlinked:" in line for line in got)
     assert any('\\"q\\"\\nn\\rr\\tt' in line for line in got)
+
+
+@pytest.mark.parametrize("fmt", ["nt", "ttl"])
+def test_unlinked_iris_roundtrip_through_both_writers(spark, tmp_path,
+                                                      fmt):
+    """A user-dictionary miss such as ``<unlinked:Widget 9>`` carries
+    a space, which IRIREF excludes: both writers emit it as
+    ``\\u0020`` and their readers take the statement set back whole."""
+    import glob
+
+    from ldtab_clj_spark.operators.export import write_ntriples, write_turtle
+    from ldtab_clj_spark.schemas import STATEMENT
+    from ldtab_clj_spark.sources.ntriples import import_ntriples
+    from ldtab_clj_spark.sources.turtle import import_turtle
+    rows = [(1, 0, "graph", "<unlinked:Widget 9>", "ex:powers",
+             "<unlinked:W-77>", "_IRI", None),
+            (1, 0, "graph", "ex:E1", "ex:contains", "<unlinked:Widget 8>",
+             "_IRI", None),
+            (1, 0, "graph", "<unlinked:Widget 9>", "rdfs:label", "w 9",
+             "xsd:string", None)]
+    df = spark.createDataFrame(rows, STATEMENT)
+    prefix = spark.createDataFrame(PREFIXES, "prefix string, base string")
+    out = str(tmp_path / f"out.{fmt}")
+    if fmt == "nt":
+        write_ntriples(df, prefix, out)
+        skipped = spark.sparkContext.accumulator(0)
+        back = import_ntriples(spark, out, prefix, skipped_acc=skipped)
+    else:
+        write_turtle(df, prefix, out)
+        back = import_turtle(spark, out, prefix)
+    assert key_set(back) == key_set(df)
+    if fmt == "nt":
+        assert skipped.value == 0
+    text = "".join(open(f).read() for f in glob.glob(out + "/part-*"))
+    assert "<unlinked:Widget\\u00209>" in text
+    assert "<unlinked:W-77>" in text
+    assert "Widget 9" not in text

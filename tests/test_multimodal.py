@@ -1,4 +1,5 @@
-"""Multimodal binary-column plumbing: schema, batch shapes, stub seam."""
+"""Multimodal binary-column plumbing: schema, batch shapes, the
+deterministic decoder."""
 
 import pytest
 
@@ -32,44 +33,6 @@ def test_decode_features_deterministic(media):
     assert f1 == f2
     assert all(len(v) == 16 for v in f1.values())
     assert all(0.0 <= x <= 1.0 for v in f1.values() for x in v)
-
-
-def _pil_available():
-    try:
-        import PIL  # noqa: F401
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(_pil_available(),
-                    reason="PIL present: real decode path active")
-def test_real_decode_without_pil_raises_documented_error(media):
-    """No PIL on the worker → the documented seam error (never a
-    silent fallback to the stub)."""
-    with pytest.raises(Exception) as exc:
-        decode_media(media, real_decode=True).collect()
-    assert "NotImplementedError" in str(exc.value) or \
-        isinstance(exc.value, NotImplementedError)
-    assert "PIL" in str(exc.value)
-
-
-@pytest.mark.skipif(not _pil_available(), reason="PIL not installed")
-def test_real_decode_with_pil_decodes_png(spark):
-    """Soft-enabled real path: with PIL importable, real_decode=True
-    decodes actual PNG bytes into the same 16-dim feature shape."""
-    import io
-
-    from PIL import Image
-    buf = io.BytesIO()
-    Image.new("RGB", (8, 8), (200, 10, 10)).save(buf, format="PNG")
-    rows = [("m/1", buf.getvalue(),
-             {"format": "png", "width": 8, "height": 8, "n_frames": 1})]
-    from ldtab_clj_spark.operators.multimodal import MEDIA
-    media = spark.createDataFrame(rows, MEDIA)
-    feats = decode_media(media, real_decode=True).collect()
-    assert len(feats) == 1 and len(feats[0].feature) == 16
-    assert all(0.0 <= x <= 1.0 for x in feats[0].feature)
 
 
 def test_frame_sampling_one_to_many(media):

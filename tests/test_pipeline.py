@@ -204,9 +204,9 @@ def test_sidecar_append_survives_interleaved_runs(spark, tmp_path):
     out = str(tmp_path / "t")
     r1 = [{"file": "part-a.parquet", "rows": 5, "run_id": "r1", "ts": 1}]
     r2 = [{"file": "part-b.parquet", "rows": 7, "run_id": "r2", "ts": 1}]
-    _append_sidecar(spark, out, r1)
-    _append_sidecar(spark, out, r2)
-    got = _read_sidecar(spark, out)
+    _append_sidecar(out, r1)
+    _append_sidecar(out, r2)
+    got = _read_sidecar(out)
     assert {(r["file"], r["rows"], r["run_id"]) for r in got} \
         == {("part-a.parquet", 5, "r1"), ("part-b.parquet", 7, "r2")}
 
@@ -283,12 +283,50 @@ def test_sidecar_double_entry_dedup_keeps_verify_true(spark, tmp_path,
                                                        write_statements)
     out = str(tmp_path / "statement")
     write_statements(statements, out, partitions=4, run_id="r1")
-    rows = _read_sidecar(spark, out)
+    rows = _read_sidecar(out)
     # simulate the race: a second run re-enters every existing file
-    _append_sidecar(spark, out, [dict(r, run_id="r2") for r in rows])
+    _append_sidecar(out, [dict(r, run_id="r2") for r in rows])
     raw = [json.loads(line) for line in
            (Path(out + "_lineage") / "lineage.json").read_text()
            .splitlines()]
     assert len(raw) == 2 * len(rows)            # double-entered on disk
-    assert len(_read_sidecar(spark, out)) == len(rows)  # deduped on read
+    assert len(_read_sidecar(out)) == len(rows)  # deduped on read
     assert verify_lineage(spark, out)
+
+
+def test_lineage_accepts_file_uri(spark, tmp_path, statements):
+    """A ``file:`` URI and the plain path name the same table and the
+    same sidecar."""
+    from ldtab_clj_spark.operators.materialize import (verify_lineage,
+                                                       write_statements)
+    out = tmp_path / "statement"
+    info = write_statements(statements, f"file:{out}", partitions=2)
+    assert (tmp_path / "statement_lineage" / "lineage.json").exists()
+    assert info["rows"] == info["batch_rows"] > 0
+    assert verify_lineage(spark, f"file:{out}")
+    assert verify_lineage(spark, str(out))
+
+
+def test_lineage_rejects_remote_uri_before_any_job(spark, statements):
+    """Lineage lives on local disk: an ``s3://`` table path raises a
+    ValueError naming it before any Spark job runs (pathlib would
+    otherwise write the sidecar under a local ``s3:`` directory)."""
+    from pathlib import Path
+
+    from ldtab_clj_spark.operators.materialize import (rebuild_sidecar,
+                                                       verify_lineage,
+                                                       write_statements)
+    path = "s3://bucket/db/statement"
+    sc = spark.sparkContext
+    sc.setJobGroup("remote-lineage", "remote-lineage")
+    try:
+        for call in (lambda: write_statements(statements, path),
+                     lambda: verify_lineage(spark, path),
+                     lambda: rebuild_sidecar(path, "r1")):
+            with pytest.raises(ValueError, match="s3://bucket/db"):
+                call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("remote-lineage")) \
+        == []
+    assert not Path("s3:").exists()

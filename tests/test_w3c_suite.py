@@ -270,7 +270,17 @@ NT_NEGATIVE = [
      "<http://e/\\uD800> <http://e/p> <http://e/o> ."),
     ("nt-syntax-bad-esc-01",
      '<http://e/s> <http://e/p> "\\z" .'),
+    ("nt-syntax-bad-iri-space",
+     "<http://example/ space> <http://example/p> <http://example/o> ."),
+    ("nt-syntax-bad-iri-echar-n",
+     "<http://example/\\n> <http://example/p> <http://example/o> ."),
+    ("nt-syntax-bad-iri-echar-quote",
+     '<http://example/\\"> <http://example/p> <http://example/o> .'),
+    ("nt-syntax-bad-datatype-space",
+     '<http://e/s> <http://e/p> "x"^^<http://e/d t> .'),
 ]
+NT_BAD_IRI = [c for c in NT_NEGATIVE if c[0].startswith(
+    ("nt-syntax-bad-iri-", "nt-syntax-bad-datatype-"))]
 
 
 def _rx(body, attrs=""):
@@ -400,6 +410,18 @@ def test_w3c_nt_positive(name, line, want):
                          ids=[c[0] for c in NT_NEGATIVE])
 def test_w3c_nt_negative_skips(name, line):
     assert parse_nt_line(line, []) is None
+
+
+def test_nt_bad_iri_lines_are_counted(spark):
+    """The batch parse skips each malformed IRIREF line and counts it
+    in ``skipped_acc``."""
+    from ldtab_clj_spark.sources.ntriples import parse_nt_lines
+    good = "<http://e/s> <http://e/p> <http://e/o> ."
+    lines = spark.createDataFrame(
+        [(line,) for _, line in NT_BAD_IRI] + [(good,)], "value string")
+    skipped = spark.sparkContext.accumulator(0)
+    assert parse_nt_lines(lines, [], skipped).count() == 1
+    assert skipped.value == len(NT_BAD_IRI) == 4
 
 
 def test_w3c_matrix_summary(capsys):

@@ -116,8 +116,7 @@ def main() -> None:
                                                       with_norm)
     emb = spark.read.parquet(f"{sf}/embeddings.parquet")
     corpus = with_norm(emb).select("vec_id", "_v", "_norm")
-    assigned = _assign_to_centroids(corpus, _minid_centroids(emb, 16,
-                                                             "embedding"))
+    assigned = _assign_to_centroids(corpus, _minid_centroids(emb, 16))
     counts = op_counts(assigned._jdf.queryExecution().executedPlan()
                        .toString())
     out.append("## ivf_assignment_stage (isolated)\n")
