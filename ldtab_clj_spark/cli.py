@@ -52,8 +52,11 @@ def cmd_init(args) -> int:
     if (db / "ldtab").exists():
         print(f"error: {args.db} already initialized", file=sys.stderr)
         return 1
-    spark.createDataFrame([], STATEMENT).write.parquet(
-        _statement_path(args.db, args.table))
+    from .operators.materialize import rebuild_sidecar
+    statement = _statement_path(args.db, args.table)
+    spark.createDataFrame([], STATEMENT).write.parquet(statement)
+    # lineage for the empty part file, or the first import sees an orphan
+    rebuild_sidecar(statement, "init")
     spark.createDataFrame([], PREFIX).write.parquet(str(db / "prefix"))
     # metadata rows (init.clj:34-35)
     spark.createDataFrame(

@@ -19,13 +19,19 @@ then a global merge; Kiveris et al., SoCC 2014).
    local roots into a root graph; min-label propagation with pointer
    doubling (``propagate_min_labels``, ``localCheckpoint()`` per round
    to cut lineage) runs over that root graph only, and not at all when
-   it is empty.
+   the contraction's checkpoint observed it empty.
 
 The root graph is empty whenever every component's edges fall inside
 one partition. An exported ``.nt`` file writes each stanza's lines
 contiguously, so its components only cross partitions where a stanza
 straddles a text split boundary — the normal import does one Python
 pass and one aggregate, with no iterative rounds.
+
+Stanza keys (``assign_components``): a triple's key is the component
+of its first blank end, the subject if it is blank, else the object.
+Both ends of a blank–blank triple share one component, so ONE left
+join of the triples with the component map on that key labels them
+all; ground triples key on their content hash.
 
 The contraction pays only on inputs with that locality. An edge set
 hash-partitioned by edge (near-dup pairs, operators/dedup) spreads each
@@ -43,7 +49,7 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
@@ -133,17 +139,20 @@ def min_label_components(edges: DataFrame) -> DataFrame:
                                   StructField("component", a_type)]))
     # a node seen in k partitions has k local roots: keep the smallest
     # and link the others to it (the root graph)
+    obs = Observation()
     per_node = (local.groupBy("a")
                 .agg(F.min("component").alias("component"),
                      F.collect_set("component").alias("_roots"))
+                .observe(obs, F.count_if(F.size("_roots") > 1)
+                         .alias("shared"))
                 .localCheckpoint())
+    if obs.get["shared"] == 0:
+        return per_node.drop("_roots")
     root_edges = (per_node.filter(F.size("_roots") > 1)
                   .select(F.explode("_roots").alias("a"),
                           F.col("component").alias("b"))
                   .filter(F.col("a") != F.col("b")))
     per_node = per_node.drop("_roots")
-    if root_edges.isEmpty():
-        return per_node
     merged = propagate_min_labels(root_edges).select(
         F.col("a").alias("component"), F.col("component").alias("_merged"))
     return (per_node.join(merged, on="component", how="left")
@@ -151,29 +160,17 @@ def min_label_components(edges: DataFrame) -> DataFrame:
                     .alias("component")))
 
 
-def blank_components(thin: DataFrame) -> DataFrame:
-    """Label every blank node with a component id (the min blank label
-    reachable through shared triples). Returns (blank, component)."""
-    # one edge per blank-touching triple: both ends blank → (s, o);
-    # one end blank → a self-loop, so that blank is a singleton at least
-    s, o = F.col("subject"), F.col("object")
-    edges = thin.filter("is_blank_s OR is_blank_o").select(
-        F.when(F.col("is_blank_s"), s).otherwise(o).alias("a"),
-        F.when(F.col("is_blank_o"), o).otherwise(s).alias("b"))
-    return (min_label_components(edges)
-            .select(F.col("a").alias("blank"), "component"))
-
-
 def assign_components(thin: DataFrame) -> DataFrame:
     """Attach a stanza-group key to every thin triple:
 
-    * triples touching a blank node get that blank's component id;
+    * a triple touching a blank node gets the component id of its
+      first blank end (the subject if it is blank, else the object);
     * ground triples are their own singleton stanzas (content hash).
 
     Output: thin schema with doc_id replaced by the group key — ready
     for operators/stanza.thin_to_thick_df.
 
-    The closure and the final joins both read ``thin``, whose source is
+    The closure and the final join both read ``thin``, whose source is
     a Python parse UDF for NT, Turtle and RDF/XML, so ``thin`` is
     materialized once (``localCheckpoint``) and parsed once; a skipped-
     line accumulator on the parse then counts each bad line once. The
@@ -185,25 +182,22 @@ def assign_components(thin: DataFrame) -> DataFrame:
     then be re-run from the file.
     """
     thin = thin.localCheckpoint()
-    comp = blank_components(thin)
-    bs = comp.select(F.col("blank").alias("_sk"),
-                     F.col("component").alias("_cs"))
-    bo = comp.select(F.col("blank").alias("_ok"),
-                     F.col("component").alias("_co"))
-    # join keys are masked by the blank flags so a LITERAL whose
-    # lexical form looks like "_:b1" can never hijack a blank node's
-    # component. Plain left joins: AQE broadcasts the component map
-    # when small; at external-RDF scale (billions of bnodes) it shuffles
-    out = (thin
-           .withColumn("_sk", F.when(F.col("is_blank_s"),
-                                     F.col("subject")))
-           .withColumn("_ok", F.when(F.col("is_blank_o"),
-                                     F.col("object")))
-           .join(bs, on="_sk", how="left")
-           .join(bo, on="_ok", how="left")
-           .drop("_sk", "_ok"))
+    s, o = F.col("subject"), F.col("object")
+    # masked by the blank flags, so a LITERAL whose lexical form looks
+    # like "_:b1" can never hijack a blank node's component
+    key = F.when(F.col("is_blank_s"), s).when(F.col("is_blank_o"), o)
+    # one edge per blank-touching triple: both ends blank → (s, o);
+    # one end blank → a self-loop, so that blank is a singleton at least
+    edges = thin.filter("is_blank_s OR is_blank_o").select(
+        key.alias("a"), F.when(F.col("is_blank_o"), o).otherwise(s)
+        .alias("b"))
+    comp = min_label_components(edges).select(
+        F.col("a").alias("_key"), F.col("component").alias("_comp"))
     ground_key = F.concat(F.lit("g:"), F.md5(F.concat_ws(
         "\x1f", "subject", "predicate", "object", "datatype")))
-    return (out.withColumn(
-        "doc_id", F.coalesce("_cs", "_co", ground_key))
-        .drop("_cs", "_co"))
+    # one plain left join: AQE broadcasts the component map when small;
+    # at external-RDF scale (billions of bnodes) it shuffles
+    return (thin.withColumn("_key", key)
+            .join(comp, on="_key", how="left")
+            .withColumn("doc_id", F.coalesce("_comp", ground_key))
+            .drop("_key", "_comp"))

@@ -187,17 +187,23 @@ def iri_ref(iri: str) -> str:
     return f"<{iri}>"
 
 
+def blank_label(v: str) -> str:
+    """A blank node's label as both RDF writers print it (``_:x`` →
+    ``_:bx``)."""
+    return v.replace("_:", "_:b")
+
+
 def nt_node(v: str, blank: bool, prefixes: dict) -> str:
     """One N-Triples subject/predicate term."""
     if blank:
-        return v.replace("_:", "_:b")
+        return blank_label(v)
     return iri_ref(curie_to_iri(v, prefixes))
 
 
 def nt_object(v: str, dt: str, blank: bool, prefixes: dict) -> str:
     """One N-Triples object term (IRI, blank, or escaped literal)."""
     if blank or dt == "_JSONMAP":
-        return v.replace("_:", "_:b")
+        return blank_label(v)
     if dt == "_IRI":
         return iri_ref(curie_to_iri(v, prefixes))
     lex = escape_literal(v)
@@ -245,7 +251,7 @@ def turtle_term(v: str, blank: bool, prefixes: dict,
     """One Turtle term: blank label, prefixed name (when the compaction
     is PN-valid) or <iri>."""
     if blank:
-        return v.replace("_:", "_:b")
+        return blank_label(v)
     iri = curie_to_iri(v, prefixes)
     c = curify_with(iri, prefix_list)
     if c.startswith("<") or not _PN_OK.match(c):
@@ -284,7 +290,7 @@ def to_turtle_lines(statements: DataFrame, prefix_df: DataFrame,
     def line(t: dict) -> str:
         o, dt = t["object"], t["datatype"]
         if t["is_blank_o"] or dt == "_JSONMAP":
-            obj = o.replace("_:", "_:b")
+            obj = blank_label(o)
         elif dt == "_IRI":
             obj = term(o, False)
         else:

@@ -54,7 +54,10 @@ def _parse_span(doc_id: str, pos: int, kind: str, text: str,
     if kind == "media":
         return [t(f"ex:d{doc_id}", "ex:hasMedia", f"<{media_ref}>")]
     # cheap first-word dispatch: each template has a distinctive
-    # prefix, so one regex runs per span instead of six
+    # prefix, so one regex runs per span instead of seven. The dispatch
+    # is exhaustive: every template is anchored on the prefix or suffix
+    # tested for it (a RE_FACT text ends in a digit and "."), so a text
+    # that misses its regex matches no other template
     if text.startswith("According to "):
         m = RE_ANNOT.match(text)
     elif text.startswith("Allegedly, "):
@@ -69,26 +72,10 @@ def _parse_span(doc_id: str, pos: int, kind: str, text: str,
         m = RE_LABEL.match(text)
     else:
         m = RE_FACT.match(text)
-    if m is None:
-        return _parse_span_slow(doc_id, pos, text)
-    return _build_triples(doc_id, pos, text, m, t)
+    return [] if m is None else _build_triples(doc_id, pos, m, t)
 
 
-def _parse_span_slow(doc_id: str, pos: int, text: str) -> list[tuple]:
-    """Fallback: try every template (inputs that dodge the prefix
-    dispatch, e.g. hand-written corpora)."""
-    def t(s, p, o, dt="_IRI"):
-        return (s, p, o, dt, s.startswith("_:"),
-                dt == "_JSONMAP" and o.startswith("_:"))
-    for rx in (RE_FACT, RE_LABEL, RE_ANNOT, RE_REIFY, RE_GROUP, RE_RULE,
-               RE_RESTR):
-        m = rx.match(text)
-        if m:
-            return _build_triples(doc_id, pos, text, m, t)
-    return []
-
-
-def _build_triples(doc_id: str, pos: int, text: str, m, t) -> list[tuple]:
+def _build_triples(doc_id: str, pos: int, m, t) -> list[tuple]:
     rx = m.re
     if rx is RE_FACT:
         s, v, o = m.groups()

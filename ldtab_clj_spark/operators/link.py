@@ -6,8 +6,9 @@ object columns against a candidate dictionary:
 
 * candidate *scoring*: argmax score per surface (``max_by``, one
   map-side-combinable aggregation);
-* while the tail dictionary fits (`BROADCAST_TAIL_MAX_ROWS`), head ∪
-  tail resolve in ONE broadcast probe per column — zero shuffle;
+* while the tail dictionary fits (`BROADCAST_TAIL_MAX_ROWS`), the
+  whole scored dictionary resolves in ONE broadcast probe per
+  column — zero shuffle;
 * above that cap, **head** surfaces (hot, Zipf-favored) resolve via a
   broadcast hash join — zero shuffle for the skewed mass — and
   **tail** surfaces via a salted shuffle join: the mention side
@@ -24,23 +25,20 @@ which matters enormously when upstream is a 100 TB scan.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 SALT = 16
 
 # Tail dictionaries at or below this row count (pre-salt) resolve via
 # an explicit broadcast join instead of the salted shuffle join. A
-# curated entity dictionary is typically 1e5-1e7 surfaces — a few
-# hundred MB broadcast at most — while the fact side is the 100 TB
-# scan; broadcasting the dict removes a full shuffle of EVERY thin
-# row per resolved column. Above the cap (web-extracted dictionaries
-# can exceed 1e8) the salted shuffle join takes over. The explicit
-# guard exists because leaving the choice to AQE's runtime replan
-# proved nondeterministic at the threshold boundary: at 2M docs the
-# 1-core leg converted to broadcast while the 4-core leg kept the
-# shuffle, a ~94 s/leg plan asymmetry that polluted the scaling ratio
-# (round-5 stage decomposition, BENCH/BASELINE.md).
+# curated entity dictionary (1e5-1e7 surfaces) broadcasts in a few
+# hundred MB at most, which saves a shuffle of EVERY thin row per
+# resolved column; above the cap (web-extracted dictionaries can
+# exceed 1e8) the salted join takes over. The guard is explicit
+# because AQE's runtime replan was nondeterministic at the boundary:
+# at 2M docs the 1-core leg broadcast while the 4-core leg shuffled,
+# ~94 s/leg apart (BENCH/BASELINE.md).
 BROADCAST_TAIL_MAX_ROWS = 2_000_000
 
 
@@ -62,11 +60,14 @@ def score_candidates(entity_dict: DataFrame) -> DataFrame:
     )
 
 
-def _resolve_column(df: DataFrame, col: str, head: DataFrame,
-                    tail: DataFrame, guard,
-                    broadcast_tail: bool = False) -> DataFrame:
+def _keys(winners: DataFrame, ent) -> DataFrame:
+    return winners.select(F.col("surface").alias("_surf"), ent)
+
+
+def _resolve_column(df: DataFrame, col: str, winners: DataFrame, guard,
+                    broadcast_tail: bool) -> DataFrame:
     """Resolve surface placeholders in one column: one broadcast left
-    join over head ∪ tail when ``broadcast_tail``, else a broadcast
+    join over ``winners`` when ``broadcast_tail``, else a broadcast
     head join then a salted shuffle tail join; non-mention rows ride
     along with null keys."""
     is_mention = guard & F.col(col).startswith("surface:")
@@ -74,26 +75,18 @@ def _resolve_column(df: DataFrame, col: str, head: DataFrame,
         "_surf", F.when(is_mention, F.substring(F.col(col), 9, 100000)))
 
     if broadcast_tail:
-        # small dict: ONE broadcast join over head ∪ tail (disjoint by
-        # surface, so the combined probe resolves exactly what the two
-        # separate probes did). The head/tail split only pays for
-        # itself when the tail must shuffle — with both sides
-        # broadcast, two hash probes per column were pure overhead
-        # (measured: two of the pipeline's four link joins removed).
-        # No salt needed (skew is a shuffle phenomenon), and the fact
-        # side never leaves its stage.
-        all_k = head.unionByName(tail).select(
-            F.col("surface").alias("_surf"),
-            F.col("entity").alias("_head_ent"))
-        df = df.join(F.broadcast(all_k), on="_surf", how="left")
-        return _finish_column(df, col)
+        # small dict: ONE broadcast probe of all winners (a head/tail
+        # split pays only when the tail shuffles); no salt, and the
+        # fact side never leaves its stage. A surface whose is_head is
+        # null is neither head nor tail: it stays unlinked.
+        ent = F.when(F.col("is_head").isNotNull(), F.col("entity"))
+        df = df.join(F.broadcast(_keys(winners, ent.alias("_ent"))),
+                     on="_surf", how="left")
+        return _finish_column(df, col, "_ent")
 
-    head_k = head.select(F.col("surface").alias("_surf"),
-                         F.col("entity").alias("_head_ent"))
+    head_k = _keys(winners.filter("is_head"),
+                   F.col("entity").alias("_head_ent"))
     df = df.join(F.broadcast(head_k), on="_surf", how="left")
-
-    tail_k = tail.select(F.col("surface").alias("_surf"),
-                         F.col("entity").alias("_tail_ent"))
 
     # big dict: salted shuffle join. Mention rows get a salt in
     # [0, SALT) matching the exploded dictionary; NON-mention rows get
@@ -109,41 +102,35 @@ def _resolve_column(df: DataFrame, col: str, head: DataFrame,
                       F.lit(SALT)).cast("int"))
         .otherwise(F.pmod(F.xxhash64("doc_id", "span_order"),
                           F.lit(1 << 16)).cast("int")))
-    tail_salted = tail_k.withColumn("_salt", F.explode(
-        F.array(*[F.lit(i) for i in range(SALT)])))
-    df = df.join(tail_salted, on=["_surf", "_salt"], how="left")
-    return _finish_column(df, col)
+    tail_salted = _keys(winners.filter("NOT is_head"),
+                        F.col("entity").alias("_tail_ent")).withColumn(
+        "_salt", F.explode(F.array(*[F.lit(i) for i in range(SALT)])))
+    df = df.join(tail_salted, on=["_surf", "_salt"], how="left") \
+        .drop("_salt")
+    return _finish_column(df, col, "_head_ent", "_tail_ent")
 
 
-def _finish_column(df: DataFrame, col: str) -> DataFrame:
-    """Fold the join results back into ``col`` and drop the work
-    columns (``_salt``/``_tail_ent`` are absent on the broadcast path;
-    drop ignores missing names)."""
-    ents = [F.col(c) for c in ("_head_ent", "_tail_ent")
-            if c in df.columns]
-    resolved = F.when(F.col("_surf").isNull(), F.col(col)) \
-        .otherwise(F.coalesce(*ents, unlinked(F.col("_surf"))))
-    return (df.withColumn(col, resolved)
-            .drop("_surf", "_salt", "_head_ent", "_tail_ent"))
+def _finish_column(df: DataFrame, col: str, *ents: str) -> DataFrame:
+    """Fold the join results ``ents`` back into ``col`` and drop the
+    work columns."""
+    resolved = F.when(F.col("_surf").isNull(), F.col(col)).otherwise(
+        F.coalesce(*map(F.col, ents), unlinked(F.col("_surf"))))
+    return df.withColumn(col, resolved).drop("_surf", *ents)
 
 
 def link_entities(thin: DataFrame, entity_dict: DataFrame) -> DataFrame:
-    """Resolve subject and object mention placeholders to entity IRIs."""
-    # materialize the (tiny) scored dictionary once — it feeds four
-    # join builds, and recomputing the driver-side createDataFrame +
-    # scoring shuffle per build is pure serial time
-    winners = score_candidates(entity_dict).localCheckpoint()
-    head = winners.filter("is_head").select("surface", "entity")
-    tail = winners.filter("NOT is_head").select("surface", "entity")
-    # the count is ~free (winners is already materialized) and buys a
-    # DETERMINISTIC plan: both scaling legs take the same join
-    # strategy instead of straddling AQE's runtime-replan threshold
-    bcast = tail.count() <= BROADCAST_TAIL_MAX_ROWS
-    out = _resolve_column(thin, "subject", head, tail, F.lit(True),
-                          broadcast_tail=bcast)
+    """Resolve subject and object mention placeholders to entity IRIs.
+
+    Building the plan runs only the checkpoint of the (tiny) scored
+    dictionary that feeds every join build. Its tail size, observed on
+    that checkpoint, picks the join strategy: a deterministic plan."""
+    obs = Observation()
+    winners = (score_candidates(entity_dict)
+               .observe(obs, F.count_if(~F.col("is_head")).alias("tail"))
+               .localCheckpoint())
+    bcast = obs.get["tail"] <= BROADCAST_TAIL_MAX_ROWS
+    out = _resolve_column(thin, "subject", winners, F.lit(True), bcast)
     # objects: only IRI-slot mentions (literal lexical forms that happen
     # to look like surfaces must stay literal)
-    out = _resolve_column(out, "object", head, tail,
-                          F.col("datatype") == "_IRI",
-                          broadcast_tail=bcast)
-    return out
+    return _resolve_column(out, "object", winners,
+                           F.col("datatype") == "_IRI", bcast)

@@ -18,6 +18,7 @@ from __future__ import annotations
 import json
 import re
 import time
+from dataclasses import dataclass
 from pathlib import Path
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -64,12 +65,13 @@ def _local(path: str) -> str:
     return path
 
 
-def _per_file_rows(path: str) -> dict[str, int]:
-    """name → row count per output file, from the parquet footers via
-    pyarrow — metadata only, no data scan."""
+def _footer_rows(path: str, names) -> dict[str, int]:
+    """name → row count of each named part file, in name order, from
+    its parquet footer via pyarrow — metadata only, no data scan."""
     import pyarrow.parquet as pq
-    return {f.name: pq.ParquetFile(f).metadata.num_rows
-            for f in sorted(Path(_local(path)).glob("*.parquet"))}
+    root = Path(_local(path))
+    return {name: pq.ParquetFile(root / name).metadata.num_rows
+            for name in sorted(names)}
 
 
 def write_statements(statements: DataFrame, path: str,
@@ -82,9 +84,10 @@ def write_statements(statements: DataFrame, path: str,
     * batch metrics (rows, annotated) ride the write action itself via
       ``df.observe`` — no second scan;
     * per-file row counts come from the parquet footers (metadata
-      reads, no data scan); on append, files already in the sidecar
-      keep their original run_id, new files are tagged with this one —
-      per-import deltas stay auditable.
+      reads, no data scan) of this write's files and of the orphans it
+      adopts only; on append, files already in the sidecar keep their
+      original run_id, new files are tagged with this one — per-import
+      deltas stay auditable.
 
     Returns the lineage summary. On Iceberg this would be
     ``writeTo(...).append()`` with table/snapshot-level metrics; parquet
@@ -105,45 +108,34 @@ def write_statements(statements: DataFrame, path: str,
     df.write.mode(mode).parquet(path)
     metrics = obs.get
 
-    per_file = _per_file_rows(path)
+    after = _list_files(path)
     prior = _read_sidecar(path) if mode == "append" else []
     in_sidecar = {r["file"] for r in prior}
-    known = in_sidecar | pre
     ts = int(time.time())
     new = [{"file": name, "rows": n, "run_id": run_id, "ts": ts}
-           for name, n in sorted(per_file.items()) if name not in known]
+           for name, n in _footer_rows(path, after - pre - in_sidecar)
+           .items()]
     # reconcile, don't exclude: files on disk before this write but
     # absent from the sidecar are orphans of a crash between a prior
-    # parquet append and its sidecar append. Adopt them under a
-    # sentinel run_id so verify_lineage converges on re-run instead of
-    # staying false forever. AGE-GATED: a LIVE concurrent run's files
-    # also look sidecar-less inside its write window (its parquet
-    # commit precedes its sidecar append by seconds) — adopting those
-    # would hijack its attribution via first-entry-wins dedup. A
-    # crashed run's orphans, by contrast, sit un-entered indefinitely,
-    # so only files older than ADOPT_GRACE_SECS are adopted; younger
-    # ones are reconciled by whichever append runs after the grace
-    # period.
-    orphans = [name for name in sorted(pre - in_sidecar)
-               if name in per_file]
-    # age is None when the file vanished between glob and stat (e.g. a
-    # concurrent compaction): such a name is neither adoptable nor a
-    # pending orphan — drop it from BOTH counts instead of letting a
-    # ghost inflate unadopted_files into a spurious CLI warning
-    ages = {name: _file_age_secs(path, name) for name in orphans}
-    adopted = [{"file": name, "rows": per_file[name],
-                "run_id": "adopted", "ts": ts}
-               for name in orphans
-               if ages[name] is not None
-               and ages[name] > ADOPT_GRACE_SECS]
+    # parquet append and its sidecar append; adopting them under a
+    # sentinel run_id lets verify_lineage converge on re-run. AGE-GATED:
+    # a LIVE concurrent run's files also look sidecar-less for the
+    # seconds between its parquet commit and its sidecar append, and
+    # adopting those would hijack its attribution (first entry wins),
+    # so only files older than ADOPT_GRACE_SECS are adopted. Younger
+    # ones are counted as unadopted: the returned totals under-report
+    # the table until a post-grace append adopts them. A file that
+    # vanished between listing and stat (a concurrent compaction, say)
+    # is neither.
+    ages = {name: _file_age_secs(path, name)
+            for name in sorted((pre - in_sidecar) & after)}
+    ages = {name: age for name, age in ages.items() if age is not None}
+    adoptable = [name for name, age in ages.items()
+                 if age > ADOPT_GRACE_SECS]
+    unadopted = len(ages) - len(adoptable)
+    adopted = [{"file": name, "rows": n, "run_id": "adopted", "ts": ts}
+               for name, n in _footer_rows(path, adoptable).items()]
     new = adopted + new
-    # orphans still inside the grace window are counted but not
-    # entered: the returned totals under-report the physical table
-    # until a post-grace append adopts them, so surface the gap
-    # instead of leaving it silent
-    unadopted = sum(1 for name in orphans
-                    if ages[name] is not None
-                    and ages[name] <= ADOPT_GRACE_SECS)
     if mode == "append":
         # append ONLY this run's rows (atomic single O_APPEND write /
         # new part files): concurrent imports never rewrite each
@@ -175,8 +167,7 @@ def _file_age_secs(path: str, name: str) -> float | None:
         st = (Path(_local(path)) / name).stat()
         return time.time() - max(st.st_mtime, st.st_ctime)
     except OSError:
-        return None  # vanished mid-look: callers drop the name from
-        #              both the adopted and the unadopted counts
+        return None  # vanished mid-look: neither adopted nor unadopted
 
 
 def _list_files(path: str) -> set[str]:
@@ -232,32 +223,25 @@ def rebuild_sidecar(path: str, run_id: str) -> list[dict]:
     longer exist and would fail verify_lineage on a healthy table."""
     ts = int(time.time())
     rows = [{"file": name, "rows": n, "run_id": run_id, "ts": ts}
-            for name, n in sorted(_per_file_rows(path).items())]
+            for name, n in _footer_rows(path, _list_files(path)).items()]
     _write_sidecar(path, rows)
     return rows
 
 
+@dataclass(eq=False)
 class LineageStatus:
     """Bool-compatible verify_lineage result: truthiness is the
     row-count match (back-compat with every ``if verify_lineage(...)``
     caller); ``unadopted_files`` surfaces part files present on disk
     but absent from the sidecar — the gap a resume tool needs to see
-    WITHOUT parsing a write result (round-4 verdict #9)."""
-
-    def __init__(self, ok: bool, expected: int, actual: int,
-                 unadopted_files: int):
-        self.ok = ok
-        self.expected = expected
-        self.actual = actual
-        self.unadopted_files = unadopted_files
+    WITHOUT parsing a write result."""
+    ok: bool
+    expected: int
+    actual: int
+    unadopted_files: int
 
     def __bool__(self) -> bool:
         return self.ok
-
-    def __repr__(self) -> str:
-        return (f"LineageStatus(ok={self.ok}, expected={self.expected},"
-                f" actual={self.actual},"
-                f" unadopted_files={self.unadopted_files})")
 
 
 def verify_lineage(spark: SparkSession, path: str) -> LineageStatus:

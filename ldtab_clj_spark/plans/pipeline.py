@@ -3,8 +3,11 @@
 docs → extract (mapInPandas) → link (broadcast + salted join) →
 thin→thick (mapInPandas over doc runs) → dedup → materialize.
 
-Each stage is DataFrame→DataFrame and `build_statements` is one lazy
-plan; writing the result with its lineage sidecar is the caller's step
+Every RDF reader ends in `rdf_statements`: closure → thin→thick → dedup.
+
+Each stage is DataFrame→DataFrame. Building `build_statements` runs
+only link's checkpoint of the scored dictionary; the rest stays lazy.
+Writing the result with its lineage sidecar is the caller's step
 (`operators.materialize.write_statements`, as the CLI's import does).
 """
 
@@ -12,6 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..operators.components import assign_components
 from ..operators.extract import extract_thin_triples
 from ..operators.link import link_entities
 from ..operators.materialize import dedup_statements
@@ -21,7 +25,8 @@ from ..synth import entity_dictionary, synth_docs
 
 def build_statements(docs: DataFrame, entity_dict: DataFrame,
                      include_media: bool = False) -> DataFrame:
-    """The lazy end-to-end plan (no action triggered).
+    """The end-to-end plan. Building it runs only link's checkpoint of
+    the scored dictionary; the statements themselves stay lazy.
 
     ``include_media=True`` adds the multimodal stage: decode/feature
     the deterministic synth media table derived from the docs' media
@@ -40,6 +45,13 @@ def build_statements(docs: DataFrame, entity_dict: DataFrame,
         thick = thick.unionByName(
             media_feature_statements(decode_media(media)))
     return dedup_statements(thick)
+
+
+def rdf_statements(thin: DataFrame) -> DataFrame:
+    """Parsed RDF thin triples (doc_id empty) → the statement table:
+    blank-node closure, stanza assembly, dedup. Every RDF reader ends
+    here; building it runs the closure's jobs (operators/components)."""
+    return dedup_statements(thin_to_thick_df(assign_components(thin)))
 
 
 def reimport(statements: DataFrame) -> DataFrame:

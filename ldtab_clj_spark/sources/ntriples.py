@@ -139,14 +139,12 @@ def parse_nt_lines(lines: DataFrame,
     by the batch reader and the streaming import.
 
     ``skipped_acc``: optional SparkContext accumulator incremented for
-    every non-blank, non-comment line that fails to parse (grammar
-    mismatch OR invalid escape — the r4 strictness change made escape-
-    invalid literals vanish silently; the counter makes dropped lines
-    visible, matching the fail-loudly principle). The accumulator counts
-    per evaluation of the parse: it is exact once ONE full scan has
-    run, and over-counts if the returned DataFrame is recomputed (every
-    action or extra consumer re-parses unless it is materialized, as
-    assign_components does; a retried task also adds again)."""
+    every non-blank, non-comment line that fails to parse (bad grammar
+    or invalid escape), so dropped lines are visible. It counts per
+    evaluation of the parse: exact once ONE full scan has run, and
+    over-counting if the result is recomputed (each action re-parses
+    unless it is materialized, as assign_components does; a retried
+    task also adds again)."""
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
@@ -168,8 +166,8 @@ def parse_nt_lines(lines: DataFrame,
 def read_ntriples(spark: SparkSession, path: str,
                   prefix_df: DataFrame,
                   skipped_acc=None) -> DataFrame:
-    """Distributed N-Triples scan → thin triples (doc_id empty; run
-    operators/components.assign_components before stanza assembly)."""
+    """Distributed N-Triples scan → thin triples (doc_id empty;
+    ``plans.pipeline.rdf_statements`` builds the statements)."""
     prefixes = [(r["prefix"], r["base"]) for r in prefix_df.collect()]
     return parse_nt_lines(spark.read.text(path), prefixes, skipped_acc)
 
@@ -179,9 +177,6 @@ def import_ntriples(spark: SparkSession, path: str,
                     skipped_acc=None) -> DataFrame:
     """Full `ldtab import file.nt` equivalent: parse → component
     closure → stanza assembly → dedup. Returns the statement table."""
-    from ..operators.components import assign_components
-    from ..operators.materialize import dedup_statements
-    from ..operators.stanza import thin_to_thick_df
-    thin = assign_components(
-        read_ntriples(spark, path, prefix_df, skipped_acc))
-    return dedup_statements(thin_to_thick_df(thin))
+    from ..plans.pipeline import rdf_statements
+    return rdf_statements(read_ntriples(spark, path, prefix_df,
+                                        skipped_acc))

@@ -18,8 +18,8 @@ emit (and all constructs in the reference's ontology.owl):
 
 Files are the unit of parallelism: the Turtle source's whole-file
 reader (``turtle._read_whole_files``) runs this module's parser.
-Output: thin triples CURIE-fied against the prefix table; run
-operators/components.assign_components before stanza assembly.
+Output: thin triples CURIE-fied against the prefix table, turned into
+statements by ``plans.pipeline.rdf_statements``.
 """
 
 from __future__ import annotations
@@ -219,9 +219,6 @@ def parse_rdfxml(text: str) -> list[tuple]:
 def import_rdfxml(spark: SparkSession, path: str,
                   prefix_df: DataFrame) -> DataFrame:
     """Full `ldtab import file.owl` equivalent."""
-    from ..operators.components import assign_components
-    from ..operators.materialize import dedup_statements
-    from ..operators.stanza import thin_to_thick_df
-    thin = assign_components(
+    from ..plans.pipeline import rdf_statements
+    return rdf_statements(
         _read_whole_files(spark, path, prefix_df, parse_rdfxml))
-    return dedup_statements(thin_to_thick_df(thin))

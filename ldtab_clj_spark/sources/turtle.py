@@ -22,8 +22,8 @@ splits by line); at 100 TB the corpus is many files either way.
 
 Output is the same thin-triple shape as sources/ntriples.py: IRIs
 CURIE-fied against the prefix table (longest match), blank labels
-file-scoped; run operators/components.assign_components before stanza
-assembly.
+file-scoped; ``plans.pipeline.rdf_statements`` turns them into
+statements.
 """
 
 from __future__ import annotations
@@ -430,8 +430,8 @@ def _read_whole_files(spark: SparkSession, path: str,
                       prefix_df: DataFrame, parse_text) -> DataFrame:
     """Distributed whole-file RDF scan (one task per file):
     ``parse_text`` (file text → raw full-IRI triples) per file → thin
-    triples (doc_id empty; run assign_components before stanza
-    assembly). Shared by the Turtle and RDF/XML sources."""
+    triples (doc_id empty; ``rdf_statements`` builds the
+    statements). Shared by the Turtle and RDF/XML sources."""
     prefixes = [(r["prefix"], r["base"]) for r in prefix_df.collect()]
     files = spark.read.text(path, wholetext=True)
 
@@ -454,9 +454,6 @@ def import_turtle(spark: SparkSession, path: str,
                   prefix_df: DataFrame) -> DataFrame:
     """Full `ldtab import file.ttl` equivalent: parse → component
     closure → stanza assembly → dedup. Returns the statement table."""
-    from ..operators.components import assign_components
-    from ..operators.materialize import dedup_statements
-    from ..operators.stanza import thin_to_thick_df
-    thin = assign_components(
+    from ..plans.pipeline import rdf_statements
+    return rdf_statements(
         _read_whole_files(spark, path, prefix_df, parse_turtle))
-    return dedup_statements(thin_to_thick_df(thin))

@@ -8,8 +8,10 @@ its "streaming" is incremental batching, which maps naturally onto
 Structured Streaming micro-batches + ``foreachBatch``.
 
 Semantics preserved:
-* each micro-batch of docs runs the full extract→link→thin→thick chain
-  (the reference's parse-window, parsing.clj:220-243);
+* each micro-batch runs its batch importer's statement builder — docs
+  the extract→link→thin→thick chain, N-Triples lines the RDF readers'
+  closure→thin→thick chain — and is deduped before its append (the
+  reference's parse-window, parsing.clj:220-243);
 * the superfluous-annotation rule (import.clj:199-201) is applied once,
   when the table is read: ``dedup_statements`` drops a bare row whose
   annotated twin exists anywhere in the table, in either arrival
@@ -23,11 +25,14 @@ Semantics preserved:
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.materialize import dedup_statements
-from ..plans.pipeline import build_statements
-from ..schemas import DOCS
+from ..plans.pipeline import build_statements, rdf_statements
+from ..schemas import DOCS, STATEMENT
+from ..sources.ntriples import parse_nt_lines
 
 
 def stream_docs_from_dir(spark: SparkSession, in_dir: str) -> DataFrame:
@@ -85,17 +90,10 @@ def run_streaming_import_nt(spark: SparkSession, in_path: str,
     ``in_path`` may be a directory or a single file (the file-stream
     source needs a directory, so a file streams via its parent +
     pathGlobFilter)."""
-    from pathlib import Path
-
-    from ..operators.components import assign_components
-    from ..operators.stanza import thin_to_thick_df
-    from ..sources.ntriples import parse_nt_lines
-
     prefixes = [(r["prefix"], r["base"]) for r in prefix_df.collect()]
 
     def statements_fn(lines: DataFrame) -> DataFrame:
-        return thin_to_thick_df(
-            assign_components(parse_nt_lines(lines, prefixes)))
+        return rdf_statements(parse_nt_lines(lines, prefixes))
 
     reader = spark.readStream.option("maxFilesPerTrigger", 1)
     p = Path(in_path)
@@ -112,9 +110,6 @@ def read_stream_result(spark: SparkSession, table_path: str) -> DataFrame:
     reference's backlog and tail flush, import.clj:80-140). An input
     with zero files never creates the table — that's an empty import,
     not an error."""
-    from pathlib import Path
-
-    from ..schemas import STATEMENT
     if not Path(table_path).exists():
         return spark.createDataFrame([], STATEMENT)
     return dedup_statements(spark.read.parquet(table_path))

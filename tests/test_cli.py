@@ -66,6 +66,25 @@ def test_cli_workflow(spark, tmp_path, capsys):
     assert tp / len(again) >= 0.95 and tp / len(orig) >= 0.95
 
 
+def test_cli_first_import_into_fresh_db_sees_no_orphan(spark, tmp_path,
+                                                       capsys):
+    """init's empty statement table carries its lineage entry, so the
+    first import neither warns of an orphan nor leaves one
+    unadopted."""
+    from ldtab_clj_spark.operators.materialize import verify_lineage
+    db = str(tmp_path / "db")
+    docs_dir = str(tmp_path / "docs")
+    synth_docs(spark, 40, seed=3).write.parquet(docs_dir)
+    (tmp_path / "prefix.tsv").write_text(PREFIX_TSV)
+    assert main(["init", db]) == 0
+    assert main(["prefix", db, str(tmp_path / "prefix.tsv")]) == 0
+    capsys.readouterr()
+    assert main(["import", db, docs_dir]) == 0
+    assert "orphan" not in capsys.readouterr().err
+    status = verify_lineage(spark, f"{db}/statement")
+    assert status and status.unadopted_files == 0
+
+
 def test_cli_export_prints_the_deduped_count(spark, tmp_path, capsys):
     """The printed count comes from the write itself: it is the row
     count after dedup-on-read, for every export format."""

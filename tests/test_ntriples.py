@@ -4,8 +4,7 @@ round trip (statements → .nt text → re-import → same statements)."""
 import pytest
 from pyspark.sql import functions as F
 
-from ldtab_clj_spark.operators.components import (assign_components,
-                                                  blank_components)
+from ldtab_clj_spark.operators.components import assign_components
 from ldtab_clj_spark.operators.export import write_ntriples
 from ldtab_clj_spark.plans.pipeline import build_statements
 from ldtab_clj_spark.sources.ntriples import import_ntriples, parse_nt_line
@@ -48,22 +47,70 @@ def test_parse_nt_line_variants():
 
 
 def test_blank_components_closure(spark):
-    # chain _:a → _:b → _:c plus a separate _:x; ground triple apart
+    # chain _:a → _:b → _:c, reached from a ground subject too, plus a
+    # separate _:x; ground triple apart. Every triple's key is the
+    # component of its first blank end.
     rows = [
         ("_:a", "ex:p", "_:b", "_JSONMAP", True, True, "", 0),
         ("_:b", "ex:p", "_:c", "_JSONMAP", True, True, "", 0),
+        ("ex:t", "ex:q", "_:c", "_JSONMAP", False, True, "", 0),
         ("_:x", "ex:p", "ex:o", "_IRI", True, False, "", 0),
         ("ex:s", "ex:p", "ex:o", "_IRI", False, False, "", 0),
     ]
     from ldtab_clj_spark.schemas import THIN
     thin = spark.createDataFrame(rows, THIN)
-    comp = {r.blank: r.component for r in blank_components(thin).collect()}
-    assert comp["_:a"] == comp["_:b"] == comp["_:c"] == "_:a"
-    assert comp["_:x"] == "_:x"
-    grouped = assign_components(thin)
-    keys = {r.subject: r.doc_id for r in grouped.collect()}
-    assert keys["_:a"] == keys["_:b"] == "_:a"
-    assert keys["ex:s"].startswith("g:")
+    keys = {(r.subject, r.object): r.doc_id
+            for r in assign_components(thin).collect()}
+    assert keys[("_:a", "_:b")] == keys[("_:b", "_:c")] \
+        == keys[("ex:t", "_:c")] == "_:a"
+    assert keys[("_:x", "ex:o")] == "_:x"
+    assert keys[("ex:s", "ex:o")].startswith("g:")
+    assert len(keys) == len(rows)
+
+
+def _jobs_run(sc, group: str, build):
+    """(build(), number of Spark jobs that building it ran)."""
+    sc.setJobGroup(group, group)
+    try:
+        out = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_import_layers_plan_shape(spark, tmp_path, prefix_df):
+    """Each import layer takes its plan decisions from jobs it runs
+    anyway, and resolves its key with one join: building link runs
+    only the checkpoint of its scored dictionary (the tail size is
+    observed on it), the closure reads the root-graph decision off its
+    own checkpoint, and the executed stanza-key plan joins the
+    component map once."""
+    import re
+
+    from ldtab_clj_spark.operators.extract import extract_thin_triples
+    from ldtab_clj_spark.operators.link import link_entities
+    from ldtab_clj_spark.sources.ntriples import read_ntriples
+    sc = spark.sparkContext
+    docs = synth_docs(spark, 200, seed=5).localCheckpoint()
+    thin = extract_thin_triples(docs)
+    _, n = _jobs_run(sc, "shape-link",
+                     lambda: link_entities(thin, entity_dictionary(spark)))
+    assert n <= 2, n
+    nt_dir = str(tmp_path / "nt")
+    write_ntriples(build_statements(docs, entity_dictionary(spark)),
+                   prefix_df, nt_dir)
+    nt_thin = read_ntriples(spark, nt_dir, prefix_df).localCheckpoint()
+    grouped, n = _jobs_run(sc, "shape-components",
+                           lambda: assign_components(nt_thin))
+    assert n <= 3, n
+    grouped.collect()
+    plan = grouped._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    joins = re.findall(r"(?:BroadcastHash|SortMerge|ShuffledHash)Join "
+                       r"\[(\w+)#\d+\], \[\w+#\d+\], LeftOuter", final)
+    assert joins == ["_key"], final
+    assert len(re.findall(r"Scan ExistingRDD\[a#\d+,component#",
+                          final)) == 1, final
 
 
 def test_nt_format_roundtrip(spark, tmp_path, prefix_df):

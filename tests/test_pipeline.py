@@ -68,6 +68,68 @@ def test_span_sequence_invariant(spark):
             (row.kind, row.text, row.media_ref)
 
 
+def test_span_templates_and_near_misses():
+    """One span per template gives its triples (subject, predicate,
+    object, datatype; the blank flags follow from the terms); a text
+    that misses the template its prefix or suffix selects gives
+    none."""
+    from ldtab_clj_spark.operators.extract import _parse_span
+
+    def triples(text):
+        out = _parse_span("7", 3, "text", text, "")
+        for s, p, o, dt, bs, bo in out:
+            assert bs == s.startswith("_:")
+            assert bo == (dt == "_JSONMAP" and o.startswith("_:"))
+        return [t[:4] for t in out]
+
+    i, w = "_IRI", "surface:Widget "
+    assert triples("Widget 1 contains W-2.") == [
+        (w + "1", "ex:contains", "surface:W-2", i)]
+    assert triples('Widget 3 is labeled "gear".') == [
+        (w + "3", "rdfs:label", "gear", "@en")]
+    a = "_:d7p3a"
+    assert triples("According to alice, Widget 4 powers W-5.") == [
+        (a, "owl:annotatedSource", w + "4", i),
+        (a, "owl:annotatedProperty", "ex:powers", i),
+        (a, "owl:annotatedTarget", "surface:W-5", i),
+        (a, "rdf:type", "owl:Axiom", i),
+        (a, "ex:assertedBy", "alice", "xsd:string")]
+    g, lc = "_:d7p3g", "_:d7p3l"
+    assert triples("Group: Widget 6; W-7; Widget 8 are exclusive.") == [
+        (g, "rdf:type", "owl:AllDisjointClasses", i),
+        (g, "owl:members", lc + "0", "_JSONMAP"),
+        (lc + "0", "rdf:first", w + "6", i),
+        (lc + "0", "rdf:rest", lc + "1", "_JSONMAP"),
+        (lc + "1", "rdf:first", "surface:W-7", i),
+        (lc + "1", "rdf:rest", lc + "2", "_JSONMAP"),
+        (lc + "2", "rdf:first", w + "8", i),
+        (lc + "2", "rdf:rest", "rdf:nil", i)]
+    st = "_:d7p3s"
+    assert triples("Allegedly, W-9 resembles Widget 10 (per bob).") == [
+        (st, "rdf:subject", "surface:W-9", i),
+        (st, "rdf:predicate", "ex:resembles", i),
+        (st, "rdf:object", w + "10", i),
+        (st, "rdf:type", "rdf:Statement", i),
+        (st, "ex:source", "bob", "xsd:string")]
+    r = "_:d7p3r"
+    assert triples("Rule: anything that contains Widget 11 is W-12.") == [
+        (r, "rdf:type", "owl:Restriction", i),
+        (r, "owl:onProperty", "ex:contains", i),
+        (r, "owl:someValuesFrom", w + "11", i),
+        (r, "rdfs:subClassOf", "surface:W-12", i)]
+    assert triples("Every Widget 13 powers some W-14.") == [
+        (w + "13", "rdfs:subClassOf", r, "_JSONMAP"),
+        (r, "rdf:type", "owl:Restriction", i),
+        (r, "owl:onProperty", "ex:powers", i),
+        (r, "owl:someValuesFrom", "surface:W-14", i)]
+    for miss in ["Group: a, b.", 'Widget 1 is labeled "x"',
+                 "Widget 1 contains W-2", "Widget x contains W-2.",
+                 'Widget 1 contains "W-2".', "Every Widget 1 powers W-2.",
+                 "According to alice, Widget 4 powers W-5", "Rule: x.",
+                 ""]:
+        assert triples(miss) == [], miss
+
+
 def test_pipeline_matches_oracle(statements):
     result = {row_key(r) for r in statements.collect()}
     oracle = {row_key(r) for r in oracle_statements()}
@@ -134,6 +196,35 @@ def test_materialize_append_lineage_deltas(spark, tmp_path, statements):
         by_run.setdefault(r["run_id"], 0)
         by_run[r["run_id"]] += r["rows"]
     assert by_run == {"r1": n, "r2": n}
+    assert verify_lineage(spark, out)
+
+
+def test_append_reads_only_its_own_footers(spark, tmp_path, statements,
+                                           monkeypatch):
+    """An append reads the parquet footers of the files it added, not
+    of the whole table: six appends of 4 files each read 4 footers
+    each, and the sidecar totals still add up."""
+    import pyarrow.parquet as pq
+
+    from ldtab_clj_spark.operators.materialize import (verify_lineage,
+                                                       write_statements)
+    opened = []
+    real = pq.ParquetFile
+
+    def counting(*args, **kwargs):
+        opened.append(args[0])
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(pq, "ParquetFile", counting)
+    out = str(tmp_path / "statement")
+    reads = []
+    for i in range(6):
+        opened.clear()
+        info = write_statements(statements, out, partitions=4,
+                                run_id=f"r{i}", mode="append")
+        reads.append((len(opened), info["partitions"]))
+    assert reads == [(4, 4)] * 6
+    assert info["rows"] == 6 * statements.count()
     assert verify_lineage(spark, out)
 
 
