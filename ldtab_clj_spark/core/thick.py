@@ -262,8 +262,8 @@ def thin_to_thick(triples: list[dict]) -> list[dict]:
 def drop_superfluous_annotations(rows: list[dict]) -> list[dict]:
     """Drop bare duplicates of annotated triples (import.clj:199-201):
     if (s,p,o,datatype) is stated both with and without an annotation,
-    only the annotated row survives. DF-scale variant: left-anti join in
-    operators/materialize.py."""
+    only the annotated row survives. DF-scale variant:
+    ``dedup_statements``' ``collect_set`` group-by."""
     annotated = {(r.get("subject"), r.get("predicate"), r.get("object"),
                   r.get("datatype"))
                  for r in rows if r.get("annotation")}

@@ -26,11 +26,9 @@ from pyspark.sql import functions as F
 
 from ..core.canonical import content_hash, curie_to_iri, curify_with
 from ..core.expand import expand_statement_row, merge_existential_rows
-from ..schemas import STATEMENT, THIN
+from ..schemas import STATEMENT_COLS, THIN
 from .batching import grouped_batches
 from .parallel import python_partitions
-
-STATEMENT_COLS = [f.name for f in STATEMENT.fields]
 
 
 def escape_tsv(col):
@@ -112,7 +110,8 @@ def _by_subject(statements: DataFrame) -> DataFrame:
     by subject: each wiring-subject group is one contiguous run, so
     ``_expanded`` streams with memory O(Arrow batch + largest group),
     never O(partition) (wiring groups are 2-5 rows; the sort is
-    JVM-side)."""
+    JVM-side). Over a ``dedup_statements`` output, laid out this way
+    already, the planner drops the exchange; other inputs need it."""
     return python_partitions(statements, "subject") \
         .sortWithinPartitions("subject")
 

@@ -5,8 +5,10 @@ per-partition lineage/metrics.
   (rdf_model.clj:42-51 — a Model is a triple *set*) and the
   superfluous-annotation rule (import.clj:199-201), both in
   ``dedup_statements``' one ``collect_set`` group-by;
-* writes are hash-partitioned on subject (``repartition(subject)``) so
-  per-entity reads prune, with the salt handled upstream by linking;
+* ``dedup_statements`` lays statement rows out on ``subject`` once;
+  the write keeps that layout (one file per core) and the export
+  reuses it. Parquet part files carry no bucket metadata, so reads do
+  not prune on it;
 * lineage: one metrics row per output partition checkpointed next to
   the data — any stage can verify/resume idempotently (north rule).
   Lineage is local-disk only (plain paths and ``file:`` URIs): any
@@ -24,31 +26,29 @@ from pathlib import Path
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-STATEMENT_COLS = ["assertion", "retraction", "graph", "subject",
-                  "predicate", "object", "datatype", "annotation"]
+from ..schemas import STATEMENT_COLS
+from .parallel import python_partitions
 
 
 def dedup_statements(statements: DataFrame) -> DataFrame:
     """Set semantics + drop bare duplicates of annotated triples
-    (import.clj:199-201), in ONE map-side-combinable shuffle:
-    group by the content key, collect the distinct annotation set
-    (collect_set drops nulls), then emit one row per annotation — or
-    the bare row when none exist. Equivalent to
-    dropDuplicates(all) + drop-bare-if-annotated, at half the
-    shuffles; upstream is consumed exactly once."""
+    (import.clj:199-201), in one ``subject`` shuffle that the write and
+    the export reuse: hash on ``subject`` at the Python-stage width,
+    group by the content key (it holds ``subject``: no second
+    exchange), collect the distinct annotation set (collect_set drops
+    nulls), then emit one row per annotation — or the bare row when
+    none exist. Upstream is consumed exactly once."""
     # assertion/retraction are part of the group key: rows from
     # DIFFERENT transactions are distinct history, never merged (the
     # bare-vs-annotated rule only applies within one import, where all
     # rows share a transaction — import.clj:202 hard-codes it)
-    keys = ["assertion", "retraction", "graph", "subject", "predicate",
-            "object", "datatype"]
-    g = statements.groupBy(*keys).agg(
+    keys = [c for c in STATEMENT_COLS if c != "annotation"]
+    g = python_partitions(statements, "subject").groupBy(*keys).agg(
         F.collect_set("annotation").alias("_anns"))
     ann = F.explode(
         F.when(F.size("_anns") > 0, F.col("_anns"))
         .otherwise(F.array(F.lit(None).cast("string"))))
-    return g.select(*keys, ann.alias("annotation")) \
-            .select(*STATEMENT_COLS)
+    return g.select(*keys, ann.alias("annotation"))
 
 
 _SCHEME = re.compile(r"[A-Za-z][A-Za-z0-9+.-]*:")
@@ -75,11 +75,11 @@ def _footer_rows(path: str, names) -> dict[str, int]:
 
 
 def write_statements(statements: DataFrame, path: str,
-                     partitions: int | None = None,
                      run_id: str = "run-1",
                      mode: str = "overwrite") -> dict:
-    """Subject-hash-partitioned parquet write + lineage sidecar,
-    in ONE pass over the data:
+    """Parquet write + lineage sidecar, in ONE pass over the data. The
+    input is written as laid out: a ``dedup_statements`` output (every
+    caller's) is hash-partitioned on ``subject``, one file per core.
 
     * batch metrics (rows, annotated) ride the write action itself via
       ``df.observe`` — no second scan;
@@ -94,12 +94,11 @@ def write_statements(statements: DataFrame, path: str,
     + a JSON-lines sidecar keeps the same contract locally.
     """
     _local(path)   # a remote path fails here, before the write
-    df = statements.repartition(partitions, "subject") if partitions \
-        else statements.repartition("subject")
     obs = Observation()
-    df = df.observe(obs, F.count(F.lit(1)).alias("rows"),
-                    F.sum(F.when(F.col("annotation").isNotNull(), 1)
-                          .otherwise(0)).alias("annotated"))
+    df = statements.observe(
+        obs, F.count(F.lit(1)).alias("rows"),
+        F.sum(F.when(F.col("annotation").isNotNull(), 1)
+              .otherwise(0)).alias("annotated"))
     # snapshot the directory BEFORE writing: this run's files are
     # (after − before), regardless of whether concurrent runs have
     # committed their sidecar entries yet — attributing by sidecar

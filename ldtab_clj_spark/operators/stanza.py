@@ -21,7 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..core.thick import thin_to_thick, to_statement_row
-from ..schemas import STATEMENT
+from ..schemas import STATEMENT, STATEMENT_COLS
 from .batching import grouped_batches
 from .parallel import python_partitions
 
@@ -29,7 +29,6 @@ _THIN_COLS = ["subject", "predicate", "object", "datatype",
               "is_blank_s", "is_blank_o"]
 _SORT_COLS = ["doc_id", "span_order", "subject", "predicate",
               "object", "datatype"]
-_OUT_COLS = [f.name for f in STATEMENT.fields]
 _EMIT_EVERY = 20_000  # rows per yielded Arrow batch
 
 
@@ -83,10 +82,10 @@ def _partition_stanzas(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame
         if triples:
             out.extend(to_statement_row(t) for t in thin_to_thick(triples))
         if len(out) >= _EMIT_EVERY:
-            yield pd.DataFrame(out, columns=_OUT_COLS)
+            yield pd.DataFrame(out, columns=STATEMENT_COLS)
             out = []
     if out:
-        yield pd.DataFrame(out, columns=_OUT_COLS)
+        yield pd.DataFrame(out, columns=STATEMENT_COLS)
 
 
 def thin_to_thick_df(thin: DataFrame) -> DataFrame:

@@ -19,9 +19,6 @@ from ..core.thick import (drop_superfluous_annotations, thin_to_thick,
 from ..operators.extract import _parse_span
 from ..synth import N_ENTITIES, make_doc_spans
 
-STATEMENT_COLS = ("assertion", "retraction", "graph", "subject",
-                  "predicate", "object", "datatype", "annotation")
-
 
 def single_node_media_statements(n_docs: int, seed: int = 42) -> list[dict]:
     """Single-node twin of the pipeline's multimodal stage: for every

@@ -45,6 +45,7 @@ STATEMENT = StructType([
     StructField("datatype", StringType(), False),
     StructField("annotation", StringType(), True),
 ])
+STATEMENT_COLS = STATEMENT.fieldNames()
 
 # prefix table (init.clj:22-24)
 PREFIX = StructType([

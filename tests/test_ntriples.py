@@ -113,6 +113,53 @@ def test_import_layers_plan_shape(spark, tmp_path, prefix_df):
                           final)) == 1, final
 
 
+def _hash_exchanges(spark, action) -> list[tuple[str, ...]]:
+    """Key columns of each hash exchange in the adaptive plan of the
+    last SQL execution, after running ``action`` (a write included:
+    the plan is read from the SQL status store, not from a DataFrame).
+    The store may still hold AQE's last "Current Plan" rather than its
+    "Final Plan"; both list every shuffle of these plans, whose join
+    strategies AQE leaves as they are."""
+    import re
+    action()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    runs = spark._jsparkSession.sharedState().statusStore() \
+        .executionsList()
+    desc = max((runs.apply(i) for i in range(runs.size())),
+               key=lambda e: e.executionId()).physicalPlanDescription()
+    final = desc.split("== Initial Plan ==")[0]
+    args = [re.search(rf"^\({i}\) Exchange\n(?:.*\n)*?Arguments: (.*)$",
+                      desc, re.M).group(1)
+            for i in re.findall(r"\bExchange \((\d+)\)", final)]
+    return [tuple(re.findall(r"(\w+)#\d+", m.group(1)))
+            for m in map(re.compile(r"hashpartitioning\((.*?), \d+\)")
+                         .match, args) if m]
+
+
+def test_statement_layout_plan_shape(spark, tmp_path, prefix_df):
+    """The subject layout is decided once, in dedup_statements: the
+    import write plans one ``subject`` exchange and none on the dedup
+    keys, an export over the read-back table plans one hash exchange,
+    and the N-Triples import reaches its write with one ``subject``
+    exchange."""
+    from ldtab_clj_spark.operators.export import _by_subject
+    from ldtab_clj_spark.operators.materialize import (dedup_statements,
+                                                       write_statements)
+    docs = synth_docs(spark, 200, seed=5)
+    table, nt_dir = str(tmp_path / "t"), str(tmp_path / "nt")
+    built = _hash_exchanges(spark, lambda: write_statements(
+        build_statements(docs, entity_dictionary(spark)), table))
+    assert built.count(("subject",)) == 1, built
+    assert not [k for k in built if "predicate" in k], built
+    stored = dedup_statements(spark.read.parquet(table))
+    exported = _hash_exchanges(spark, _by_subject(stored).collect)
+    assert len(exported) == 1, exported
+    write_ntriples(stored, prefix_df, nt_dir)
+    imported = _hash_exchanges(spark, lambda: write_statements(
+        import_ntriples(spark, nt_dir, prefix_df), str(tmp_path / "t2")))
+    assert imported.count(("subject",)) == 1, imported
+
+
 def test_nt_format_roundtrip(spark, tmp_path, prefix_df):
     docs = synth_docs(spark, 60, seed=13)
     statements = build_statements(docs, entity_dictionary(spark)) \

@@ -15,7 +15,6 @@ TEST_SEAMS = {
     ("operators/similarity.py", "cosine_near_dup_pairs", "max_rows"),
     ("operators/similarity.py", "_confirm_bucket_stream", "chunk"),
     ("operators/similarity.py", "srp_plane_tables", "dim"),
-    ("operators/materialize.py", "write_statements", "partitions"),
     ("synth.py", "synth_docs", "partitions"),
 }
 

@@ -167,9 +167,32 @@ def test_materialize_lineage(spark, tmp_path, statements):
     from ldtab_clj_spark.operators.materialize import (verify_lineage,
                                                        write_statements)
     out = str(tmp_path / "statement")
-    info = write_statements(statements, out, partitions=8)
+    info = write_statements(statements.repartition(8), out)
     assert info["rows"] == statements.count()
     assert info["batch_rows"] == info["rows"]
+    assert verify_lineage(spark, out)
+
+
+def test_written_table_keeps_the_subject_layout(spark, tmp_path):
+    """The write keeps dedup_statements' layout: one part file per
+    core, every subject in exactly one of them, lineage intact."""
+    from pathlib import Path
+
+    import pyarrow.parquet as pq
+
+    from ldtab_clj_spark.operators.materialize import (verify_lineage,
+                                                       write_statements)
+    out = str(tmp_path / "statement")
+    write_statements(build_statements(synth_docs(spark, 200, seed=5),
+                                      entity_dictionary(spark)), out)
+    files = sorted(Path(out).glob("*.parquet"))
+    assert len(files) == spark.sparkContext.defaultParallelism
+    seen = {}
+    for f in files:
+        for s in set(pq.read_table(f, columns=["subject"])
+                     .column("subject").to_pylist()):
+            seen[s] = seen.get(s, 0) + 1
+    assert seen and set(seen.values()) == {1}
     assert verify_lineage(spark, out)
 
 
@@ -183,8 +206,8 @@ def test_materialize_append_lineage_deltas(spark, tmp_path, statements):
                                                        write_statements)
     out = str(tmp_path / "statement")
     n = statements.count()
-    i1 = write_statements(statements, out, partitions=4, run_id="r1")
-    i2 = write_statements(statements, out, partitions=4, run_id="r2",
+    i1 = write_statements(statements.repartition(4), out, run_id="r1")
+    i2 = write_statements(statements.repartition(4), out, run_id="r2",
                           mode="append")
     assert i1["rows"] == n and i1["batch_rows"] == n
     assert i2["batch_rows"] == n and i2["rows"] == 2 * n
@@ -220,7 +243,7 @@ def test_append_reads_only_its_own_footers(spark, tmp_path, statements,
     reads = []
     for i in range(6):
         opened.clear()
-        info = write_statements(statements, out, partitions=4,
+        info = write_statements(statements.repartition(4), out,
                                 run_id=f"r{i}", mode="append")
         reads.append((len(opened), info["partitions"]))
     assert reads == [(4, 4)] * 6
@@ -244,7 +267,7 @@ def test_append_adopts_orphan_files_after_crash(spark, tmp_path,
     from ldtab_clj_spark.operators import materialize as mat
     out = str(tmp_path / "statement")
     n = statements.count()
-    write_statements(statements, out, partitions=4, run_id="r1")
+    write_statements(statements.repartition(4), out, run_id="r1")
     # simulate the crashed append: data files land, sidecar doesn't
     statements.limit(7).write.mode("append").parquet(out)
     assert not verify_lineage(spark, out)  # mismatch detected...
@@ -253,7 +276,7 @@ def test_append_adopts_orphan_files_after_crash(spark, tmp_path,
     # The age uses max(mtime, ctime) — ctime tracks the committer's
     # rename and cannot be back-dated from userspace, so the aged case
     # below lowers the threshold instead of forging timestamps.
-    i2 = write_statements(statements.limit(1), out, partitions=1,
+    i2 = write_statements(statements.limit(1).repartition(1), out,
                           run_id="r2", mode="append")
     status = verify_lineage(spark, out)
     assert not status
@@ -267,7 +290,7 @@ def test_append_adopts_orphan_files_after_crash(spark, tmp_path,
     orig = mat.ADOPT_GRACE_SECS
     mat.ADOPT_GRACE_SECS = -1.0
     try:
-        info = write_statements(statements, out, partitions=4,
+        info = write_statements(statements.repartition(4), out,
                                 run_id="r3", mode="append")
     finally:
         mat.ADOPT_GRACE_SECS = orig
@@ -373,7 +396,7 @@ def test_sidecar_double_entry_dedup_keeps_verify_true(spark, tmp_path,
                                                        verify_lineage,
                                                        write_statements)
     out = str(tmp_path / "statement")
-    write_statements(statements, out, partitions=4, run_id="r1")
+    write_statements(statements.repartition(4), out, run_id="r1")
     rows = _read_sidecar(out)
     # simulate the race: a second run re-enters every existing file
     _append_sidecar(out, [dict(r, run_id="r2") for r in rows])
@@ -391,7 +414,7 @@ def test_lineage_accepts_file_uri(spark, tmp_path, statements):
     from ldtab_clj_spark.operators.materialize import (verify_lineage,
                                                        write_statements)
     out = tmp_path / "statement"
-    info = write_statements(statements, f"file:{out}", partitions=2)
+    info = write_statements(statements.repartition(2), f"file:{out}")
     assert (tmp_path / "statement_lineage" / "lineage.json").exists()
     assert info["rows"] == info["batch_rows"] > 0
     assert verify_lineage(spark, f"file:{out}")

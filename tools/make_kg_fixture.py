@@ -20,7 +20,8 @@ import pyarrow.parquet as pq
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from ldtab_clj_spark.plans.single_node import (  # noqa: E402
-    STATEMENT_COLS, single_node_statements)
+    single_node_statements)
+from ldtab_clj_spark.schemas import STATEMENT_COLS  # noqa: E402
 
 N_DOCS = 300
 SEED = 42

@@ -93,6 +93,7 @@ def main() -> None:
         "batch_sec_p90": round(sorted(batch_secs)[
             int(0.9 * (len(batch_secs) - 1))], 3),
         "batch_sec_max": round(max(batch_secs), 3),
+        "table_files": len(list(Path(table).glob("*.parquet"))),
         "median_first_half": round(first_half, 3),
         "median_second_half": round(second_half, 3),
         # boundedness: late batches must not be systematically slower
