@@ -114,85 +114,128 @@ def srp_plane_tables(n_tables: int = 8, k_planes: int = 3,
             for t in range(n_tables)]
 
 
-def _srp_bands_with_vecs_arrow(embeddings: DataFrame,
-                               plane_tables) -> DataFrame:
-    """(vec_id, tbl, bucket, _raw float32, _norm) in one numpy pass:
-    one numpy matmul per Arrow batch assigns the bucket bits, and
-    the RAW vector and its norm ride along so the per-bucket confirm
-    needs no vector join at all. The norm accumulates
-    dimension-by-dimension in index order — the exact IEEE sequence of
-    the JVM ``with_norm`` fold (pair set pinned against the
-    ``ann_srp_near_dup`` DuckDB oracle). Vector transport is L copies per
-    vector on ONE (tbl, bucket) shuffle — linear in the corpus, vs the
-    former per-candidate-pair attach which was quadratic (measured
-    120 GB of confirm traffic at a 4× bench scale)."""
+# Each confirm slab gathers both rows of each of its pairs as float64:
+# 16·dim bytes per pair, so a slab holds SLAB_BYTES // (16·dim) pairs.
+SLAB_BYTES = 4 << 20
+
+
+def _vectors(batch, name: str):
+    """The ``list<float>`` column ``name`` of an Arrow batch as one
+    (rows, dim) float32 array over its flat child buffer, with no
+    per-row objects. ``flatten()`` (not ``.values``) honours a sliced
+    batch's offset. A null vector, or lists of unequal length, raise
+    ValueError: a reshape alone would not notice lengths that differ
+    but still sum to rows·dim."""
+    import pyarrow.compute as pc
+    col = batch[name]
+    if col.null_count:
+        raise ValueError(f"column {name!r} holds {col.null_count} "
+                         "null vector(s)")
+    span = pc.min_max(pc.list_value_length(col))
+    dim = span["min"].as_py()
+    if dim != span["max"].as_py():
+        raise ValueError(f"column {name!r} holds vectors of unequal "
+                         f"length ({dim} to {span['max'].as_py()})")
+    return col.flatten().to_numpy(zero_copy_only=False).reshape(
+        len(col), dim)
+
+
+def _srp_bands_stream(plane_tables):
+    """The mapInArrow function of ``_srp_bands_with_vecs_arrow``: per
+    Arrow batch, the embeddings as one (n, dim) float32 view, one
+    numpy matmul for the bucket bits, and the fold-order norm; ``_raw``
+    goes out as a ListArray over ``np.repeat(raw, L, axis=0)``."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
     planes = np.array([p for t in plane_tables for p in t],
                       dtype=np.float64)                    # (L*k, dim)
     n_tables, k = len(plane_tables), len(plane_tables[0])
     weights = (1 << np.arange(k)).astype(np.int64)
 
     def bands(batches):
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            n = batch.num_rows
+            if not n:
                 continue
-            raw = pdf[VEC_COL].to_numpy()
-            v = np.stack(raw).astype(np.float64)           # n × dim
+            raw = _vectors(batch, VEC_COL)                 # n × dim
+            v = raw.astype(np.float64)
             bits = (v @ planes.T) >= 0                     # n × (L*k)
-            buckets = bits.reshape(len(pdf), n_tables, k) @ weights
-            nrm = np.zeros(len(pdf))
+            buckets = bits.reshape(n, n_tables, k) @ weights
+            nrm = np.zeros(n)
             for d in range(v.shape[1]):    # fold-order accumulation
                 nrm += v[:, d] * v[:, d]
             nrm = np.sqrt(nrm)
-            yield pd.DataFrame({
-                "vec_id": np.repeat(pdf["vec_id"].to_numpy(), n_tables),
-                "tbl": np.tile(np.arange(n_tables), len(pdf)),
-                "bucket": buckets.reshape(-1),
-                "_raw": np.repeat(raw, n_tables),
-                "_norm": np.repeat(nrm, n_tables),
-            })
+            offsets = np.arange(n * n_tables + 1) * raw.shape[1]
+            ids = batch["vec_id"].to_numpy(zero_copy_only=False)
+            yield pa.RecordBatch.from_arrays([
+                pa.array(np.repeat(ids, n_tables)),
+                pa.array(np.tile(np.arange(n_tables, dtype=np.int32), n)),
+                pa.array(buckets.reshape(-1)),
+                pa.ListArray.from_arrays(
+                    pa.array(offsets, pa.int32()),
+                    pa.array(np.repeat(raw, n_tables, axis=0).reshape(-1)),
+                    type=batch[VEC_COL].type),
+                pa.array(np.repeat(nrm, n_tables)),
+            ], names=["vec_id", "tbl", "bucket", "_raw", "_norm"])
 
+    return bands
+
+
+def _srp_bands_with_vecs_arrow(embeddings: DataFrame,
+                               plane_tables) -> DataFrame:
+    """(vec_id, tbl, bucket, _raw float32, _norm) in one mapInArrow
+    pass over flat buffers: one numpy matmul per Arrow batch assigns
+    the bucket bits, and the RAW vector and its norm ride along so the
+    per-bucket confirm needs no vector join at all. The norm
+    accumulates dimension-by-dimension in index order — the exact IEEE
+    sequence of the JVM ``with_norm`` fold (pair set pinned against the
+    ``ann_srp_near_dup`` DuckDB oracle). Vector transport is L copies
+    per vector on ONE (tbl, bucket) shuffle — linear in the corpus, vs
+    the former per-candidate-pair attach which was quadratic (measured
+    120 GB of confirm traffic at a 4× bench scale)."""
     src = python_partitions(embeddings.select("vec_id", VEC_COL))
-    return src.mapInPandas(
-        bands, "vec_id long, tbl int, bucket long, "
-               "_raw array<float>, _norm double")
+    return src.mapInArrow(
+        _srp_bands_stream(plane_tables),
+        "vec_id long, tbl int, bucket long, "
+        "_raw array<float>, _norm double")
 
 
 def _confirm_bucket_stream(threshold: float,
-                           chunk: int = 262_144):
-    """Streaming per-(tbl, bucket) exact-cosine confirm for
-    mapInPandas over a bucket-partitioned, bucket-sorted relation:
-    grouped_batches re-chunks the Arrow stream into frames of complete
-    ``_grp`` runs (one numpy slice per bucket — an applyInPandas
-    variant paid ~1 ms of Arrow framing per group, which at L×2^k ≈
-    2000 mostly-tiny buckets doubled the query at sf0.1), and every
-    bucket confirms all its pairs (lower vec_id first) vectorized.
-    The per-pair math is the SAME einsum/divide sequence as the former
-    pair-level confirm (float32 → exact float64 cast, einsum
+                           slab_bytes: int = SLAB_BYTES):
+    """Streaming per-(tbl, bucket) exact-cosine confirm for mapInArrow
+    over a bucket-partitioned, bucket-sorted relation: grouped_batches
+    re-chunks the Arrow stream into batches of complete ``_grp`` runs
+    (one numpy slice per bucket — an applyInPandas variant paid ~1 ms
+    of Arrow framing per group, which at L×2^k ≈ 2000 mostly-tiny
+    buckets doubled the query at sf0.1), Arrow compute finds the runs,
+    and every bucket confirms all its pairs (lower vec_id first)
+    vectorized. The per-pair math is the SAME einsum/divide sequence as
+    the former pair-level confirm (float32 → exact float64 cast, einsum
     'ij,ij->i' over row-gathered matrices, dot/(na*nb)), so sims are
-    bit-identical; only the transport changed. Pair generation is
-    chunked (CHUNK pairs per slab) so transient memory stays bounded
-    for hot buckets; the quadratic TIME of a giant bucket is inherent
-    to its candidate count."""
+    bit-identical; only the transport changed.
+
+    A bucket's pairs, in row-major upper-triangle order, are cut into
+    slabs of ``slab_bytes // (16·dim)`` pairs, so the two float64
+    gathers of a slab together stay within ``slab_bytes`` (4 MiB by
+    default) whatever the bucket size or dim: a hot bucket cannot blow
+    up the worker. The quadratic TIME of a giant bucket is inherent to
+    its candidate count."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
     from .batching import grouped_batches
-    CHUNK = chunk
 
     def confirm_run(ids, V, nrm, out_a, out_b):
-        B = len(ids)
-        bs = max(1, CHUNK // B)
-        for i0 in range(0, B - 1, bs):
-            i1 = min(i0 + bs, B - 1)
-            r = np.arange(i0, i1)
-            counts = B - 1 - r
-            total = int(counts.sum())
-            ii = np.repeat(r, counts)
-            starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-            jj = (np.arange(total) - np.repeat(starts, counts)
-                  + np.repeat(r + 1, counts))
+        B, dim = V.shape
+        pairs = max(1, slab_bytes // (16 * max(dim, 1)))
+        # starts[i]: index of row i's first pair (i, i+1)
+        starts = np.concatenate(([0], np.cumsum(np.arange(B - 1, 0, -1))))
+        total = int(starts[-1])
+        for p0 in range(0, total, pairs):
+            p = np.arange(p0, min(p0 + pairs, total))
+            ii = np.searchsorted(starts, p, side="right") - 1
+            jj = p - starts[ii] + ii + 1
             sim = (np.einsum("ij,ij->i", V[ii], V[jj])
                    / (nrm[ii] * nrm[jj]))
             keep = sim >= threshold
@@ -202,23 +245,27 @@ def _confirm_bucket_stream(threshold: float,
             out_b.append(np.maximum(ia[ne], jb[ne]))
 
     def confirm(batches):
-        for pdf in grouped_batches(batches, "_grp"):
-            g = pdf["_grp"].to_numpy()
-            change = np.flatnonzero(g[1:] != g[:-1]) + 1
-            bounds = np.concatenate(([0], change, [len(g)]))
-            ids_all = pdf["vec_id"].to_numpy()
-            raw_all = pdf["_raw"].to_numpy()
-            nrm_all = pdf["_norm"].to_numpy()
+        for batch in grouped_batches(batches, "_grp"):
+            g, n = batch["_grp"], batch.num_rows
+            change = pc.indices_nonzero(pc.not_equal(
+                g.slice(1), g.slice(0, n - 1))).to_numpy()
+            bounds = np.concatenate(([0], change.astype(np.int64) + 1,
+                                     [n]))
+            ids_all = batch["vec_id"].to_numpy(zero_copy_only=False)
+            raw_all = _vectors(batch, "_raw")
+            nrm_all = batch["_norm"].to_numpy(zero_copy_only=False)
             out_a, out_b = [], []
             for s0, s1 in zip(bounds[:-1], bounds[1:]):
                 if s1 - s0 < 2:
                     continue
                 confirm_run(ids_all[s0:s1],
-                            np.stack(raw_all[s0:s1]).astype(np.float64),
+                            raw_all[s0:s1].astype(np.float64),
                             nrm_all[s0:s1], out_a, out_b)
             if out_a:
-                yield pd.DataFrame({"vec_a": np.concatenate(out_a),
-                                    "vec_b": np.concatenate(out_b)})
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(np.concatenate(out_a)),
+                     pa.array(np.concatenate(out_b))],
+                    names=["vec_a", "vec_b"])
 
     return confirm
 
@@ -261,10 +308,12 @@ def srp_banded_near_dup(embeddings: DataFrame,
     (L copies per vector — linear transport; re-attaching both vectors
     per candidate pair was quadratic in bucket occupancy, 7M pairs /
     3.6 GB at sf1.0 and ~120 GB at 4×), and each bucket confirms all
-    its pairs inside one vectorized run of the grouped mapInPandas
-    stream, so only surviving id pairs materialize as rows. The
-    terminal distinct collapses multi-table hits and duplicate input
-    ids. ``mode`` accepts only "arrow" (kept so existing callers that
+    its pairs inside one vectorized run of the grouped mapInArrow
+    stream, so only surviving id pairs materialize as rows. Both Python
+    stages are mapInArrow over flat buffers (no per-row vector
+    objects), and the confirm cuts each bucket into byte-bounded slabs
+    (``SLAB_BYTES``). The terminal distinct collapses multi-table hits
+    and duplicate input ids. ``mode`` accepts only "arrow" (kept so existing callers that
     name it keep working)."""
     if mode != "arrow":
         raise ValueError(f"unknown srp mode {mode!r} (use 'arrow')")
@@ -274,8 +323,8 @@ def srp_banded_near_dup(embeddings: DataFrame,
     part = (python_partitions(grouped, "tbl", "bucket")
             .sortWithinPartitions("_grp")
             .select("_grp", "vec_id", "_raw", "_norm"))
-    return (part.mapInPandas(_confirm_bucket_stream(threshold),
-                             "vec_a long, vec_b long")
+    return (part.mapInArrow(_confirm_bucket_stream(threshold),
+                            "vec_a long, vec_b long")
             .distinct())
 
 

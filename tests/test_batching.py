@@ -176,3 +176,49 @@ def test_minhash_matches_duckdb_oracle(spark):
     want_e = _oracle(sql, EDGE_DOCS)
     assert got_e == want_e, (sorted(got_e - want_e),
                              sorted(want_e - got_e))
+
+
+def _batch(kind, rows):
+    """One batch of (k, v) rows as a pandas DataFrame or an Arrow
+    RecordBatch."""
+    import pyarrow as pa
+    if kind == "pandas":
+        return pd.DataFrame(rows, columns=["k", "v"])
+    return pa.RecordBatch.from_pydict(
+        {"k": pa.array([r[0] for r in rows], pa.string()),
+         "v": pa.array([r[1] for r in rows], pa.int64())})
+
+
+def _batch_rows(frame):
+    if isinstance(frame, pd.DataFrame):
+        return list(map(tuple, frame.itertuples(index=False)))
+    return list(zip(frame["k"].to_pylist(), frame["v"].to_pylist()))
+
+
+@pytest.mark.parametrize("kind", ["pandas", "arrow"])
+@pytest.mark.parametrize("rows,sizes", [
+    # a run ("b") straddling three batches
+    ([("a", 1)] + [("b", i) for i in range(2, 9)] + [("c", 9)],
+     [3, 3, 3]),
+    # a partition holding one key
+    ([("x", i) for i in range(10)], [4, 0, 4, 2]),
+    # empty batches around and between groups
+    (ROWS, [0, 2, 0, 0, 4, 0]),
+    ([], [0, 0]),
+])
+def test_grouped_batches_pandas_and_arrow(kind, rows, sizes):
+    """One carry loop for both batch types: every yielded frame has
+    the input's type and holds only complete groups, and together they
+    are the input rows in order."""
+    batches, i = [], 0
+    for n in sizes:
+        batches.append(_batch(kind, rows[i:i + n]))
+        i += n
+    got = list(grouped_batches(iter(batches), "k"))
+    assert all(type(f) is type(batches[0]) and len(f) for f in got)
+    seen = []
+    for frame in got:
+        keys = list(dict.fromkeys(k for k, _ in _batch_rows(frame)))
+        assert not set(keys) & set(seen), "group split across yields"
+        seen += keys
+    assert [r for f in got for r in _batch_rows(f)] == rows

@@ -13,7 +13,7 @@ TEST_SEAMS = {
     ("cli.py", "main", "argv"),
     ("operators/dedup.py", "word_jaccard_pairs", "max_rows"),
     ("operators/similarity.py", "cosine_near_dup_pairs", "max_rows"),
-    ("operators/similarity.py", "_confirm_bucket_stream", "chunk"),
+    ("operators/similarity.py", "_confirm_bucket_stream", "slab_bytes"),
     ("operators/similarity.py", "srp_plane_tables", "dim"),
     ("synth.py", "synth_docs", "partitions"),
 }

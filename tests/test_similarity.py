@@ -161,10 +161,11 @@ def test_brute_force_guards_trip(spark, emb):
 
 
 def test_srp_bucket_confirm_chunked_matches_bruteforce(spark):
-    """The bucket-stream confirm's chunked pair generation (engaged
-    only for buckets larger than CHUNK/B rows — i.e. at bench scale,
-    where no oracle runs) must emit exactly the brute-force pair set,
-    and tiny chunks must agree with one-shot chunks."""
+    """The bucket-stream confirm's slabbed pair generation (several
+    slabs per bucket only for buckets with more than
+    SLAB_BYTES // (16·dim) pairs — i.e. at bench scale, where no oracle
+    runs) must emit exactly the brute-force pair set, and tiny slabs
+    must agree with the default slabs."""
     import numpy as np
 
     from ldtab_clj_spark.operators.similarity import (
@@ -199,7 +200,7 @@ def test_srp_bucket_confirm_chunked_matches_bruteforce(spark):
                         want.add((min(i, j), max(i, j)))
     assert got == want and got
 
-    # tiny chunk (forces many slabs per bucket) == huge chunk
+    # tiny slabs (7 pairs each at dim 8) == default slabs
     from pyspark.sql import functions as F
 
     from ldtab_clj_spark.operators.similarity import \
@@ -210,7 +211,99 @@ def test_srp_bucket_confirm_chunked_matches_bruteforce(spark):
             .repartition(4, "tbl", "bucket")
             .sortWithinPartitions("_grp")
             .select("_grp", "vec_id", "_raw", "_norm"))
-    small = {(r.vec_a, r.vec_b) for r in part.mapInPandas(
-        _confirm_bucket_stream(thr, chunk=37),
+    small = {(r.vec_a, r.vec_b) for r in part.mapInArrow(
+        _confirm_bucket_stream(thr, slab_bytes=1000),
         "vec_a long, vec_b long").distinct().collect()}
     assert small == got
+
+
+def _bucket_batches(groups, dim, sizes, seed):
+    """Arrow batches of the confirm's input (_grp, vec_id, _raw, _norm)
+    for ``groups`` = [(grp, rows)] in order, cut at ``sizes``; returns
+    (batches, float32 vectors, group label per row)."""
+    import numpy as np
+    import pyarrow as pa
+    rng = np.random.default_rng(seed)
+    labels = [g for g, rows in groups for _ in range(rows)]
+    n = len(labels)
+    V = rng.normal(size=(n, dim)).astype(np.float32)
+    v = V.astype(np.float64)
+    nrm = np.sqrt(np.einsum("ij,ij->i", v, v))
+    table = pa.table({
+        "_grp": pa.array(labels, pa.string()),
+        "vec_id": pa.array(np.arange(n), pa.int64()),
+        "_raw": pa.ListArray.from_arrays(
+            pa.array(np.arange(n + 1) * dim, pa.int32()),
+            pa.array(V.reshape(-1))),
+        "_norm": pa.array(nrm)}).combine_chunks()
+    assert sum(sizes) == n
+    starts = np.cumsum([0] + sizes)
+    return ([table.slice(s, k).to_batches()[0]
+             for s, k in zip(starts, sizes)], V, labels)
+
+
+def test_srp_confirm_hot_bucket_is_byte_bounded():
+    """Bad shape: one hot LSH bucket (1,000 vectors at dim 128, i.e.
+    499,500 candidate pairs) straddling Arrow batch boundaries, between
+    two small buckets. The confirm emits exactly the brute-force pair
+    set, and its traced peak stays within a small multiple of
+    SLAB_BYTES: each slab's two float64 gathers are bounded in bytes,
+    not in pairs (262,144-pair slabs took hundreds of MB here)."""
+    import tracemalloc
+
+    import numpy as np
+
+    from ldtab_clj_spark.operators.similarity import (
+        SLAB_BYTES, _confirm_bucket_stream)
+
+    dim, thr = 128, 0.3
+    batches, V, labels = _bucket_batches(
+        [("0:0", 3), ("0:1", 1000), ("0:2", 2)], dim, [400, 400, 205],
+        seed=14)
+    v = V.astype(np.float64)
+    nrm = np.sqrt(np.einsum("ij,ij->i", v, v))
+    sim = (v @ v.T) / np.outer(nrm, nrm)
+    same = np.array(labels)[:, None] == np.array(labels)[None, :]
+    iu = np.triu_indices(len(V), 1)
+    # no pair within rounding distance of the threshold, so the
+    # matmul brute force and the confirm's einsum agree on every pair
+    assert np.abs(sim[iu] - thr).min() > 1e-9
+    hit = (sim >= thr) & same
+    want = {(int(i), int(j)) for i, j in zip(*iu) if hit[i, j]}
+
+    tracemalloc.start()
+    try:
+        out = list(_confirm_bucket_stream(thr)(iter(batches)))
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    got = {(a, b) for batch in out
+           for a, b in zip(batch["vec_a"].to_pylist(),
+                           batch["vec_b"].to_pylist())}
+    assert got == want and got
+    assert peak < 2 * SLAB_BYTES, peak
+
+
+@pytest.mark.parametrize("vectors", [
+    [[1.0, 2.0], None, [5.0, 6.0]],          # a null embedding
+    [[1.0, 2.0, 3.0], [4.0], [5.0, 6.0]],    # 6 values = 3 rows × 2
+])
+def test_srp_bands_reject_malformed_vectors(vectors):
+    """A null embedding, or lists of unequal length, raise ValueError
+    naming the column, also when the lengths sum to rows × dim; a
+    sliced batch reads its own rows, not its parent's."""
+    import pyarrow as pa
+
+    from ldtab_clj_spark.operators.similarity import _srp_bands_stream
+
+    bands = _srp_bands_stream(srp_plane_tables(n_tables=2, k_planes=1,
+                                               dim=2))
+    batch = pa.RecordBatch.from_pydict({
+        "vec_id": pa.array([0, 1, 2], pa.int64()),
+        "embedding": pa.array(vectors, pa.list_(pa.float32()))})
+    with pytest.raises(ValueError, match="'embedding'"):
+        list(bands(iter([batch])))
+    # the row after the bad one is well-formed on its own
+    (out,) = bands(iter([batch.slice(2)]))
+    assert out["vec_id"].to_pylist() == [2, 2]
+    assert out["_raw"].to_pylist() == [[5.0, 6.0]] * 2

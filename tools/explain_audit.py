@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import re
 import sys
+import tempfile
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -35,7 +36,8 @@ MARKS = ["PhotonScan", "BroadcastHashJoin", "SortMergeJoin",
          "ShuffledHashJoin", "BroadcastNestedLoopJoin", "HashAggregate",
          "ObjectHashAggregate", "SortAggregate", "Exchange",
          "AQEShuffleRead", "WholeStageCodegen", "ArrowEvalPython",
-         "MapInPandas", "FlatMapGroupsInPandas", "Window", "Generate"]
+         "MapInPandas", "MapInArrow", "FlatMapGroupsInPandas", "Window",
+         "Generate"]
 
 
 def op_counts(plan: str) -> dict[str, int]:
@@ -51,29 +53,40 @@ def op_counts(plan: str) -> dict[str, int]:
 
 def kg_python_stages(spark) -> list[str]:
     """kg stanza and export stages in isolation, executed on 200 docs:
-    each is ONE MapInPandas (one Python worker per task), and no
-    AQEShuffleRead coalesces its pinned shuffle in the final plan."""
+    each is ONE MapInPandas (one Python worker per task) behind ONE
+    exchange, and no AQEShuffleRead coalesces its pinned shuffle in the
+    final plan. The export runs as the CLI runs it: dedup-on-read over
+    a written table, whose ``subject`` exchange the export reuses (a
+    checkpoint would forget that layout and plan a second one)."""
     from ldtab_clj_spark.operators import export, extract, link, stanza
+    from ldtab_clj_spark.operators.materialize import (dedup_statements,
+                                                       write_statements)
     from ldtab_clj_spark.plans.pipeline import build_statements
     from ldtab_clj_spark.synth import entity_dictionary, synth_docs
     docs, ents = synth_docs(spark, 200, seed=5), entity_dictionary(spark)
     linked = link.link_entities(extract.extract_thin_triples(docs), ents)
-    stmts = build_statements(docs, ents).localCheckpoint()
     prefix = spark.createDataFrame([("ex", "http://example.com/")],
                                    "prefix string, base string")
     out = []
-    for name, df in [
-            ("stanza", stanza.thin_to_thick_df(linked.localCheckpoint())),
-            ("export_ntriples", export.to_ntriples_lines(stmts, prefix)),
-            ("export_turtle", export.to_turtle_lines(stmts, prefix))]:
-        df.collect()  # AQE's final plan exists once the plan has run
-        counts = op_counts(df._jdf.queryExecution().executedPlan()
-                           .toString())
-        assert counts.get("MapInPandas") == 1 \
-            and "AQEShuffleRead" not in counts, (name, counts)
-        out.append(f"## kg_{name}_stage (isolated, executed)\noperators: "
-                   + ", ".join(f"{k}×{v}" for k, v in sorted(counts.items()))
-                   + f"\n- {df.rdd.getNumPartitions()} tasks\n\n")
+    with tempfile.TemporaryDirectory() as tmp:
+        table = f"{tmp}/statement"
+        write_statements(build_statements(docs, ents), table)
+        stmts = dedup_statements(spark.read.parquet(table))
+        for name, df in [
+                ("stanza",
+                 stanza.thin_to_thick_df(linked.localCheckpoint())),
+                ("export_ntriples", export.to_ntriples_lines(stmts, prefix)),
+                ("export_turtle", export.to_turtle_lines(stmts, prefix))]:
+            df.collect()  # AQE's final plan exists once the plan has run
+            counts = op_counts(df._jdf.queryExecution().executedPlan()
+                               .toString())
+            assert counts.get("MapInPandas") == 1 \
+                and counts.get("Exchange") == 1 \
+                and "AQEShuffleRead" not in counts, (name, counts)
+            out.append(f"## kg_{name}_stage (isolated, executed)\n"
+                       "operators: " + ", ".join(
+                           f"{k}×{v}" for k, v in sorted(counts.items()))
+                       + f"\n- {df.rdd.getNumPartitions()} tasks\n\n")
     return out
 
 
