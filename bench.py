@@ -60,7 +60,7 @@ def _ann_srp_scaled(spark, sf_dir):
     emb = load(spark, sf_dir, "embeddings")
     return srp_banded_near_dup(emb, srp_plane_tables(n_tables=8,
                                                      k_planes=8),
-                               threshold=0.4, mode="arrow")
+                               threshold=0.4)
 
 
 def run_suite(spark) -> dict:

@@ -15,7 +15,7 @@ from __future__ import annotations
 import json
 from typing import Any
 
-from .canonical import content_hash, is_wiring_blanknode
+from .canonical import canonical_dumps, content_hash, is_wiring_blanknode
 
 
 def parse_json_tolerant(value: Any) -> Any:
@@ -344,8 +344,7 @@ def merge_existential_rows(rows: list[dict]) -> list[dict]:
             "graph": first.get("graph"),
             "subject": subj,
             "predicate": "unknown",
-            "object": json.dumps(pmap, sort_keys=True,
-                                 separators=(",", ":"), ensure_ascii=False),
+            "object": canonical_dumps(pmap),
             "datatype": "_JSONMAP",
             "annotation": first.get("annotation"),
         })

@@ -78,12 +78,15 @@ def _resolve_column(df: DataFrame, col: str, winners: DataFrame, guard,
         # small dict: ONE broadcast probe of all winners (a head/tail
         # split pays only when the tail shuffles); no salt, and the
         # fact side never leaves its stage. A surface whose is_head is
-        # null is neither head nor tail: it stays unlinked.
+        # null is neither head nor tail: it stays unlinked. The hint is
+        # sized by the observed tail (link_entities' gate).
         ent = F.when(F.col("is_head").isNotNull(), F.col("entity"))
         df = df.join(F.broadcast(_keys(winners, ent.alias("_ent"))),
                      on="_surf", how="left")
         return _finish_column(df, col, "_ent")
 
+    # the head is the hot fraction of the dictionary: broadcast it
+    # whatever the tail size the gate observed
     head_k = _keys(winners.filter("is_head"),
                    F.col("entity").alias("_head_ent"))
     df = df.join(F.broadcast(head_k), on="_surf", how="left")

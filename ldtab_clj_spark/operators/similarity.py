@@ -50,6 +50,8 @@ def cosine_topk(embeddings: DataFrame, queries: DataFrame,
     qs = with_norm(queries).select(
         F.col("vec_id").alias("query_id"),
         F.col("_v").alias("_q"), F.col("_norm").alias("_qnorm"))
+    # the caller sizes the query set; broadcasting it keeps the
+    # nested-loop join from building on the corpus
     scored = (corpus.join(F.broadcast(qs),
                           F.col("neighbor_id") != F.col("query_id"))
               .withColumn("sim", _dot(F.col("_v"), F.col("_q"))
@@ -403,6 +405,7 @@ def ivf_cosine_topk(embeddings: DataFrame, queries: DataFrame,
               .select(F.col("vec_id").alias("query_id"),
                       F.col("_v").alias("_q"),
                       F.col("_norm").alias("_qnorm"))
+              # n_centroids rows, set by the caller
               .join(F.broadcast(cent))
               .withColumn("csim", _dot(F.col("_q"), F.col("_c"))
                           / (F.col("_qnorm") * F.col("_cnorm")))
@@ -413,7 +416,7 @@ def ivf_cosine_topk(embeddings: DataFrame, queries: DataFrame,
               .select("query_id", "_q", "_qnorm", "cent_id"))
     # probe scoring: the fold-order-exact vectorized pair dot (same
     # bit pattern as the ``_dot`` fold, so near-tied ranks cannot
-    # drift)
+    # drift). probes: n_probe rows per query, the caller's sizes
     scored = (assigned.join(F.broadcast(probes), "cent_id")
               .filter(F.col("vec_id") != F.col("query_id"))
               .withColumn("sim",
@@ -450,6 +453,7 @@ def lsh_cosine_topk(embeddings: DataFrame, queries: DataFrame,
     qs = srp_bucket(with_norm(queries), planes).select(
         F.col("vec_id").alias("query_id"),
         F.col("_v").alias("_q"), F.col("_norm").alias("_qnorm"), "bucket")
+    # the caller sizes the query set
     scored = (corpus.join(F.broadcast(qs), "bucket")
               .filter(F.col("neighbor_id") != F.col("query_id"))
               .withColumn("sim", _dot(F.col("_v"), F.col("_q"))

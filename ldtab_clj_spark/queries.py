@@ -122,6 +122,8 @@ def j5_prefix_longest_match(spark, sf):
     against a broadcast prefix dict (thin2thick.clj:35-42)."""
     docs = load(spark, sf, "documents").select("doc_id", "source")
     pfx = spark.createDataFrame(PREFIXES, "prefix string, base string")
+    # fixed 3-row literal, whose plan estimate is unknown (Long.MAX): the
+    # hint keeps the nested-loop join building on it, not on documents
     joined = docs.join(F.broadcast(pfx),
                        F.col("source").startswith(F.col("base")), "left")
     w = Window.partitionBy("doc_id").orderBy(
@@ -136,12 +138,13 @@ def j5_prefix_longest_match(spark, sf):
 
 def j8_entity_link_join(spark, sf):
     """J8: mention→candidate linking shape on driver tables: orders
-    (mentions) joined to a broadcast head dict (top customers) and
-    shuffle-joined to the tail."""
+    (mentions) joined to a head dict (top customers) and to the tail.
+    Both dicts grow with the customer table, so the broadcast threshold
+    and AQE decide each join (the tail too is broadcast at sf0.1)."""
     o = load(spark, sf, "orders")
     c = load(spark, sf, "customer")
-    head = F.broadcast(c.filter(F.col("c_custkey") % 10 == 0)
-                       .select("c_custkey", "c_name"))
+    head = c.filter(F.col("c_custkey") % 10 == 0) \
+            .select("c_custkey", "c_name")
     tail = c.filter(F.col("c_custkey") % 10 != 0) \
             .select("c_custkey", "c_name")
     h = o.join(head, F.col("o_custkey") == F.col("c_custkey"), "inner")
@@ -194,11 +197,10 @@ def w4_rank_window(spark, sf):
 
 def f7_statement_rows(spark, sf):
     """F7/K1: encode-json row projection (import.clj:19-31) over a
-    broadcast dim join."""
+    dim join."""
     n = load(spark, sf, "nation")
     r = load(spark, sf, "region")
-    return (n.join(F.broadcast(r),
-                   F.col("n_regionkey") == F.col("r_regionkey"))
+    return (n.join(r, F.col("n_regionkey") == F.col("r_regionkey"))
             .select(F.lit(1).cast("long").alias("assertion"),
                     F.lit(0).cast("long").alias("retraction"),
                     F.lit("graph").alias("graph"),
@@ -250,33 +252,39 @@ def tpch_q3(spark, sf):
 def tpch_q5(spark, sf):
     """Region predicate pushed to BOTH dims up front (guide §3.2):
     only ASIA nations (5 of 25) can survive the final region join, so
-    supplier and customer are pre-filtered to those nationkeys before
+    supplier and customer are semi-joined to those nationkeys before
     any fact join — inner joins commute, result identical (DuckDB-
-    verified). The ~80% dead lineitem rows then drop at the broadcast
-    supplier join BEFORE the l_orderkey/o_orderkey shuffle instead of
-    after it."""
+    verified). Revenue is summed per s_nationkey and n_name attached
+    after the aggregate (one name per key, so the rows are the same).
+    Supplier grows with SF, so the threshold and AQE size its join; the
+    semi-join keeps supplier's own scan estimate, so lineitem ⋈
+    supplier builds on supplier and the ~80% dead lineitem rows drop
+    BEFORE the l_orderkey/o_orderkey shuffle."""
     r = load(spark, sf, "region").filter(F.col("r_name") == "ASIA")
     n = load(spark, sf, "nation")
+    # hinted: fixed dims at any SF (1 region row, 5 of the 25 nations)
     asia_n = (n.join(F.broadcast(r),
                      F.col("n_regionkey") == F.col("r_regionkey"))
               .select("n_nationkey", "n_name"))
+    asia_keys = F.broadcast(asia_n.select("n_nationkey"))
     s = (load(spark, sf, "supplier")
-         .join(F.broadcast(asia_n),
-               F.col("s_nationkey") == F.col("n_nationkey"))
-         .select("s_suppkey", "s_nationkey", "n_name"))
+         .join(asia_keys, F.col("s_nationkey") == F.col("n_nationkey"),
+               "left_semi")
+         .select("s_suppkey", "s_nationkey"))
     c = (load(spark, sf, "customer")
-         .join(F.broadcast(asia_n.select("n_nationkey")),
-               F.col("c_nationkey") == F.col("n_nationkey"), "left_semi")
+         .join(asia_keys, F.col("c_nationkey") == F.col("n_nationkey"),
+               "left_semi")
          .select("c_custkey", "c_nationkey"))
     o = load(spark, sf, "orders").select("o_orderkey", "o_custkey")
     li = load(spark, sf, "lineitem")
-    return (li.join(F.broadcast(s),
-                    F.col("l_suppkey") == F.col("s_suppkey"))
+    return (li.join(s, F.col("l_suppkey") == F.col("s_suppkey"))
             .join(o, F.col("l_orderkey") == F.col("o_orderkey"))
             .join(c, (F.col("o_custkey") == F.col("c_custkey"))
                   & (F.col("c_nationkey") == F.col("s_nationkey")))
-            .groupBy("n_name")
-            .agg(_revenue_sum()))
+            .groupBy("s_nationkey")
+            .agg(_revenue_sum())
+            .join(asia_n, F.col("s_nationkey") == F.col("n_nationkey"))
+            .select("n_name", "revenue"))
 
 
 def tpch_q6(spark, sf):
@@ -308,8 +316,7 @@ def tpch_q14(spark, sf):
     p = load(spark, sf, "part")
     rev = _cents("l_extendedprice") * (100 - _cents("l_discount"))
     promo = F.when(F.col("p_brand") == "Brand#1", rev).otherwise(0)
-    return (li.join(F.broadcast(p),
-                    F.col("l_partkey") == F.col("p_partkey"))
+    return (li.join(p, F.col("l_partkey") == F.col("p_partkey"))
             .agg((F.sum(promo) * 100.0 / F.sum(rev))
                  .alias("promo_share")))
 
@@ -418,8 +425,7 @@ def tpch_q4(spark, sf):
 def tpch_q7(spark, sf):
     """Nation-pair trade volume (q7 shape): lineitem joined through
     supplier's and customer's nations, two directed pairs kept, grouped
-    by (supp_nation, cust_nation, ship year). Both nation dims
-    broadcast; one agg shuffle."""
+    by (supp_nation, cust_nation, ship year); one agg shuffle."""
     li = load(spark, sf, "lineitem")
     s = load(spark, sf, "supplier")
     o = load(spark, sf, "orders")
@@ -443,8 +449,8 @@ def tpch_q7(spark, sf):
     return (li.join(s, F.col("l_suppkey") == F.col("s_suppkey"))
             .join(o, F.col("l_orderkey") == F.col("o_orderkey"))
             .join(c, F.col("o_custkey") == F.col("c_custkey"))
-            .join(F.broadcast(n1), F.col("s_nationkey") == F.col("s_nk"))
-            .join(F.broadcast(n2), F.col("c_nationkey") == F.col("c_nk"))
+            .join(n1, F.col("s_nationkey") == F.col("s_nk"))
+            .join(n2, F.col("c_nationkey") == F.col("c_nk"))
             .filter(pair)
             .groupBy("supp_nation", "cust_nation",
                      F.year(F.col("l_shipdate").cast("date"))
@@ -464,8 +470,7 @@ def tpch_q10(spark, sf):
     n = load(spark, sf, "nation")
     return (c.join(o, F.col("c_custkey") == F.col("o_custkey"))
             .join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-            .join(F.broadcast(n),
-                  F.col("c_nationkey") == F.col("n_nationkey"))
+            .join(n, F.col("c_nationkey") == F.col("n_nationkey"))
             .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
             .agg(_revenue_sum())
             .orderBy(F.desc("revenue"), F.asc("c_custkey"))
@@ -498,7 +503,10 @@ def tpch_q2(spark, sf):
     min lineitem price in exact cents stands in for ps_supplycost).
     Ties on the per-part minimum keep ALL matching suppliers (TPC-H
     semantics); the ORDER BY ends in the unique (p_partkey, s_suppkey)
-    pair so the LIMIT cut is deterministic across engines."""
+    pair so the LIMIT cut is deterministic across engines. No join is
+    hinted: `best` grows with the part table, so the threshold and AQE
+    pick every build side (at sf0.01 and sf0.1 AQE broadcasts `best`
+    at runtime)."""
     for t in ("lineitem", "part", "supplier", "nation"):
         load(spark, sf, t).createOrReplaceTempView(f"q2_{t}")
     # The correlated scalar subquery is rewritten as an explicit
@@ -507,10 +515,10 @@ def tpch_q2(spark, sf):
     # deriving `best` FROM cost makes the second a cheap rollup of the
     # first, and identical subplans share one exchange. The part
     # predicate (p_type/p_size — 2.7% of parts survive) is applied to
-    # lineitem BEFORE the cost aggregation via a broadcast join on the
-    # filtered partkeys: per-partkey min commutes with a partkey
-    # filter, so cost/best over the surviving partkeys are identical
-    # to cost/best over all partkeys joined to the filtered part dim —
+    # lineitem BEFORE the cost aggregation via a join on the filtered
+    # partkeys: per-partkey min commutes with a partkey filter, so
+    # cost/best over the surviving partkeys are identical to
+    # cost/best over all partkeys joined to the filtered part dim —
     # but the aggregation input shrinks ~37x (guide §3.2 "reduce the
     # big side before shuffling it"). The oracle keeps the correlated
     # unfiltered form; DuckDB-verified row-identical at sf0.1 (ties
@@ -530,14 +538,7 @@ def tpch_q2(spark, sf):
         best AS (
           SELECT partkey, min(cost_cents) AS best_cents
           FROM cost GROUP BY partkey)
-        -- BROADCAST(b): `best` is one (partkey, cents) pair per part —
-        -- dim-table sized — but its size ESTIMATE derives from the
-        -- cost aggregate and lands above the auto threshold, which
-        -- planned a sort-merge join sorting all of cost (measured
-        -- 2.5 s -> 4.8 s when the 16 MB cap landed); the hint keeps
-        -- the cost side unshuffled
-        SELECT /*+ BROADCAST(b) */
-               s_acctbal, s_name, n_name, p_partkey, p_name,
+        SELECT s_acctbal, s_name, n_name, p_partkey, p_name,
                -- 100.0 would parse as DECIMAL in Spark SQL (decimal
                -- division -> pandas object dtype); force double
                c.cost_cents / CAST(100 AS DOUBLE) AS supply_cost
@@ -555,8 +556,7 @@ def tpch_q9(spark, sf):
     """Product-type profit (q9 shape): multi-way join with a LIKE
     filter on part name, profit = revenue - retail-cost*qty in exact
     basis points (p_retailprice stands in for ps_supplycost), grouped
-    by supplier nation and order year. The filtered part dim (~12% of
-    2k rows) and nation are broadcast; one agg shuffle."""
+    by supplier nation and order year; one agg shuffle."""
     li = load(spark, sf, "lineitem")
     p = load(spark, sf, "part").filter(F.col("p_name").like("%bolt%"))
     s = load(spark, sf, "supplier")
@@ -565,11 +565,10 @@ def tpch_q9(spark, sf):
     profit_bp = (_cents("l_extendedprice") * (100 - _cents("l_discount"))
                  - _cents("p_retailprice")
                  * F.col("l_quantity").cast("long") * 100)
-    return (li.join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
+    return (li.join(p, F.col("l_partkey") == F.col("p_partkey"))
             .join(s, F.col("l_suppkey") == F.col("s_suppkey"))
             .join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-            .join(F.broadcast(n),
-                  F.col("s_nationkey") == F.col("n_nationkey"))
+            .join(n, F.col("s_nationkey") == F.col("n_nationkey"))
             .groupBy(F.col("n_name").alias("nation"),
                      F.year(F.col("o_orderdate").cast("date"))
                      .alias("o_year"))
@@ -625,8 +624,7 @@ def tpch_q16(spark, sf):
     p = load(spark, sf, "part").filter(F.col("p_brand") != "Brand#1")
     bad = load(spark, sf, "supplier").filter(F.col("s_acctbal") < 0) \
         .select("s_suppkey")
-    return (pairs.join(F.broadcast(bad),
-                       F.col("l_suppkey") == F.col("s_suppkey"),
+    return (pairs.join(bad, F.col("l_suppkey") == F.col("s_suppkey"),
                        "left_anti")
             .join(p, F.col("l_partkey") == F.col("p_partkey"))
             .groupBy("p_brand", "p_type", "p_size")
@@ -693,7 +691,7 @@ def tpch_q22(spark, sf):
     o = (load(spark, sf, "orders")
          .filter(F.col("o_orderpriority") == "1-URGENT")
          .select("o_custkey"))
-    return (c.join(F.broadcast(avg_bal))
+    return (c.join(avg_bal)
             .filter(_cents("c_acctbal") > F.col("avg_cents"))
             .join(o, F.col("c_custkey") == F.col("o_custkey"),
                   "left_anti")
@@ -759,6 +757,8 @@ def kg_mention_extract(spark, sf):
     # corpus-scale runs, not every SF > 1 bench input
     guard_brute_force(d, "kg_mention_extract", "kg_mention_extract_join",
                       max_rows=5_000_000)
+    # fixed 4-word literal, whose plan estimate is unknown (Long.MAX): the
+    # hint keeps the nested-loop join building on it, not on documents
     return (d.join(F.broadcast(vocab), F.col("text").contains(F.col("word")))
             .select("doc_id", F.col("word").alias("entity"),
                     F.lit("ex:mentions").alias("predicate")))

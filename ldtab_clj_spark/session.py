@@ -111,9 +111,12 @@ def get_spark(app_name: str = "ldtab_clj_spark",
         # lands on every executor — at sf1.0 the 26 MB orders table was
         # being broadcast into q3/q4/q5/q18/q21, measured 1.5-2x slower
         # than the shuffled hash join the cap now yields (r06 sweep:
-        # q3 3.30→1.48 s, q4 1.81→0.96 s). True dims (nation, region,
-        # supplier, prefix/centroid tables) stay far under 16 MB at any
-        # SF, and explicit F.broadcast hints are unaffected.
+        # q3 3.30→1.48 s, q4 1.81→0.96 s). The rule: this threshold and
+        # AQE's runtime conversion decide every input that grows with
+        # the data (supplier and part included). A hint, which bypasses
+        # both, goes only on a fixed dim (nation, region, a literal), a
+        # caller-sized set, or behind link's observed tail gate
+        # (tests/test_hint_audit.py keeps the list).
         .config("spark.sql.autoBroadcastJoinThreshold",
                 str(16 * 1024 * 1024))
         # heap is WORKLOAD-dependent, measured both ways: 8g wins the

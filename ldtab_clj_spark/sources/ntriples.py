@@ -32,6 +32,8 @@ NT_LINE = re.compile(
     rf"^\s*(?:{_IRI}|{_BLANK})\s+{_IRI}\s+"
     rf"(?:{_IRI}|{_BLANK}|{_LIT})\s*\.\s*(?:#.*)?$")
 
+_XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
+
 _UNESCAPE = {"\\n": "\n", "\\r": "\r", "\\t": "\t",
              "\\b": "\b", "\\f": "\f", "\\'": "'",
              '\\"': '"', "\\\\": "\\"}
@@ -126,8 +128,9 @@ def _parse_groups(s_iri, s_blank, p_iri, o_iri, o_blank,
         elif o_dt:
             dt = curify_with(_iri_unescape(o_dt), prefixes)
         else:
-            dt = "xsd:string"  # plain literal (Jena can't tell either,
-            #                    thin2thick.clj:125)
+            # plain literal (Jena can't tell either, thin2thick.clj:125),
+            # curified against the prefix table as the Turtle reader does
+            dt = curify_with(_XSD_STRING, prefixes)
     return (subject, predicate, obj, dt,
             subject.startswith("_:"), bool(o_blank))
 

@@ -46,6 +46,29 @@ def test_parse_nt_line_variants():
     assert parse_nt_line("garbage line", PREFIXES) is None
 
 
+@pytest.mark.parametrize("prefixes", [PREFIXES, PREFIXES[:1]],
+                         ids=["with_xsd", "without_xsd"])
+def test_plain_literal_datatype_follows_the_prefix_table(prefixes):
+    """A plain literal's ``xsd:string`` is curified against the prefix
+    table, as the Turtle reader does, so parse → ``nt_object`` → parse
+    gives back the same statement under any prefix table."""
+    from ldtab_clj_spark.operators.export import nt_node, nt_object
+    from ldtab_clj_spark.sources.turtle import _to_thin, parse_turtle
+    line = '<http://example.com/a> <http://example.com/p> "x" .'
+    row = parse_nt_line(line, prefixes)
+    xsd_string = "http://www.w3.org/2001/XMLSchema#string"
+    assert row[3] == ("xsd:string" if prefixes is PREFIXES
+                      else f"<{xsd_string}>")
+    assert _to_thin(parse_turtle(line), prefixes) == [row]
+    pmap = dict(prefixes)
+    written = (f"{nt_node(row[0], False, pmap)} "
+               f"{nt_node(row[1], False, pmap)} "
+               f"{nt_object(row[2], row[3], False, pmap)} .")
+    assert written == ('<http://example.com/a> <http://example.com/p> '
+                       f'"x"^^<{xsd_string}> .')
+    assert parse_nt_line(written, prefixes) == row
+
+
 def test_blank_components_closure(spark):
     # chain _:a → _:b → _:c, reached from a ground subject too, plus a
     # separate _:x; ground triple apart. Every triple's key is the

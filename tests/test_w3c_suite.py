@@ -235,7 +235,7 @@ TURTLE_NEGATIVE = [
 
 # N-Triples: (name, line, expected tuple) — parse_nt_line returns
 # (s, p, o, dt, is_blank_s, is_blank_o); IRIs stay <>-wrapped when the
-# prefix table is empty, plain literals curify xsd:string.
+# prefix table is empty, and so does a plain literal's xsd:string.
 NT_POSITIVE = [
     ("nt-syntax-uri-01",
      "<http://e/s> <http://e/p> <http://e/o> .",
@@ -254,8 +254,8 @@ NT_POSITIVE = [
       "_IRI", False, False)),
     ("nt-syntax-str-esc-01",
      '<http://e/s> <http://e/p> "a\\tb\\n" .',
-     ("<http://e/s>", "<http://e/p>", "a\tb\n", "xsd:string",
-      False, False)),
+     ("<http://e/s>", "<http://e/p>", "a\tb\n",
+      "<http://www.w3.org/2001/XMLSchema#string>", False, False)),
     ("nt-syntax-bnode-02",
      "_:a <http://e/p> _:b .",
      ("_:a", "<http://e/p>", "_:b", "_JSONMAP", True, True)),

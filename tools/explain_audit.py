@@ -19,14 +19,16 @@ from ldtab_clj_spark import queries as q  # noqa: E402
 from ldtab_clj_spark.session import get_spark  # noqa: E402
 
 AUDIT = ["s3_scan_filter_project", "tpch_q1", "tpch_q3", "tpch_q4",
-         "tpch_q5", "j3_semi_join", "j4_anti_join", "j8_entity_link_join",
+         "tpch_q5", "j3_semi_join", "j4_anti_join", "j5_prefix_longest_match",
+         "j8_entity_link_join", "f7_statement_rows",
          "a1_group_collect", "w4_rank_window", "dedup_exact",
          "dedup_minhash_lsh", "dedup_simhash", "dedup_simhash_pairs",
-         "tpch_q7", "tpch_q10", "tpch_q19",
+         "tpch_q7", "tpch_q10", "tpch_q14", "tpch_q19",
          "tpch_q2", "tpch_q9", "tpch_q18",
          "tpch_q13", "tpch_q16", "tpch_q21", "tpch_q22",
          "ann_cosine_topk", "ann_srp_near_dup", "ann_ivf_topk",
-         "kg_mention_extract_join", "mm_decode_features",
+         "kg_mention_extract", "kg_mention_extract_join",
+         "mm_decode_features",
          "so4_symmetric_diff", "events_sessionize",
          "events_session_window", "text_term_stats",
          "dedup_boilerplate",
