@@ -46,6 +46,11 @@ def _statement_path(db: str, table: str = "statement") -> str:
     return str(Path(db) / table)
 
 
+def _read_prefix(spark, db: str):
+    """The DB's prefix table (init.clj:22-24)."""
+    return spark.read.schema(PREFIX).parquet(str(Path(db) / "prefix"))
+
+
 def cmd_init(args) -> int:
     spark = _spark()
     db = Path(args.db)
@@ -70,8 +75,7 @@ def cmd_prefix(args) -> int:
     spark = _spark()
     if args.list:
         # prefix --list (cli.clj:30,158): print the prefix table
-        rows = (spark.read.parquet(str(Path(args.db) / "prefix"))
-                .orderBy("prefix").collect())
+        rows = _read_prefix(spark, args.db).orderBy("prefix").collect()
         for r in rows:
             print(f"{r['prefix']}\t{r['base']}")
         return 0
@@ -99,7 +103,7 @@ def _stream_tmp_paths(db: str) -> list[str]:
 
 def cmd_import(args) -> int:
     spark = _spark()
-    prefix_df = spark.read.parquet(str(Path(args.db) / "prefix"))
+    prefix_df = _read_prefix(spark, args.db)
     tmp_paths: list[str] = []  # per-run streaming tmp table + ckpt
     try:
         return _do_import(spark, args, prefix_df, tmp_paths)
@@ -214,7 +218,8 @@ def _read_db(spark, db: str, table: str = "statement"):
     rows from repeated/replayed imports are resolved here (the contract
     every reader must apply)."""
     from .operators.materialize import dedup_statements
-    return dedup_statements(spark.read.parquet(_statement_path(db, table)))
+    return dedup_statements(spark.read.schema(STATEMENT)
+                            .parquet(_statement_path(db, table)))
 
 
 def cmd_export(args) -> int:
@@ -234,9 +239,8 @@ def cmd_export(args) -> int:
         # cli.clj:213 accepts ttl/tsv; Turtle gets the @prefix header +
         # CURIE compaction (export.clj:59-70)
         write = write_ntriples if ext == ".nt" else write_turtle
-        n = write(statements,
-                  spark.read.parquet(str(Path(args.db) / "prefix")),
-                  args.out, typed_owl=args.typed_owl)
+        n = write(statements, _read_prefix(spark, args.db), args.out,
+                  typed_owl=args.typed_owl)
     print(f"exported {n} statements to {args.out}")
     return 0
 

@@ -26,7 +26,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..schemas import STATEMENT_COLS
+from ..schemas import STATEMENT, STATEMENT_COLS
 from .parallel import python_partitions
 
 
@@ -256,7 +256,7 @@ def verify_lineage(spark: SparkSession, path: str) -> LineageStatus:
     files) so resume tooling sees the convergence gap directly."""
     sidecar = _read_sidecar(path)
     expected = sum(int(r["rows"]) for r in sidecar)
-    actual = spark.read.parquet(path).count()
+    actual = spark.read.schema(STATEMENT).parquet(path).count()
     in_sidecar = {r["file"] for r in sidecar}
     unadopted = sum(
         1 for name in _list_files(path) - in_sidecar

@@ -112,4 +112,5 @@ def read_stream_result(spark: SparkSession, table_path: str) -> DataFrame:
     not an error."""
     if not Path(table_path).exists():
         return spark.createDataFrame([], STATEMENT)
-    return dedup_statements(spark.read.parquet(table_path))
+    return dedup_statements(
+        spark.read.schema(STATEMENT).parquet(table_path))

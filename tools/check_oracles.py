@@ -37,7 +37,8 @@ def norm_rows(df, cols):
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
-    spark = get_spark("oracle-check", shuffle_partitions=16)
+    spark = get_spark("oracle-check", shuffle_partitions=16,
+                      extra_conf={"spark.ui.showConsoleProgress": "false"})
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM "

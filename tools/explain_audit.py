@@ -103,6 +103,7 @@ def main() -> None:
            "evidence. `Exchange` = shuffle boundary.\n"]
     for name in AUDIT:
         df = q.ALL_QUERIES[name](spark, sf)
+        df.collect()  # AQE's final plan exists once the plan has run
         plan = df._jdf.queryExecution().executedPlan().toString()
         counts = op_counts(plan)
         # single-line match: Spark truncates long filter lists mid-line
