@@ -103,8 +103,18 @@ def parse_nt_line(line: str, prefixes: list[tuple[str, str]]):
     (s_iri, s_blank, p_iri, o_iri, o_blank,
      o_lex, o_lang, o_dt) = m.groups()
     try:
-        return _parse_groups(s_iri, s_blank, p_iri, o_iri, o_blank,
-                             o_lex, o_lang, o_dt, prefixes)
+        if o_blank:
+            obj, dt = o_blank, "_JSONMAP"
+        elif o_iri is not None:
+            obj, dt = _iri_unescape(o_iri), "_IRI"
+        else:
+            # a plain literal is an xsd:string (Jena can't tell either,
+            # thin2thick.clj:125)
+            obj = _unescape(o_lex)
+            dt = f"@{o_lang}" if o_lang \
+                else _iri_unescape(o_dt) if o_dt else _XSD_STRING
+        return thin_row(s_blank or _iri_unescape(s_iri),
+                        _iri_unescape(p_iri), obj, dt, prefixes)
     except ValueError:
         # malformed UCHAR (out-of-range / surrogate codepoint): the
         # line is unparseable — skip it like any other bad line
@@ -112,27 +122,21 @@ def parse_nt_line(line: str, prefixes: list[tuple[str, str]]):
         return None
 
 
-def _parse_groups(s_iri, s_blank, p_iri, o_iri, o_blank,
-                  o_lex, o_lang, o_dt, prefixes):
-    subject = s_blank if s_blank \
-        else curify_with(_iri_unescape(s_iri), prefixes)
-    predicate = curify_with(_iri_unescape(p_iri), prefixes)
-    if o_blank:
-        obj, dt = o_blank, "_JSONMAP"
-    elif o_iri is not None:
-        obj, dt = curify_with(_iri_unescape(o_iri), prefixes), "_IRI"
-    else:
-        obj = _unescape(o_lex)
-        if o_lang:
-            dt = f"@{o_lang}"
-        elif o_dt:
-            dt = curify_with(_iri_unescape(o_dt), prefixes)
-        else:
-            # plain literal (Jena can't tell either, thin2thick.clj:125),
-            # curified against the prefix table as the Turtle reader does
-            dt = curify_with(_XSD_STRING, prefixes)
-    return (subject, predicate, obj, dt,
-            subject.startswith("_:"), bool(o_blank))
+def thin_row(s: str, p: str, o: str, dt: str,
+             prefixes: list[tuple[str, str]]) -> tuple:
+    """One raw triple → thin-triple tuple: the rule every RDF reader
+    shares. A raw triple has full IRIs and ``_:`` blank labels; ``dt``
+    is ``_IRI`` (IRI object), ``_JSONMAP`` (blank object), ``@lang``
+    or a datatype IRI. IRIs are CURIE-fied against the prefix table
+    (longest match, thin2thick.clj:35-42); literals keep their lexical
+    form."""
+    subject = s if s.startswith("_:") else curify_with(s, prefixes)
+    if dt == "_IRI":
+        o = curify_with(o, prefixes)
+    elif dt != "_JSONMAP" and not dt.startswith("@"):
+        dt = curify_with(dt, prefixes)
+    return (subject, curify_with(p, prefixes), o, dt,
+            subject.startswith("_:"), dt == "_JSONMAP")
 
 
 def parse_nt_lines(lines: DataFrame,

@@ -34,9 +34,8 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from ..core.canonical import curify_with
 from ..schemas import THIN
-from .ntriples import _iri_unescape, _unescape
+from .ntriples import _iri_unescape, _unescape, thin_row
 
 # PN_CHARS_BASE / PN_CHARS_U / PN_CHARS character classes from the
 # Turtle 1.1 grammar (§6.5) — prefixed names and blank labels accept
@@ -387,8 +386,8 @@ def parse_turtle(text: str) -> list[tuple]:
 def _to_thin(raw: list[tuple],
              prefixes: list[tuple[str, str]],
              blank_salt: str = "") -> list[tuple]:
-    """Raw full-IRI triples → thin-triple tuples, CURIE-fied against
-    the prefix table exactly like sources/ntriples.py.
+    """Raw full-IRI triples → thin-triple tuples, by the N-Triples
+    reader's ``thin_row``.
 
     ``blank_salt`` file-scopes blank labels: every parsed file restarts
     its anonymous counter at _:anon1 (and user labels like _:b1 repeat
@@ -401,9 +400,6 @@ def _to_thin(raw: list[tuple],
 
     out = []
     for s, p, o, dt in raw:
-        subject = blank(s) if s.startswith("_:") \
-            else curify_with(s, prefixes)
-        predicate = curify_with(p, prefixes)
         if dt == "_JSONMAP":
             # both parsers tag only blank labels _JSONMAP since the r4
             # empty-collection fix (rdf:nil arrives as _IRI); a
@@ -413,16 +409,9 @@ def _to_thin(raw: list[tuple],
             if not o.startswith("_:"):
                 raise TurtleError(
                     f"non-blank object {o!r} tagged _JSONMAP")
-            obj, d = blank(o), "_JSONMAP"
-        elif dt == "_IRI":
-            obj, d = curify_with(o, prefixes), "_IRI"
-        elif dt.startswith("@"):
-            obj, d = o, dt
-        else:
-            obj, d = o, curify_with(dt, prefixes)
-        out.append((subject, predicate, obj, d,
-                    subject.startswith("_:"),
-                    d == "_JSONMAP"))
+            o = blank(o)
+        out.append(thin_row(blank(s) if s.startswith("_:") else s,
+                            p, o, dt, prefixes))
     return out
 
 

@@ -6,57 +6,25 @@ and lineitem aggregates, all of which grow with the scale factor; only
 the fixed nation and region dims may be hinted, so only they may sit
 under a ``BroadcastExchangeExec`` here."""
 
+import re
 from pathlib import Path
 
 import pytest
 from test_oracle_registry import SF as SF_SMALLEST
 
 from ldtab_clj_spark import queries as Q
+from ldtab_clj_spark.plans.executed import executed
 
 SF = str(Path(SF_SMALLEST).with_name("sf0.01"))
 FIXED_DIMS = {"nation", "region"}
 
 
-def _children(node):
-    kids = node.children()
-    return [kids.apply(i) for i in range(kids.size())]
-
-
-def _unwrap(node):
-    """The physical node behind AQE's wrappers: the final plan of an
-    ``AdaptiveSparkPlanExec``, a query stage's plan, a reused
-    exchange's child."""
-    while True:
-        name = node.getClass().getSimpleName()
-        if name == "AdaptiveSparkPlanExec":
-            node = node.executedPlan()
-        elif name.endswith("QueryStageExec"):
-            node = node.plan()
-        elif name == "ReusedExchangeExec":
-            node = node.child()
-        else:
-            return node
-
-
-def _scanned_tables(node) -> set[str]:
-    node = _unwrap(node)
-    if node.getClass().getSimpleName() == "FileSourceScanExec":
-        paths = node.relation().location().rootPaths()
-        return {paths.apply(i).getName().removesuffix(".parquet")
-                for i in range(paths.size())}
-    return set().union(*map(_scanned_tables, _children(node)))
-
-
-def broadcast_tables(plan) -> list[set[str]]:
+def broadcast_tables(run) -> list[set[str]]:
     """The parquet tables scanned under each broadcast exchange of an
-    executed plan, AQE stages and reused exchanges included."""
-    out, stack = [], [plan]
-    while stack:
-        node = _unwrap(stack.pop())
-        if node.getClass().getSimpleName() == "BroadcastExchangeExec":
-            out.append(_scanned_tables(node.child()))
-        stack.extend(_children(node))
-    return out
+    executed plan, a reused exchange once per reader."""
+    return [set(re.findall(r"Location: [^\]\n]*/(\w+)\.parquet",
+                           "\n".join(n.desc for n in node.walk())))
+            for node in run.nodes() if node.name == "BroadcastExchange"]
 
 
 @pytest.fixture
@@ -73,8 +41,7 @@ def no_auto_broadcast(spark):
                                   "tpch_q16", "tpch_q2"])
 def test_only_fixed_dims_are_hinted(no_auto_broadcast, name):
     df = getattr(Q, name)(no_auto_broadcast, SF)
-    df.collect()
-    sides = broadcast_tables(df._jdf.queryExecution().executedPlan())
+    sides = broadcast_tables(executed(no_auto_broadcast, df.collect))
     grown = [t for t in sides if not t <= FIXED_DIMS]
     assert not grown, f"{name} broadcasts growing inputs: {grown}"
     if name == "tpch_q5":

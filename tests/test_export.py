@@ -7,6 +7,10 @@ from pyspark.sql import functions as F
 
 from ldtab_clj_spark.operators.export import (read_tsv, to_ntriples_lines,
                                               to_turtle_lines, write_tsv)
+from ldtab_clj_spark.operators.extract import extract_thin_triples
+from ldtab_clj_spark.operators.link import link_entities
+from ldtab_clj_spark.operators.stanza import thin_to_thick_df
+from ldtab_clj_spark.plans.executed import executed
 from ldtab_clj_spark.plans.pipeline import build_statements, reimport
 from ldtab_clj_spark.synth import entity_dictionary, synth_docs
 
@@ -89,14 +93,26 @@ def test_curify_expand_inverse(spark):
         assert back == iri
 
 
-@pytest.mark.parametrize("writer", [to_ntriples_lines, to_turtle_lines])
-def test_export_is_one_python_pass(spark, statements, writer):
-    """Expand and format share ONE mapInPandas: one Python runner, so
-    one worker per task."""
+def stanza(statements, prefix):
+    """The stanza stage over link's checkpointed thin triples."""
+    spark = statements.sparkSession
+    thin = extract_thin_triples(synth_docs(spark, N_DOCS, seed=7))
+    return thin_to_thick_df(
+        link_entities(thin, entity_dictionary(spark)).localCheckpoint())
+
+
+@pytest.mark.parametrize("stage", [to_ntriples_lines, to_turtle_lines,
+                                   stanza])
+def test_export_is_one_python_pass(spark, statements, stage):
+    """Each kg Python stage is ONE mapInPandas (one Python runner, so
+    one worker per task; the export's expand and format share it)
+    behind ONE exchange, and AQE's final plan reads that pinned shuffle
+    as it is."""
     prefix = spark.createDataFrame(PREFIXES, "prefix string, base string")
-    plan = writer(statements, prefix)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert plan.count("MapInPandas") == 1, plan
+    names = [n.name for n in
+             executed(spark, stage(statements, prefix).collect).nodes()]
+    assert names.count("MapInPandas") == names.count("Exchange") == 1 \
+        and "AQEShuffleRead" not in names, names
 
 
 def _export_corpus(spark):

@@ -1,11 +1,14 @@
 """N-Triples source + global blank-component closure: the format-level
 round trip (statements → .nt text → re-import → same statements)."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
 from ldtab_clj_spark.operators.components import assign_components
 from ldtab_clj_spark.operators.export import write_ntriples
+from ldtab_clj_spark.plans.executed import executed
 from ldtab_clj_spark.plans.pipeline import build_statements
 from ldtab_clj_spark.sources.ntriples import import_ntriples, parse_nt_line
 from ldtab_clj_spark.synth import entity_dictionary, synth_docs
@@ -91,16 +94,6 @@ def test_blank_components_closure(spark):
     assert len(keys) == len(rows)
 
 
-def _jobs_run(sc, group: str, build):
-    """(build(), number of Spark jobs that building it ran)."""
-    sc.setJobGroup(group, group)
-    try:
-        out = build()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_import_layers_plan_shape(spark, tmp_path, prefix_df):
     """Each import layer takes its plan decisions from jobs it runs
     anyway, and resolves its key with one join: building link runs
@@ -108,27 +101,22 @@ def test_import_layers_plan_shape(spark, tmp_path, prefix_df):
     observed on it), the closure reads the root-graph decision off its
     own checkpoint, and the executed stanza-key plan joins the
     component map once."""
-    import re
-
     from ldtab_clj_spark.operators.extract import extract_thin_triples
     from ldtab_clj_spark.operators.link import link_entities
     from ldtab_clj_spark.sources.ntriples import read_ntriples
-    sc = spark.sparkContext
     docs = synth_docs(spark, 200, seed=5).localCheckpoint()
     thin = extract_thin_triples(docs)
-    _, n = _jobs_run(sc, "shape-link",
-                     lambda: link_entities(thin, entity_dictionary(spark)))
+    n = len(executed(spark, lambda: link_entities(
+        thin, entity_dictionary(spark))).jobs)
     assert n <= 2, n
     nt_dir = str(tmp_path / "nt")
     write_ntriples(build_statements(docs, entity_dictionary(spark)),
                    prefix_df, nt_dir)
     nt_thin = read_ntriples(spark, nt_dir, prefix_df).localCheckpoint()
-    grouped, n = _jobs_run(sc, "shape-components",
-                           lambda: assign_components(nt_thin))
-    assert n <= 3, n
-    grouped.collect()
-    plan = grouped._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
+    grouped = executed(spark, lambda: assign_components(nt_thin))
+    assert len(grouped.jobs) <= 3, grouped.jobs
+    final = "\n".join(n.desc for n in
+                      executed(spark, grouped.result.collect).nodes())
     joins = re.findall(r"(?:BroadcastHash|SortMerge|ShuffledHash)Join "
                        r"\[(\w+)#\d+\], \[\w+#\d+\], LeftOuter", final)
     assert joins == ["_key"], final
@@ -137,26 +125,12 @@ def test_import_layers_plan_shape(spark, tmp_path, prefix_df):
 
 
 def _hash_exchanges(spark, action) -> list[tuple[str, ...]]:
-    """Key columns of each hash exchange in the adaptive plan of the
-    last SQL execution, after running ``action`` (a write included:
-    the plan is read from the SQL status store, not from a DataFrame).
-    The store may still hold AQE's last "Current Plan" rather than its
-    "Final Plan"; both list every shuffle of these plans, whose join
-    strategies AQE leaves as they are."""
-    import re
-    action()
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    runs = spark._jsparkSession.sharedState().statusStore() \
-        .executionsList()
-    desc = max((runs.apply(i) for i in range(runs.size())),
-               key=lambda e: e.executionId()).physicalPlanDescription()
-    final = desc.split("== Initial Plan ==")[0]
-    args = [re.search(rf"^\({i}\) Exchange\n(?:.*\n)*?Arguments: (.*)$",
-                      desc, re.M).group(1)
-            for i in re.findall(r"\bExchange \((\d+)\)", final)]
+    """Key columns of each hash exchange in the final plan of the last
+    SQL execution ``action`` runs (a write included)."""
+    plan = executed(spark, action).plans[-1]
     return [tuple(re.findall(r"(\w+)#\d+", m.group(1)))
-            for m in map(re.compile(r"hashpartitioning\((.*?), \d+\)")
-                         .match, args) if m]
+            for m in (re.match(r"Exchange hashpartitioning\((.*?), \d+\)",
+                               n.desc) for n in plan.walk()) if m]
 
 
 def test_statement_layout_plan_shape(spark, tmp_path, prefix_df):

@@ -10,6 +10,7 @@ from ldtab_clj_spark.operators.export import (expand_df, to_ntriples_lines,
 from ldtab_clj_spark.operators.extract import extract_thin_triples
 from ldtab_clj_spark.operators.link import link_entities
 from ldtab_clj_spark.operators.stanza import thin_to_thick_df
+from ldtab_clj_spark.plans.executed import executed
 from ldtab_clj_spark.plans.pipeline import build_statements
 from ldtab_clj_spark.synth import entity_dictionary, synth_docs
 
@@ -55,9 +56,7 @@ def test_unkeyed_width_runs_nothing_over_a_shuffle(spark):
     # counting a shuffled plan's partitions under AQE would run the
     # stages below it: such a plan is widened without counting
     shuffled = spark.range(0, 100, numPartitions=1).repartition(9, "id")
-    tracker = spark.sparkContext.statusTracker()
-    jobs = len(tracker.getJobIdsForGroup())
-    out = parallel.python_partitions(shuffled)
-    assert len(tracker.getJobIdsForGroup()) == jobs
-    assert out.rdd.getNumPartitions() == spark.sparkContext \
+    run = executed(spark, lambda: parallel.python_partitions(shuffled))
+    assert run.jobs == []
+    assert run.result.rdd.getNumPartitions() == spark.sparkContext \
         .defaultParallelism

@@ -14,6 +14,7 @@ from ldtab_clj_spark.core.expand import (expand_statement_row,
                                          merge_existential_rows)
 from ldtab_clj_spark.core.thick import (drop_superfluous_annotations,
                                         thin_to_thick, to_statement_row)
+from ldtab_clj_spark.plans.executed import executed
 from ldtab_clj_spark.plans.pipeline import build_statements, run_pipeline
 from ldtab_clj_spark.plans.single_node import single_node_statements
 from ldtab_clj_spark.synth import entity_dictionary, make_doc_spans, synth_docs
@@ -431,16 +432,13 @@ def test_lineage_rejects_remote_uri_before_any_job(spark, statements):
                                                        verify_lineage,
                                                        write_statements)
     path = "s3://bucket/db/statement"
-    sc = spark.sparkContext
-    sc.setJobGroup("remote-lineage", "remote-lineage")
-    try:
+
+    def refuse_all():
         for call in (lambda: write_statements(statements, path),
                      lambda: verify_lineage(spark, path),
                      lambda: rebuild_sidecar(path, "r1")):
             with pytest.raises(ValueError, match="s3://bucket/db"):
                 call()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert list(sc.statusTracker().getJobIdsForGroup("remote-lineage")) \
-        == []
+
+    assert executed(spark, refuse_all).jobs == []
     assert not Path("s3:").exists()

@@ -14,6 +14,7 @@ from ldtab_clj_spark.operators.export import write_tsv
 from ldtab_clj_spark.operators.materialize import (rebuild_sidecar,
                                                    verify_lineage,
                                                    write_statements)
+from ldtab_clj_spark.plans.executed import executed
 from ldtab_clj_spark.plans.pipeline import build_statements
 from ldtab_clj_spark.schemas import STATEMENT, STATEMENT_COLS
 from ldtab_clj_spark.synth import entity_dictionary, synth_docs
@@ -101,11 +102,6 @@ def test_read_db_runs_no_schema_inference_job(spark, tmp_path):
     runs no Spark job (an inferred read runs one to read a footer)."""
     db = tmp_path / "db"
     write_statements(_statements(spark, 10, 3), str(db / "statement"))
-    sc = spark.sparkContext
-    sc.setJobGroup("read-db", "read-db")
-    try:
-        df = _read_db(spark, str(db))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup("read-db")) == 0
-    assert df.filter(F.col("subject").isNotNull()).count() > 0
+    run = executed(spark, lambda: _read_db(spark, str(db)))
+    assert run.jobs == []
+    assert run.result.filter(F.col("subject").isNotNull()).count() > 0

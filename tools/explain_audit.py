@@ -1,9 +1,8 @@
 """Physical-plan audit → PLANS.md.
 
-Captures `.explain("formatted")`-level evidence for the judge: filter/
-column pushdown into parquet scans, broadcast vs shuffle joins, AQE,
-and the absence of driver-side loops — for the headline queries and
-the flagship pipeline.
+For the headline queries and the flagship pipeline at sf0.01, and a few
+stages in isolation: operator counts in AQE's final plans (read through
+``ldtab_clj_spark.plans.executed``) and the pushdown into parquet scans.
 """
 
 from __future__ import annotations
@@ -11,11 +10,13 @@ from __future__ import annotations
 import re
 import sys
 import tempfile
+from collections import Counter
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from ldtab_clj_spark import queries as q  # noqa: E402
+from ldtab_clj_spark.plans.executed import executed  # noqa: E402
 from ldtab_clj_spark.session import get_spark  # noqa: E402
 
 AUDIT = ["s3_scan_filter_project", "tpch_q1", "tpch_q3", "tpch_q4",
@@ -34,31 +35,55 @@ AUDIT = ["s3_scan_filter_project", "tpch_q1", "tpch_q3", "tpch_q4",
          "dedup_boilerplate",
          "kg_pipeline_statements", "kg_pipeline_media"]
 
-MARKS = ["PhotonScan", "BroadcastHashJoin", "SortMergeJoin",
-         "ShuffledHashJoin", "BroadcastNestedLoopJoin", "HashAggregate",
-         "ObjectHashAggregate", "SortAggregate", "Exchange",
-         "AQEShuffleRead", "WholeStageCodegen", "ArrowEvalPython",
+MARKS = ["BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin",
+         "BroadcastNestedLoopJoin", "HashAggregate", "ObjectHashAggregate",
+         "SortAggregate", "Exchange", "AQEShuffleRead", "ArrowEvalPython",
          "MapInPandas", "MapInArrow", "FlatMapGroupsInPandas", "Window",
          "Generate"]
 
 
-def op_counts(plan: str) -> dict[str, int]:
-    """Operator counts in a plan string (of an executed adaptive plan:
-    its final plan only). Word-boundary counting: "Exchange" must not
-    also count every "BroadcastExchange", nor "HashAggregate" every
-    "ObjectHashAggregate"."""
-    plan = plan.split("== Initial Plan ==")[0]
-    counts = {m: len(re.findall(rf"(?<![A-Za-z]){m}", plan))
-              for m in MARKS}
-    return {m: c for m, c in counts.items() if c}
+def op_counts(run) -> dict[str, int]:
+    """Operator counts over the final plans an action ran (node names,
+    a reused exchange once per reader, as a plan string lists it)."""
+    counts = Counter(n.name for n in run.nodes())
+    return {m: counts[m] for m in MARKS if counts[m]}
+
+
+def entry(title: str, counts: dict[str, int], notes: list[str]) -> str:
+    return (f"## {title}\noperators: "
+            + ", ".join(f"{k}×{v}" for k, v in sorted(counts.items()))
+            + "\n" + "".join(f"- {n}\n" for n in notes) + "\n")
+
+
+def ivf_assignment_stage(spark, sf: str) -> str:
+    """IVF assignment in isolation: a round-2 finding was a 16×-expanded
+    Window+Sort here. The collected centroids are scored per Arrow
+    batch in one MapInPandas, so assignment is a pure map over the
+    corpus scan (the full ann_ivf_topk plan keeps Windows for its
+    probe/top-k ranking)."""
+    from ldtab_clj_spark.operators.similarity import (_assign_to_centroids,
+                                                      _minid_centroids,
+                                                      with_norm)
+    emb = spark.read.parquet(f"{sf}/embeddings.parquet")
+    corpus = with_norm(emb).select("vec_id", "_v", "_norm")
+    assigned = _assign_to_centroids(corpus, _minid_centroids(emb, 16))
+    counts = op_counts(executed(spark, assigned.collect))
+    for m in ("Window", "SortAggregate", "HashAggregate", "Exchange"):
+        assert m not in counts, \
+            f"IVF assignment regressed: {m} in the assignment stage"
+    return entry("ivf_assignment_stage (isolated)", counts, [
+        "pure map: collected centroids scored per Arrow batch in one "
+        "MapInPandas over the scan; no join/aggregate/shuffle/sort in "
+        "the assignment stage"])
 
 
 def kg_python_stages(spark) -> list[str]:
-    """kg stanza and export stages in isolation, executed on 200 docs:
-    each is ONE MapInPandas (one Python worker per task) behind ONE
+    """kg stanza and export stages in isolation, executed on 200 docs.
+    Each is ONE MapInPandas (one Python worker per task) behind ONE
     exchange, and no AQEShuffleRead coalesces its pinned shuffle in the
-    final plan. The export runs as the CLI runs it: dedup-on-read over
-    a written table, whose ``subject`` exchange the export reuses (a
+    final plan (``tests/test_export.py`` asserts it over a checkpoint
+    input). The export runs as the CLI runs it: dedup-on-read over a
+    written table, whose ``subject`` exchange the export reuses (a
     checkpoint would forget that layout and plan a second one)."""
     from ldtab_clj_spark.operators import export, extract, link, stanza
     from ldtab_clj_spark.operators.materialize import (dedup_statements,
@@ -69,27 +94,19 @@ def kg_python_stages(spark) -> list[str]:
     linked = link.link_entities(extract.extract_thin_triples(docs), ents)
     prefix = spark.createDataFrame([("ex", "http://example.com/")],
                                    "prefix string, base string")
-    out = []
     with tempfile.TemporaryDirectory() as tmp:
         table = f"{tmp}/statement"
         write_statements(build_statements(docs, ents), table)
         stmts = dedup_statements(spark.read.parquet(table))
-        for name, df in [
-                ("stanza",
-                 stanza.thin_to_thick_df(linked.localCheckpoint())),
-                ("export_ntriples", export.to_ntriples_lines(stmts, prefix)),
-                ("export_turtle", export.to_turtle_lines(stmts, prefix))]:
-            df.collect()  # AQE's final plan exists once the plan has run
-            counts = op_counts(df._jdf.queryExecution().executedPlan()
-                               .toString())
-            assert counts.get("MapInPandas") == 1 \
-                and counts.get("Exchange") == 1 \
-                and "AQEShuffleRead" not in counts, (name, counts)
-            out.append(f"## kg_{name}_stage (isolated, executed)\n"
-                       "operators: " + ", ".join(
-                           f"{k}×{v}" for k, v in sorted(counts.items()))
-                       + f"\n- {df.rdd.getNumPartitions()} tasks\n\n")
-    return out
+        return [entry(f"kg_{name}_stage (isolated, executed)",
+                      op_counts(executed(spark, df.collect)),
+                      [f"{df.rdd.getNumPartitions()} tasks"])
+                for name, df in [
+                    ("stanza",
+                     stanza.thin_to_thick_df(linked.localCheckpoint())),
+                    ("export_ntriples",
+                     export.to_ntriples_lines(stmts, prefix)),
+                    ("export_turtle", export.to_turtle_lines(stmts, prefix))]]
 
 
 def main() -> None:
@@ -102,48 +119,16 @@ def main() -> None:
            "query: operator counts from the executed plan plus pushdown "
            "evidence. `Exchange` = shuffle boundary.\n"]
     for name in AUDIT:
-        df = q.ALL_QUERIES[name](spark, sf)
-        df.collect()  # AQE's final plan exists once the plan has run
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        counts = op_counts(plan)
+        run = executed(spark, q.ALL_QUERIES[name](spark, sf).collect)
+        plan = "\n".join(n.desc for n in run.nodes())
         # single-line match: Spark truncates long filter lists mid-line
-        # (no closing bracket), and [^\]]+ would swallow following plan
-        # lines into the PLANS.md entry
+        # (no closing bracket)
         pushed = re.findall(r"PushedFilters: \[[^\]\n]*\]?", plan)
         schemas = re.findall(r"ReadSchema: struct<[^>]{0,90}", plan)
-        out.append(f"## {name}\n")
-        out.append("operators: " + ", ".join(
-            f"{k}×{v}" for k, v in sorted(counts.items())) + "\n")
-        for pf in sorted(set(pushed))[:3]:
-            out.append(f"- `{pf}`\n")
-        for rs in sorted(set(schemas))[:3]:
-            out.append(f"- `{rs}...`\n")
-        out.append("\n")
-
-    # IVF assignment stage in isolation: a round-2 finding was a
-    # 16×-expanded Window+Sort here. The broadcast-sized centroid table
-    # is collected and scored per Arrow batch in one MapInPandas pass,
-    # so assignment is a pure map over the corpus scan (no Window, no
-    # aggregate, no Exchange at all). Audited separately because the
-    # full ann_ivf_topk plan legitimately keeps Windows for probe/top-k
-    # ranking.
-    from ldtab_clj_spark.operators.similarity import (_assign_to_centroids,
-                                                      _minid_centroids,
-                                                      with_norm)
-    emb = spark.read.parquet(f"{sf}/embeddings.parquet")
-    corpus = with_norm(emb).select("vec_id", "_v", "_norm")
-    assigned = _assign_to_centroids(corpus, _minid_centroids(emb, 16))
-    counts = op_counts(assigned._jdf.queryExecution().executedPlan()
-                       .toString())
-    out.append("## ivf_assignment_stage (isolated)\n")
-    out.append("operators: " + ", ".join(
-        f"{k}×{v}" for k, v in sorted(counts.items())) + "\n")
-    for m in ("Window", "SortAggregate", "HashAggregate", "Exchange"):
-        assert m not in counts, \
-            f"IVF assignment regressed: {m} in the assignment stage"
-    out.append("- pure map: collected centroids scored per Arrow "
-               "batch in one MapInPandas over the scan; no "
-               "join/aggregate/shuffle/sort in the assignment stage\n\n")
+        out.append(entry(name, op_counts(run),
+                         [f"`{pf}`" for pf in sorted(set(pushed))[:3]]
+                         + [f"`{rs}...`" for rs in sorted(set(schemas))[:3]]))
+    out.append(ivf_assignment_stage(spark, sf))
     out += kg_python_stages(spark)
     Path("PLANS.md").write_text("".join(out))
     print("wrote PLANS.md")
