@@ -3,5 +3,5 @@
 Implements LDTab's thick-triple semantics — canonical JSON sorting,
 blank-node collapse, annotation/reification folding, RDF-list folding,
 GCI encoding, skolem hashing — as deterministic functions callable from
-Arrow-batched pandas UDFs on executors.
+Arrow-batched Python UDFs (``mapInArrow``) on executors.
 """

@@ -2,7 +2,7 @@
 
 Reference: /root/reference/src/ldtab/thin2thick.clj (whole file).
 Executed per *stanza group* (all thin triples of one blank-node
-component / document) inside a grouped-map pandas UDF
+component / document) inside the stanza stage's ``mapInArrow``
 (``operators/stanza.py``); this module itself has no Spark dependency.
 
 Thin-triple representation (see FIXTURES.md §4): dicts with keys

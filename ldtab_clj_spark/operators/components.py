@@ -9,7 +9,7 @@ files), blank labels are file-global and the closure must run for real.
 Spark realization: two-phase connected components (local contraction,
 then a global merge; Kiveris et al., SoCC 2014).
 
-1. **Local contraction.** One ``mapInPandas`` pass runs a union-find
+1. **Local contraction.** One ``mapInArrow`` pass runs a union-find
    (union towards the smaller label, path halving) over each
    partition's edges and emits ``(node, local_root)``, the local root
    being the smallest label in the node's component *within that
@@ -48,15 +48,18 @@ from __future__ import annotations
 
 from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructField, StructType
+
+from .batching import pylist, record_batches
 
 MAX_ROUNDS = 32
 
 
-def _local_roots(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _local_roots(batches: Iterator[pa.RecordBatch]) -> Iterator[tuple]:
     """Union-find over one partition's (a, b) edges → (a, component),
     one row per distinct endpoint, component = the minimum label of its
     component within the partition."""
@@ -68,8 +71,9 @@ def _local_roots(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             x = parent[x]
         return x
 
-    for pdf in batches:
-        for a, b in zip(pdf["a"].tolist(), pdf["b"].tolist()):
+    for batch in batches:
+        for a, b in zip(pylist(batch.column("a")),
+                        pylist(batch.column("b"))):
             parent.setdefault(a, a)
             parent.setdefault(b, b)
             ra, rb = find(a), find(b)
@@ -79,10 +83,8 @@ def _local_roots(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                 parent[rb] = ra
             elif rb < ra:
                 parent[ra] = rb
-    if parent:
-        nodes = list(parent)
-        yield pd.DataFrame({"a": nodes,
-                            "component": [find(x) for x in nodes]})
+    for x in list(parent):
+        yield x, find(x)
 
 
 def propagate_min_labels(edges: DataFrame) -> DataFrame:
@@ -134,9 +136,11 @@ def min_label_components(edges: DataFrame) -> DataFrame:
     singleton. Returns (a, component) for every endpoint, where
     component is the minimum node label in a's component."""
     a_type = edges.schema["a"].dataType
-    local = edges.select("a", "b").mapInPandas(
-        _local_roots, StructType([StructField("a", a_type),
-                                  StructField("component", a_type)]))
+    schema = StructType([StructField("a", a_type),
+                         StructField("component", a_type)])
+    batch_schema = to_arrow_schema(schema)
+    local = edges.select("a", "b").mapInArrow(
+        lambda b: record_batches(_local_roots(b), batch_schema), schema)
     # a node seen in k partitions has k local roots: keep the smallest
     # and link the others to it (the root graph)
     obs = Observation()

@@ -7,27 +7,28 @@ thick_rdf.clj:195-228 (row → RDF model). We emit:
 * TSV statement dumps with the reference's newline/tab escaping
   (export.clj:17-29) and optional lexicographic sort (export.clj:50-52)
   — distributed ``df.write.csv``;
-* thin-triple expansion (``expand_df``) as a ``mapInPandas`` UDTF —
+* thin-triple expansion (``expand_df``) as a ``mapInArrow`` UDTF —
   the round-trip path (export → re-import) used by the P/R oracle;
 * N-Triples and Turtle text lines written distributedly as text; each
-  writer expands and formats in ONE ``mapInPandas`` pass, so a task
+  writer expands and formats in ONE ``mapInArrow`` pass, so a task
   holds one Python worker.
 """
 
 from __future__ import annotations
 
 import re
-from itertools import chain, islice
+from itertools import chain
 from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..core.canonical import content_hash, curie_to_iri, curify_with
 from ..core.expand import expand_statement_row, merge_existential_rows
 from ..schemas import STATEMENT_COLS, THIN
-from .batching import grouped_batches
+from .batching import grouped_batches, pylist, record_batches
 from .parallel import python_partitions
 
 
@@ -116,25 +117,24 @@ def _by_subject(statements: DataFrame) -> DataFrame:
         .sortWithinPartitions("subject")
 
 
-def _expanded(batches: Iterator[pd.DataFrame], typed_owl: bool):
+def _expanded(batches: Iterator[pa.RecordBatch], typed_owl: bool):
     """R10/R11 over a ``_by_subject`` partition: (statement row, its
     thin triples), wiring-subject groups merged first."""
-    for pdf in grouped_batches(batches, "subject"):
-        for r in merge_existential_rows(pdf.to_dict("records")):
+    for batch in grouped_batches(batches, "subject"):
+        rows = [dict(zip(batch.schema.names, values)) for values in
+                zip(*(pylist(c) for c in batch.columns))]
+        for r in merge_existential_rows(rows):
             yield r, expand_statement_row(r, typed_owl=typed_owl)
 
 
-def _frames(rows, columns: list[str]) -> Iterator[pd.DataFrame]:
-    """``rows`` as frames of up to 20,000 rows (one Arrow batch each)."""
-    it = iter(rows)
-    while chunk := list(islice(it, 20_000)):
-        yield pd.DataFrame(chunk, columns=columns)
+_THIN = to_arrow_schema(THIN)
+_LINES = pa.schema([pa.field("value", pa.string())])
 
 
 def expand_df(statements: DataFrame) -> DataFrame:
     """R10/R11 as a distributed operator: statement rows → thin
     triples (one-to-many, Arrow-batched), for the re-import path."""
-    def thin_rows(batches: Iterator[pd.DataFrame]):
+    def thin_rows(batches: Iterator[pa.RecordBatch]):
         for r, triples in _expanded(batches, False):
             # blank labels are row-content-hash-local (core.expand), so
             # each expanded row is a closed stanza component: its hash
@@ -147,8 +147,8 @@ def expand_df(statements: DataFrame) -> DataFrame:
                        t["datatype"], t["is_blank_s"], t["is_blank_o"],
                        comp, 0)
 
-    return _by_subject(statements).mapInPandas(
-        lambda b: _frames(thin_rows(b), THIN.fieldNames()), THIN)
+    return _by_subject(statements).mapInArrow(
+        lambda b: record_batches(thin_rows(b), _THIN), THIN)
 
 
 def _text_lines(statements: DataFrame, typed_owl: bool, line,
@@ -156,14 +156,15 @@ def _text_lines(statements: DataFrame, typed_owl: bool, line,
     """Statement rows → text lines, expanded and formatted
     (``line(thin_triple)``) in ONE Python pass per task. ``header``
     opens every non-empty partition."""
-    def fmt(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        lines = (line(t) for _, triples in _expanded(batches, typed_owl)
+    def fmt(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        lines = ((line(t),) for _, triples in _expanded(batches, typed_owl)
                  for t in triples)
         first = next(lines, None)
         if first is not None:
-            yield from _frames(chain(header, [first], lines), ["value"])
+            yield from record_batches(
+                chain(((h,) for h in header), [first], lines), _LINES)
 
-    return _by_subject(statements).mapInPandas(fmt, "value string")
+    return _by_subject(statements).mapInArrow(fmt, "value string")
 
 
 def escape_literal(v: str) -> str:

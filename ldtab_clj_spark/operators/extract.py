@@ -3,7 +3,7 @@
 Replaces the reference's Jena RDF parse (import.clj:148-154,
 rdf_model.clj:42-51) as the thin-triple *source*: batched mention
 detection over the span array via ``posexplode`` (JVM-side, preserves
-span order — SURVEY.md W5) + an Arrow-batched ``mapInPandas`` parser.
+span order — SURVEY.md W5) + an Arrow-batched ``mapInArrow`` parser.
 
 Entity mentions are emitted as ``surface:<form>`` placeholders and
 resolved by operators/link.py (separation keeps extraction shuffle-free
@@ -18,11 +18,13 @@ from __future__ import annotations
 import re
 from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..schemas import THIN
+from .batching import pylist, record_batches
 from .parallel import python_partitions
 
 _SUR = r"(?:Widget \d+|W-\d+)"
@@ -38,6 +40,7 @@ RE_RULE = re.compile(
     rf"^Rule: anything that (contains|powers|resembles) ({_SUR}) is ({_SUR})\.$")
 RE_RESTR = re.compile(
     rf"^Every ({_SUR}) (contains|powers|resembles) some ({_SUR})\.$")
+_THIN = to_arrow_schema(THIN)
 
 
 def _mention(surface: str) -> str:
@@ -130,17 +133,18 @@ def _build_triples(doc_id: str, pos: int, m, t) -> list[tuple]:
     return []  # unrecognized span kinds carry no triples
 
 
-def parse_spans_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Arrow-batched span parser (the mention-detection pandas UDF)."""
-    for pdf in batches:
-        rows = []
-        for doc_id, pos, kind, text, media in zip(
-                pdf["doc_id"], pdf["pos"], pdf["kind"], pdf["text"],
-                pdf["media_ref"]):
-            for s, p, o, dt, bs, bo in _parse_span(
-                    doc_id, int(pos), kind, text or "", media or ""):
-                rows.append((s, p, o, dt, bs, bo, doc_id, int(pos)))
-        yield pd.DataFrame(rows, columns=[f.name for f in THIN.fields])
+def parse_spans_batch(
+        batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """Arrow-batched span parser (the mention-detection Arrow UDF)."""
+    for batch in batches:
+        cols = [pylist(batch.column(c))
+                for c in ("doc_id", "pos", "kind", "text", "media_ref")]
+        yield from record_batches(
+            ((s, p, o, dt, bs, bo, doc_id, pos)
+             for doc_id, pos, kind, text, media in zip(*cols)
+             for s, p, o, dt, bs, bo in _parse_span(
+                 doc_id, pos, kind, text or "", media or "")),
+            _THIN)
 
 
 def extract_thin_triples(docs: DataFrame) -> DataFrame:
@@ -160,4 +164,4 @@ def extract_thin_triples(docs: DataFrame) -> DataFrame:
         F.col("span.text").alias("text"),
         F.col("span.media_ref").alias("media_ref"),
     )
-    return python_partitions(exploded).mapInPandas(parse_spans_batch, THIN)
+    return python_partitions(exploded).mapInArrow(parse_spans_batch, THIN)

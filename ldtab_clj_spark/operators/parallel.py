@@ -1,7 +1,7 @@
 """Task counts for Python stages, and scan widening for JVM queries.
 
-``python_partitions`` lays out the input of the Python
-(``mapInPandas``) stages — extract, stanza, the export pass, the
+``python_partitions`` lays out the input of the Python stages —
+extract, stanza, the export pass (each one ``mapInArrow``), the
 near-dup/ANN signature passes — and of the md5 passes with the same
 per-row cost: one task per core (``defaultParallelism``). A keyed
 stage gets that width as its hash shuffle (REPARTITION_BY_NUM, which

@@ -1,7 +1,7 @@
 """End-to-end KG-construction pipeline (the north-star dataflow):
 
-docs → extract (mapInPandas) → link (broadcast + salted join) →
-thin→thick (mapInPandas over doc runs) → dedup → materialize.
+docs → extract (mapInArrow) → link (broadcast + salted join) →
+thin→thick (mapInArrow over doc runs) → dedup → materialize.
 
 Every RDF reader ends in `rdf_statements`: closure → thin→thick → dedup.
 

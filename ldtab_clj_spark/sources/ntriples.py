@@ -17,10 +17,12 @@ from __future__ import annotations
 import re
 from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..core.canonical import curify_with
+from ..operators.batching import pylist, record_batches
 from ..schemas import THIN
 
 # IRIREF body: no control, space or <>"{}|^` character; a backslash
@@ -33,6 +35,7 @@ NT_LINE = re.compile(
     rf"(?:{_IRI}|{_BLANK}|{_LIT})\s*\.\s*(?:#.*)?$")
 
 _XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
+_THIN = to_arrow_schema(THIN)
 
 _UNESCAPE = {"\\n": "\n", "\\r": "\r", "\\t": "\t",
              "\\b": "\b", "\\f": "\f", "\\'": "'",
@@ -152,11 +155,11 @@ def parse_nt_lines(lines: DataFrame,
     over-counting if the result is recomputed (each action re-parses
     unless it is materialized, as assign_components does; a retried
     task also adds again)."""
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def parse(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
             rows = []
             skipped = 0
-            for line in pdf["value"]:
+            for line in pylist(batch.column("value")):
                 t = parse_nt_line(line, prefixes)
                 if t:
                     rows.append((*t, "", 0))
@@ -164,10 +167,9 @@ def parse_nt_lines(lines: DataFrame,
                     skipped += 1
             if skipped_acc is not None and skipped:
                 skipped_acc.add(skipped)
-            yield pd.DataFrame(rows,
-                               columns=[f.name for f in THIN.fields])
+            yield from record_batches(rows, _THIN)
 
-    return lines.mapInPandas(parse, THIN)
+    return lines.mapInArrow(parse, THIN)
 
 
 def read_ntriples(spark: SparkSession, path: str,

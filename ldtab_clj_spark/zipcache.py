@@ -5,7 +5,7 @@ every task (``pyspark.worker_util.setup_spark_files``). Up to Python
 3.12, ``zipimport.zipimporter.invalidate_caches`` answers that by
 re-reading the archive's whole central directory, and a worker holds
 one zipimporter per imported sub-package of ``pyspark.zip`` (1,328
-entries). A worker that ran a package ``mapInPandas`` held 17
+entries). A worker that ran a package Python stage held 17
 zipimporters, 12 of them over ``pyspark.zip``; re-reading them all took
 0.15-0.23 s per task with four workers busy on a 4-core box, which was
 most of the fixed cost of a Python task.

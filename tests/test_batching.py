@@ -1,23 +1,35 @@
-"""Memory-bounded group streaming (operators/batching.py): unit tests
-for the carry-over logic, plus an end-to-end equivalence check that
-stanza assembly and thick→thin expansion produce IDENTICAL output when
-Arrow batches are tiny (forcing groups to straddle batch boundaries)."""
+"""Memory-bounded group streaming and the pandas-free Arrow columns
+(operators/batching.py): unit tests for the carry-over logic and the
+column conversions, plus an end-to-end equivalence check that stanza
+assembly and thick→thin expansion produce IDENTICAL output when Arrow
+batches are tiny (forcing groups to straddle batch boundaries)."""
 
 import pandas as pd
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
-from ldtab_clj_spark.operators.batching import grouped_batches
+from ldtab_clj_spark.operators.batching import (column, grouped_batches,
+                                                pylist, record_batches)
+
+_KV = pa.schema([("k", pa.string()), ("v", pa.int64())])
 
 
 def _frames(rows, sizes):
-    """Split a row list into frames of the given sizes."""
+    """Split a (k, v) row list into RecordBatches of the given sizes."""
     out, i = [], 0
     for n in sizes:
-        out.append(pd.DataFrame(rows[i:i + n], columns=["k", "v"]))
+        out.append(pa.RecordBatch.from_arrays(
+            [pa.array([r[0] for r in rows[i:i + n]], pa.string()),
+             pa.array([r[1] for r in rows[i:i + n]], pa.int64())],
+            schema=_KV))
         i += n
     assert i == len(rows)
     return out
+
+
+def _batch_rows(batch):
+    return list(zip(batch["k"].to_pylist(), batch["v"].to_pylist()))
 
 
 ROWS = [("a", 1), ("a", 2), ("b", 3), ("b", 4), ("b", 5), ("c", 6)]
@@ -29,28 +41,61 @@ ROWS = [("a", 1), ("a", 2), ("b", 3), ("b", 4), ("b", 5), ("c", 6)]
 ])
 def test_grouped_batches_complete_groups(sizes):
     got = list(grouped_batches(iter(_frames(ROWS, sizes)), "k"))
-    # every yielded frame holds only complete groups...
+    # every yielded batch holds only complete groups...
     seen = []
-    for pdf in got:
-        keys = list(pdf["k"])
+    for batch in got:
+        keys = batch["k"].to_pylist()
         for g in dict.fromkeys(keys):
             assert g not in seen, f"group {g} split across yields"
         seen.extend(dict.fromkeys(keys))
     # ...and the concatenation is the original row stream
-    cat = pd.concat(got, ignore_index=True)
-    assert list(map(tuple, cat.itertuples(index=False))) == ROWS
+    assert [r for b in got for r in _batch_rows(b)] == ROWS
 
 
 def test_grouped_batches_empty():
     assert list(grouped_batches(iter([]), "k")) == []
-    assert list(grouped_batches(iter([pd.DataFrame(columns=["k"])]),
-                                "k")) == []
+    assert list(grouped_batches(iter(_frames([], [0])), "k")) == []
 
 
 def test_single_giant_group():
     rows = [("x", i) for i in range(10)]
     got = list(grouped_batches(iter(_frames(rows, [3, 3, 3, 1])), "k"))
-    assert len(got) == 1 and len(got[0]) == 10
+    assert len(got) == 1 and got[0].num_rows == 10
+
+
+@pytest.mark.parametrize("values,type", [
+    (["a", "ça", None, "", "日本語 ✓", None], pa.string()),
+    ([None], pa.string()),
+    ([], pa.string()),
+    ([], pa.bool_()),
+    ([True, False, None, True, True, False, False, True, None, True],
+     pa.bool_()),
+    ([True] * 13, pa.bool_()),
+    ([0, -1, None, 2**31 - 1, -2**31], pa.int32()),
+    ([2**40, None, -2**63, 2**63 - 1], pa.int64()),
+], ids=["str", "str-null", "str-empty", "bool-empty", "bool-10",
+        "bool-13", "int32", "int64"])
+def test_column_and_pylist_match_pyarrow(values, type):
+    """The buffer-built column equals pyarrow's own conversion: values,
+    validity, null count, and a valid layout; ``pylist`` reads it, and
+    a slice of pyarrow's, back as ``to_pylist`` does."""
+    got = column(values, type)
+    got.validate(full=True)
+    want = pa.array(values, type)
+    assert got.equals(want) and got.null_count == want.null_count
+    assert pylist(got) == got.to_pylist() == values
+    assert pylist(want.slice(1)) == values[1:]
+
+
+def test_record_batches_chunks_rows():
+    """Rows become RecordBatches of the schema, cut at BATCH_ROWS."""
+    from ldtab_clj_spark.operators.batching import BATCH_ROWS
+    rows = [(f"k{i}", i) for i in range(BATCH_ROWS + 3)]
+    got = list(record_batches(iter(rows), _KV))
+    assert [b.num_rows for b in got] == [BATCH_ROWS, 3]
+    assert all(b.schema.equals(_KV) for b in got)
+    assert [r for b in got for r in _batch_rows(b)] == rows
+    assert list(record_batches(iter([]), _KV)) == []
 
 
 @pytest.fixture()
@@ -178,24 +223,6 @@ def test_minhash_matches_duckdb_oracle(spark):
                              sorted(want_e - got_e))
 
 
-def _batch(kind, rows):
-    """One batch of (k, v) rows as a pandas DataFrame or an Arrow
-    RecordBatch."""
-    import pyarrow as pa
-    if kind == "pandas":
-        return pd.DataFrame(rows, columns=["k", "v"])
-    return pa.RecordBatch.from_pydict(
-        {"k": pa.array([r[0] for r in rows], pa.string()),
-         "v": pa.array([r[1] for r in rows], pa.int64())})
-
-
-def _batch_rows(frame):
-    if isinstance(frame, pd.DataFrame):
-        return list(map(tuple, frame.itertuples(index=False)))
-    return list(zip(frame["k"].to_pylist(), frame["v"].to_pylist()))
-
-
-@pytest.mark.parametrize("kind", ["pandas", "arrow"])
 @pytest.mark.parametrize("rows,sizes", [
     # a run ("b") straddling three batches
     ([("a", 1)] + [("b", i) for i in range(2, 9)] + [("c", 9)],
@@ -206,19 +233,14 @@ def _batch_rows(frame):
     (ROWS, [0, 2, 0, 0, 4, 0]),
     ([], [0, 0]),
 ])
-def test_grouped_batches_pandas_and_arrow(kind, rows, sizes):
-    """One carry loop for both batch types: every yielded frame has
-    the input's type and holds only complete groups, and together they
-    are the input rows in order."""
-    batches, i = [], 0
-    for n in sizes:
-        batches.append(_batch(kind, rows[i:i + n]))
-        i += n
-    got = list(grouped_batches(iter(batches), "k"))
-    assert all(type(f) is type(batches[0]) and len(f) for f in got)
+def test_grouped_batches_record_batches(rows, sizes):
+    """Every yielded batch is a non-empty RecordBatch holding only
+    complete groups, and together they are the input rows in order."""
+    got = list(grouped_batches(iter(_frames(rows, sizes)), "k"))
+    assert all(type(b) is pa.RecordBatch and b.num_rows for b in got)
     seen = []
-    for frame in got:
-        keys = list(dict.fromkeys(k for k, _ in _batch_rows(frame)))
+    for batch in got:
+        keys = list(dict.fromkeys(k for k, _ in _batch_rows(batch)))
         assert not set(keys) & set(seen), "group split across yields"
         seen += keys
-    assert [r for f in got for r in _batch_rows(f)] == rows
+    assert [r for b in got for r in _batch_rows(b)] == rows

@@ -3,6 +3,7 @@ reference's Makefile round-trip workflow, cli.clj dispatch)."""
 
 import pytest
 
+from kg_helpers import stmt_keys
 from ldtab_clj_spark.cli import main
 from ldtab_clj_spark.synth import synth_docs
 
@@ -22,11 +23,7 @@ def test_cli_workflow(spark, tmp_path, capsys):
     assert main(["prefix", db, str(tsv_dir / "prefix.tsv")]) == 0
     assert main(["import", db, docs_dir]) == 0
 
-    def keys(df):
-        return {(r.subject, r.predicate, r.object, r.datatype,
-                 r.annotation) for r in df.collect()}
-
-    orig = keys(spark.read.parquet(f"{db}/statement"))
+    orig = stmt_keys(spark.read.parquet(f"{db}/statement"))
     n = len(orig)
     assert n > 0
 
@@ -61,7 +58,7 @@ def test_cli_workflow(spark, tmp_path, capsys):
     assert main(["init", db2]) == 0
     assert main(["prefix", db2, str(tsv_dir / "prefix.tsv")]) == 0
     assert main(["import", db2, out_nt, "--nt"]) == 0
-    again = keys(spark.read.parquet(f"{db2}/statement"))
+    again = stmt_keys(spark.read.parquet(f"{db2}/statement"))
     tp = len(orig & again)
     assert tp / len(again) >= 0.95 and tp / len(orig) >= 0.95
 
@@ -167,12 +164,8 @@ def test_cli_streaming_nt_import(spark, tmp_path):
         assert main(["import", db, str(nt_dir) + "/", "--nt"]
                     + flags) == 0
 
-    def keys(df):
-        return {(r.subject, r.predicate, r.object, r.datatype,
-                 r.annotation) for r in df.collect()}
-
-    s = keys(spark.read.parquet(f"{db1}/statement"))
-    b = keys(spark.read.parquet(f"{db2}/statement"))
+    s = stmt_keys(spark.read.parquet(f"{db1}/statement"))
+    b = stmt_keys(spark.read.parquet(f"{db2}/statement"))
     assert s == b and len(s) == 3
     # per-run tmp table/checkpoint cleaned up
     import pathlib

@@ -5,6 +5,7 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
+from kg_helpers import PREFIXES, prefix_table
 from ldtab_clj_spark.operators.export import (read_tsv, to_ntriples_lines,
                                               to_turtle_lines, write_tsv)
 from ldtab_clj_spark.operators.extract import extract_thin_triples
@@ -15,11 +16,6 @@ from ldtab_clj_spark.plans.pipeline import build_statements, reimport
 from ldtab_clj_spark.synth import entity_dictionary, synth_docs
 
 N_DOCS = 80
-PREFIXES = [("ex", "http://example.com/"),
-            ("rdf", "http://www.w3.org/1999/02/22-rdf-syntax-ns#"),
-            ("rdfs", "http://www.w3.org/2000/01/rdf-schema#"),
-            ("owl", "http://www.w3.org/2002/07/owl#"),
-            ("xsd", "http://www.w3.org/2001/XMLSchema#")]
 
 
 @pytest.fixture(scope="module")
@@ -62,7 +58,7 @@ def test_distributed_roundtrip_pr(statements):
 
 
 def test_ntriples_lines(spark, statements):
-    prefix = spark.createDataFrame(PREFIXES, "prefix string, base string")
+    prefix = prefix_table(spark)
     lines = [r.value for r in
              to_ntriples_lines(statements, prefix).collect()]
     assert lines and all(line.endswith(" .") for line in lines)
@@ -104,14 +100,14 @@ def stanza(statements, prefix):
 @pytest.mark.parametrize("stage", [to_ntriples_lines, to_turtle_lines,
                                    stanza])
 def test_export_is_one_python_pass(spark, statements, stage):
-    """Each kg Python stage is ONE mapInPandas (one Python runner, so
+    """Each kg Python stage is ONE mapInArrow (one Python runner, so
     one worker per task; the export's expand and format share it)
     behind ONE exchange, and AQE's final plan reads that pinned shuffle
     as it is."""
-    prefix = spark.createDataFrame(PREFIXES, "prefix string, base string")
+    prefix = prefix_table(spark)
     names = [n.name for n in
              executed(spark, stage(statements, prefix).collect).nodes()]
-    assert names.count("MapInPandas") == names.count("Exchange") == 1 \
+    assert names.count("MapInArrow") == names.count("Exchange") == 1 \
         and "AQEShuffleRead" not in names, names
 
 
@@ -166,7 +162,7 @@ def test_fused_export_matches_driver_rendering(spark):
     want = Counter(line(t) for group in by_subject.values()
                    for r in merge_existential_rows(group)
                    for t in expand_statement_row(r))
-    prefix = spark.createDataFrame(PREFIXES, "prefix string, base string")
+    prefix = prefix_table(spark)
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(key)
     spark.conf.set(key, "3")
@@ -199,7 +195,7 @@ def test_unlinked_iris_roundtrip_through_both_writers(spark, tmp_path,
             (1, 0, "graph", "<unlinked:Widget 9>", "rdfs:label", "w 9",
              "xsd:string", None)]
     df = spark.createDataFrame(rows, STATEMENT)
-    prefix = spark.createDataFrame(PREFIXES, "prefix string, base string")
+    prefix = prefix_table(spark)
     out = str(tmp_path / f"out.{fmt}")
     if fmt == "nt":
         write_ntriples(df, prefix, out)

@@ -6,6 +6,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
+from kg_helpers import PREFIXES, prefix_table, stmt_keys
 from ldtab_clj_spark.operators.components import assign_components
 from ldtab_clj_spark.operators.export import write_ntriples
 from ldtab_clj_spark.plans.executed import executed
@@ -13,16 +14,11 @@ from ldtab_clj_spark.plans.pipeline import build_statements
 from ldtab_clj_spark.sources.ntriples import import_ntriples, parse_nt_line
 from ldtab_clj_spark.synth import entity_dictionary, synth_docs
 
-PREFIXES = [("ex", "http://example.com/"),
-            ("rdf", "http://www.w3.org/1999/02/22-rdf-syntax-ns#"),
-            ("rdfs", "http://www.w3.org/2000/01/rdf-schema#"),
-            ("owl", "http://www.w3.org/2002/07/owl#"),
-            ("xsd", "http://www.w3.org/2001/XMLSchema#")]
 
 
 @pytest.fixture(scope="module")
 def prefix_df(spark):
-    return spark.createDataFrame(PREFIXES, "prefix string, base string")
+    return prefix_table(spark)
 
 
 def test_parse_nt_line_variants():
@@ -165,11 +161,7 @@ def test_nt_format_roundtrip(spark, tmp_path, prefix_df):
     write_ntriples(statements, prefix_df, nt_dir)
     again = import_ntriples(spark, nt_dir, prefix_df)
 
-    def keys(df):
-        return {(r.subject, r.predicate, r.object, r.datatype,
-                 r.annotation) for r in df.collect()}
-
-    orig, back = keys(statements), keys(again)
+    orig, back = stmt_keys(statements), stmt_keys(again)
     tp = len(orig & back)
     p, r = tp / len(back), tp / len(orig)
     assert p >= 0.95 and r >= 0.95, (p, r, len(orig), len(back),

@@ -4,6 +4,7 @@ against the batch pipeline on the same corpus."""
 
 from pyspark.sql import Window, functions as F
 
+from kg_helpers import prefix_table
 from ldtab_clj_spark.plans.pipeline import build_statements
 from ldtab_clj_spark.streaming.pipeline import (read_stream_result,
                                                 run_streaming_import)
@@ -159,13 +160,7 @@ def test_streaming_nt_import_equals_batch(spark, tmp_path):
     from ldtab_clj_spark.operators.export import write_ntriples
     from ldtab_clj_spark.sources.ntriples import import_ntriples
     from ldtab_clj_spark.streaming.pipeline import run_streaming_import_nt
-    prefix_df = spark.createDataFrame(
-        [("ex", "http://example.com/"),
-         ("rdf", "http://www.w3.org/1999/02/22-rdf-syntax-ns#"),
-         ("rdfs", "http://www.w3.org/2000/01/rdf-schema#"),
-         ("owl", "http://www.w3.org/2002/07/owl#"),
-         ("xsd", "http://www.w3.org/2001/XMLSchema#")],
-        "prefix string, base string")
+    prefix_df = prefix_table(spark)
     # three .nt files with self-contained stanzas (incl. blanks +
     # annotations) from the synth pipeline's NT export
     docs = synth_docs(spark, 45, seed=17)

@@ -9,6 +9,7 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
+from kg_helpers import stmt_keys
 from ldtab_clj_spark.sources.rdfxml import import_rdfxml, parse_rdfxml
 from ldtab_clj_spark.sources.turtle import (TurtleError, import_turtle,
                                             parse_turtle)
@@ -89,11 +90,6 @@ def prefix_df(spark):
     return spark.createDataFrame(PREFIXES, "prefix string, base string")
 
 
-def _stmt_keys(df):
-    return {(r.subject, r.predicate, r.object, r.datatype, r.annotation)
-            for r in df.collect()}
-
-
 def test_parse_turtle_core_forms():
     triples = parse_turtle(TTL)
     assert ("http://example.com/A",
@@ -122,12 +118,12 @@ def test_three_formats_agree(spark, tmp_path, prefix_df):
     (tmp_path / "g.ttl").write_text(TTL)
     (tmp_path / "g.owl").write_text(OWL_XML)
     (tmp_path / "g.nt").write_text(NT)
-    ttl = _stmt_keys(import_turtle(spark, str(tmp_path / "g.ttl"),
+    ttl = stmt_keys(import_turtle(spark, str(tmp_path / "g.ttl"),
+                                  prefix_df))
+    owl = stmt_keys(import_rdfxml(spark, str(tmp_path / "g.owl"),
+                                  prefix_df))
+    nt = stmt_keys(import_ntriples(spark, str(tmp_path / "g.nt"),
                                    prefix_df))
-    owl = _stmt_keys(import_rdfxml(spark, str(tmp_path / "g.owl"),
-                                   prefix_df))
-    nt = _stmt_keys(import_ntriples(spark, str(tmp_path / "g.nt"),
-                                    prefix_df))
     assert ttl == owl == nt
     # the restriction bnode folds into the subClassOf object JSON
     assert any("someValuesFrom" in (o or "") for _, _, o, _, _ in ttl)
@@ -144,7 +140,7 @@ def test_reference_ontology_roundtrip(spark, tmp_path, prefix_df):
     write_ntriples(first, prefix_df, nt_dir)
     from ldtab_clj_spark.sources.ntriples import import_ntriples
     again = import_ntriples(spark, nt_dir, prefix_df)
-    orig, back = _stmt_keys(first), _stmt_keys(again)
+    orig, back = stmt_keys(first), stmt_keys(again)
     tp = len(orig & back)
     p, r = tp / len(back), tp / len(orig)
     assert p >= 0.95 and r >= 0.95, (p, r, len(orig), len(back),
@@ -207,7 +203,7 @@ def test_turtle_export_roundtrip(spark, tmp_path, prefix_df):
     assert text.startswith("@prefix ")
     assert "ex:" in text
     again = import_turtle(spark, out, prefix_df)
-    orig, back = _stmt_keys(statements), _stmt_keys(again)
+    orig, back = stmt_keys(statements), stmt_keys(again)
     tp = len(orig & back)
     p, r = tp / len(back), tp / len(orig)
     assert p >= 0.95 and r >= 0.95, (p, r, len(orig), len(back),
@@ -224,7 +220,7 @@ def test_reference_ontology_turtle_export(spark, tmp_path, prefix_df):
     out = str(tmp_path / "onto_ttl")
     write_turtle(first, prefix_df, out)
     again = import_turtle(spark, out, prefix_df)
-    orig, back = _stmt_keys(first), _stmt_keys(again)
+    orig, back = stmt_keys(first), stmt_keys(again)
     tp = len(orig & back)
     p, r = tp / len(back), tp / len(orig)
     assert p >= 0.95 and r >= 0.95, (p, r, len(orig), len(back),
@@ -258,7 +254,7 @@ def test_long_collection_roundtrip(spark, tmp_path, prefix_df):
     out = str(tmp_path / "long_out")
     write_turtle(first, prefix_df, out)
     again = import_turtle(spark, out, prefix_df)
-    assert _stmt_keys(first) == _stmt_keys(again)
+    assert stmt_keys(first) == stmt_keys(again)
 
 
 def test_rdfxml_xml_base_scoped_and_rdf_id():
@@ -318,10 +314,10 @@ def test_rdfxml_parsetype_literal_matches_ntriples(spark, tmp_path,
           f'"{lit}"^^'
           '<http://www.w3.org/1999/02/22-rdf-syntax-ns#XMLLiteral> .\n')
     (tmp_path / "l.nt").write_text(nt)
-    owl = _stmt_keys(import_rdfxml(spark, str(tmp_path / "l.owl"),
-                                   prefix_df))
-    nts = _stmt_keys(import_ntriples(spark, str(tmp_path / "l.nt"),
-                                     prefix_df))
+    owl = stmt_keys(import_rdfxml(spark, str(tmp_path / "l.owl"),
+                                  prefix_df))
+    nts = stmt_keys(import_ntriples(spark, str(tmp_path / "l.nt"),
+                                    prefix_df))
     assert owl == nts and owl
 
 

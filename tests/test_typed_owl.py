@@ -7,6 +7,7 @@ of scope and falls back to the generic expansion."""
 
 import json
 
+from kg_helpers import prefix_table, stmt_keys
 from ldtab_clj_spark.core.expand import expand_statement_row
 
 
@@ -163,23 +164,13 @@ def test_typed_owl_roundtrip_reference_ontology(spark, tmp_path):
     from ldtab_clj_spark.operators.export import write_ntriples
     from ldtab_clj_spark.sources.ntriples import import_ntriples
     from ldtab_clj_spark.sources.rdfxml import import_rdfxml
-    prefix_df = spark.createDataFrame(
-        [("ex", "http://example.com/"),
-         ("rdf", "http://www.w3.org/1999/02/22-rdf-syntax-ns#"),
-         ("rdfs", "http://www.w3.org/2000/01/rdf-schema#"),
-         ("owl", "http://www.w3.org/2002/07/owl#"),
-         ("xsd", "http://www.w3.org/2001/XMLSchema#")],
-        "prefix string, base string")
+    prefix_df = prefix_table(spark)
     first = import_rdfxml(spark, str(ref), prefix_df).localCheckpoint()
     out = str(tmp_path / "typed_nt")
     write_ntriples(first, prefix_df, out, typed_owl=True)
     again = import_ntriples(spark, out, prefix_df)
 
-    def keys(df):
-        return {(r.subject, r.predicate, r.object, r.datatype,
-                 r.annotation) for r in df.collect()}
-
-    orig, back = keys(first), keys(again)
+    orig, back = stmt_keys(first), stmt_keys(again)
     tp = len(orig & back)
     p, r = tp / len(back), tp / len(orig)
     assert p >= 0.95 and r >= 0.95, (p, r, len(orig), len(back),

@@ -79,7 +79,7 @@ def ivf_assignment_stage(spark, sf: str) -> str:
 
 def kg_python_stages(spark) -> list[str]:
     """kg stanza and export stages in isolation, executed on 200 docs.
-    Each is ONE MapInPandas (one Python worker per task) behind ONE
+    Each is ONE MapInArrow (one Python worker per task) behind ONE
     exchange, and no AQEShuffleRead coalesces its pinned shuffle in the
     final plan (``tests/test_export.py`` asserts it over a checkpoint
     input). The export runs as the CLI runs it: dedup-on-read over a
