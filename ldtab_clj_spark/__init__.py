@@ -18,7 +18,7 @@ from ldtab_clj_spark import zipcache as _zipcache
 # Python worker has the gate from its second task on (zipcache.py).
 # The daemon also runs a full gc.collect() after every task of a reused
 # worker (pyspark/daemon.py), ~30 ms over the imported pyspark and
-# pyarrow heap (and pandas, in a worker that ran a mapInPandas stage);
+# pyarrow heap (no package stage imports pandas: operators/batching);
 # freezing that heap once leaves each collection only the objects
 # created since.
 if _zipcache.in_pyspark_worker():

@@ -51,10 +51,9 @@ from typing import Iterator
 import pyarrow as pa
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructField, StructType
 
-from .batching import pylist, record_batches
+from .batching import map_rows, pylist
 
 MAX_ROUNDS = 32
 
@@ -138,9 +137,7 @@ def min_label_components(edges: DataFrame) -> DataFrame:
     a_type = edges.schema["a"].dataType
     schema = StructType([StructField("a", a_type),
                          StructField("component", a_type)])
-    batch_schema = to_arrow_schema(schema)
-    local = edges.select("a", "b").mapInArrow(
-        lambda b: record_batches(_local_roots(b), batch_schema), schema)
+    local = map_rows(edges.select("a", "b"), _local_roots, schema)
     # a node seen in k partitions has k local roots: keep the smallest
     # and link the others to it (the root graph)
     obs = Observation()

@@ -21,6 +21,7 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .batching import map_rows, pylist
 from .parallel import python_partitions
 from .text import TEXT_COL
 
@@ -157,22 +158,19 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
     A string-min MinHash — identical semantics to integer MinHash (any
     total order on a good hash works) and exactly reproducible in ANSI
     SQL, so the DuckDB oracle (queries._SIG over queries._SHINGLES)
-    pins it. Computed in one hashlib pass per doc inside mapInPandas:
+    pins it. Computed in one hashlib pass per doc inside ``map_rows``:
     the min over DIGEST BYTES equals the min over hex strings (both are
     the md5 value's lexicographic byte order). Tokenization as in
     ``_WS``; docs with no bigram emit no row.
     """
     import hashlib
 
-    import pandas as pd
-
     prefixes = [f"{i}:".encode() for i in range(N_MINHASH)]
-    sig_cols = [f"sig{i}" for i in range(N_MINHASH)]
 
     def sig(batches):
-        for pdf in batches:
-            out_ids, out_sigs = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf[TEXT_COL]):
+        for batch in batches:
+            for doc_id, text in zip(pylist(batch["doc_id"]),
+                                    pylist(batch[TEXT_COL])):
                 if text is None:
                     continue
                 words = _WS.split(text.strip(" "))
@@ -186,18 +184,13 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
                         d = hashlib.md5(p + s).digest()
                         if mins[i] is None or d < mins[i]:
                             mins[i] = d
-                out_ids.append(doc_id)
-                out_sigs.append([m.hex() for m in mins])
-            yield pd.DataFrame(
-                {"doc_id": out_ids,
-                 **{c: [s[i] for s in out_sigs]
-                    for i, c in enumerate(sig_cols)}})
+                yield doc_id, *(m.hex() for m in mins)
 
     doc_type = dict(docs.dtypes)["doc_id"]
     schema = f"doc_id {doc_type}, " + ", ".join(
-        f"{c} string" for c in sig_cols)
-    return python_partitions(docs.select("doc_id", TEXT_COL)).mapInPandas(
-        sig, schema)
+        f"sig{i} string" for i in range(N_MINHASH))
+    return map_rows(python_partitions(docs.select("doc_id", TEXT_COL)),
+                    sig, schema)
 
 
 _HEX = "0123456789abcdef"
@@ -212,17 +205,16 @@ def simhash_signatures(docs: DataFrame) -> DataFrame:
     integer arithmetic, so the DuckDB oracle (queries._SIMHASH) pins
     it exactly and no engine hash function leaks into results.
     Computed in one md5 + numpy bit-count pass per doc inside
-    mapInPandas; tokenization as in ``_WS``.
+    ``map_rows``; tokenization as in ``_WS``.
     """
     import hashlib
 
     import numpy as np
-    import pandas as pd
 
     def sig(batches):
-        for pdf in batches:
-            out_ids, out_sigs = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf[TEXT_COL]):
+        for batch in batches:
+            for doc_id, text in zip(pylist(batch["doc_id"]),
+                                    pylist(batch[TEXT_COL])):
                 if text is None:
                     continue   # null text → no shingles
                 words = _WS.split(text.strip(" "))
@@ -241,20 +233,18 @@ def simhash_signatures(docs: DataFrame) -> DataFrame:
                 bits = (nib[:, :, None] >> np.arange(4)) & 1
                 maj = (2 * bits.sum(axis=0) >= len(d))   # 16 × 4 bools
                 vals = (maj << np.arange(4)).sum(axis=1)
-                out_ids.append(doc_id)
-                out_sigs.append("".join(_HEX[v] for v in vals))
-            yield pd.DataFrame({"doc_id": out_ids, "simhash": out_sigs})
+                yield doc_id, "".join(_HEX[v] for v in vals)
 
     doc_type = dict(docs.dtypes)["doc_id"]
-    return python_partitions(docs.select("doc_id", TEXT_COL)).mapInPandas(
-        sig, f"doc_id {doc_type}, simhash string")
+    return map_rows(python_partitions(docs.select("doc_id", TEXT_COL)),
+                    sig, f"doc_id {doc_type}, simhash string")
 
 
 def _band_pairs(bands_df: DataFrame) -> DataFrame:
     """(doc_id, band, bucket) → distinct candidate pairs (doc_a < doc_b)
     via a bucket-key self-join. SHUFFLE_HASH-hinted: the planner's
     broadcast choice computed the ENTIRE signature subplan (the
-    MapInPandas pass) a second time for the build side and then
+    Python signature pass) a second time for the build side and then
     collected it through a serial BroadcastExchange build — measured as the duplicated stanza in the r06 before-plans
     and a 8.6→5.0 s drop for simhash when hinted. With both sides
     shuffled on (band, bucket), the sides run as parallel shuffle

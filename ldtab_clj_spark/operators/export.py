@@ -23,12 +23,11 @@ from typing import Iterator
 import pyarrow as pa
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..core.canonical import content_hash, curie_to_iri, curify_with
 from ..core.expand import expand_statement_row, merge_existential_rows
 from ..schemas import STATEMENT_COLS, THIN
-from .batching import grouped_batches, pylist, record_batches
+from .batching import grouped_batches, map_rows, pylist
 from .parallel import python_partitions
 
 
@@ -127,10 +126,6 @@ def _expanded(batches: Iterator[pa.RecordBatch], typed_owl: bool):
             yield r, expand_statement_row(r, typed_owl=typed_owl)
 
 
-_THIN = to_arrow_schema(THIN)
-_LINES = pa.schema([pa.field("value", pa.string())])
-
-
 def expand_df(statements: DataFrame) -> DataFrame:
     """R10/R11 as a distributed operator: statement rows → thin
     triples (one-to-many, Arrow-batched), for the re-import path."""
@@ -147,8 +142,7 @@ def expand_df(statements: DataFrame) -> DataFrame:
                        t["datatype"], t["is_blank_s"], t["is_blank_o"],
                        comp, 0)
 
-    return _by_subject(statements).mapInArrow(
-        lambda b: record_batches(thin_rows(b), _THIN), THIN)
+    return map_rows(_by_subject(statements), thin_rows, THIN)
 
 
 def _text_lines(statements: DataFrame, typed_owl: bool, line,
@@ -156,15 +150,14 @@ def _text_lines(statements: DataFrame, typed_owl: bool, line,
     """Statement rows → text lines, expanded and formatted
     (``line(thin_triple)``) in ONE Python pass per task. ``header``
     opens every non-empty partition."""
-    def fmt(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def fmt(batches: Iterator[pa.RecordBatch]) -> Iterator[tuple]:
         lines = ((line(t),) for _, triples in _expanded(batches, typed_owl)
                  for t in triples)
         first = next(lines, None)
         if first is not None:
-            yield from record_batches(
-                chain(((h,) for h in header), [first], lines), _LINES)
+            yield from chain(((h,) for h in header), [first], lines)
 
-    return _by_subject(statements).mapInArrow(fmt, "value string")
+    return map_rows(_by_subject(statements), fmt, "value string")
 
 
 def escape_literal(v: str) -> str:

@@ -21,10 +21,9 @@ from typing import Iterator
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..schemas import THIN
-from .batching import pylist, record_batches
+from .batching import map_rows, pylist
 from .parallel import python_partitions
 
 _SUR = r"(?:Widget \d+|W-\d+)"
@@ -40,7 +39,6 @@ RE_RULE = re.compile(
     rf"^Rule: anything that (contains|powers|resembles) ({_SUR}) is ({_SUR})\.$")
 RE_RESTR = re.compile(
     rf"^Every ({_SUR}) (contains|powers|resembles) some ({_SUR})\.$")
-_THIN = to_arrow_schema(THIN)
 
 
 def _mention(surface: str) -> str:
@@ -133,18 +131,15 @@ def _build_triples(doc_id: str, pos: int, m, t) -> list[tuple]:
     return []  # unrecognized span kinds carry no triples
 
 
-def parse_spans_batch(
-        batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+def parse_spans_batch(batches: Iterator[pa.RecordBatch]) -> Iterator[tuple]:
     """Arrow-batched span parser (the mention-detection Arrow UDF)."""
     for batch in batches:
         cols = [pylist(batch.column(c))
                 for c in ("doc_id", "pos", "kind", "text", "media_ref")]
-        yield from record_batches(
-            ((s, p, o, dt, bs, bo, doc_id, pos)
-             for doc_id, pos, kind, text, media in zip(*cols)
-             for s, p, o, dt, bs, bo in _parse_span(
-                 doc_id, pos, kind, text or "", media or "")),
-            _THIN)
+        for doc_id, pos, kind, text, media in zip(*cols):
+            for s, p, o, dt, bs, bo in _parse_span(
+                    doc_id, pos, kind, text or "", media or ""):
+                yield s, p, o, dt, bs, bo, doc_id, pos
 
 
 def extract_thin_triples(docs: DataFrame) -> DataFrame:
@@ -164,4 +159,4 @@ def extract_thin_triples(docs: DataFrame) -> DataFrame:
         F.col("span.text").alias("text"),
         F.col("span.media_ref").alias("media_ref"),
     )
-    return python_partitions(exploded).mapInArrow(parse_spans_batch, THIN)
+    return map_rows(python_partitions(exploded), parse_spans_batch, THIN)

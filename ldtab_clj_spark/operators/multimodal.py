@@ -8,9 +8,9 @@ Arrow batch shapes, UDF signatures — is real and tested.
 
 Scale notes: media payloads ride in their own table keyed by
 media_ref (never inside the docs table — a 100 TB scan of spans must
-not drag blobs along); feature extraction is ``mapInPandas`` over the
-media table only, and joins back to statements on media_ref are
-broadcast or bucketed by ref hash.
+not drag blobs along); feature extraction is one ``batching.map_rows``
+stage over the media table only, and joins back to statements on
+media_ref are broadcast or bucketed by ref hash.
 """
 
 from __future__ import annotations
@@ -19,12 +19,14 @@ import hashlib
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (ArrayType, BinaryType, FloatType,
                                IntegerType, StringType, StructField,
                                StructType)
+
+from .batching import map_rows, pylist
 
 MEDIA = StructType([
     StructField("media_ref", StringType(), False),
@@ -60,22 +62,19 @@ def synth_media(spark: SparkSession, docs: DataFrame) -> DataFrame:
             .select(F.col("s.media_ref").alias("media_ref"))
             .distinct())
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for ref in pdf["media_ref"]:
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[tuple]:
+        for batch in batches:
+            for ref in pylist(batch["media_ref"]):
                 h = hashlib.sha256(ref.encode()).digest()
                 fmt = _FORMATS[h[0] % len(_FORMATS)]
                 size = 256 + h[1]  # 256-511 bytes of deterministic blob
                 content = (h * ((size // len(h)) + 1))[:size]
-                rows.append((ref, content,
-                             {"format": fmt, "width": 16 + h[2] % 64,
-                              "height": 16 + h[3] % 64,
-                              "n_frames": 1 + h[4] % 8}))
-            yield pd.DataFrame(rows, columns=["media_ref", "content",
-                                              "meta"])
+                yield (ref, content,
+                       {"format": fmt, "width": 16 + h[2] % 64,
+                        "height": 16 + h[3] % 64,
+                        "n_frames": 1 + h[4] % 8})
 
-    return refs.mapInPandas(gen, MEDIA)
+    return map_rows(refs, gen, MEDIA)
 
 
 def _fake_decode(content: bytes) -> np.ndarray:
@@ -89,36 +88,30 @@ def _fake_decode(content: bytes) -> np.ndarray:
 def decode_media(media: DataFrame) -> DataFrame:
     """Decode + feature-extract (resize/spectrogram/etc. live here in a
     real deployment). Arrow-batched; one output row per media row."""
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [_fake_decode(bytes(c)) for c in pdf["content"]]
-            yield pd.DataFrame({
-                "media_ref": pdf["media_ref"],
-                "format": [m["format"] if m else None for m in pdf["meta"]],
-                "feature": feats,
-            })
+    def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[tuple]:
+        for batch in batches:
+            for ref, content, meta in zip(*(pylist(batch[c]) for c in
+                                            ("media_ref", "content", "meta"))):
+                yield (ref, meta["format"] if meta else None,
+                       _fake_decode(content).tolist())
 
-    return media.mapInPandas(decode, FEATURES)
+    return map_rows(media, decode, FEATURES)
 
 
 def sample_frames(media: DataFrame, every: int = 2) -> DataFrame:
     """Frame sampling for video-like payloads: one-to-many expansion,
     frame bytes sliced from the payload (stub slicing; a real impl
     seeks keyframes)."""
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for ref, content, meta in zip(pdf["media_ref"],
-                                          pdf["content"], pdf["meta"]):
+    def sample(batches: Iterator[pa.RecordBatch]) -> Iterator[tuple]:
+        for batch in batches:
+            for ref, blob, meta in zip(*(pylist(batch[c]) for c in
+                                         ("media_ref", "content", "meta"))):
                 n = (meta["n_frames"] if meta else 1) or 1
-                blob = bytes(content)
                 step = max(len(blob) // n, 1)
                 for i in range(0, n, every):
-                    rows.append((ref, i, blob[i * step:(i + 1) * step]))
-            yield pd.DataFrame(rows,
-                               columns=["media_ref", "frame_idx", "frame"])
+                    yield ref, i, blob[i * step:(i + 1) * step]
 
-    return media.mapInPandas(sample, FRAMES)
+    return map_rows(media, sample, FRAMES)
 
 
 def media_feature_statements(features: DataFrame) -> DataFrame:

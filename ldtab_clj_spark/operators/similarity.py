@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .batching import from_ndarray, grouped_batches, ndarray
 from .parallel import python_partitions
 
 VEC_COL = "embedding"
@@ -122,10 +123,9 @@ SLAB_BYTES = 4 << 20
 
 
 def _vectors(batch, name: str):
-    """The ``list<float>`` column ``name`` of an Arrow batch as one
-    (rows, dim) float32 array over its flat child buffer, with no
-    per-row objects. ``flatten()`` (not ``.values``) honours a sliced
-    batch's offset. A null vector, or lists of unequal length, raise
+    """The list column ``name`` of an Arrow batch as one (rows, dim)
+    array over its flat child buffer (``batching.ndarray``), with no
+    per-row objects. A null vector, or lists of unequal length, raise
     ValueError: a reshape alone would not notice lengths that differ
     but still sum to rows·dim."""
     import pyarrow.compute as pc
@@ -138,8 +138,7 @@ def _vectors(batch, name: str):
     if dim != span["max"].as_py():
         raise ValueError(f"column {name!r} holds vectors of unequal "
                          f"length ({dim} to {span['max'].as_py()})")
-    return col.flatten().to_numpy(zero_copy_only=False).reshape(
-        len(col), dim)
+    return ndarray(col).reshape(len(col), dim)
 
 
 def _srp_bands_stream(plane_tables):
@@ -167,17 +166,14 @@ def _srp_bands_stream(plane_tables):
             for d in range(v.shape[1]):    # fold-order accumulation
                 nrm += v[:, d] * v[:, d]
             nrm = np.sqrt(nrm)
-            offsets = np.arange(n * n_tables + 1) * raw.shape[1]
-            ids = batch["vec_id"].to_numpy(zero_copy_only=False)
+            ids = ndarray(batch["vec_id"])
             yield pa.RecordBatch.from_arrays([
-                pa.array(np.repeat(ids, n_tables)),
-                pa.array(np.tile(np.arange(n_tables, dtype=np.int32), n)),
-                pa.array(buckets.reshape(-1)),
-                pa.ListArray.from_arrays(
-                    pa.array(offsets, pa.int32()),
-                    pa.array(np.repeat(raw, n_tables, axis=0).reshape(-1)),
-                    type=batch[VEC_COL].type),
-                pa.array(np.repeat(nrm, n_tables)),
+                from_ndarray(np.repeat(ids, n_tables), pa.int64()),
+                from_ndarray(np.tile(np.arange(n_tables), n), pa.int32()),
+                from_ndarray(buckets.reshape(-1), pa.int64()),
+                from_ndarray(np.repeat(raw, n_tables, axis=0),
+                             batch[VEC_COL].type),
+                from_ndarray(np.repeat(nrm, n_tables), pa.float64()),
             ], names=["vec_id", "tbl", "bucket", "_raw", "_norm"])
 
     return bands
@@ -226,8 +222,6 @@ def _confirm_bucket_stream(threshold: float,
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    from .batching import grouped_batches
-
     def confirm_run(ids, V, nrm, out_a, out_b):
         B, dim = V.shape
         pairs = max(1, slab_bytes // (16 * max(dim, 1)))
@@ -249,13 +243,13 @@ def _confirm_bucket_stream(threshold: float,
     def confirm(batches):
         for batch in grouped_batches(batches, "_grp"):
             g, n = batch["_grp"], batch.num_rows
-            change = pc.indices_nonzero(pc.not_equal(
-                g.slice(1), g.slice(0, n - 1))).to_numpy()
+            change = ndarray(pc.indices_nonzero(pc.not_equal(
+                g.slice(1), g.slice(0, n - 1))))
             bounds = np.concatenate(([0], change.astype(np.int64) + 1,
                                      [n]))
-            ids_all = batch["vec_id"].to_numpy(zero_copy_only=False)
+            ids_all = ndarray(batch["vec_id"])
             raw_all = _vectors(batch, "_raw")
-            nrm_all = batch["_norm"].to_numpy(zero_copy_only=False)
+            nrm_all = ndarray(batch["_norm"])
             out_a, out_b = [], []
             for s0, s1 in zip(bounds[:-1], bounds[1:]):
                 if s1 - s0 < 2:
@@ -265,33 +259,11 @@ def _confirm_bucket_stream(threshold: float,
                             nrm_all[s0:s1], out_a, out_b)
             if out_a:
                 yield pa.RecordBatch.from_arrays(
-                    [pa.array(np.concatenate(out_a)),
-                     pa.array(np.concatenate(out_b))],
+                    [from_ndarray(np.concatenate(out_a), pa.int64()),
+                     from_ndarray(np.concatenate(out_b), pa.int64())],
                     names=["vec_a", "vec_b"])
 
     return confirm
-
-
-def _pair_dot_seq_udf():
-    """Vectorized pair dot accumulating dimension-by-dimension in
-    index order — BIT-identical to the ``_dot`` fold (einsum's blocked
-    summation is only value-equal to the last ulp). Used where exact
-    rank order matters, e.g. IVF probe scoring; still vectorized
-    ACROSS rows, so ~dim numpy ops per batch."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def pair_dot(a, b):
-        A = np.stack(a.to_numpy()).astype(np.float64)
-        B = np.stack(b.to_numpy()).astype(np.float64)
-        acc = np.zeros(len(A))
-        for d in range(A.shape[1]):
-            acc += A[:, d] * B[:, d]
-        return pd.Series(acc)
-    pair_dot.__annotations__ = {"a": pd.Series, "b": pd.Series,
-                                "return": pd.Series}
-    return pandas_udf(pair_dot, "double")
 
 
 def srp_banded_near_dup(embeddings: DataFrame,
@@ -357,7 +329,7 @@ def _assign_to_centroids(corpus: DataFrame,
     ordered by cent_id and np.argmax takes the FIRST max), and a NaN
     row argmaxes to its first NaN."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
     cent_rows = sorted(cent.collect(), key=lambda r: r["cent_id"])
     if not cent_rows:
         raise ValueError("empty centroid table")
@@ -367,19 +339,20 @@ def _assign_to_centroids(corpus: DataFrame,
                         dtype=np.int32)
 
     def assign(batches):
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            V = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
-            sims = np.zeros((len(pdf), len(C)))
+            V = _vectors(batch, "_v")
+            sims = np.zeros((len(V), len(C)))
             for d in range(C.shape[1]):  # fold-order accumulation
                 sims += V[:, d, None] * C[None, :, d]
-            sims /= (pdf["_norm"].to_numpy()[:, None] * cnorm[None, :])
-            pdf = pdf.copy()
-            pdf["cent_id"] = cent_ids[np.argmax(sims, axis=1)]
-            yield pdf
+            sims /= (ndarray(batch["_norm"])[:, None] * cnorm[None, :])
+            cid = cent_ids[np.argmax(sims, axis=1)]
+            yield pa.RecordBatch.from_arrays(
+                [*batch.columns, from_ndarray(cid, pa.int32())],
+                names=[*batch.schema.names, "cent_id"])
 
-    return corpus.select("vec_id", "_v", "_norm").mapInPandas(
+    return corpus.select("vec_id", "_v", "_norm").mapInArrow(
         assign, "vec_id long, _v array<double>, _norm double, "
                 "cent_id int")
 
@@ -414,13 +387,12 @@ def ivf_cosine_topk(embeddings: DataFrame, queries: DataFrame,
                       F.desc("csim"), F.asc("cent_id"))))
               .filter(F.col("crnk") <= n_probe)
               .select("query_id", "_q", "_qnorm", "cent_id"))
-    # probe scoring: the fold-order-exact vectorized pair dot (same
-    # bit pattern as the ``_dot`` fold, so near-tied ranks cannot
-    # drift). probes: n_probe rows per query, the caller's sizes
+    # probe scoring: the ``_dot`` fold, whose index-order sum the
+    # oracle reproduces exactly (near-tied ranks cannot drift).
+    # probes: n_probe rows per query, the caller's sizes
     scored = (assigned.join(F.broadcast(probes), "cent_id")
               .filter(F.col("vec_id") != F.col("query_id"))
-              .withColumn("sim",
-                          _pair_dot_seq_udf()(F.col("_v"), F.col("_q"))
+              .withColumn("sim", _dot(F.col("_v"), F.col("_q"))
                           / (F.col("_norm") * F.col("_qnorm"))))
     w = Window.partitionBy("query_id").orderBy(
         F.desc("sim"), F.asc("vec_id"))

@@ -2,7 +2,8 @@
 
 Test/bench boxes run local[N]; on a real cluster the same configs apply
 (AQE + skew-join handling are the explicit requirements of the north
-rule; Arrow is the transport for every pandas UDF in this engine).
+rule; every Python stage of this engine is an Arrow-batched
+``mapInArrow``, see ``operators/batching``).
 """
 
 from __future__ import annotations
@@ -72,7 +73,8 @@ def get_spark(app_name: str = "ldtab_clj_spark",
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Arrow transport for pandas UDFs / toPandas. 10k-row batches:
+        # Arrow: toPandas in tools and tests, and the input batch
+        # size of every mapInArrow stage. 10k-row batches:
         # at 1M docs × 4 workers the 100k default balloons Python RSS
         # (measured 107s vs 143s same-session A/B at local[4]; the r2
         # volume table measured 45.5s vs 66.7s at local[8]) — worker

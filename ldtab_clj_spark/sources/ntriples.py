@@ -19,10 +19,9 @@ from typing import Iterator
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..core.canonical import curify_with
-from ..operators.batching import pylist, record_batches
+from ..operators.batching import map_rows, pylist
 from ..schemas import THIN
 
 # IRIREF body: no control, space or <>"{}|^` character; a backslash
@@ -35,7 +34,6 @@ NT_LINE = re.compile(
     rf"(?:{_IRI}|{_BLANK}|{_LIT})\s*\.\s*(?:#.*)?$")
 
 _XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
-_THIN = to_arrow_schema(THIN)
 
 _UNESCAPE = {"\\n": "\n", "\\r": "\r", "\\t": "\t",
              "\\b": "\b", "\\f": "\f", "\\'": "'",
@@ -155,21 +153,19 @@ def parse_nt_lines(lines: DataFrame,
     over-counting if the result is recomputed (each action re-parses
     unless it is materialized, as assign_components does; a retried
     task also adds again)."""
-    def parse(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def parse(batches: Iterator[pa.RecordBatch]) -> Iterator[tuple]:
         for batch in batches:
-            rows = []
             skipped = 0
             for line in pylist(batch.column("value")):
                 t = parse_nt_line(line, prefixes)
                 if t:
-                    rows.append((*t, "", 0))
+                    yield *t, "", 0
                 elif line.strip() and not line.lstrip().startswith("#"):
                     skipped += 1
             if skipped_acc is not None and skipped:
                 skipped_acc.add(skipped)
-            yield from record_batches(rows, _THIN)
 
-    return lines.mapInArrow(parse, THIN)
+    return map_rows(lines, parse, THIN)
 
 
 def read_ntriples(spark: SparkSession, path: str,

@@ -34,9 +34,9 @@ from typing import Iterator
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.batching import pylist, record_batches
+from ..operators.batching import map_rows, pylist
 from ..schemas import THIN
-from .ntriples import _THIN, _iri_unescape, _unescape, thin_row
+from .ntriples import _iri_unescape, _unescape, thin_row
 
 # PN_CHARS_BASE / PN_CHARS_U / PN_CHARS character classes from the
 # Turtle 1.1 grammar (§6.5) — prefixed names and blank labels accept
@@ -425,19 +425,17 @@ def _read_whole_files(spark: SparkSession, path: str,
     prefixes = [(r["prefix"], r["base"]) for r in prefix_df.collect()]
     files = spark.read.text(path, wholetext=True)
 
-    def parse(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def parse(batches: Iterator[pa.RecordBatch]) -> Iterator[tuple]:
         from ..core.canonical import content_hash
         for batch in batches:
-            rows = []
             for text in pylist(batch.column("value")):
                 # file-scope blank labels (see _to_thin)
                 salt = content_hash(text)[:8]
-                rows.extend((*t, "", 0)
-                            for t in _to_thin(parse_text(text),
-                                              prefixes, blank_salt=salt))
-            yield from record_batches(rows, _THIN)
+                for t in _to_thin(parse_text(text), prefixes,
+                                  blank_salt=salt):
+                    yield *t, "", 0
 
-    return files.mapInArrow(parse, THIN)
+    return map_rows(files, parse, THIN)
 
 
 def import_turtle(spark: SparkSession, path: str,

@@ -4,8 +4,8 @@ The north rule's input is an Iceberg table
 ``(doc_id, spans:array<struct<kind,text,media_ref,offset>>)`` at 10^12
 docs; no such table exists locally, so we synthesize it *distributedly*
 and deterministically: every doc is a pure function of (seed, doc_id),
-generated inside ``mapInPandas`` over ``spark.range`` — the generator
-itself scales to any row count with zero shuffle.
+generated inside one ``batching.map_rows`` stage over ``spark.range``
+— the generator itself scales to any row count with zero shuffle.
 
 The corpus embeds entity surface forms from a closed vocabulary with a
 Zipf-skewed head (exercises salting / AQE skew joins) and sentence
@@ -18,9 +18,9 @@ from __future__ import annotations
 
 import random
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from .operators.batching import map_rows, pylist
 from .schemas import DOCS, ENTITY_DICT
 
 N_ENTITIES = 1000
@@ -86,24 +86,20 @@ def make_doc_spans(seed: int, doc_id: int) -> list[dict]:
 
 def synth_docs(spark: SparkSession, n_docs: int,
                seed: int = 42, partitions: int | None = None) -> DataFrame:
-    """Distributed deterministic docs table: spark.range → mapInPandas.
+    """Distributed deterministic docs table: spark.range → ``map_rows``.
 
     Output is invariant to ``partitions`` (per-doc seeding), so the
     same corpus can be generated at any parallelism level — the basis
     of the N-vs-4N scaling benchmark.
     """
     def gen(batches):
-        for pdf in batches:
-            ids = pdf["id"].to_numpy()
-            yield pd.DataFrame({
-                "doc_id": [f"doc-{i:010d}" for i in ids],
-                "spans": [make_doc_spans(seed, int(i)) for i in ids],
-            })
+        for batch in batches:
+            for i in pylist(batch["id"]):
+                yield f"doc-{i:010d}", make_doc_spans(seed, i)
 
-    rng = spark.range(0, n_docs,
-                      numPartitions=partitions) if partitions else \
-        spark.range(0, n_docs)
-    return rng.mapInPandas(gen, DOCS)
+    # numPartitions=None is the session's default parallelism
+    return map_rows(spark.range(0, n_docs, numPartitions=partitions),
+                    gen, DOCS)
 
 
 def entity_dictionary(spark: SparkSession) -> DataFrame:

@@ -9,7 +9,8 @@ import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
-from ldtab_clj_spark.operators.batching import (column, grouped_batches,
+from ldtab_clj_spark.operators.batching import (column, from_ndarray,
+                                                grouped_batches, ndarray,
                                                 pylist, record_batches)
 
 _KV = pa.schema([("k", pa.string()), ("v", pa.int64())])
@@ -63,6 +64,9 @@ def test_single_giant_group():
     assert len(got) == 1 and got[0].num_rows == 10
 
 
+_STRUCT = pa.struct([("a", pa.string()), ("b", pa.int32())])
+
+
 @pytest.mark.parametrize("values,type", [
     (["a", "ça", None, "", "日本語 ✓", None], pa.string()),
     ([None], pa.string()),
@@ -73,18 +77,52 @@ def test_single_giant_group():
     ([True] * 13, pa.bool_()),
     ([0, -1, None, 2**31 - 1, -2**31], pa.int32()),
     ([2**40, None, -2**63, 2**63 - 1], pa.int64()),
+    ([b"a", None, b"", b"\x00\xff", "ç".encode()], pa.binary()),
+    ([1.5, None, -0.0, 2.0**-20, 2.0**100], pa.float32()),
+    ([1e-300, None, float("inf"), -2.5, 0.1], pa.float64()),
+    ([[1.0, 2.5], None, [], [None, 4.0], [0.25]], pa.list_(pa.float32())),
+    ([], pa.list_(pa.float32())),
+    ([{"a": "x", "b": 1}, None, {"a": None, "b": None},
+      {"a": "", "b": -2}], _STRUCT),
+    ([[{"a": "x", "b": 1}, None], None, [],
+      [{"a": "y", "b": None}, {"a": "z", "b": 3}]], pa.list_(_STRUCT)),
 ], ids=["str", "str-null", "str-empty", "bool-empty", "bool-10",
-        "bool-13", "int32", "int64"])
+        "bool-13", "int32", "int64", "binary", "float32", "float64",
+        "list-float", "list-empty", "struct", "list-struct"])
 def test_column_and_pylist_match_pyarrow(values, type):
     """The buffer-built column equals pyarrow's own conversion: values,
     validity, null count, and a valid layout; ``pylist`` reads it, and
-    a slice of pyarrow's, back as ``to_pylist`` does."""
+    slices of pyarrow's, back as ``to_pylist`` does."""
     got = column(values, type)
     got.validate(full=True)
     want = pa.array(values, type)
     assert got.equals(want) and got.null_count == want.null_count
     assert pylist(got) == got.to_pylist() == values
     assert pylist(want.slice(1)) == values[1:]
+    inner = want.slice(1, max(len(values) - 2, 0))
+    assert pylist(inner) == inner.to_pylist() == values[1:-1]
+
+
+@pytest.mark.parametrize("type", [pa.int32(), pa.int64(), pa.float32(),
+                                  pa.float64()])
+def test_ndarray_round_trip(type):
+    """``ndarray`` reads a sliced numeric column, and a sliced list
+    column's own flat values (not its parent's), as pyarrow's
+    ``to_numpy`` does; ``from_ndarray`` builds the same columns back
+    (a list column from the (rows, width) array). Nulls raise."""
+    nums = pa.array([7, 8, 9, 10, 11], type).slice(1, 3)
+    assert ndarray(nums).dtype == nums.to_numpy().dtype
+    assert ndarray(nums).tolist() == nums.to_numpy().tolist()
+    assert from_ndarray(ndarray(nums), type).equals(nums)
+    vecs = pa.array([[1, 2], [3, 4], [5, 6], [7, 8]], pa.list_(type))
+    part = vecs.slice(1, 2)
+    flat = ndarray(part)
+    assert flat.tolist() == part.flatten().to_numpy().tolist() == [3, 4, 5, 6]
+    back = from_ndarray(flat.reshape(2, 2), part.type)
+    back.validate(full=True)
+    assert back.equals(part)
+    with pytest.raises(ValueError, match="null"):
+        ndarray(pa.array([1, None], type))
 
 
 def test_record_batches_chunks_rows():

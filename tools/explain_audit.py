@@ -58,7 +58,7 @@ def entry(title: str, counts: dict[str, int], notes: list[str]) -> str:
 def ivf_assignment_stage(spark, sf: str) -> str:
     """IVF assignment in isolation: a round-2 finding was a 16×-expanded
     Window+Sort here. The collected centroids are scored per Arrow
-    batch in one MapInPandas, so assignment is a pure map over the
+    batch in one MapInArrow, so assignment is a pure map over the
     corpus scan (the full ann_ivf_topk plan keeps Windows for its
     probe/top-k ranking)."""
     from ldtab_clj_spark.operators.similarity import (_assign_to_centroids,
@@ -73,7 +73,7 @@ def ivf_assignment_stage(spark, sf: str) -> str:
             f"IVF assignment regressed: {m} in the assignment stage"
     return entry("ivf_assignment_stage (isolated)", counts, [
         "pure map: collected centroids scored per Arrow batch in one "
-        "MapInPandas over the scan; no join/aggregate/shuffle/sort in "
+        "MapInArrow over the scan; no join/aggregate/shuffle/sort in "
         "the assignment stage"])
 
 
