@@ -1,12 +1,19 @@
-"""OWL annotation / RDF reification folding.
+"""OWL axiom annotation / RDF reification folding.
 
 Reference: /root/reference/src/ldtab/annotation_handling.clj (whole
 file). A raw thick triple whose object is an ``owl:Axiom`` /
 ``owl:Annotation`` / ``rdf:Statement`` predicate map is folded into the
 base triple it reifies, with the remaining properties moved into an
 ``annotation`` predicate map whose leaves carry a ``meta`` tag naming
-the reification flavor. Recursive for annotations-of-annotations
-(annotation_handling.clj:55-75).
+the reification flavor.
+
+The reference keeps one copy of each fold step per vocabulary. Here
+the two vocabularies are two rows of one table: ``AXIOM`` (OWL 2's
+owl:annotatedSource/Property/Target) and ``STATEMENT`` (RDF's
+rdf:subject/predicate/object). One function folds either flavour, for
+the base case and for annotations-of-annotations alike
+(annotation_handling.clj:28-117). ``core/gci.py`` and ``core/expand.py``
+read the same table.
 
 All keys are plain strings (the reference mixes keywords and strings
 and normalizes via a JSON round-trip at thin2thick.clj:316; we start
@@ -17,153 +24,106 @@ from __future__ import annotations
 
 from typing import Any
 
+# (source, property, target) keys of each reification vocabulary
+AXIOM = ("owl:annotatedSource", "owl:annotatedProperty",
+         "owl:annotatedTarget")
+STATEMENT = ("rdf:subject", "rdf:predicate", "rdf:object")
+# ``meta`` tag of an rdf:Statement's annotation leaves; an owl:* map
+# tags its leaves with its own rdf:type (owl:Axiom | owl:Annotation)
+REIFICATION = "rdf:Reification"
+# stanza root types whose raw triple is folded (thin2thick.clj:307-311)
+ANNOTATION_TYPES = ("owl:Annotation", "owl:Axiom", "rdf:Statement")
+
 # annotation_handling.clj:7-15. Note rdf:subject/predicate/object are
 # NOT in this set, so the reference keeps them inside a reification's
 # annotation map — we preserve that behavior (annotation_handling.clj:83-86).
-_OWL_PROPERTIES = frozenset({
-    "owl:annotatedSource", "owl:annotatedProperty", "owl:annotatedTarget",
-    "rdf:type", "annotation",
-})
+_OWL_PROPERTIES = frozenset({*AXIOM, "rdf:type", "annotation"})
 
 
-def _is_owl_property(prop: str) -> bool:
-    return prop in _OWL_PROPERTIES
-
-
-def _first_object(pmap: dict, key: str) -> Any:
+def first_leaf(pmap: dict, key: str) -> dict | None:
+    """The first leaf under ``key`` of a predicate map, or None
+    (curry-predicate-map, thick2thin.clj:49)."""
     vals = pmap.get(key)
-    if vals:
-        return vals[0].get("object")
-    return None
+    return vals[0] if vals else None
 
 
-def _first_datatype(pmap: dict, key: str) -> Any:
-    vals = pmap.get(key)
-    if vals:
-        return vals[0].get("datatype")
-    return None
+def _object(pmap: dict, key: str) -> Any:
+    return (first_leaf(pmap, key) or {}).get("object")
 
 
 def _annotation_map(pmap: dict, meta: Any) -> dict:
     """Collect non-structural properties, tagging each leaf with
     ``meta`` (annotation_handling.clj:36-39)."""
-    out = {}
-    for prop, objs in pmap.items():
-        if _is_owl_property(prop):
-            continue
-        out[prop] = [dict(o, meta=meta) for o in objs]
-    return out
+    return {prop: [dict(o, meta=meta) for o in objs]
+            for prop, objs in pmap.items() if prop not in _OWL_PROPERTIES}
 
 
 def update_annotation_map(annotation_map: dict, previous: dict) -> dict:
-    """Attach a previously-folded (nested) annotation to the leaf it
-    annotates (annotation_handling.clj:17-26)."""
-    prop = previous.get("owl:annotatedProperty")
-    target = previous.get("owl:annotatedTarget")
-    if prop is None:
-        # reification-recursion path passes rdf:predicate/rdf:object
-        # (annotation_handling.clj:111-117); the reference then reads
-        # the owl:* keys and silently drops the nesting — we look up
-        # the rdf:* keys instead so the nesting survives.
-        prop = previous.get("rdf:predicate")
-        target = previous.get("rdf:object")
-    if prop is None or prop not in annotation_map:
+    """Attach a nested annotation, folded one level up, to the leaf it
+    annotates (annotation_handling.clj:17-26). ``previous`` holds that
+    ``annotation`` and the ``property`` and ``target`` it names in
+    either vocabulary. (The reference passes rdf:predicate/rdf:object
+    for a reification, annotation_handling.clj:111-117, then reads the
+    owl:* keys and silently drops the nesting; one record shape keeps
+    it.) A property that is not a CURIE — a blank node folds to a
+    predicate map — matches no leaf."""
+    prop = previous["property"]
+    if not isinstance(prop, str) or prop not in annotation_map:
         return annotation_map
     out = dict(annotation_map)
-    out[prop] = [dict(x, annotation=previous.get("annotation"))
-                 if x.get("object") == target else x
+    out[prop] = [dict(x, annotation=previous["annotation"])
+                 if x.get("object") == previous["target"] else x
                  for x in annotation_map[prop]]
     return out
-
-
-def _fold_annotation_base(pmap: dict, previous: dict) -> dict:
-    """annotation_handling.clj:28-51."""
-    rdf_type = _first_object(pmap, "rdf:type")  # owl:Axiom | owl:Annotation
-    ann = _annotation_map(pmap, rdf_type)
-    if previous:
-        ann = update_annotation_map(ann, previous)
-    return {
-        "subject": _first_object(pmap, "owl:annotatedSource"),
-        "predicate": _first_object(pmap, "owl:annotatedProperty"),
-        "object": _first_object(pmap, "owl:annotatedTarget"),
-        "datatype": _first_datatype(pmap, "owl:annotatedTarget"),
-        "annotation": ann,
-    }
-
-
-def _fold_reification_base(pmap: dict, previous: dict) -> dict:
-    """annotation_handling.clj:77-96. The reference emits no
-    ``datatype`` here (would violate the statement table's NOT NULL);
-    we take it from the ``rdf:object`` leaf."""
-    ann = _annotation_map(pmap, "rdf:Reification")
-    if previous:
-        ann = update_annotation_map(ann, previous)
-    return {
-        "subject": _first_object(pmap, "rdf:subject"),
-        "predicate": _first_object(pmap, "rdf:predicate"),
-        "object": _first_object(pmap, "rdf:object"),
-        "datatype": _first_datatype(pmap, "rdf:object"),
-        "annotation": ann,
-    }
-
-
-def _fold_annotation_recursion(pmap: dict, previous: dict) -> Any:
-    """annotation_handling.clj:55-75 — the annotatedSource is itself a
-    reification map: fold this level, recurse into the source."""
-    subject = _first_object(pmap, "owl:annotatedSource")
-    predicate = _first_object(pmap, "owl:annotatedProperty")
-    obj = _first_object(pmap, "owl:annotatedTarget")
-    rdf_type = _first_object(pmap, "rdf:type")
-    ann = _annotation_map(pmap, rdf_type)
-    if previous:
-        ann = update_annotation_map(ann, previous)
-    return encode_raw_annotation_map(subject, {
-        "annotation": ann,
-        "owl:annotatedProperty": predicate,
-        "owl:annotatedTarget": obj,
-    })
-
-
-def _fold_reification_recursion(pmap: dict, previous: dict) -> Any:
-    """annotation_handling.clj:98-117."""
-    subject = _first_object(pmap, "rdf:subject")
-    predicate = _first_object(pmap, "rdf:predicate")
-    obj = _first_object(pmap, "rdf:object")
-    ann = _annotation_map(pmap, "rdf:Reification")
-    if previous:
-        ann = update_annotation_map(ann, previous)
-    return encode_raw_annotation_map(subject, {
-        "annotation": ann,
-        "rdf:predicate": predicate,
-        "rdf:object": obj,
-    })
 
 
 def encode_raw_annotation_map(pmap: Any, previous: dict | None = None) -> Any:
     """Fold a raw ``owl:Axiom``/``owl:Annotation``/``rdf:Statement``
     predicate map into a thick triple with an ``annotation`` column
     (annotation_handling.clj:119-166, incl. the worked example in its
-    docstring at :127-142). Returns the input unchanged when it is not
-    a reification map (defensive; the reference returns nil there)."""
-    previous = previous or {}
+    docstring at :127-142). ``previous`` is the nested annotation an
+    outer level passes down (see ``update_annotation_map``). Returns
+    the input unchanged when it is not a reification map (defensive;
+    the reference returns nil there)."""
     if not isinstance(pmap, dict):
         return pmap
-    owl_source = _first_object(pmap, "owl:annotatedSource")
-    rdf_subject = _first_object(pmap, "rdf:subject")
-    if "owl:annotatedSource" in pmap:
-        if isinstance(owl_source, dict):  # nested reification
-            if "owl:annotatedSource" in owl_source:
-                return _fold_annotation_recursion(pmap, previous)
-            if "rdf:subject" in owl_source:
-                return _fold_reification_recursion(pmap, previous)
-            return owl_source
-        return _fold_annotation_base(pmap, previous)
-    if "rdf:subject" in pmap:
-        if isinstance(rdf_subject, dict):
-            if "rdf:subject" in rdf_subject:
-                return _fold_reification_recursion(pmap, previous)
-            if "owl:annotatedSource" in rdf_subject:
-                return _fold_annotation_recursion(pmap, previous)
-            return rdf_subject
-        return _fold_reification_base(pmap, previous)
+    for keys in (AXIOM, STATEMENT):
+        if keys[0] in pmap:
+            return _fold(pmap, keys, previous)
     return pmap
+
+
+def _fold(pmap: dict, keys: tuple, previous: dict | None) -> Any:
+    """One level of the fold, in vocabulary ``keys``. When the source is
+    itself a reification map (annotation_handling.clj:55-75, 98-117),
+    the source's vocabulary is looked up with the outer one first, and
+    as in the reference this level is then read through the SOURCE's
+    keys: a mixed owl:*/rdf:* nesting finds no source and folds to
+    None."""
+    source = _object(pmap, keys[0])
+    nested = isinstance(source, dict)
+    if nested:
+        other = STATEMENT if keys == AXIOM else AXIOM
+        inner = [k for k in (keys, other) if k[0] in source]
+        if not inner:
+            return source
+        keys = inner[0]
+    src, prop, tgt = keys
+    meta = REIFICATION if keys == STATEMENT else _object(pmap, "rdf:type")
+    ann = _annotation_map(pmap, meta)
+    if previous:
+        ann = update_annotation_map(ann, previous)
+    if nested:
+        return encode_raw_annotation_map(_object(pmap, src), {
+            "annotation": ann, "property": _object(pmap, prop),
+            "target": _object(pmap, tgt)})
+    return {
+        "subject": _object(pmap, src),
+        "predicate": _object(pmap, prop),
+        "object": _object(pmap, tgt),
+        # the reference emits no datatype for a reification (would
+        # violate the statement table's NOT NULL); both flavours take
+        # it from the target leaf
+        "datatype": (first_leaf(pmap, tgt) or {}).get("datatype"),
+        "annotation": ann,
+    }

@@ -15,6 +15,7 @@ from __future__ import annotations
 import json
 from typing import Any
 
+from .annotations import AXIOM, REIFICATION, STATEMENT, first_leaf
 from .canonical import canonical_dumps, content_hash, is_wiring_blanknode
 
 
@@ -79,12 +80,6 @@ class _Expander:
 
     # ---- typed OWL constructors (thick2thin.clj, opt-in) ----
 
-    def _first_leaf(self, pmap: dict, key: str):
-        """curry-predicate-map (thick2thin.clj:49) — single value per
-        constructor key."""
-        leaves = pmap.get(key) or []
-        return leaves[0] if leaves else None
-
     def _translate(self, leaf: dict) -> tuple[str, str]:
         """translate (thick2thin.clj:594-598): compound → constructor
         bnode, atom → IRI."""
@@ -120,65 +115,51 @@ class _Expander:
         if t is None and "owl:inverseOf" in pmap:
             # translate-inverse-of (thick2thin.clj:449-458): no rdf:type
             bnode = self.fresh_blank()
-            o, dt = self._translate(self._first_leaf(pmap,
-                                                     "owl:inverseOf"))
-            self.emit(bnode, "owl:inverseOf", o, dt)
+            self.emit(bnode, "owl:inverseOf",
+                      *self._translate(first_leaf(pmap, "owl:inverseOf")))
             return bnode
         return None
 
-    _CARDINALITIES = (
-        # (key, qualified-with-onClass) in reference dispatch order
-        # (thick2thin.clj:296-311)
-        ("owl:minCardinality", False),
-        ("owl:minQualifiedCardinality", True),
-        ("owl:maxCardinality", False),
-        ("owl:maxQualifiedCardinality", True),
-        ("owl:cardinality", False),
-        ("owl:qualifiedCardinality", True),
+    _RESTRICTIONS = (
+        # (key, filler) in reference dispatch order (thick2thin.clj:
+        # 296-311): a "class" filler is translated, a "count" is a
+        # cardinality literal, "qualified" a count with its owl:onClass
+        ("owl:someValuesFrom", "class"),
+        ("owl:allValuesFrom", "class"),
+        ("owl:minCardinality", "count"),
+        ("owl:minQualifiedCardinality", "qualified"),
+        ("owl:maxCardinality", "count"),
+        ("owl:maxQualifiedCardinality", "qualified"),
+        ("owl:cardinality", "count"),
+        ("owl:qualifiedCardinality", "qualified"),
+        ("owl:hasSelf", "self"),
+        ("owl:hasValue", "class"),
     )
 
     def restriction(self, pmap: dict):
-        """translate-restriction (thick2thin.clj:294-314)."""
-        def emit_base(bnode):
-            o, dt = self._translate(self._first_leaf(pmap,
-                                                     "owl:onProperty"))
-            self.emit(bnode, "owl:onProperty", o, dt)
-
-        for key in ("owl:someValuesFrom", "owl:allValuesFrom"):
-            if key in pmap:
-                bnode = self.fresh_blank()
-                emit_base(bnode)
-                o, dt = self._translate(self._first_leaf(pmap, key))
-                self.emit(bnode, key, o, dt)
-                self.emit(bnode, "rdf:type", "owl:Restriction", "_IRI")
-                return bnode
-        for key, qualified in self._CARDINALITIES:
-            if key in pmap and (not qualified or "owl:onClass" in pmap):
-                bnode = self.fresh_blank()
-                emit_base(bnode)
-                card = self._first_leaf(pmap, key) or {}
+        """translate-restriction (thick2thin.clj:294-314): the first
+        arm whose key is present (a qualified one also needs
+        owl:onClass) emits onProperty, its filler and rdf:type."""
+        for key, filler in self._RESTRICTIONS:
+            if key not in pmap or (filler == "qualified"
+                                   and "owl:onClass" not in pmap):
+                continue
+            bnode = self.fresh_blank()
+            self.emit(bnode, "owl:onProperty",
+                      *self._translate(first_leaf(pmap, "owl:onProperty")))
+            if filler == "class":
+                self.emit(bnode, key, *self._translate(first_leaf(pmap, key)))
+            elif filler == "self":
+                self.emit(bnode, key, "true", "xsd:boolean")
+            else:
                 # create-jena-typed-literal normalizes the cardinality
                 # datatype (thick2thin.clj:90-95,235-246)
+                card = first_leaf(pmap, key) or {}
                 self.emit(bnode, key, card.get("object"),
                           "xsd:nonNegativeInteger")
-                if qualified:
-                    o, dt = self._translate(
-                        self._first_leaf(pmap, "owl:onClass"))
-                    self.emit(bnode, "owl:onClass", o, dt)
-                self.emit(bnode, "rdf:type", "owl:Restriction", "_IRI")
-                return bnode
-        if "owl:hasSelf" in pmap:
-            bnode = self.fresh_blank()
-            emit_base(bnode)
-            self.emit(bnode, "owl:hasSelf", "true", "xsd:boolean")
-            self.emit(bnode, "rdf:type", "owl:Restriction", "_IRI")
-            return bnode
-        if "owl:hasValue" in pmap:
-            bnode = self.fresh_blank()
-            emit_base(bnode)
-            o, dt = self._translate(self._first_leaf(pmap,
-                                                     "owl:hasValue"))
-            self.emit(bnode, "owl:hasValue", o, dt)
+            if filler == "qualified":
+                self.emit(bnode, "owl:onClass",
+                          *self._translate(first_leaf(pmap, "owl:onClass")))
             self.emit(bnode, "rdf:type", "owl:Restriction", "_IRI")
             return bnode
         # onDataRange-qualified cardinalities: reference cond falls
@@ -192,8 +173,7 @@ class _Expander:
         for key in ctors:
             if key in pmap:
                 bnode = self.fresh_blank()
-                o, dt = self._translate(self._first_leaf(pmap, key))
-                self.emit(bnode, key, o, dt)
+                self.emit(bnode, key, *self._translate(first_leaf(pmap, key)))
                 self.emit(bnode, "rdf:type", rdf_type, "_IRI")
                 return bnode
         return None
@@ -201,12 +181,11 @@ class _Expander:
     def members_ctor(self, pmap: dict, rdf_type: str, read_key: str):
         """translate-all-disjoint-classes / -all-different
         (thick2thin.clj:412-446): members list + rdf:type."""
-        leaf = self._first_leaf(pmap, read_key)
+        leaf = first_leaf(pmap, read_key)
         if leaf is None:
             return None
         bnode = self.fresh_blank()
-        o, dt = self._translate(leaf)
-        self.emit(bnode, "owl:members", o, dt)
+        self.emit(bnode, "owl:members", *self._translate(leaf))
         self.emit(bnode, "rdf:type", rdf_type, "_IRI")
         return bnode
 
@@ -251,14 +230,10 @@ class _Expander:
         # the import dispatch (thin2thick.clj:307-311) does not
         # recognize, breaking the reference's own round trip. We emit
         # the original rdf:Statement type instead.
-        self.emit(bnode, "rdf:type",
-                  "rdf:Statement" if meta == "rdf:Reification" else meta,
+        reified = meta == REIFICATION
+        self.emit(bnode, "rdf:type", "rdf:Statement" if reified else meta,
                   "_IRI")
-        if meta == "rdf:Reification":
-            src, prop, tgt = "rdf:subject", "rdf:predicate", "rdf:object"
-        else:
-            src, prop, tgt = ("owl:annotatedSource", "owl:annotatedProperty",
-                              "owl:annotatedTarget")
+        src, prop, tgt = STATEMENT if reified else AXIOM
         self.emit(bnode, src, subject, subject_dt)
         self.emit(bnode, prop, predicate, "_IRI")
         self.emit(bnode, tgt, obj, obj_dt)
@@ -266,7 +241,7 @@ class _Expander:
             # rdf:Reification keeps rdf:subject/predicate/object inside
             # the annotation map (annotation_handling.clj:83-86); they
             # are the wiring we just re-emitted — skip to avoid doubles.
-            if pred in ("rdf:subject", "rdf:predicate", "rdf:object"):
+            if pred in STATEMENT:
                 continue
             for leaf in leaves:
                 o, dt = self.leaf({k: v for k, v in leaf.items()

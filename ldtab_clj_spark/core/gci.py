@@ -8,6 +8,8 @@ from __future__ import annotations
 
 from typing import Any
 
+from .annotations import AXIOM, first_leaf
+
 # gci_handling.clj:18-33
 _COMPOUND_KEYS = frozenset({
     "owl:intersectionOf", "owl:someValuesFrom", "owl:allValuesFrom",
@@ -21,11 +23,6 @@ def is_compound_class_expression(pmap: Any) -> bool:
     return isinstance(pmap, dict) and not _COMPOUND_KEYS.isdisjoint(pmap)
 
 
-def _first(pmap: dict, key: str) -> dict | None:
-    vals = pmap.get(key)
-    return vals[0] if vals else None
-
-
 def _is_raw_gci_without_annotation(triple: dict, prop: str) -> bool:
     obj = triple.get("object")
     return (isinstance(obj, dict) and prop in obj
@@ -34,13 +31,9 @@ def _is_raw_gci_without_annotation(triple: dict, prop: str) -> bool:
 
 def _is_raw_gci_with_annotation(triple: dict, prop: str) -> bool:
     obj = triple.get("object")
-    if not (isinstance(obj, dict)
-            and "owl:annotatedSource" in obj
-            and "owl:annotatedTarget" in obj
-            and "owl:annotatedProperty" in obj):
+    if not (isinstance(obj, dict) and all(k in obj for k in AXIOM)):
         return False
-    ann_prop = _first(obj, "owl:annotatedProperty")
-    source = _first(obj, "owl:annotatedSource")
+    source, ann_prop = first_leaf(obj, AXIOM[0]), first_leaf(obj, AXIOM[1])
     return (ann_prop is not None and ann_prop.get("object") == prop
             and source is not None
             and is_compound_class_expression(source.get("object")))
@@ -51,7 +44,7 @@ def _encode_without_annotation(triple: dict, prop: str) -> dict:
     subject; the first superclass leaf becomes the object."""
     obj = triple["object"]
     subclass = {k: v for k, v in obj.items() if k != prop}
-    superclass = _first(obj, prop) or {}
+    superclass = first_leaf(obj, prop) or {}
     return {"subject": subclass,
             "predicate": prop,
             "object": superclass.get("object"),
@@ -63,15 +56,12 @@ def _encode_with_annotation(triple: dict, prop: str) -> dict:
     first, move remaining properties into the annotation column tagged
     with the reification rdf:type."""
     obj = triple["object"]
-    source = _first(obj, "owl:annotatedSource") or {}
+    source = first_leaf(obj, AXIOM[0]) or {}
     subclass = {k: v for k, v in (source.get("object") or {}).items()
                 if k != prop}
-    superclass = _first(obj, "owl:annotatedTarget") or {}
-    annotation = {k: v for k, v in obj.items()
-                  if k not in ("owl:annotatedSource", "owl:annotatedProperty",
-                               "owl:annotatedTarget")}
-    rdf_type_leaf = _first(annotation, "rdf:type") or {}
-    rdf_type = rdf_type_leaf.get("object")
+    superclass = first_leaf(obj, AXIOM[2]) or {}
+    annotation = {k: v for k, v in obj.items() if k not in AXIOM}
+    rdf_type = (first_leaf(annotation, "rdf:type") or {}).get("object")
     annotation = {k: [dict(x, meta=rdf_type) for x in v]
                   for k, v in annotation.items() if k != "rdf:type"}
     return {"subject": subclass,

@@ -23,7 +23,7 @@ from __future__ import annotations
 
 from typing import Any
 
-from .annotations import encode_raw_annotation_map
+from .annotations import ANNOTATION_TYPES, encode_raw_annotation_map
 from .canonical import (canonical_dumps, hash_existential_subject_blanknode,
                         is_wiring_blanknode, sort_json)
 from .gci import encode_raw_gci_map
@@ -32,8 +32,6 @@ from .rdf_lists import encode_rdf_list
 _RDF_TYPES = ("rdf:type",
               "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>",
               "http://www.w3.org/1999/02/22-rdf-syntax-ns#type")
-
-_ANNOTATION_PREDICATES = ("owl:Annotation", "owl:Axiom", "rdf:Statement")
 
 _MAX_DEPTH = 64  # OWL bnode trees nest shallowly; guards cyclic input
 
@@ -251,7 +249,7 @@ def thin_to_thick(triples: list[dict]) -> list[dict]:
     raw = thin_to_thick_raw(triples)
     gcis = [encode_raw_gci_map(t) for t in raw]
     anns = [_maybe_fold(t)
-            if t.get("predicate") in _ANNOTATION_PREDICATES else t
+            if t.get("predicate") in ANNOTATION_TYPES else t
             for t in gcis]
     lists = [encode_rdf_list(t) for t in anns]
     sorted_ = [sort_json(t) for t in lists]

@@ -4,8 +4,9 @@ Reference: /root/reference/src/ldtab/diff.clj — sorted symmetric diff
 of current state vs a new statement set; additions get the new
 transaction id, deletions become retraction rows; state-at-T replay.
 
-Spark realization: ``exceptAll`` both ways (Catalyst plans these as
-shuffle joins with map-side partial dedup) — no driver-side loops.
+Spark realization: one counted union + aggregate computes both
+directions of the multiset diff (``diff_statements``) — no driver-side
+loops.
 """
 
 from __future__ import annotations

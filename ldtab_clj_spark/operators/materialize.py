@@ -81,7 +81,7 @@ def write_statements(statements: DataFrame, path: str,
     input is written as laid out: a ``dedup_statements`` output (every
     caller's) is hash-partitioned on ``subject``, one file per core.
 
-    * batch metrics (rows, annotated) ride the write action itself via
+    * the batch row count rides the write action itself via
       ``df.observe`` — no second scan;
     * per-file row counts come from the parquet footers (metadata
       reads, no data scan) of this write's files and of the orphans it
@@ -95,10 +95,7 @@ def write_statements(statements: DataFrame, path: str,
     """
     _local(path)   # a remote path fails here, before the write
     obs = Observation()
-    df = statements.observe(
-        obs, F.count(F.lit(1)).alias("rows"),
-        F.sum(F.when(F.col("annotation").isNotNull(), 1)
-              .otherwise(0)).alias("annotated"))
+    df = statements.observe(obs, F.count(F.lit(1)).alias("rows"))
     # snapshot the directory BEFORE writing: this run's files are
     # (after − before), regardless of whether concurrent runs have
     # committed their sidecar entries yet — attributing by sidecar
@@ -147,7 +144,6 @@ def write_statements(statements: DataFrame, path: str,
     return {"run_id": run_id, "partitions": len(new),
             "rows": int(sum(r["rows"] for r in prior + new)),
             "batch_rows": int(metrics["rows"] or 0),
-            "annotated": int(metrics["annotated"] or 0),
             "unadopted_files": unadopted}
 
 

@@ -37,6 +37,27 @@ def with_norm(df: DataFrame) -> DataFrame:
         "_norm", F.sqrt(_dot(F.col("_v"), F.col("_v"))))
 
 
+def _query_cols() -> list:
+    """(query_id, _q, _qnorm) of a ``with_norm`` frame: the query side
+    of every top-k."""
+    return [F.col("vec_id").alias("query_id"),
+            F.col("_v").alias("_q"), F.col("_norm").alias("_qnorm")]
+
+
+def _top_k(pairs: DataFrame, k: int, vec: str, norm: str,
+           cand: str) -> DataFrame:
+    """The ``k`` candidates ``cand`` most cosine-similar to each query
+    of ``pairs`` (query columns from ``_query_cols``, candidate vector
+    ``vec`` with norm ``norm``), ranked 1..k in ``rnk``; ties go to
+    the lower ``cand``. The score is the ``_dot`` fold over the two
+    norms, whose index-order sum the oracles reproduce exactly."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc(cand))
+    return (pairs.withColumn("sim", _dot(F.col(vec), F.col("_q"))
+                             / (F.col(norm) * F.col("_qnorm")))
+            .withColumn("rnk", F.row_number().over(w))
+            .filter(F.col("rnk") <= k))
+
+
 def cosine_topk(embeddings: DataFrame, queries: DataFrame,
                 k: int = 5) -> DataFrame:
     """For each query vector: top-k nearest corpus vectors by cosine.
@@ -48,20 +69,13 @@ def cosine_topk(embeddings: DataFrame, queries: DataFrame,
     corpus = with_norm(python_partitions(
         embeddings.select("vec_id", VEC_COL))).select(
         F.col("vec_id").alias("neighbor_id"), "_v", "_norm")
-    qs = with_norm(queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("_v").alias("_q"), F.col("_norm").alias("_qnorm"))
+    qs = with_norm(queries).select(*_query_cols())
     # the caller sizes the query set; broadcasting it keeps the
     # nested-loop join from building on the corpus
-    scored = (corpus.join(F.broadcast(qs),
-                          F.col("neighbor_id") != F.col("query_id"))
-              .withColumn("sim", _dot(F.col("_v"), F.col("_q"))
-                          / (F.col("_norm") * F.col("_qnorm"))))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc("neighbor_id"))
-    return (scored.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
-            .select("query_id", "neighbor_id", "rnk"))
+    pairs = corpus.join(F.broadcast(qs),
+                        F.col("neighbor_id") != F.col("query_id"))
+    return _top_k(pairs, k, "_v", "_norm", "neighbor_id") \
+        .select("query_id", "neighbor_id", "rnk")
 
 
 def cosine_near_dup_pairs(embeddings: DataFrame, threshold: float = 0.95,
@@ -374,32 +388,16 @@ def ivf_cosine_topk(embeddings: DataFrame, queries: DataFrame,
         embeddings.select("vec_id", VEC_COL))) \
         .select("vec_id", "_v", "_norm")
     assigned = _assign_to_centroids(corpus, cent)
-    probes = (with_norm(queries)
-              .select(F.col("vec_id").alias("query_id"),
-                      F.col("_v").alias("_q"),
-                      F.col("_norm").alias("_qnorm"))
-              # n_centroids rows, set by the caller
-              .join(F.broadcast(cent))
-              .withColumn("csim", _dot(F.col("_q"), F.col("_c"))
-                          / (F.col("_qnorm") * F.col("_cnorm")))
-              .withColumn("crnk", F.row_number().over(
-                  Window.partitionBy("query_id").orderBy(
-                      F.desc("csim"), F.asc("cent_id"))))
-              .filter(F.col("crnk") <= n_probe)
-              .select("query_id", "_q", "_qnorm", "cent_id"))
-    # probe scoring: the ``_dot`` fold, whose index-order sum the
-    # oracle reproduces exactly (near-tied ranks cannot drift).
+    # cent: n_centroids rows, set by the caller
+    probes = _top_k(with_norm(queries).select(*_query_cols())
+                    .join(F.broadcast(cent)), n_probe, "_c", "_cnorm",
+                    "cent_id") \
+        .select("query_id", "_q", "_qnorm", "cent_id")
     # probes: n_probe rows per query, the caller's sizes
-    scored = (assigned.join(F.broadcast(probes), "cent_id")
-              .filter(F.col("vec_id") != F.col("query_id"))
-              .withColumn("sim", _dot(F.col("_v"), F.col("_q"))
-                          / (F.col("_norm") * F.col("_qnorm"))))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc("vec_id"))
-    return (scored.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
-            .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                    "rnk"))
+    pairs = (assigned.join(F.broadcast(probes), "cent_id")
+             .filter(F.col("vec_id") != F.col("query_id")))
+    return _top_k(pairs, k, "_v", "_norm", "vec_id") \
+        .select("query_id", F.col("vec_id").alias("neighbor_id"), "rnk")
 
 
 def srp_bucket(df: DataFrame, planes: list[list[float]]) -> DataFrame:
@@ -422,16 +420,10 @@ def lsh_cosine_topk(embeddings: DataFrame, queries: DataFrame,
         embeddings.select("vec_id", VEC_COL))), planes) \
         .select(F.col("vec_id").alias("neighbor_id"), "_v", "_norm",
                 "bucket")
-    qs = srp_bucket(with_norm(queries), planes).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("_v").alias("_q"), F.col("_norm").alias("_qnorm"), "bucket")
+    qs = srp_bucket(with_norm(queries), planes).select(*_query_cols(),
+                                                       "bucket")
     # the caller sizes the query set
-    scored = (corpus.join(F.broadcast(qs), "bucket")
-              .filter(F.col("neighbor_id") != F.col("query_id"))
-              .withColumn("sim", _dot(F.col("_v"), F.col("_q"))
-                          / (F.col("_norm") * F.col("_qnorm"))))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc("neighbor_id"))
-    return (scored.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
-            .select("query_id", "neighbor_id", "rnk"))
+    pairs = (corpus.join(F.broadcast(qs), "bucket")
+             .filter(F.col("neighbor_id") != F.col("query_id")))
+    return _top_k(pairs, k, "_v", "_norm", "neighbor_id") \
+        .select("query_id", "neighbor_id", "rnk")

@@ -169,6 +169,37 @@ def test_nt_format_roundtrip(spark, tmp_path, prefix_df):
                                      list(back - orig)[:3])
 
 
+def test_import_blank_annotated_property(spark, tmp_path, prefix_df):
+    """A nested owl:Axiom whose owl:annotatedProperty is a blank node
+    folds to a predicate-map property, which matches no annotation leaf
+    of the inner axiom: the import keeps the inner axiom's row instead
+    of failing the stanza task."""
+    def node(x):
+        if x.startswith(("_:", '"')):
+            return x
+        prefix, local = x.split(":")
+        return f"<{dict(PREFIXES)[prefix]}{local}>"
+
+    lines = [" ".join(map(node, spo)) + " ." for spo in [
+        ("_:A1", "owl:annotatedSource", "ex:s"),
+        ("_:A1", "owl:annotatedProperty", "ex:p"),
+        ("_:A1", "owl:annotatedTarget", "ex:o"),
+        ("_:A1", "rdf:type", "owl:Axiom"),
+        ("_:A1", "ex:evidence", "ex:ev1"),
+        ("_:A2", "owl:annotatedSource", "_:A1"),
+        ("_:A2", "owl:annotatedProperty", "_:P"),
+        ("_:A2", "owl:annotatedTarget", "ex:ev1"),
+        ("_:A2", "rdf:type", "owl:Axiom"),
+        ("_:A2", "ex:confidence", '"high"'),
+    ]]
+    nt = tmp_path / "blank_property.nt"
+    nt.write_text("\n".join(lines) + "\n")
+    assert stmt_keys(import_ntriples(spark, str(nt), prefix_df)) == {
+        ("ex:s", "ex:p", "ex:o", "_IRI",
+         '{"ex:evidence":[{"datatype":"_IRI","meta":"owl:Axiom",'
+         '"object":"ex:ev1"}]}')}
+
+
 def test_parse_unicode_escapes():
     t = parse_nt_line(
         '<http://example.com/a> <http://example.com/p> '

@@ -1,9 +1,12 @@
 """Every option has a caller: a defaulted parameter of a package
 function must be set by some call in the package, the tools, the
 benchmarks or the driver entry points. The only exceptions are the
-test seams below, which tests set to shrink or reshape an input."""
+test seams below, which tests set to shrink or reshape an input. The
+same holds one level up: every top-level function and class of the
+package is named by one of those callers."""
 
 import ast
+from collections import Counter
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -16,6 +19,12 @@ TEST_SEAMS = {
     ("operators/similarity.py", "_confirm_bucket_stream", "slab_bytes"),
     ("operators/similarity.py", "srp_plane_tables", "dim"),
     ("synth.py", "synth_docs", "partitions"),
+}
+
+# top-level package defs that no caller file names → why each stays
+UNCALLED = {
+    ("operators/materialize.py", "verify_lineage"):
+        "the lineage verifier that resume tooling and tests call",
 }
 
 
@@ -91,3 +100,29 @@ def test_every_defaulted_parameter_has_a_caller():
             if not (star or param in kws or (i is not None and i < npos)):
                 unset.add((rel, fn, param))
     assert unset == TEST_SEAMS
+
+
+def _names(node):
+    """Identifiers a subtree reads: bare names and attribute names."""
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            yield n.id
+        elif isinstance(n, ast.Attribute):
+            yield n.attr
+
+
+def test_every_package_def_has_a_caller():
+    named = Counter()
+    defs = []
+    for f in _caller_files():
+        tree = ast.parse(f.read_text())
+        named.update(_names(tree))
+        if PKG not in f.parents:
+            continue
+        for top in tree.body:
+            if isinstance(top, (ast.FunctionDef, ast.ClassDef)):
+                # a recursive def naming itself is not a caller
+                own = Counter(_names(top))[top.name]
+                defs.append((f.relative_to(PKG).as_posix(), top.name, own))
+    assert {(rel, name) for rel, name, own in defs
+            if named[name] == own} == set(UNCALLED)

@@ -5,6 +5,8 @@ the round-trip through core.expand.
 
 import json
 
+import pytest
+
 from ldtab_clj_spark.core.expand import (expand_statement_row,
                                          merge_existential_rows)
 from ldtab_clj_spark.core.thick import (drop_superfluous_annotations,
@@ -144,6 +146,107 @@ def test_nested_annotation_recursion():
     assert leaf["object"] == "ev1"
     nested = leaf["annotation"]
     assert nested["ex:confidence"][0]["meta"] == "owl:Annotation"
+
+
+# -- nested and mixed reification -----------------------------------------
+
+STATEMENT_S1 = [
+    t("_:S1", "rdf:subject", "ex:s"),
+    t("_:S1", "rdf:predicate", "ex:p"),
+    t("_:S1", "rdf:object", "ex:o"),
+    t("_:S1", "rdf:type", "rdf:Statement"),
+    t("_:S1", "ex:evidence", "ev1"),
+]
+
+
+def _about_evidence(keys, source, rdf_type):
+    """An outer reification of ``source``'s ex:evidence leaf, in the
+    ``keys`` vocabulary."""
+    b = "_:O"
+    return [t(b, keys[0], source, "_JSONMAP"), t(b, keys[1], "ex:evidence"),
+            t(b, keys[2], "ev1"), t(b, "rdf:type", rdf_type),
+            t(b, "ex:confidence", "high", "xsd:string")]
+
+
+OWL_KEYS = ("owl:annotatedSource", "owl:annotatedProperty",
+            "owl:annotatedTarget")
+RDF_KEYS = ("rdf:subject", "rdf:predicate", "rdf:object")
+
+
+def _leaf(obj, meta, dt="_IRI"):
+    return {"datatype": dt, "meta": meta, "object": obj}
+
+
+def test_nested_reification_recursion():
+    """An rdf:Statement about an rdf:Statement's ex:evidence leaf folds
+    onto that leaf, as the owl:* nesting does; both maps keep their
+    rdf:subject/predicate/object (annotation_handling.clj:83-86)."""
+    out = rows(STATEMENT_S1 + _about_evidence(RDF_KEYS, "_:S1",
+                                              "rdf:Statement"))
+    assert len(out) == 1
+    r = out[0]
+    assert (r["subject"], r["predicate"], r["object"], r["datatype"]) == \
+        ("ex:s", "ex:p", "ex:o", "_IRI")
+    reif = "rdf:Reification"
+    s1 = {"ex:evidence": [{"datatype": "_IRI", "object": "ev1"}],
+          "rdf:object": [{"datatype": "_IRI", "object": "ex:o"}],
+          "rdf:predicate": [{"datatype": "_IRI", "object": "ex:p"}],
+          "rdf:subject": [{"datatype": "_IRI", "object": "ex:s"}],
+          "rdf:type": [{"datatype": "_IRI", "object": "rdf:Statement"}]}
+    outer = {"ex:confidence": [_leaf("high", reif, "xsd:string")],
+             "rdf:object": [_leaf("ev1", reif)],
+             "rdf:predicate": [_leaf("ex:evidence", reif)],
+             "rdf:subject": [_leaf(s1, reif, "_JSONMAP")]}
+    assert json.loads(r["annotation"]) == {
+        "ex:evidence": [dict(_leaf("ev1", reif), annotation=outer)],
+        "rdf:object": [_leaf("ex:o", reif)],
+        "rdf:predicate": [_leaf("ex:p", reif)],
+        "rdf:subject": [_leaf("ex:s", reif)]}
+
+
+@pytest.mark.parametrize("inner,keys,rdf_type,skolem", [
+    (STATEMENT_S1, OWL_KEYS, "owl:Annotation",
+     "<wiring:blanknode:7e722dc495378f67>"),
+    (NESTED[:5], RDF_KEYS, "rdf:Statement",
+     "<wiring:blanknode:503f64d95b74447c>"),
+], ids=["axiom_over_statement", "statement_over_axiom"])
+def test_mixed_nesting_stays_unfolded(inner, keys, rdf_type, skolem):
+    """A nested fold reads the outer map through the INNER source's
+    vocabulary (annotation_handling.clj:55-75, 98-117), so an owl:Axiom
+    over an rdf:Statement source, or the reverse, finds no source: the
+    outer stanza stays as its split wiring rows and the inner one is
+    kept whole as the source object."""
+    out = rows(inner + _about_evidence(keys, inner[0]["subject"],
+                                       rdf_type))
+    assert {r["subject"] for r in out} == {skolem}
+    assert all(r["annotation"] is None for r in out)
+    source = next(r for r in out if r["predicate"] == keys[0])
+    assert source["datatype"] == "_JSONMAP"
+    assert json.loads(source["object"]) == {
+        x["predicate"]: [{"datatype": x["datatype"], "object": x["object"]}]
+        for x in inner}
+    assert {(r["predicate"], r["object"], r["datatype"])
+            for r in out if r is not source} == {
+        (keys[1], "ex:evidence", "_IRI"), (keys[2], "ev1", "_IRI"),
+        ("rdf:type", rdf_type, "_IRI"),
+        ("ex:confidence", "high", "xsd:string")}
+
+
+def test_blank_annotated_property_matches_no_leaf():
+    """A nested annotation whose owl:annotatedProperty is a blank node
+    (a predicate map, not a CURIE) attaches to no leaf of the inner
+    annotation: the inner axiom folds alone instead of raising."""
+    out = rows(NESTED[:5] + [
+        t("_:A2", "owl:annotatedSource", "_:A1", "_JSONMAP"),
+        t("_:A2", "owl:annotatedProperty", "_:P", "_JSONMAP"),
+        t("_:A2", "owl:annotatedTarget", "ev1"),
+        t("_:A2", "rdf:type", "owl:Axiom"),
+        t("_:A2", "ex:confidence", "high", "xsd:string"),
+    ])
+    assert [(r["subject"], r["predicate"], r["object"],
+             json.loads(r["annotation"])) for r in out] == [
+        ("ex:s", "ex:p", "ex:o",
+         {"ex:evidence": [_leaf("ev1", "owl:Axiom")]})]
 
 
 # -- case 7: RDF list keeps element order ----------------------------------

@@ -6,6 +6,9 @@ corpus exercises; the rest of the (dead-code) 758-LoC matrix stays out
 of scope and falls back to the generic expansion."""
 
 import json
+import re
+
+import pytest
 
 from kg_helpers import prefix_table, stmt_keys
 from ldtab_clj_spark.core.expand import expand_statement_row
@@ -157,7 +160,6 @@ def test_typed_owl_roundtrip_reference_ontology(spark, tmp_path):
     near-identity on it)."""
     from pathlib import Path
 
-    import pytest
     ref = Path("/root/reference/resources/ontology.owl")
     if not ref.exists():
         pytest.skip("reference not mounted")
@@ -176,3 +178,160 @@ def test_typed_owl_roundtrip_reference_ontology(spark, tmp_path):
     assert p >= 0.95 and r >= 0.95, (p, r, len(orig), len(back),
                                      list(orig - back)[:3],
                                      list(back - orig)[:3])
+
+
+# -- every restriction arm, blank labels included ----------------------------
+
+def _iri(x):
+    return {"object": x, "datatype": "_IRI"}
+
+
+def _map(pmap):
+    return {"object": pmap, "datatype": "_JSONMAP"}
+
+
+_INVERSE = _map({"owl:inverseOf": [_iri("ex:q")]})
+_SOME = _map({"rdf:type": [_iri("owl:Restriction")],
+              "owl:onProperty": [_iri("ex:r")],
+              "owl:someValuesFrom": [_iri("ex:D")]})
+
+
+def _arm(prop, key, value, on_class=None):
+    pmap = {"rdf:type": [_iri("owl:Restriction")],
+            "owl:onProperty": [prop], key: [value]}
+    if on_class:
+        pmap["owl:onClass"] = [on_class]
+    return pmap
+
+
+_COUNT = {"object": "1", "datatype": "xsd:nonNegativeInteger"}
+ARMS = {
+    "some": _arm(_INVERSE, "owl:someValuesFrom", _SOME),
+    "all": _arm(_iri("ex:p"), "owl:allValuesFrom", _SOME),
+    **{key: _arm(_INVERSE, f"owl:{key}",
+                 {"object": "2", "datatype": "xsd:int"})
+       for key in ("minCardinality", "maxCardinality", "cardinality")},
+    **{key: _arm(_INVERSE, f"owl:{key}", _COUNT, _SOME)
+       for key in ("minQualifiedCardinality", "maxQualifiedCardinality",
+                   "qualifiedCardinality")},
+    **{f"{key}-no-onClass": _arm(_iri("ex:p"), f"owl:{key}", _COUNT)
+       for key in ("minQualifiedCardinality", "maxQualifiedCardinality",
+                   "qualifiedCardinality")},
+    "hasSelf": _arm(_INVERSE, "owl:hasSelf",
+                    {"object": "true", "datatype": "xsd:boolean"}),
+    "hasValue": _arm(_iri("ex:p"), "owl:hasValue", _iri("ex:i")),
+}
+
+# "s p o datatype" per emitted triple, in emission order; ``_:nK`` is the
+# row's K-th fresh blank label. A qualified cardinality without
+# owl:onClass matches no arm and takes the generic expansion.
+GOLDEN = {
+    "some": """
+_:n2 owl:inverseOf ex:q _IRI
+_:n1 owl:onProperty _:n2 _JSONMAP
+_:n3 owl:onProperty ex:r _IRI
+_:n3 owl:someValuesFrom ex:D _IRI
+_:n3 rdf:type owl:Restriction _IRI
+_:n1 owl:someValuesFrom _:n3 _JSONMAP
+_:n1 rdf:type owl:Restriction _IRI
+ex:A rdfs:subClassOf _:n1 _JSONMAP""",
+    "all": """
+_:n1 owl:onProperty ex:p _IRI
+_:n2 owl:onProperty ex:r _IRI
+_:n2 owl:someValuesFrom ex:D _IRI
+_:n2 rdf:type owl:Restriction _IRI
+_:n1 owl:allValuesFrom _:n2 _JSONMAP
+_:n1 rdf:type owl:Restriction _IRI
+ex:A rdfs:subClassOf _:n1 _JSONMAP""",
+    "minCardinality": """
+_:n2 owl:inverseOf ex:q _IRI
+_:n1 owl:onProperty _:n2 _JSONMAP
+_:n1 owl:minCardinality 2 xsd:nonNegativeInteger
+_:n1 rdf:type owl:Restriction _IRI
+ex:A rdfs:subClassOf _:n1 _JSONMAP""",
+    "maxCardinality": """
+_:n2 owl:inverseOf ex:q _IRI
+_:n1 owl:onProperty _:n2 _JSONMAP
+_:n1 owl:maxCardinality 2 xsd:nonNegativeInteger
+_:n1 rdf:type owl:Restriction _IRI
+ex:A rdfs:subClassOf _:n1 _JSONMAP""",
+    "cardinality": """
+_:n2 owl:inverseOf ex:q _IRI
+_:n1 owl:onProperty _:n2 _JSONMAP
+_:n1 owl:cardinality 2 xsd:nonNegativeInteger
+_:n1 rdf:type owl:Restriction _IRI
+ex:A rdfs:subClassOf _:n1 _JSONMAP""",
+    "minQualifiedCardinality": """
+_:n2 owl:inverseOf ex:q _IRI
+_:n1 owl:onProperty _:n2 _JSONMAP
+_:n1 owl:minQualifiedCardinality 1 xsd:nonNegativeInteger
+_:n3 owl:onProperty ex:r _IRI
+_:n3 owl:someValuesFrom ex:D _IRI
+_:n3 rdf:type owl:Restriction _IRI
+_:n1 owl:onClass _:n3 _JSONMAP
+_:n1 rdf:type owl:Restriction _IRI
+ex:A rdfs:subClassOf _:n1 _JSONMAP""",
+    "minQualifiedCardinality-no-onClass": """
+_:n1 rdf:type owl:Restriction _IRI
+_:n1 owl:onProperty ex:p _IRI
+_:n1 owl:minQualifiedCardinality 1 xsd:nonNegativeInteger
+ex:A rdfs:subClassOf _:n1 _JSONMAP""",
+    "maxQualifiedCardinality": """
+_:n2 owl:inverseOf ex:q _IRI
+_:n1 owl:onProperty _:n2 _JSONMAP
+_:n1 owl:maxQualifiedCardinality 1 xsd:nonNegativeInteger
+_:n3 owl:onProperty ex:r _IRI
+_:n3 owl:someValuesFrom ex:D _IRI
+_:n3 rdf:type owl:Restriction _IRI
+_:n1 owl:onClass _:n3 _JSONMAP
+_:n1 rdf:type owl:Restriction _IRI
+ex:A rdfs:subClassOf _:n1 _JSONMAP""",
+    "maxQualifiedCardinality-no-onClass": """
+_:n1 rdf:type owl:Restriction _IRI
+_:n1 owl:onProperty ex:p _IRI
+_:n1 owl:maxQualifiedCardinality 1 xsd:nonNegativeInteger
+ex:A rdfs:subClassOf _:n1 _JSONMAP""",
+    "qualifiedCardinality": """
+_:n2 owl:inverseOf ex:q _IRI
+_:n1 owl:onProperty _:n2 _JSONMAP
+_:n1 owl:qualifiedCardinality 1 xsd:nonNegativeInteger
+_:n3 owl:onProperty ex:r _IRI
+_:n3 owl:someValuesFrom ex:D _IRI
+_:n3 rdf:type owl:Restriction _IRI
+_:n1 owl:onClass _:n3 _JSONMAP
+_:n1 rdf:type owl:Restriction _IRI
+ex:A rdfs:subClassOf _:n1 _JSONMAP""",
+    "qualifiedCardinality-no-onClass": """
+_:n1 rdf:type owl:Restriction _IRI
+_:n1 owl:onProperty ex:p _IRI
+_:n1 owl:qualifiedCardinality 1 xsd:nonNegativeInteger
+ex:A rdfs:subClassOf _:n1 _JSONMAP""",
+    "hasSelf": """
+_:n2 owl:inverseOf ex:q _IRI
+_:n1 owl:onProperty _:n2 _JSONMAP
+_:n1 owl:hasSelf true xsd:boolean
+_:n1 rdf:type owl:Restriction _IRI
+ex:A rdfs:subClassOf _:n1 _JSONMAP""",
+    "hasValue": """
+_:n1 owl:onProperty ex:p _IRI
+_:n1 owl:hasValue ex:i _IRI
+_:n1 rdf:type owl:Restriction _IRI
+ex:A rdfs:subClassOf _:n1 _JSONMAP""",
+}
+
+_LABEL = re.compile(r"_:h([0-9a-f]{16})n")
+
+
+@pytest.mark.parametrize("arm", list(ARMS))
+def test_restriction_arm_golden(arm):
+    """Every translate-restriction arm (thick2thin.clj:294-314) with
+    compound fillers, so the order of fresh blank labels is pinned."""
+    out = expand_statement_row(
+        _row("ex:A", "rdfs:subClassOf", ARMS[arm]), typed_owl=True)
+    cells = [(t["subject"], t["predicate"], t["object"], t["datatype"])
+             for t in out]
+    # one row hash for every label; the counter after it carries order
+    assert len({h for c in cells for h in _LABEL.findall(" ".join(c))}) \
+        == 1
+    assert [_LABEL.sub("_:n", " ".join(c)) for c in cells] == \
+        GOLDEN[arm].strip().split("\n")
