@@ -34,8 +34,9 @@ join of the triples with the component map on that key labels them
 all; ground triples key on their content hash.
 
 The contraction pays only on inputs with that locality. An edge set
-hash-partitioned by edge (near-dup pairs, operators/dedup) spreads each
-component over every partition; a sparse component then falls apart
+hash-partitioned on its first endpoint (near-dup pairs,
+operators/dedup.distinct_pairs) spreads each component over the
+partitions its members hash to; a sparse component then falls apart
 into per-partition fragments and nearly all of it still goes through
 the loop. Such callers use ``propagate_min_labels`` directly.
 

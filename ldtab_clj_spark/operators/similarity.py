@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .batching import from_ndarray, grouped_batches, ndarray
+from .dedup import distinct_pairs
 from .parallel import python_partitions
 
 VEC_COL = "embedding"
@@ -300,9 +301,10 @@ def srp_banded_near_dup(embeddings: DataFrame,
     stream, so only surviving id pairs materialize as rows. Both Python
     stages are mapInArrow over flat buffers (no per-row vector
     objects), and the confirm cuts each bucket into byte-bounded slabs
-    (``SLAB_BYTES``). The terminal distinct collapses multi-table hits
-    and duplicate input ids. ``mode`` accepts only "arrow" (kept so existing callers that
-    name it keep working)."""
+    (``SLAB_BYTES``). ``dedup.distinct_pairs`` collapses multi-table
+    hits and duplicate input ids and lays the pairs out by ``vec_a``.
+    ``mode`` accepts only "arrow" (kept so existing callers that name
+    it keep working)."""
     if mode != "arrow":
         raise ValueError(f"unknown srp mode {mode!r} (use 'arrow')")
     bands_v = _srp_bands_with_vecs_arrow(embeddings, plane_tables)
@@ -311,9 +313,9 @@ def srp_banded_near_dup(embeddings: DataFrame,
     part = (python_partitions(grouped, "tbl", "bucket")
             .sortWithinPartitions("_grp")
             .select("_grp", "vec_id", "_raw", "_norm"))
-    return (part.mapInArrow(_confirm_bucket_stream(threshold),
-                            "vec_a long, vec_b long")
-            .distinct())
+    return distinct_pairs(
+        part.mapInArrow(_confirm_bucket_stream(threshold),
+                        "vec_a long, vec_b long"), "vec_a", "vec_b")
 
 
 def _minid_centroids(embeddings: DataFrame,

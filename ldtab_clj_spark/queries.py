@@ -22,13 +22,16 @@ from .operators.dedup import (exact_dedup_groups, minhash_lsh_pairs,
 from .operators.diff import diff_statements
 from .operators.similarity import cosine_topk
 from .operators.text import fingerprint, lang_id, quality_score, token_count
+from .schemas import REGISTRY
 
-TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings")
+TABLES = tuple(REGISTRY)
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    """Registry table ``name`` read with its declared schema
+    (``schemas.REGISTRY``): no schema-inference job per read."""
+    return spark.read.schema(REGISTRY[name]).parquet(
+        f"{sf_dir}/{name}.parquet")
 
 
 def _cents(col):

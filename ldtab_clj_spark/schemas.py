@@ -6,8 +6,9 @@ dedup, diff and hashing are native string column ops — shuffle-friendly
 and whole-stage-codegen-able.
 """
 
-from pyspark.sql.types import (ArrayType, BooleanType, IntegerType, LongType,
-                               StringType, StructField, StructType)
+from pyspark.sql.types import (ArrayType, BooleanType, DoubleType,
+                               FloatType, IntegerType, LongType, StringType,
+                               StructField, StructType, TimestampNTZType)
 
 SPAN = StructType([
     StructField("kind", StringType()),        # text | media | heading
@@ -60,3 +61,34 @@ ENTITY_DICT = StructType([
     StructField("score", LongType(), False),
     StructField("is_head", BooleanType(), False),
 ])
+
+# the query registry's tables (queries.TABLES), each as Spark infers it
+# from the generated parquet: ``queries.load`` passes it and so runs no
+# schema-inference job
+_I, _L, _D, _S = IntegerType(), LongType(), DoubleType(), StringType()
+_TS = TimestampNTZType()
+REGISTRY = {name: StructType([StructField(c, t) for c, t in cols])
+            for name, cols in {
+    "region": [("r_regionkey", _I), ("r_name", _S)],
+    "nation": [("n_nationkey", _I), ("n_name", _S), ("n_regionkey", _I)],
+    "customer": [("c_custkey", _L), ("c_name", _S), ("c_nationkey", _I),
+                 ("c_acctbal", _D), ("c_mktsegment", _S)],
+    "supplier": [("s_suppkey", _L), ("s_name", _S), ("s_nationkey", _I),
+                 ("s_acctbal", _D)],
+    "part": [("p_partkey", _L), ("p_name", _S), ("p_brand", _S),
+             ("p_type", _S), ("p_size", _I), ("p_retailprice", _D)],
+    "orders": [("o_orderkey", _L), ("o_custkey", _L),
+               ("o_orderstatus", _S), ("o_totalprice", _D),
+               ("o_orderdate", _TS), ("o_orderpriority", _S)],
+    "lineitem": [("l_orderkey", _L), ("l_partkey", _L), ("l_suppkey", _L),
+                 ("l_linenumber", _I), ("l_quantity", _D),
+                 ("l_extendedprice", _D), ("l_discount", _D),
+                 ("l_tax", _D), ("l_returnflag", _S),
+                 ("l_linestatus", _S), ("l_shipdate", _TS)],
+    "events": [("event_id", _L), ("ts", _TS), ("user_id", _L),
+               ("event_type", _S), ("value", _D), ("props", _S)],
+    "documents": [("doc_id", _L), ("text", _S), ("lang", _S),
+                  ("source", _S), ("n_chars", _L)],
+    "embeddings": [("vec_id", _L), ("embedding", ArrayType(FloatType())),
+                   ("label", _I)],
+}.items()}

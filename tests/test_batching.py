@@ -4,6 +4,8 @@ column conversions, plus an end-to-end equivalence check that stanza
 assembly and thick→thin expansion produce IDENTICAL output when Arrow
 batches are tiny (forcing groups to straddle batch boundaries)."""
 
+import re
+
 import pandas as pd
 import pyarrow as pa
 import pytest
@@ -237,6 +239,30 @@ def test_near_dup_clusters_known_graph(spark):
     assert got == {(1, 1), (2, 1), (3, 1), (5, 5), (6, 5)}
 
 
+def test_near_dup_clusters_of_minhash_pairs(spark):
+    """The minhash_lsh_pairs output at sf0.001, in its stored layout,
+    clusters as a Python union-find over the same collected pairs
+    does: each doc's cluster is its component's minimum doc_id."""
+    from ldtab_clj_spark.operators.dedup import (minhash_lsh_pairs,
+                                                 near_dup_clusters)
+    pairs = minhash_lsh_pairs(
+        spark.read.parquet("/root/testdata/sf0.001/documents.parquet"))
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for a, b in pairs.collect():
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    want = {(x, find(x)) for x in parent}
+    got = {(r.doc_id, r.cluster)
+           for r in near_dup_clusters(pairs).collect()}
+    assert got == want and len({c for _, c in want}) > 1
+
+
 def test_minhash_matches_duckdb_oracle(spark):
     """The hashlib min-digest MinHash equals the DuckDB oracle's
     min(md5('i:' || shingle)) (queries._SIG grouped over
@@ -259,6 +285,82 @@ def test_minhash_matches_duckdb_oracle(spark):
     want_e = _oracle(sql, EDGE_DOCS)
     assert got_e == want_e, (sorted(got_e - want_e),
                              sorted(want_e - got_e))
+
+
+HOT_COPIES = 40
+
+
+def _pair_layout(spark, pairs, a, b):
+    """The rows of ``pairs`` by output partition, and the final plan's
+    nodes from the output down to the pair source (the band join, or
+    the confirm MapInArrow)."""
+    from ldtab_clj_spark.plans.executed import executed
+    run = executed(spark, pairs.select(F.spark_partition_id(), a, b)
+                   .collect)
+    parts = {}
+    for p, x, y in run.result:
+        parts.setdefault(p, []).append((x, y))
+    node, path = run.plans[-1], []
+    while not (node.name.endswith("Join") or node.name == "MapInArrow"):
+        path.append(node)
+        (node,) = node.children
+    return parts, path
+
+
+@pytest.mark.parametrize("kind", ["minhash", "simhash", "srp"])
+def test_near_dup_pair_layout(spark, kind):
+    """Each near-dup pair set leaves through ``distinct_pairs``: one
+    hash exchange on the first id, pinned at the core count, between
+    the pair source and the output; each first id in one partition;
+    rows sorted by (a, b) within each; no duplicate pair; the oracle's
+    pair set. The documents carry ``HOT_COPIES`` identical copies of
+    one doc, so one bucket per band is hot."""
+    import duckdb
+
+    from ldtab_clj_spark.operators.dedup import (minhash_lsh_pairs,
+                                                 simhash_pairs)
+    from ldtab_clj_spark.operators.similarity import (srp_banded_near_dup,
+                                                      srp_plane_tables)
+    from ldtab_clj_spark.queries import ORACLE_SQL
+    sf = "/root/testdata/sf0.001"
+    if kind == "srp":
+        a, b = "vec_a", "vec_b"
+        pairs = srp_banded_near_dup(
+            spark.read.parquet(f"{sf}/embeddings.parquet"),
+            srp_plane_tables(), threshold=0.4)
+        with duckdb.connect() as con:
+            con.execute("CREATE VIEW embeddings AS SELECT * FROM "
+                        f"'{sf}/embeddings.parquet'")
+            want = set(con.execute(
+                ORACLE_SQL["ann_srp_near_dup"]).fetchall())
+    else:
+        a, b = "doc_a", "doc_b"
+        docs = spark.read.parquet(f"{sf}/documents.parquet") \
+            .select("doc_id", "text")
+        text = docs.filter(F.col("doc_id") == 7).first().text
+        docs = docs.unionByName(spark.createDataFrame(
+            [(1000 + i, text) for i in range(HOT_COPIES)],
+            "doc_id long, text string"))
+        op, key = {"minhash": (minhash_lsh_pairs, "dedup_minhash_lsh"),
+                   "simhash": (simhash_pairs, "dedup_simhash_pairs")}[kind]
+        pairs = op(docs)
+        want = _oracle(ORACLE_SQL[key], docs)
+    cores = spark.sparkContext.defaultParallelism
+    parts, path = _pair_layout(spark, pairs, a, b)
+    names = [n.name for n in path]
+    exchanges = [n.desc for n in path if n.name == "Exchange"]
+    assert len(exchanges) == 1 and "AQEShuffleRead" not in names, names
+    assert re.match(rf"Exchange hashpartitioning\({a}#\d+L?, {cores}\)",
+                    exchanges[0]), exchanges[0]
+    assert sorted(parts) == list(range(cores))
+    owner = {}
+    for p, rows in parts.items():
+        assert rows == sorted(rows), p
+        for x, _ in rows:
+            assert owner.setdefault(x, p) == p, x
+    got = [r for rows in parts.values() for r in rows]
+    assert len(got) == len(set(got))
+    assert set(got) == want and len(want) > HOT_COPIES
 
 
 @pytest.mark.parametrize("rows,sizes", [

@@ -7,12 +7,16 @@ the cap, the displaced twins stay oracle-checked here and in
 tools/check_oracles.py.
 """
 
+import os
+
 import duckdb
 import pytest
 
+from ldtab_clj_spark.plans.executed import executed
 from ldtab_clj_spark.queries import (DRIVER_CAP, EXTRA_QUERIES, ORACLE_SQL,
-                                     QUERIES, STATE_AT_T_ORACLE,
-                                     order_history)
+                                     QUERIES, STATE_AT_T_ORACLE, TABLES,
+                                     load, order_history)
+from ldtab_clj_spark.schemas import REGISTRY
 
 SF = "/root/testdata/sf0.001"
 
@@ -33,6 +37,19 @@ def test_registries_disjoint_and_oracled():
     assert not set(QUERIES) & set(EXTRA_QUERIES)
     for name in (*QUERIES, *EXTRA_QUERIES):
         assert name in ORACLE_SQL, f"{name} has no DuckDB oracle"
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_registry_schemas_match_inferred(spark, sf):
+    """``schemas.REGISTRY`` declares every registry table exactly as
+    Spark infers it, and ``load`` passes it: building the DataFrame
+    runs no Spark job (an inferred read runs one to read a footer)."""
+    sf_dir = os.path.join(os.path.dirname(SF), sf)
+    for t in TABLES:
+        inferred = spark.read.parquet(f"{sf_dir}/{t}.parquet").schema
+        assert inferred == REGISTRY[t], t
+        run = executed(spark, lambda: load(spark, sf_dir, t))
+        assert run.jobs == [] and run.result.schema == inferred, t
 
 
 def test_extra_queries_still_run(spark):
