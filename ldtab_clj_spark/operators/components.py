@@ -24,8 +24,13 @@ then a global merge; Kiveris et al., SoCC 2014).
 The root graph is empty whenever every component's edges fall inside
 one partition. An exported ``.nt`` file writes each stanza's lines
 contiguously, so its components only cross partitions where a stanza
-straddles a text split boundary — the normal import does one Python
-pass and one aggregate, with no iterative rounds.
+straddles a text split boundary. An import whose every input file is
+read as one split (an export writes one file per core) therefore does
+one Python pass and one aggregate, with no iterative rounds. A single
+file larger than about (its size + 4 MB) / cores is cut into several
+splits; a stanza across a cut then puts edges in the root graph and
+the loop runs (a 20,000-doc graph as one 19 MB ``.nt`` file: 44 Spark
+jobs, against 8 for the same graph from Turtle).
 
 Stanza keys (``assign_components``): a triple's key is the component
 of its first blank end, the subject if it is blank, else the object.

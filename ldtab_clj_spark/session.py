@@ -1,9 +1,11 @@
 """SparkSession factory with scale-oriented defaults.
 
-Test/bench boxes run local[N]; on a real cluster the same configs apply
-(AQE + skew-join handling are the explicit requirements of the north
-rule; every Python stage of this engine is an Arrow-batched
-``mapInArrow``, see ``operators/batching``).
+Test/bench boxes run local[N]; on a real cluster the same configs apply.
+The north rule's AQE with partition coalescing and skew-join splitting
+is Spark's default, as are 10,000-row Arrow batches for every
+``mapInArrow`` stage (see ``operators/batching``), so the session sets
+none of them: ``tests/test_session.py`` pins those defaults and checks
+that every ``spark.sql`` setting made here differs from its default.
 """
 
 from __future__ import annotations
@@ -60,6 +62,20 @@ def get_spark(app_name: str = "ldtab_clj_spark",
               master: str | None = None,
               shuffle_partitions: int | None = None,
               extra_conf: dict | None = None) -> SparkSession:
+    """The package's session; each setting below changes a Spark
+    default. Environment variables read:
+
+    - ``SPARK_GRAFT_CPUS``: cores (a positive integer, default all);
+      sizes the ``local[N]`` master and the default shuffle width (>= 8).
+    - ``SPARK_MASTER``: the master URL when ``master`` is not given.
+    - ``SPARK_DRIVER_MEMORY``: the driver heap's cap (default 8g); the
+      JVM commits it as the heap grows.
+    - ``SPARK_DRIVER_JAVA_OPTS``: driver JVM options, passed only when
+      set. ``-Xms<heap> -XX:+AlwaysPreTouch`` faults the heap in at
+      start, outside timed work (perfbench does);
+      ``-XX:StartFlightRecording=filename=run.jfr,settings=profile``
+      records a JFR profile (read it with ``jfr print --json``).
+    """
     cpus = env_int("SPARK_GRAFT_CPUS", os.cpu_count() or 4)
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
@@ -68,21 +84,8 @@ def get_spark(app_name: str = "ldtab_clj_spark",
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # AQE: runtime coalescing + skew-join splitting (hot head
-        # entities are Zipf-distributed by design)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Arrow: toPandas in tools and tests, and the input batch
-        # size of every mapInArrow stage. 10k-row batches:
-        # at 1M docs × 4 workers the 100k default balloons Python RSS
-        # (measured 107s vs 143s same-session A/B at local[4]; the r2
-        # volume table measured 45.5s vs 66.7s at local[8]) — worker
-        # memory is bounded by batching.grouped_batches at
-        # O(batch + largest group) either way, and output is
-        # bit-identical across batch sizes (pinned by test)
+        # Arrow for toPandas in tools and tests
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # pin the session timezone: streaming/windows.py casts
         # TIMESTAMP_NTZ through TIMESTAMP to drive session_window, so
         # a non-UTC JVM zone would shift wall-clock values across DST
@@ -103,8 +106,6 @@ def get_spark(app_name: str = "ldtab_clj_spark",
         # build_statements table 8.59 -> 5.39, at equal write and read
         # time. Old snappy part files stay readable in the same table
         .config("spark.sql.parquet.compression.codec", "zstd")
-        # sane scan granularity for the 100 TB case: 128 MB splits
-        .config("spark.sql.files.maxPartitionBytes", "134217728")
         # allow shuffled hash joins where their size conditions hold
         # (guide §3.1/§9): sort-merge pays two sorts that a per-
         # partition hash build avoids, and AQE's skew splitting works
@@ -133,26 +134,14 @@ def get_spark(app_name: str = "ldtab_clj_spark",
         # same shape as r3's rejected 24g trial: long G1 pauses across
         # many small queries), while 16g wins the local[4] 1-2M-doc
         # volume runs (bench_scaling.py passes it explicitly: 4-core
-        # leg 64-70s -> 61s at 1M). Default stays 8g; size up via
-        # SPARK_DRIVER_MEMORY for large-shuffle jobs
+        # leg 64-70s -> 61s at 1M). Default stays 8g
         .config("spark.driver.memory",
                 os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        # -Xms=driver memory + AlwaysPreTouch: fault the whole heap in
-        # at JVM start instead of lazily during the first queries that
-        # grow it. On a healthy box this costs ~1 s once; on a host
-        # whose fresh-page supply collapses (round 5 measured
-        # first-touch ~1000x slower while steady-state copy stayed at
-        # full speed, BENCH/BASELINE.md) lazy heap growth otherwise
-        # lands INSIDE timed queries as multi-second page-fault storms
-        # — the same mitigation bench_scaling.py has used since round
-        # 5, now on every session so bench.py draws stabilize too
-        .config("spark.driver.extraJavaOptions",
-                os.environ.get("SPARK_DRIVER_JAVA_OPTS",
-                               "-Xms" + os.environ.get(
-                                   "SPARK_DRIVER_MEMORY", "8g")
-                               + " -XX:+AlwaysPreTouch"))
         .config("spark.ui.enabled", "false")
     )
+    java_opts = os.environ.get("SPARK_DRIVER_JAVA_OPTS")
+    if java_opts:
+        b = b.config("spark.driver.extraJavaOptions", java_opts)
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()

@@ -37,9 +37,9 @@ AUDIT = ["s3_scan_filter_project", "tpch_q1", "tpch_q3", "tpch_q4",
 
 MARKS = ["BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin",
          "BroadcastNestedLoopJoin", "HashAggregate", "ObjectHashAggregate",
-         "SortAggregate", "Exchange", "AQEShuffleRead", "ArrowEvalPython",
-         "MapInPandas", "MapInArrow", "FlatMapGroupsInPandas", "Window",
-         "Generate"]
+         "SortAggregate", "Sort", "Exchange", "AQEShuffleRead",
+         "ArrowEvalPython", "MapInPandas", "MapInArrow",
+         "FlatMapGroupsInPandas", "Window", "Generate"]
 
 
 def op_counts(run) -> dict[str, int]:

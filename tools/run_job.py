@@ -22,8 +22,6 @@ def main() -> None:
     out = sys.argv[2] if len(sys.argv) > 2 else None
 
     spark = (SparkSession.builder.appName("ldtab-kg-construct")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.adaptive.skewJoin.enabled", "true")
              .config("spark.sql.execution.arrow.pyspark.enabled", "true")
              .getOrCreate())
 
